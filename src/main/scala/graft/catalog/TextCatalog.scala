@@ -1032,19 +1032,14 @@ object TextCatalog {
         FROM ranked
       """)) { (spark, dir) =>
       import org.apache.spark.sql.expressions.Window
-      // Round-17 (VERDICT r16 #3): `scored` feeds the phase-1 grid
-      // aggregate AND the phase-2 rank join, and without materialization
-      // the physical plan evaluates the whole bigram pipeline TWICE (no
-      // ReusedExchange — the grid branch prunes to (lang, b), so the
-      // canonicalized subtrees differ). Round 16 rejected
-      // Reuse.materialize on a SOLO measurement (1.53 → 1.97 s), where the
-      // twin subtrees run concurrently on idle cores by construction; the
-      // committed methodology is the 8-thread suite, where cores are NOT
-      // idle — t16 was the suite's most expensive entry at 4.6 s. Measured
-      // in-suite this round (8 threads, best-of-3): materialize wins
-      // (numbers in OPTIMIZATION_r17.md), and at corpus scale it is the
-      // only right form anyway (2× a 100 TB pipeline is never free — the
-      // g6 idiom, cluster-survivable reliable checkpoint).
+      // `scored` feeds the phase-1 grid aggregate AND the phase-2 rank
+      // join. Without materialization the physical plan evaluates the whole
+      // bigram pipeline twice (no ReusedExchange: the grid branch prunes to
+      // (lang, b), so the canonicalized subtrees differ). A solo run, where
+      // the twin subtrees overlap on idle cores, favours recomputing; the
+      // 8-thread suite, where cores are busy, favours writing it once, and
+      // at corpus scale that is the only right form (2× a 100 TB pipeline
+      // is never free).
       val scored = graft.operators.Reuse.materializeFiles(bigramLmDocScores(spark, dir)
         .join(Tables.documents(spark, dir)
           .filter(col("lang").isNotNull)

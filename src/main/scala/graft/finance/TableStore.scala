@@ -27,8 +27,11 @@ final class TableStore(spark: SparkSession, val root: String) {
 
   def exists(table: String): Boolean = Files.exists(dir(table))
 
+  /** The table's current generation, read with its memoized schema
+    * ([[graft.io.SchemaMemo]]): an unchanged table starts no Spark job
+    * before the caller's own action; a swapped one is re-inferred once. */
   def read(table: String): DataFrame =
-    spark.read.parquet(dir(table).toString)
+    graft.io.SchemaMemo.read(spark, dir(table).toString)
 
   /** Full refresh with physical layout for big tables (SURVEY §4: the
     * reference's B-tree indexes map to partition pruning + sorted files):
@@ -68,6 +71,8 @@ final class TableStore(spark: SparkSession, val root: String) {
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy(partitionBy: _*)
       .parquet(dir(table).toString)
+    // the directory keeps its inode: drop its schema rather than trust mtime
+    graft.io.SchemaMemo.invalidate(dir(table).toString)
   }
 
   /** Bucketed managed table for co-located joins (SURVEY §4 / builder

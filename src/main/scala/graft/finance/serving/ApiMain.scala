@@ -14,13 +14,17 @@ import graft.finance.connector.JobLaunchClient
   * `uvicorn main:app` equivalent (`ui/backend/main.py`), completing the
   * browser→API→engine hop on the Spark side.
   *
-  * Read suppliers re-read the stored tables per request, so pages reflect
+  * Read suppliers resolve the stored tables per request, so pages reflect
   * whatever the last [[graft.finance.JobsMain]] run wrote — the same
   * freshness contract as the reference's per-request DB session over
-  * dbt-materialized tables. The write half (user-category mutations) and
-  * the Dagster trigger (`GRAFT_DAGSTER_URL`, same GraphQL client the
-  * reference's backend uses) are wired when their backing services are
-  * reachable.
+  * dbt-materialized tables. A table's schema is inferred once per
+  * directory generation ([[graft.io.SchemaMemo]]), so a request re-infers
+  * only what a swap replaced. The server answers up to one request per
+  * session core at once, under [[ApiServer]]'s read/write lock contract.
+  * The write half (user-category mutations) and the Dagster trigger
+  * (`GRAFT_DAGSTER_URL`, same GraphQL client the reference's backend uses,
+  * also behind the debounced retrain of All-Data edits) are wired when
+  * their backing services are reachable.
   */
 object ApiMain {
 
@@ -130,7 +134,8 @@ object ApiMain {
       registry = Some(() => tableOrEmpty("model_registry", Schemas.modelRegistry)),
       backups = Some(backupSvc),
       simplefinWarnings = warningsFetch,
-      port = port)
+      port = port,
+      workers = spark.sparkContext.defaultParallelism)
   }
 
   /** JDK-only POST transport for the GraphQL launch client. */

@@ -3,12 +3,15 @@ package graft.finance.serving
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
 import java.time.LocalDate
+import java.util.concurrent.{ExecutorService, Executors}
+import java.util.concurrent.locks.ReentrantReadWriteLock
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 
 import graft.finance.{CategoryCatalog, ConnectionHealth, Serving, UserCategoryService}
+import graft.finance.ops.Debouncer
 
 /** The HTTP serving boundary: the reference's browser→API→engine hop
   * (`ui/backend/api/transactions.py:38-62`,
@@ -23,6 +26,20 @@ import graft.finance.{CategoryCatalog, ConnectionHealth, Serving, UserCategorySe
   * Data access is via suppliers (`() => DataFrame`) so every request reads
   * the tables' current state, matching the per-request DB session of the
   * reference. The Spark driver hosts the server; executors never see it.
+  *
+  * Concurrency: requests run on a fixed pool of `workers` daemon threads,
+  * and every route holds one fair read/write lock for the whole request.
+  * Routes that only read (every GET, and the trigger routes, which only
+  * call the orchestrator) share it, so their Spark jobs overlap. Routes
+  * that change the warehouse (the POST/PUT edits of transactions,
+  * validated categories and categories, and backup run/restore/schedule)
+  * hold it exclusively: a read–merge–swap–re-read of `user_categories` is
+  * atomic, and no read lists a directory while this server swaps it.
+  *
+  * An accepted All-Data category edit schedules
+  * `5_full_refresh_validated_retrain_repredict` through `retrainDebouncer`
+  * when a trigger is configured: a burst of edits launches one job, 45 s
+  * after the last (`dagster_trigger.py:29-53`).
   */
 final class ApiServer(
     joined: () => DataFrame,
@@ -35,23 +52,45 @@ final class ApiServer(
     registry: Option[() => DataFrame] = None,
     backups: Option[BackupService] = None,
     simplefinWarnings: Option[Int => graft.finance.connector.JobLaunchClient.WarningsResult] = None,
-    port: Int = 0) {
+    port: Int = 0,
+    workers: Int = Runtime.getRuntime.availableProcessors,
+    retrainDebouncer: Debouncer =
+      new Debouncer(Debouncer.DefaultDebounceSeconds * 1000L)) {
+
+  private val pool: ExecutorService =
+    Executors.newFixedThreadPool(math.max(1, workers), (r: Runnable) => {
+      val t = Executors.defaultThreadFactory.newThread(r)
+      t.setDaemon(true)
+      t
+    })
+  private val lock = new ReentrantReadWriteLock(true)
 
   private val server = HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
+  server.setExecutor(pool)
   // HttpServer matches the longest context prefix; the exact-path check in
   // `exchange` turns unknown subpaths into 404s as FastAPI's router would.
   server.createContext("/api/transactions/categories/list",
-    exchange("/api/transactions/categories/list", categoriesList))
-  server.createContext("/api/transactions", transactionsDispatch _)
-  server.createContext("/api/validated-transactions", validatedDispatch _)
-  server.createContext("/api/control-center", controlCenterDispatch _)
-  server.createContext("/api/categories", categoriesDispatch _)
-  server.createContext("/api/model-metrics", modelMetricsDispatch _)
-  server.createContext("/api/backup", backupDispatch _)
+    guarded(exchange("/api/transactions/categories/list", categoriesList)))
+  server.createContext("/api/transactions", guarded(transactionsDispatch))
+  server.createContext("/api/validated-transactions", guarded(validatedDispatch))
+  server.createContext("/api/control-center", guarded(controlCenterDispatch))
+  server.createContext("/api/categories", guarded(categoriesDispatch))
+  server.createContext("/api/model-metrics", guarded(modelMetricsDispatch))
+  server.createContext("/api/backup", guarded(backupDispatch))
 
   def start(): ApiServer = { server.start(); this }
-  def stop(): Unit = server.stop(0)
+  def stop(): Unit = { server.stop(0); pool.shutdown() }
   def boundPort: Int = server.getAddress.getPort
+
+  /** Run `handler` under the shared lock if the request only reads the
+    * warehouse (a GET or a trigger), else under the exclusive one. */
+  private def guarded(handler: HttpExchange => Unit)(ex: HttpExchange): Unit = {
+    val readsOnly = ex.getRequestMethod == "GET" ||
+      ex.getRequestURI.getPath.split("/").lastOption.exists(_.startsWith("trigger-"))
+    val held = if (readsOnly) lock.readLock else lock.writeLock
+    held.lock()
+    try handler(ex) finally held.unlock()
+  }
 
   private def exchange(
       exactPath: String,
@@ -301,6 +340,8 @@ final class ApiServer(
         case Right(master) =>
           try {
             val r = svc.updateValidatedCategory(id, master)
+            trigger.foreach(launch => retrainDebouncer.call(() =>
+              launch("5_full_refresh_validated_retrain_repredict")))
             (200, ApiJson.obj(Seq(
               "transaction_id" -> ApiJson.str(r.transactionId),
               "master_category" -> ApiJson.value(r.masterCategory.orNull),

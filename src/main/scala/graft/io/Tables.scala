@@ -13,27 +13,9 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  /** Inferred-schema memo, keyed by resolved file path (round-16
-    * optimization, guide §1/§7.3): every bare-path `spark.read.parquet`
-    * re-infers its schema from the parquet footer — a driver-side,
-    * single-threaded ~50-150 ms stall PER READER CALL, measured at
-    * 150-750 ms of the build time of every catalog query (ProfilePhases,
-    * rep 3 — i.e. warm; q8's seven table reads cost 742 ms against
-    * 585 ms of actual execution). The schema of a fixture file is
-    * immutable for the life of a JVM, so infer once per path and hand
-    * the reader an explicit schema — exactly what a catalog table
-    * (Hive/Iceberg metastore) would do in production; plan shape,
-    * pushdown and results are untouched (verified: strict gate green,
-    * per-query shuffle bytes identical). NOT result caching: no row
-    * data, no file listings, only the StructType. */
-  private val schemaCache =
-    new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.types.StructType]()
-
-  private def readWithMemoizedSchema(spark: SparkSession, path: String): DataFrame = {
-    val schema = schemaCache.computeIfAbsent(path, p => spark.read.parquet(p).schema)
-    spark.read.schema(schema).parquet(path)
-  }
-
+  /** Every fixture read goes through [[SchemaMemo]], the schema memo shared
+    * with the finance warehouse: a file's footer is inferred once per file
+    * generation, not once per reader call. */
   def apply(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     require(names.contains(name), s"unknown table $name")
     if (name == "events") {
@@ -52,7 +34,7 @@ object Tables {
       // spark.sql.session.timeZone. A µs column already arrives as a
       // timestamp type (NTZ for isAdjustedToUTC=false) → pass through.
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val df = readWithMemoizedSchema(spark, s"$sfDir/$name.parquet")
+      val df = SchemaMemo.read(spark, s"$sfDir/$name.parquet")
       df.schema("ts").dataType match {
         case org.apache.spark.sql.types.LongType =>
           df.withColumn("ts",
@@ -60,7 +42,7 @@ object Tables {
               "timestampadd(MICROSECOND, ts div 1000, TIMESTAMP_NTZ '1970-01-01 00:00:00')"))
         case _ => df
       }
-    } else readWithMemoizedSchema(spark, s"$sfDir/$name.parquet")
+    } else SchemaMemo.read(spark, s"$sfDir/$name.parquet")
   }
 
   /** `documents` fanned out to one partition per core BEFORE the CPU-heavy

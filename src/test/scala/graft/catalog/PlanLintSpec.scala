@@ -157,8 +157,8 @@ class PlanLintSpec extends SparkSpec {
       "THE two-phase rank: the constant-key offsets window runs over 256 bucket counts, never the corpus (the per-bucket rank window partitions by the md5 bucket expression — corpus-keyed, unflagged)"),
     "o5_registry_history" -> ("Window(coalesce(pmod(year(o_orderdate), 1), 0))",
       "model-registry history: rows = training runs (fixture synthesizes a thin 1/97 orders slice)"),
-    "x14_dsir_selection" -> ("Window(coalesce(pmod((conv(substring(md5(w), 1, 15), 16, 10, true) % 64), 1), 0))",
-      "ratio-model totals over the 64-bucket hashed-unigram grid: operator constant"),
+    "x14_dsir_selection" -> ("Window(coalesce(pmod(bucket, 1), 0))",
+      "ratio-model totals over the 64-bucket hashed-unigram grid: operator constant; `bucket` is md5(w) % 64 computed BEFORE the materializeFiles cut, and the window's child is the Aggregate by that read-back column (<= 64 rows, plans/r17/x14_dsir_selection_after.txt)"),
     "v1_vocab_build" -> ("Window(pmod(count(1), 1))",
       "dense-id assignment over the top-1000 rows AFTER the limit: operator constant"),
     "t13_langid_confusion" -> ("Window(lang)",

@@ -1,14 +1,97 @@
 package graft.finance
 
 import graft.SparkSpec
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
 
 class TableStoreSpec extends SparkSpec {
   import spark.implicits._
 
   private def freshStore(): TableStore =
     new TableStore(spark, Files.createTempDirectory("graft-store").toString)
+
+  /** Spark jobs that `f` starts on this thread, counted by a listener. A
+    * flush job submitted after `f` bounds the count: the bus delivers
+    * events in order, so once its start arrives every job of `f` has too. */
+  private def jobsDuring(f: => Unit): Int = {
+    val sc = spark.sparkContext
+    val group = s"memo-${java.util.UUID.randomUUID()}"
+    val started = new AtomicInteger()
+    val flushed = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val g = Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull
+        if (g == group) started.incrementAndGet()
+        else if (g == s"$group-flush") flushed.countDown()
+      }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "measured")
+      f
+      sc.setJobGroup(s"$group-flush", "flush")
+      spark.range(1).count()
+      assert(flushed.await(60, TimeUnit.SECONDS), "listener bus never delivered the flush job")
+      started.get
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  // ---- schema memo (graft.io.SchemaMemo) ------------------------------------
+
+  test("a repeat read of an unchanged table starts no Spark job") {
+    val store = freshStore()
+    store.overwrite("t", Seq((1L, "a")).toDF("id", "v"))
+    store.read("t") // first read of this generation infers the schema
+    assert(jobsDuring(store.read("t").schema) == 0)
+    // the control: a bare read of the same directory infers, so the
+    // counter does see inference jobs
+    assert(jobsDuring(spark.read.parquet(s"${store.root}/t").schema) > 0)
+  }
+
+  test("an overwrite that adds a column is visible on the next read") {
+    val store = freshStore()
+    store.overwrite("t", Seq((1L, "a")).toDF("id", "v"))
+    assert(store.read("t").columns.toSeq == Seq("id", "v"))
+    store.overwrite("t", Seq((2L, "b", true)).toDF("id", "v", "flag"))
+    val r = store.read("t")
+    assert(r.columns.toSeq == Seq("id", "v", "flag"))
+    assert(r.collect().map(x => (x.getLong(0), x.getString(1), x.getBoolean(2))).toSeq ==
+      Seq((2L, "b", true)))
+  }
+
+  test("an overwriteDynamicPartitions restatement is visible on the next read") {
+    val store = freshStore()
+    store.overwriteDynamicPartitions("daily",
+      Seq(("d1", 1L), ("d2", 2L)).toDF("day", "id"), Seq("day"))
+    assert(store.read("daily").count() == 2)
+    // restate every partition with a new column: the in-place rewrite
+    // keeps the directory, and the next read must still see the new shape
+    store.overwriteDynamicPartitions("daily",
+      Seq(("d1", 10L, "x"), ("d2", 20L, "y")).toDF("day", "id", "tag"), Seq("day"))
+    val r = store.read("daily")
+    assert(r.columns.toSet == Set("day", "id", "tag"))
+    assert(r.collect().map(x => (x.getAs[String]("day"), x.getAs[Long]("id"),
+      x.getAs[String]("tag"))).toSet == Set(("d1", 10L, "x"), ("d2", 20L, "y")))
+  }
+
+  test("a directory swapped in from outside the store is re-inferred") {
+    val root = Files.createTempDirectory("graft-store").toString
+    val serving = new TableStore(spark, root)
+    // a second store on the same root stands in for a JobsMain process
+    val jobs = new TableStore(spark, root)
+    jobs.overwrite("t", Seq((1L, "a")).toDF("id", "v"))
+    assert(serving.read("t").columns.toSeq == Seq("id", "v"))
+    jobs.overwrite("t", Seq((2L, "b", 3.5)).toDF("id", "v", "score"))
+    val r = serving.read("t")
+    assert(r.columns.toSeq == Seq("id", "v", "score"))
+    assert(r.collect().map(_.getDouble(2)).toSeq == Seq(3.5))
+  }
 
   test("appendNew never updates existing rows (append-only incremental)") {
     val store = freshStore()

@@ -3,12 +3,17 @@ package graft.finance.serving
 import java.net.{HttpURLConnection, URI}
 import java.nio.charset.StandardCharsets
 import java.time.LocalDate
+import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 import graft.finance.{Serving, TableStore, UserCategoryService}
+import graft.finance.ops.Debouncer
 
 /** Drives the HTTP façade through the same branch matrix as ServingSpec:
   * the pure param layer (FastAPI Query semantics → 422) and the live
@@ -124,7 +129,10 @@ class ApiServerSpec extends SparkSpec {
 
   /** Server with the write half wired: a fresh warehouse-backed
     * UserCategoryService and a recording trigger. */
-  private def withWritableServer[A](f: (Int, TableStore) => A): A = {
+  private def withWritableServer[A](
+      joined: () => DataFrame = () => joinedFixture,
+      trigger: Option[String => String] = Some(name => s"run-for-$name"),
+      retrain: Debouncer = new Debouncer(45000L))(f: (Int, TableStore) => A): A = {
     val wh = java.nio.file.Files.createTempDirectory("graft-api-wh").toString
     val store = new TableStore(spark, wh)
     val tx = () => joinedFixture.select(
@@ -134,10 +142,11 @@ class ApiServerSpec extends SparkSpec {
     val svc = new UserCategoryService(spark, store, tx,
       now = () => java.sql.Timestamp.valueOf("2024-02-03 00:00:00"))
     val server = new ApiServer(
-      () => joinedFixture, () => validatedFixture, () => simplefinFixture,
+      joined, () => validatedFixture, () => simplefinFixture,
       userCategories = Some(svc),
-      trigger = Some(name => s"run-for-$name"),
-      today = () => LocalDate.parse("2024-02-03")).start()
+      trigger = trigger,
+      today = () => LocalDate.parse("2024-02-03"),
+      retrainDebouncer = retrain).start()
     try f(server.boundPort, store) finally server.stop()
   }
 
@@ -209,7 +218,7 @@ class ApiServerSpec extends SparkSpec {
   }
 
   test("write routes: categorize, validate, notes, exclude, bulk-validate, trigger") {
-    withWritableServer { (port, store) =>
+    withWritableServer() { (port, store) =>
       // categorize an unknown transaction -> the route's 404 gate
       val (s404, _) = send(port, "POST", "/api/transactions/nope/categorize",
         """{"master_category":"Dining"}""")
@@ -475,6 +484,124 @@ class ApiServerSpec extends SparkSpec {
       assert(body.contains("\"lookback_days\":23"))
       assert(body.contains("\"days_since_last_load\":2"))
       assert(body.contains("\"health_status\":"))
+    }
+  }
+
+  test("concurrent clients: reads overlap, edits serialize, no acknowledged update is lost") {
+    // the page supplier holds each GET until a second one is inside it too:
+    // a server that runs one request at a time never gets past peak 1
+    val inside = new AtomicInteger()
+    val peak = new AtomicInteger()
+    val overlap = new CountDownLatch(2)
+    val joined = () => {
+      peak.accumulateAndGet(inside.incrementAndGet(), (a, b) => math.max(a, b))
+      overlap.countDown()
+      try overlap.await(10, TimeUnit.SECONDS) finally inside.decrementAndGet()
+      joinedFixture
+    }
+    withWritableServer(joined) { (port, store) =>
+      val failures = new ConcurrentLinkedQueue[String]()
+      def expect200(what: String)(r: => (Int, String)): Boolean = {
+        val failure =
+          try {
+            val (status, body) = r
+            if (status == 200) None else Some(s"$what -> $status $body")
+          } catch { case e: Exception => Some(s"$what -> $e") }
+        failure.foreach(failures.add)
+        failure.isEmpty
+      }
+      def inParallel(n: Int)(body: Int => Unit): Unit = {
+        val threads = (0 until n).map(t => new Thread(() => body(t)))
+        threads.foreach(_.start())
+        threads.foreach(_.join(120000))
+      }
+
+      inParallel(4)(_ => expect200("GET page")(get(port, "/api/transactions?limit=2")))
+      assert(failures.isEmpty, failures.asScala.mkString("\n"))
+      assert(peak.get >= 2, "no two GETs were ever in flight at once")
+
+      // three hot ids, each with a stored row; every (id, field) pair is
+      // written by exactly one of six threads, so its last acknowledged
+      // value is that thread's last write, while the threads' merges of
+      // other fields on the same row interleave with it
+      val hot = Seq("t1", "t2", "t4")
+      hot.foreach(id => expect200(s"seed $id")(send(port, "POST",
+        s"/api/transactions/$id/categorize", """{"master_category":"Seed"}""")))
+      val pairs = for (id <- hot; field <- Seq("master_category", "notes", "validated"))
+        yield (id, field)
+      val last = new java.util.concurrent.ConcurrentHashMap[(String, String), String]()
+      inParallel(6) { t =>
+        for (round <- 0 until 2) {
+          pairs.zipWithIndex.filter(_._2 % 6 == t).foreach { case ((id, field), _) =>
+            val (method, path, value, body) = field match {
+              case "master_category" =>
+                val v = s"Cat-$t-$round"
+                ("POST", s"/api/transactions/$id/categorize", v, s"""{"master_category":"$v"}""")
+              case "notes" =>
+                val v = s"note-$t-$round"
+                ("PUT", s"/api/transactions/$id/notes", v, s"""{"notes":"$v"}""")
+              case _ =>
+                val v = (round % 2 == 0).toString
+                ("PUT", s"/api/transactions/$id/validate", v, s"""{"validated":$v}""")
+            }
+            if (expect200(s"$method $path")(send(port, method, path, body)))
+              last.put((id, field), value)
+          }
+          expect200("GET page")(get(port,
+            if (round % 2 == 0) "/api/transactions?limit=3" else "/api/validated-transactions"))
+        }
+      }
+      assert(failures.isEmpty, failures.asScala.mkString("\n"))
+      assert(last.size == pairs.size)
+
+      val stored = store.read("user_categories").collect()
+        .map(r => r.getAs[String]("transaction_id") -> r).toMap
+      pairs.foreach { case (id, field) =>
+        val got = Option(stored(id).getAs[Any](field)).map(_.toString).orNull
+        assert(got == last.get((id, field)), s"$id.$field lost an update")
+      }
+    }
+  }
+
+  test("All-Data category edits debounce into one retrain launch; unconfigured launches none") {
+    // the injectable schedule of OpsSpec: record, fire on demand
+    final class FakeSchedule {
+      val scheduled = new ConcurrentLinkedQueue[(() => Unit, Array[Boolean])]()
+      def apply(delay: Long, action: () => Unit): () => Unit = {
+        val cancelled = Array(false)
+        scheduled.add((action, cancelled))
+        () => cancelled(0) = true
+      }
+      def fireDue(): Unit =
+        scheduled.asScala.foreach { case (action, cancelled) => if (!cancelled(0)) action() }
+    }
+    def editBurst(port: Int): Unit = {
+      val (s0, _) = send(port, "POST", "/api/transactions/t2/categorize",
+        """{"master_category":"Groceries","validated":true}""")
+      assert(s0 == 200)
+      for (c <- Seq("Dining", "Travel", "Gas")) {
+        val (s, b) = send(port, "PUT", "/api/validated-transactions/t2/category",
+          s"""{"master_category":"$c"}""")
+        assert(s == 200 && b.contains("retrain scheduled"), b)
+      }
+    }
+
+    val launched = new ConcurrentLinkedQueue[String]()
+    val configured = new FakeSchedule
+    withWritableServer(
+      trigger = Some(name => { launched.add(name); s"run-for-$name" }),
+      retrain = new Debouncer(45000L, configured.apply)) { (port, _) =>
+      editBurst(port)
+      assert(configured.scheduled.size == 3 && launched.isEmpty)
+      configured.fireDue()
+      assert(launched.asScala.toSeq == Seq("5_full_refresh_validated_retrain_repredict"))
+    }
+
+    val unconfigured = new FakeSchedule
+    withWritableServer(trigger = None,
+      retrain = new Debouncer(45000L, unconfigured.apply)) { (port, _) =>
+      editBurst(port)
+      assert(unconfigured.scheduled.isEmpty)
     }
   }
 }
