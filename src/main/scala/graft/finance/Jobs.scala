@@ -79,9 +79,20 @@ final class Jobs(spark: SparkSession, store: TableStore) {
     store.read("categories")
   }
 
-  /** `3_run_all_dbt_models` — recompute the full transform DAG. Set
-    * `fullRefreshValidated` for the `z_b`/`5_` full-refresh variants. */
+  /** `3_run_all_dbt_models` — recompute the full transform DAG: the facts,
+    * then the predictions fact. Set `fullRefreshValidated` for the
+    * `z_b`/`5_` full-refresh variants. */
   def runAllModels(fullRefreshValidated: Boolean = false): Unit = {
+    buildFacts(fullRefreshValidated)
+    buildPredictionsFact()
+  }
+
+  /** The facts, everything upstream of predictions: staging →
+    * `int_trxns_features` → `fct_trxns_categorized` → `fct_validated_trxns`
+    * → `fct_trxns_uncategorized`. A predicting job builds them once, before
+    * it trains or scores; [[buildPredictionsFact]] then publishes the
+    * scores. */
+  def buildFacts(fullRefreshValidated: Boolean = false): Unit = {
     val stgSf = Staging.stgSimplefin(
       readOrEmpty("raw_simplefin", Schemas.simplefinRaw),
       readOrEmpty("seed_account_mapping_simplefin", Schemas.accountMappingSimplefin),
@@ -111,7 +122,14 @@ final class Jobs(spark: SparkSession, store: TableStore) {
     val uncategorized = Marts.fctTrxnsUncategorized(
       store.read("int_trxns_features"), store.read("fct_validated_trxns"))
     store.overwrite("fct_trxns_uncategorized", uncategorized)
+  }
 
+  /** The predictions fact: the deduped `predicted_transactions` joined onto
+    * the stored `fct_trxns_uncategorized`, written as
+    * `fct_trxns_with_predictions` (the reference's view,
+    * `fct_trxns_with_predictions.sql:4`). Rows without a score carry null
+    * prediction columns. */
+  def buildPredictionsFact(): Unit = {
     val preds = Staging.stgPredictions(
       readOrEmpty("predicted_transactions", Schemas.predictedTransactions))
     store.overwrite("fct_trxns_with_predictions",
@@ -150,9 +168,11 @@ final class Jobs(spark: SparkSession, store: TableStore) {
     Jobs.TrainRun(result, version)
   }
 
-  /** Predict step (`2_ingest_and_predict` tail): score the uncategorized
-    * fact with the active model, upsert by transaction_id
-    * (delete-then-append, `classifier_predict.py:149-170`). */
+  /** Predict step (`2_ingest_and_predict` tail): score the stored
+    * uncategorized fact with the given model, upsert by transaction_id
+    * (delete-then-append, `classifier_predict.py:149-170`). Runs between
+    * [[buildFacts]] and [[buildPredictionsFact]], which publishes the
+    * scores. */
   def predict(
       model: org.apache.spark.ml.PipelineModel,
       labels: Array[String],

@@ -1,6 +1,7 @@
 package graft.finance
 
 import org.apache.spark.sql.SparkSession
+import graft.GraftSession
 import graft.finance.ml.CategoryClassifier
 
 /** Dagster-invokable entry point for the 7-job asset graph (SURVEY §2.11):
@@ -11,23 +12,28 @@ import graft.finance.ml.CategoryClassifier
   *
   * | job | composition |
   * |---|---|
-  * | 1_dagster_init                          | models → train → predict → models |
-  * | 2_ingest_and_predict                    | [fleet ingest via DSv2 when GRAFT_SIMPLEFIN_ACCESS_URLS is set] → models → predict |
-  * | 3_run_all_dbt_models                    | models |
-  * | 4_refresh_validated_retrain_repredict   | models (incremental) → train → predict → models |
-  * | z_a_rebuild_historic_data               | full-refresh models → train → predict → models |
+  * | 1_dagster_init                          | facts → train → predict → predictions fact |
+  * | 2_ingest_and_predict                    | [fleet ingest via DSv2 when GRAFT_SIMPLEFIN_ACCESS_URLS is set] → facts → predict → predictions fact |
+  * | 3_run_all_dbt_models                    | models (facts → predictions fact) |
+  * | 4_refresh_validated_retrain_repredict   | facts (incremental) → train → predict → predictions fact |
+  * | z_a_rebuild_historic_data               | [seed refresh] → full-refresh facts → train → predict → predictions fact |
   * | z_b_full_refresh_validated_trxns        | full-refresh models |
-  * | 5_full_refresh_validated_retrain_repredict | full-refresh models → train → predict → models |
+  * | 5_full_refresh_validated_retrain_repredict | full-refresh facts → train → predict → predictions fact |
+  *
+  * "facts" is [[Jobs.buildFacts]] and "predictions fact" is
+  * [[Jobs.buildPredictionsFact]]; "models" is both ([[Jobs.runAllModels]]).
+  * A predicting job writes each fact once: scoring reads the stored
+  * uncategorized fact, and only the predictions fact depends on the scores.
+  * That fact is refreshed even when no model exists, so new uncategorized
+  * rows appear with null predictions.
   */
 object JobsMain {
 
   def main(args: Array[String]): Unit = {
     val Array(warehouseDir, jobName) = args.take(2)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
+    val spark = GraftSession.builder("graft-jobs", cpus.toInt)
       .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
@@ -45,7 +51,6 @@ object JobsMain {
         // a restored-backup registry row with a newer timestamp must not
         // mislabel this model's predictions
         jobs.predict(model, labels, version)
-        jobs.runAllModels() // predictions flow into fct_trxns_with_predictions
       case Jobs.TrainRun(CategoryClassifier.Skipped(reason, n), _) =>
         System.err.println(s"[train] skipped: $reason (n=$n)")
         predictWithExisting() // a previously trained model can still score
@@ -56,17 +61,22 @@ object JobsMain {
     def predictWithExisting(): Unit = {
       val registry = if (store.exists("model_registry")) Some(store.read("model_registry")) else None
       jobs.modelStore.loadForPredict(registry) match {
-        case Some((model, labels, version)) =>
-          jobs.predict(model, labels, version)
-          jobs.runAllModels()
+        case Some((model, labels, version)) => jobs.predict(model, labels, version)
         case None =>
           System.err.println("[predict] no trained model available; skipping predictions")
       }
     }
 
+    // facts once, then scoring, then the one fact the scores feed
+    def predicting(fullRefreshValidated: Boolean)(score: => Unit): Unit = {
+      jobs.buildFacts(fullRefreshValidated)
+      score
+      jobs.buildPredictionsFact()
+    }
+
     jobName match {
       case "1_dagster_init" | "4_refresh_validated_retrain_repredict" =>
-        jobs.runAllModels(); trainAndPredict()
+        predicting(fullRefreshValidated = false)(trainAndPredict())
       case "2_ingest_and_predict" =>
         // fleet ingest head: when the deployment provides access URLs,
         // pull them through the `graft-simplefin` DSv2 source (one task
@@ -79,10 +89,9 @@ object JobsMain {
           val n = jobs.ingestFleet(u.split(",").map(_.trim).filter(_.nonEmpty).toSeq, now)
           System.err.println(s"[ingest] fleet batch: $n rows")
         }
-        // per the composition table: models → predict, NO retrain — the
+        // per the composition table: facts → predict, NO retrain — the
         // ingest poll must not churn the model on every run
-        jobs.runAllModels()
-        predictWithExisting()
+        predicting(fullRefreshValidated = false)(predictWithExisting())
       case "3_run_all_dbt_models" =>
         jobs.runAllModels()
       case "z_b_full_refresh_validated_trxns" =>
@@ -94,9 +103,9 @@ object JobsMain {
           val refreshed = jobs.rebuildSeeds(d)
           System.err.println(s"[seeds] refreshed: ${refreshed.mkString(", ")}")
         }
-        jobs.runAllModels(fullRefreshValidated = true); trainAndPredict()
+        predicting(fullRefreshValidated = true)(trainAndPredict())
       case "5_full_refresh_validated_retrain_repredict" =>
-        jobs.runAllModels(fullRefreshValidated = true); trainAndPredict()
+        predicting(fullRefreshValidated = true)(trainAndPredict())
       case other =>
         throw new IllegalArgumentException(s"unknown job: $other")
     }

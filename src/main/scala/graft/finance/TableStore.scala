@@ -28,8 +28,9 @@ final class TableStore(spark: SparkSession, val root: String) {
   def exists(table: String): Boolean = Files.exists(dir(table))
 
   /** The table's current generation, read with its memoized schema
-    * ([[graft.io.SchemaMemo]]): an unchanged table starts no Spark job
-    * before the caller's own action; a swapped one is re-inferred once. */
+    * ([[graft.io.SchemaMemo]]): a table this store last [[overwrite]]s, or
+    * one already read unchanged, starts no Spark job before the caller's
+    * own action; one swapped in by anyone else is re-inferred once. */
   def read(table: String): DataFrame =
     graft.io.SchemaMemo.read(spark, dir(table).toString)
 
@@ -107,12 +108,15 @@ final class TableStore(spark: SparkSession, val root: String) {
       .foreach(p => deleteRecursively(Paths.get(p)))
   }
 
-  /** Full refresh: write to a temp sibling, swap atomically. */
+  /** Full refresh: write to a temp sibling, swap atomically. The written
+    * schema is memoized for the generation the swap publishes, so reading
+    * the table back starts no inference job. */
   def overwrite(table: String, df: DataFrame): Unit = {
     val target = dir(table)
     val tmp = Paths.get(root, s".${table}__tmp")
     deleteRecursively(tmp)
     df.write.mode("overwrite").parquet(tmp.toString)
+    graft.io.SchemaMemo.record(target.toString, tmp.toString, df.schema)
     swapInto(tmp, target)
   }
 

@@ -39,13 +39,13 @@ final class ModelStore(spark: SparkSession, root: String) {
     * into a silent no-predictions state (the reference raises
     * FileNotFoundError here, `classifier_predict.py:78-81`). */
   def loadForPredict(registry: Option[DataFrame]): Option[(PipelineModel, Array[String], String)] = {
+    // one top-1 over the trained rows: active first, then newest
     val fromRegistry = registry.flatMap { reg =>
-      val trained = reg.filter(col("status") === "trained")
-      val active = trained.filter(col("is_active"))
-        .orderBy(col("training_timestamp").desc).limit(1)
-      val pick = if (!active.isEmpty) active
-        else trained.orderBy(col("training_timestamp").desc).limit(1)
-      pick.collect().headOption.map(_.getAs[String]("model_version"))
+      reg.filter(col("status") === "trained")
+        .orderBy(coalesce(col("is_active"), lit(false)).desc,
+          col("training_timestamp").desc, col("model_version"))
+        .select("model_version").limit(1)
+        .collect().headOption.map(_.getString(0))
     }
     fromRegistry match {
       case Some(v) =>

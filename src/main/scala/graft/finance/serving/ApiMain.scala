@@ -5,6 +5,7 @@ import java.nio.charset.StandardCharsets
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 
+import graft.GraftSession
 import graft.finance.{Schemas, Serving, TableStore, UserCategoryService}
 import graft.finance.connector.JobLaunchClient
 
@@ -33,10 +34,8 @@ object ApiMain {
       sys.error("usage: ApiMain <warehouseDir> [port]"))
     val port = args.lift(1).map(_.toInt).getOrElse(8000)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
+    val spark = GraftSession.builder("graft-api", cpus.toInt)
       .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

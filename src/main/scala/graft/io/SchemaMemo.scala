@@ -5,7 +5,7 @@ import java.nio.file.attribute.{BasicFileAttributes, FileTime}
 import java.util.concurrent.ConcurrentHashMap
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 
 /** The one inferred-parquet-schema memo, shared by every stored-table
   * reader: the catalog fixtures ([[Tables]]) and the finance warehouse
@@ -22,7 +22,8 @@ import org.apache.spark.sql.types.StructType
   *
   * A directory swapped in, by this JVM or by another process such as a
   * `JobsMain` run, is a new inode with a new mtime, so the next read
-  * re-infers. A writer that changes a directory in place calls
+  * re-infers, unless the writer [[record]]ed the schema of the generation
+  * it published. A writer that changes a directory in place calls
   * [[invalidate]]. Each path holds one entry (a newer generation replaces
   * the older), and an entry holds only the StructType: no rows, no file
   * listings.
@@ -59,6 +60,30 @@ object SchemaMemo {
           }
         spark.read.schema(schema).parquet(path)
     }
+
+  /** Memoize the schema of the generation a writer is about to publish at
+    * `path`. `staged` is the finished parquet directory that a rename within
+    * `path`'s parent will move there; such a rename keeps the directory's
+    * inode and mtime, so `staged`'s generation IS the published one. The
+    * entry holds `written`, the frame's schema, as a parquet read returns
+    * it: every field nullable. Call after the write and before the rename. */
+  def record(path: String, staged: String, written: StructType): Unit =
+    generation(staged).foreach(gen => entries.put(key(path), Entry(gen, nullable(written))))
+
+  /** The memoized schema of `path`'s current generation, if any. */
+  private[graft] def memoized(path: String): Option[StructType] =
+    Option(entries.get(key(path))).filter(e => generation(path).contains(e.generation))
+      .map(_.schema)
+
+  private def nullable(t: StructType): StructType =
+    StructType(t.fields.map(f => f.copy(dataType = nullableType(f.dataType), nullable = true)))
+
+  private def nullableType(t: DataType): DataType = t match {
+    case s: StructType => nullable(s)
+    case a: ArrayType => ArrayType(nullableType(a.elementType), containsNull = true)
+    case m: MapType => MapType(nullableType(m.keyType), nullableType(m.valueType), valueContainsNull = true)
+    case other => other
+  }
 
   /** Drop `path`'s entry: for writers that change a directory in place. */
   def invalidate(path: String): Unit = entries.remove(key(path))

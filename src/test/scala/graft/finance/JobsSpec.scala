@@ -12,27 +12,10 @@ import scala.jdk.CollectionConverters._
 class JobsSpec extends SparkSpec {
 
   test("full pipeline: models, train, predict, incremental validated") {
-    val store = new TableStore(spark, Files.createTempDirectory("graft-wh").toString)
+    // 63 raw simplefin rows (t0..t62) + 60 pre-categorized historic rows
+    // that bootstrap fct_validated_trxns
+    val store = Warehouses.trainable(spark)
     val jobs = new Jobs(spark, store)
-
-    // Raw simplefin rows: 60 categorizable-by-history + 3 new ones.
-    val raws = (0 until 63).map { i =>
-      Row(s"t$i", "a1", "Checking", "dom", "Bank",
-        new java.math.BigDecimal(s"-${5 + i % 20}.00"), 1700000000L + i,
-        "2024-01-01", 1700000000L + i, "2024-01-0" + (1 + i % 9),
-        if (i % 2 == 0) s"starbucks coffee $i" else s"united airlines flight $i",
-        false, null, "2024-01-02 00:00:00", "2024-01-02")
-    }
-    jobs.loadRawBatch(spark.createDataFrame(raws.asJava, Schemas.simplefinRaw))
-
-    // Historic seed: pre-categorized rows to bootstrap fct_validated_trxns.
-    val hist = (0 until 60).map { i =>
-      Row("Old Checking", null, s"-${3 + i % 10}.00", s"2019-0${1 + i % 9}-1${i % 9}",
-        if (i % 2 == 0) s"starbucks coffee ${i + 100}" else s"united airlines flight ${i + 100}",
-        "src", if (i % 2 == 0) "Dining" else "Travel", "01/02/2020")
-    }
-    store.overwrite("historic_transactions",
-      spark.createDataFrame(hist.asJava, Schemas.historicRaw))
 
     jobs.runAllModels()
     assert(store.read("int_trxns_features").count() == 123)

@@ -3,9 +3,10 @@ package graft.finance
 import graft.SparkSpec
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
-import java.nio.file.Files
+import java.nio.file.{Files, Paths, StandardCopyOption}
 import java.util.concurrent.{CountDownLatch, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
+import scala.jdk.CollectionConverters._
 
 class TableStoreSpec extends SparkSpec {
   import spark.implicits._
@@ -91,6 +92,47 @@ class TableStoreSpec extends SparkSpec {
     val r = serving.read("t")
     assert(r.columns.toSeq == Seq("id", "v", "score"))
     assert(r.collect().map(_.getDouble(2)).toSeq == Seq(3.5))
+  }
+
+  test("a read right after an overwrite starts no Spark job") {
+    val store = freshStore()
+    store.overwrite("t", Seq((1L, "a")).toDF("id", "v"))
+    assert(jobsDuring(store.read("t").schema) == 0)
+    // upsert and appendNew publish through overwrite
+    store.upsert("t", Seq((2L, "b")).toDF("id", "v"), "id")
+    assert(jobsDuring(store.read("t").schema) == 0)
+    assert(store.read("t").count() == 2)
+  }
+
+  test("a swap made without any TableStore is re-inferred") {
+    val store = freshStore()
+    store.overwrite("t", Seq((1L, "a")).toDF("id", "v"))
+    assert(store.read("t").columns.toSeq == Seq("id", "v"))
+    // another process's swap: a bare parquet write renamed over the table
+    val staged = Paths.get(store.root, "staged")
+    Seq((2L, "b", 3.5)).toDF("id", "v", "score").write.parquet(staged.toString)
+    graft.finance.ops.FileTrees.delete(Paths.get(store.root, "t"))
+    Files.move(staged, Paths.get(store.root, "t"), StandardCopyOption.ATOMIC_MOVE)
+    val r = store.read("t")
+    assert(r.columns.toSeq == Seq("id", "v", "score"))
+    assert(r.collect().map(_.getDouble(2)).toSeq == Seq(3.5))
+  }
+
+  test("each table 1_dagster_init and 2_ingest_and_predict write is memoized as a bare read infers it") {
+    val store = Warehouses.trainable(spark)
+    JobsMain.run(spark, store.root, "1_dagster_init")
+    new Jobs(spark, store).loadRawBatch(Warehouses.raw(spark, 63, 68))
+    JobsMain.run(spark, store.root, "2_ingest_and_predict")
+    val tables = Files.list(Paths.get(store.root)).iterator.asScala
+      .map(_.getFileName.toString).filterNot(_.startsWith(".")).toSeq.sorted
+    assert(Set("raw_simplefin", "int_trxns_features", "fct_validated_trxns",
+      "fct_trxns_uncategorized", "fct_trxns_with_predictions", "model_registry",
+      "predicted_transactions").subsetOf(tables.toSet), tables)
+    tables.foreach { t =>
+      val dir = s"${store.root}/$t"
+      val memo = graft.io.SchemaMemo.memoized(dir)
+      assert(memo.contains(spark.read.parquet(dir).schema), s"$t: memoized $memo")
+    }
   }
 
   test("appendNew never updates existing rows (append-only incremental)") {

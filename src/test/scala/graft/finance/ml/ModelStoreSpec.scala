@@ -39,6 +39,18 @@ class ModelStoreSpec extends SparkSpec {
     val picked = store.loadForPredict(Some(reg))
     assert(picked.map(_._3).contains("v1"))
 
+    // an older active row beats a newer inactive one; with no active row the
+    // newest TRAINED row wins, not the newest row
+    store.save(trained.model, trained.labels, "v2")
+    def pick(rows: (String, String, Boolean, String)*) = store.loadForPredict(Some(
+      rows.toDF("model_version", "status", "is_active", "ts")
+        .withColumn("training_timestamp", col("ts").cast("timestamp")))).map(_._3)
+    assert(pick(("v1", "trained", true, "2026-01-01 00:00:00"),
+      ("v2", "trained", false, "2026-02-01 00:00:00")).contains("v1"))
+    assert(pick(("v1", "trained", false, "2026-01-01 00:00:00"),
+      ("v2", "trained", false, "2026-02-01 00:00:00"),
+      ("v3", "skipped", false, "2026-03-01 00:00:00")).contains("v2"))
+
     // no registry → falls back to the latest alias
     val viaLatest = store.loadForPredict(None)
     assert(viaLatest.map(_._3).contains("latest"))
