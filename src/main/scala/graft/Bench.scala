@@ -1,66 +1,79 @@
 package graft
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions.{col, struct, sum, xxhash64}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{col, count, struct, sum, xxhash64}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+  SparkListenerStageCompleted, SparkListenerTaskEnd}
 import java.util.concurrent.ConcurrentHashMap
-import java.util.concurrent.atomic.{AtomicInteger, LongAdder}
+import java.util.concurrent.atomic.{AtomicInteger, AtomicLong, LongAdder}
+import scala.jdk.CollectionConverters._
 
-/** Per-query shuffle-byte accounting (round-11 verdict #3): wall time on a
-  * shared box is noisy to ±0.5 s, so a plan regression that adds an
-  * exchange can hide inside the noise band — shuffle BYTES are
-  * deterministic per plan+data and diff cleanly round over round. Queries
-  * are attributed via a thread-local property set just before each query
-  * runs (Spark captures local properties into every job the thread — and,
-  * through SQLExecution's thread-local capture, its broadcast-exchange
-  * side jobs — submits); stages map to the owning query at job start, and
-  * task-end metrics accumulate under it. Tasks from jobs carrying no
-  * property (speculative scheduler work, anything outside a measured
-  * query) land in `_unattributed` so totals never silently undercount. */
-private final class ShuffleBytesListener extends org.apache.spark.scheduler.SparkListener {
-  val Prop = "graft.bench.query"
-  private val stageToQuery = new ConcurrentHashMap[Int, String]()
-  private val read = new ConcurrentHashMap[String, LongAdder]()
-  private val write = new ConcurrentHashMap[String, LongAdder]()
-  override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-    val q = Option(js.properties).flatMap(p => Option(p.getProperty(Prop)))
-    q.foreach(name => js.stageIds.foreach(sid => stageToQuery.put(sid, name)))
+/** The bench's one per-query listener. Jobs are attributed through two
+  * thread-local properties set around each query: `graft.bench.query`
+  * (the query name) and `graft.bench.phase` — `build` while the query's
+  * DataFrame is constructed (eager work such as `Reuse.materializeFiles`
+  * writes runs here), `exec` for the measured action. Spark captures local
+  * properties into every job the thread submits, and through
+  * SQLExecution's capture into its broadcast side jobs too. Stages map to
+  * the (query, phase) of the job that submits them; stage completions and
+  * task-end metrics accumulate under it. Tasks of jobs carrying no
+  * property land in `_unattributed`, so totals never silently undercount.
+  * Shuffle bytes are deterministic per plan and data where wall time is
+  * noisy, so a plan regression that adds an exchange diffs cleanly from
+  * run to run; the exception is work a per-directory memo shares between
+  * queries (the g1/g2/g4/g7 trade graph, the v2-v5 tokenizer models),
+  * charged to whichever query fills the memo first.
+  *
+  * Per (query, phase) it counts jobs, stages that ran, tasks, shuffle
+  * read/write bytes, memory and disk spill bytes, and the peak execution
+  * memory of any one task (the number that predicts an executor OOM). */
+private[graft] final class QueryTrace extends SparkListener {
+  import QueryTrace._
+  private val stageKey = new ConcurrentHashMap[Int, Key]()
+  private val tallies = new ConcurrentHashMap[Key, Tally]()
+  private def tally(k: Key): Tally = tallies.computeIfAbsent(k, _ => new Tally)
+
+  override def onJobStart(js: SparkListenerJobStart): Unit = {
+    val props = Option(js.properties)
+    def prop(name: String) = props.flatMap(p => Option(p.getProperty(name)))
+    val k = Key(prop(QueryProp).getOrElse(Unattributed), prop(PhaseProp).getOrElse("none"))
+    js.stageIds.foreach(sid => stageKey.put(sid, k))
+    tally(k).jobs.increment()
   }
-  override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-    val q = Option(stageToQuery.get(te.stageId)).getOrElse("_unattributed")
+  override def onStageCompleted(sc: SparkListenerStageCompleted): Unit =
+    tally(keyOf(sc.stageInfo.stageId)).stages.increment()
+  override def onTaskEnd(te: SparkListenerTaskEnd): Unit = {
+    val t = tally(keyOf(te.stageId))
+    t.tasks.increment()
     val m = te.taskMetrics
     if (m != null) {
-      read.computeIfAbsent(q, _ => new LongAdder).add(m.shuffleReadMetrics.totalBytesRead)
-      write.computeIfAbsent(q, _ => new LongAdder).add(m.shuffleWriteMetrics.bytesWritten)
+      t.shuffleRead.add(m.shuffleReadMetrics.totalBytesRead)
+      t.shuffleWrite.add(m.shuffleWriteMetrics.bytesWritten)
+      t.memorySpill.add(m.memoryBytesSpilled)
+      t.diskSpill.add(m.diskBytesSpilled)
+      t.peakExecMemory.accumulateAndGet(m.peakExecutionMemory, (a, b) => math.max(a, b))
     }
   }
-  /** Drain the current tallies (bytes read, bytes written) per query.
-    *
-    * The caller must quiesce the ASYNC listener bus first (round-12 ADVICE:
-    * events arrive on Spark's listener threads, so a snapshot taken right
-    * after the last job returns can miss trailing TaskEnd events — or,
-    * worse, count them into the NEXT repeat's tallies, making the
-    * "bytes are deterministic" diffing premise false): [[drainListenerBus]]
-    * does that. `stageToQuery` is NOT cleared here — stage ids are unique
-    * for the SparkContext's lifetime, so a late event for a prior repeat's
-    * stage still attributes to the right query instead of falling into
-    * `_unattributed` (the map is bounded by the bench session's stage
-    * count; it dies with the process). */
-  def snapshotAndReset(): Map[String, (Long, Long)] = {
-    import scala.jdk.CollectionConverters._
-    val ks = (read.keySet.asScala ++ write.keySet.asScala).toSet
-    val out = ks.map { k =>
-      k -> (Option(read.get(k)).map(_.sum).getOrElse(0L),
-        Option(write.get(k)).map(_.sum).getOrElse(0L))
-    }.toMap
-    read.clear(); write.clear()
+  private def keyOf(stageId: Int): Key =
+    Option(stageKey.get(stageId)).getOrElse(Key(Unattributed, "none"))
+
+  /** Drain the tallies per (query, phase). Call [[drainListenerBus]] first:
+    * events arrive on Spark's listener thread, so a snapshot taken right
+    * after the last job returns could miss trailing task ends, or count
+    * them into the next repeat. `stageKey` is not cleared: stage ids are
+    * unique for the SparkContext's lifetime, so a late event still lands
+    * on the right query. */
+  def snapshotAndReset(): Map[Key, Counts] = {
+    val out = tallies.asScala.map { case (k, t) => k -> t.counts }.toMap
+    tallies.clear()
     out
   }
 
   /** Block until every queued listener event has been delivered.
-    * `LiveListenerBus.waitUntilEmpty` is `private[spark]` — public at the
-    * bytecode level, so plain reflection reaches it (the stable path Spark's
-    * own tests use). If the reflective route ever breaks on a Spark bump,
-    * fall back to polling the tallies until they hold still. */
-  def drainListenerBus(sc: org.apache.spark.SparkContext): Unit = {
+    * `LiveListenerBus.waitUntilEmpty` is `private[spark]`, public at the
+    * bytecode level, so plain reflection reaches it (the path Spark's own
+    * tests use). If the reflective route breaks on a Spark bump, poll
+    * until the task count holds still for 100 ms. */
+  def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
     try {
       val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
       val m = bus.getClass.getMethods
@@ -70,18 +83,52 @@ private final class ShuffleBytesListener extends org.apache.spark.scheduler.Spar
       else m.invoke(bus, java.lang.Long.valueOf(30000L))
     } catch {
       case _: Throwable =>
-        def total: Long = {
-          import scala.jdk.CollectionConverters._
-          read.values.asScala.map(_.sum).sum + write.values.asScala.map(_.sum).sum
-        }
+        def total: Long = tallies.values.asScala.map(_.tasks.sum).sum
         var prev = -1L
         var cur = total
         var spins = 0
-        while (prev != cur && spins < 100) { // stable-for-100ms = drained
+        while (prev != cur && spins < 100) {
           Thread.sleep(100); prev = cur; cur = total; spins += 1
         }
     }
+}
+
+private[graft] object QueryTrace {
+  val QueryProp = "graft.bench.query"
+  val PhaseProp = "graft.bench.phase"
+  val Build = "build"
+  val Exec = "exec"
+  val Unattributed = "_unattributed"
+
+  final case class Key(query: String, phase: String)
+
+  final case class Counts(jobs: Long, stages: Long, tasks: Long,
+      shuffleRead: Long, shuffleWrite: Long, memorySpill: Long, diskSpill: Long,
+      peakExecMemory: Long) {
+    def json: String =
+      s"""{"jobs":$jobs,"stages":$stages,"tasks":$tasks,""" +
+        s""""shuffle_read_bytes":$shuffleRead,"shuffle_write_bytes":$shuffleWrite,""" +
+        s""""memory_spill_bytes":$memorySpill,"disk_spill_bytes":$diskSpill,""" +
+        s""""peak_exec_memory_bytes":$peakExecMemory}"""
   }
+  val NoCounts: Counts = Counts(0, 0, 0, 0, 0, 0, 0, 0)
+
+  private final class Tally {
+    val jobs, stages, tasks = new LongAdder
+    val shuffleRead, shuffleWrite, memorySpill, diskSpill = new LongAdder
+    val peakExecMemory = new AtomicLong
+    def counts: Counts = Counts(jobs.sum, stages.sum, tasks.sum, shuffleRead.sum,
+      shuffleWrite.sum, memorySpill.sum, diskSpill.sum, peakExecMemory.get)
+  }
+}
+
+/** One measured run of one query: total seconds (-1 for a failure), output
+  * rows, the build wall, and the planning phases of the measured action's
+  * own `QueryExecution` (analysis, optimization, planning). Execution is
+  * the rest: `sec` minus build and the phases. */
+private[graft] final case class QueryRun(
+    sec: Double, rows: Long, buildMs: Long, phasesMs: Map[String, Long]) {
+  def execMs: Long = math.max(0L, math.round(sec * 1000) - buildMs - phasesMs.values.sum)
 }
 
 /** Benchmark main: one JSON line with per-query seconds at the target SF.
@@ -112,10 +159,11 @@ private final class ShuffleBytesListener extends org.apache.spark.scheduler.Spar
   *
   * Materialization: a plain count() would let Catalyst prune every
   * projection expression (map-only queries would time a metadata-ish scan),
-  * so the measured action hashes EVERY output column of every row into one
-  * aggregated value — all computed work is forced, only 8 bytes cross to
-  * the driver. A failed query reports -1 and logs to stderr rather than
-  * recording a fast fake timing.
+  * so the measured action is `collect()` of one hash aggregate over EVERY
+  * output column of every row (plus the row count) — all computed work is
+  * forced, one row crosses to the driver, and the timed `QueryExecution`
+  * is the one whose planning phases are recorded. A failed query reports
+  * -1 and logs to stderr rather than recording a fast fake timing.
   *
   * Output contract: the FINAL stdout line is the totals JSON
   * (`{"metric":"total","value":<best wall>,"queries":{...},...}`) — nothing
@@ -136,12 +184,34 @@ private final class ShuffleBytesListener extends org.apache.spark.scheduler.Spar
   * budget expired with the box still loud) so box contention is
   * self-diagnosing. Per-query shuffle read/write BYTES ship
   * in the full record (`shuffle_read_bytes`/`shuffle_write_bytes`, max
-  * across repeats — see [[ShuffleBytesListener]]): bytes are deterministic
-  * where wall time is noisy, so a plan regression that adds an exchange
-  * diffs cleanly round over round.
+  * across repeats — see [[QueryTrace]]), and so does `trace`: per query,
+  * from its fastest repeat, `rows`, `build_ms`, `analysis_ms`,
+  * `optimization_ms`, `planning_ms`, `exec_ms` (these sum to the query's
+  * seconds) and the [[QueryTrace]] counts of its `build` and `exec`
+  * phases. `peak_heap_mb` holds one value per repeat: the sum of the heap
+  * pools' peaks (an upper bound of the heap's peak), reset before each
+  * repeat.
   * Before anything starts the run gates on a quiet box (load_avg_1m <
   * SPARK_GRAFT_BENCH_MAX_LOAD, default 5, waiting up to
   * SPARK_GRAFT_BENCH_WAIT_SEC, default 300) — see [[awaitQuietBox]].
+  *
+  * Recipes (all through the variables above; a filtered run writes its
+  * record only to SPARK_GRAFT_BENCH_OUT):
+  *  - Phase split of one query: `SPARK_GRAFT_BENCH_ONLY=t16_ccnet_buckets
+  *    SPARK_GRAFT_BENCH_THREADS=1 SPARK_GRAFT_BENCH_OUT=/tmp/t16.json` —
+  *    `trace.t16_ccnet_buckets` splits build, plan and exec time, and
+  *    counts the jobs the build phase ran apart from the measured ones.
+  *  - Solo timing: the same with `SPARK_GRAFT_BENCH_REPEATS=N`; `walls`
+  *    holds every repeat, `trace.<q>.rows` the row count.
+  *  - Memory headroom at a scale above the fixtures (spill, peak execution
+  *    memory, peak heap): `SPARK_GRAFT_SF_DIR=<e.g. an sf4 dir>
+  *    SPARK_GRAFT_BENCH_THREADS=1 SPARK_GRAFT_BENCH_REPEATS=1`, one query
+  *    per run so `peak_heap_mb` is that query's. The heavy tail worth
+  *    probing: d14_exact_substring_dedup, d15_semdedup_cells,
+  *    d16_semdedup_centroid_keep, g1_pagerank, g2_hits,
+  *    g4_label_propagation, g6_triangle_count, x10_cluster_shard,
+  *    t16_ccnet_buckets, dq3_column_profile, t10_tfidf_keywords,
+  *    b1_bloom_decontamination.
   */
 object Bench {
 
@@ -196,6 +266,47 @@ object Bench {
     waited
   }
 
+  /** The measured aggregate over `df`: the sum of a hash of every column
+    * (double: an ANSI long sum would overflow) and the row count. */
+  private[graft] def measured(df: DataFrame): DataFrame =
+    df.select(xxhash64(struct(col("*"))).cast("double").as("_h"))
+      .agg(sum(col("_h")), count(col("_h")))
+
+  /** Build and run one query on the calling thread, its jobs attributed to
+    * `name` and to the `build` or `exec` phase for [[QueryTrace]]. A
+    * failure logs to stderr and reports -1 seconds. */
+  private[graft] def runQuery(spark: SparkSession, name: String,
+      fn: (SparkSession, String) => DataFrame, dir: String): QueryRun = {
+    val sc = spark.sparkContext
+    sc.setLocalProperty(QueryTrace.QueryProp, name)
+    sc.setLocalProperty(QueryTrace.PhaseProp, QueryTrace.Build)
+    val t0 = System.nanoTime()
+    try {
+      val df = fn(spark, dir)
+      val buildMs = (System.nanoTime() - t0) / 1000000
+      sc.setLocalProperty(QueryTrace.PhaseProp, QueryTrace.Exec)
+      val out = measured(df)
+      val rows = out.collect().head.getLong(1)
+      val sec = (System.nanoTime() - t0) / 1e9
+      val phases = out.queryExecution.tracker.phases.map { case (p, s) =>
+        p -> (s.endTimeMs - s.startTimeMs)
+      }
+      QueryRun(sec, rows, buildMs, phases)
+    } catch { case e: Throwable =>
+      System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
+      QueryRun(-1.0, -1L, 0L, Map.empty)
+    } finally {
+      sc.setLocalProperty(QueryTrace.QueryProp, null)
+      sc.setLocalProperty(QueryTrace.PhaseProp, null)
+    }
+  }
+
+  private def heapPools = java.lang.management.ManagementFactory.getMemoryPoolMXBeans
+    .asScala.filter(_.getType == java.lang.management.MemoryType.HEAP)
+
+  private def peakHeapMb: Long =
+    heapPools.map(_.getPeakUsage.getUsed).sum / (1024 * 1024)
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val warmDir = sys.env.getOrElse("SPARK_GRAFT_WARMUP_SF_DIR", "/root/testdata/sf0.001")
@@ -217,63 +328,32 @@ object Bench {
     // external contention — they ship in `load_avg_1m` for diagnosis, with
     // `load_note` in the record saying exactly that.
     val contended = loadAvg1m >= maxLoad || waitedSec >= waitBudget
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
+    val spark = GraftSession.local("graft-bench", cpus.toInt)
       .config("spark.scheduler.mode", "FAIR")
-      .config("spark.ui.enabled", "false")
-      // Object-hash aggregates (BoundedLongCollect, collect_list, sketches)
-      // fall back to SORT-based aggregation after 128 distinct keys per
-      // partition by default — a full sort of the dedup shingle streams.
-      // Every imperative buffer in this engine is structurally bounded
-      // (BoundedLongCollect caps at 64 longs, sketches are fixed-size), so
-      // 128k in-memory groups ≈ tens of MB per partition, far cheaper than
-      // the sort; past that the sort fallback still protects memory.
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "131072")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // reliable-checkpoint home for Reuse.materialize (local run: tmp dir;
-    // a cluster deployment points this at durable shared storage)
-    spark.sparkContext.setCheckpointDir(GraftSession.DefaultCheckpointDir)
-    val shuffleBytes = new ShuffleBytesListener
-    spark.sparkContext.addSparkListener(shuffleBytes)
-
-    def materialize(df: org.apache.spark.sql.DataFrame): Unit =
-      df.select(xxhash64(struct(col("*"))).cast("double").as("_h")) // double: ANSI long sum would overflow
-        .agg(sum(col("_h"))).head
+    val trace = new QueryTrace
+    spark.sparkContext.addSparkListener(trace)
 
     /** Run `ordered` across `threads` worker threads (work-stealing via a
-      * shared cursor); returns per-query seconds, -1 for failures. */
-    def runAll(ordered: Seq[(String, (SparkSession, String) => org.apache.spark.sql.DataFrame)],
-        dir: String): Map[String, Double] = {
+      * shared cursor); returns each query's run. */
+    def runAll(ordered: Seq[(String, (SparkSession, String) => DataFrame)],
+        dir: String): Map[String, QueryRun] = {
       val cursor = new AtomicInteger(0)
-      val out = new java.util.concurrent.ConcurrentHashMap[String, Double]()
+      val out = new ConcurrentHashMap[String, QueryRun]()
       val workers = (0 until math.max(1, threads)).map { w =>
         val t = new Thread(() => {
           spark.sparkContext.setLocalProperty("spark.scheduler.pool", s"bench$w")
           var i = cursor.getAndIncrement()
           while (i < ordered.size) {
             val (name, fn) = ordered(i)
-            // attribute this thread's jobs (and their captured side jobs)
-            // to the query for the shuffle-bytes listener
-            spark.sparkContext.setLocalProperty(shuffleBytes.Prop, name)
-            val t0 = System.nanoTime()
-            val sec =
-              try { materialize(fn(spark, dir)); (System.nanoTime() - t0) / 1e9 }
-              catch { case e: Throwable =>
-                System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
-                -1.0
-              }
-            spark.sparkContext.setLocalProperty(shuffleBytes.Prop, null)
-            out.put(name, sec)
+            out.put(name, runQuery(spark, name, fn, dir))
             i = cursor.getAndIncrement()
           }
         }, s"bench-worker-$w")
         t.start(); t
       }
       workers.foreach(_.join())
-      import scala.jdk.CollectionConverters._
       out.asScala.toMap
     }
 
@@ -289,7 +369,7 @@ object Bench {
       }
     val queries = SparkEntry.queries.toSeq.filter(e => onlyFilter(e._1)).sortBy(_._1)
     val warmTimes: Map[String, Double] =
-      if (warmup) runAll(queries, warmDir) else Map.empty
+      if (warmup) runAll(queries, warmDir).map { case (n, r) => n -> r.sec } else Map.empty
     val order = queries.sortBy { case (n, _) => (-warmTimes.getOrElse(n, 0.0), n) }
 
     // Best-of-N (default 3): on a shared box one contended sample can
@@ -301,48 +381,66 @@ object Bench {
     val repeats = math.max(1, sys.env.getOrElse("SPARK_GRAFT_BENCH_REPEATS", "3").toInt)
     // quiesce the async listener bus before EVERY snapshot: trailing
     // TaskEnd events from the batch that just returned would otherwise
-    // bleed into the next repeat's tallies (round-12 ADVICE)
-    shuffleBytes.drainListenerBus(spark.sparkContext)
-    shuffleBytes.snapshotAndReset() // discard warmup tallies
-    // TWO unrecorded warmup calls (round-13 ADVICE): one invocation of the
-    // 150M-iteration loop may not reach the top JIT tier, and a repeat-1
-    // probe reading high for residual compilation would masquerade as a
-    // slow-box phase — the probe must measure weather, never JIT.
+    // bleed into the next repeat's tallies
+    trace.drainListenerBus(spark.sparkContext)
+    trace.snapshotAndReset() // discard warmup tallies
+    // TWO unrecorded warmup calls: one invocation of the 150M-iteration
+    // loop may not reach the top JIT tier, and a repeat-1 probe reading
+    // high for residual compilation would masquerade as a slow-box phase —
+    // the probe must measure weather, never JIT.
     coreProbeSec(); coreProbeSec()
+    final case class Repeat(wall: Double, load: Double, probe: Double, peakHeapMb: Long,
+        queries: Map[String, QueryRun], counts: Map[QueryTrace.Key, QueryTrace.Counts])
     val runs = (1 to repeats).map { _ =>
       val load = loadAvg1m
       val probe = coreProbeSec()
+      heapPools.foreach(_.resetPeakUsage())
       val t0 = System.nanoTime()
       val res = runAll(order, sfDir)
-      shuffleBytes.drainListenerBus(spark.sparkContext)
-      ((System.nanoTime() - t0) / 1e9, load, res, shuffleBytes.snapshotAndReset(), probe)
+      val wall = (System.nanoTime() - t0) / 1e9
+      trace.drainListenerBus(spark.sparkContext)
+      Repeat(wall, load, probe, peakHeapMb, res, trace.snapshotAndReset())
     }
-    // Per-query shuffle bytes: MAX across repeats. Deterministic plans give
-    // identical tallies every repeat (max is exact); memoized-model entries
-    // (v2/v3/v4 train once per dir) only shuffle on the repeat that trains,
-    // so max reports the cold-run bound instead of a misleading zero.
-    val shuffles = runs.map(_._4).reduce { (a, b) =>
+    // Per-query shuffle bytes (both phases): MAX across repeats.
+    // Deterministic plans give identical tallies every repeat (max is
+    // exact); memoized-model entries (v2/v3/v4 train once per dir) only
+    // shuffle on the repeat that trains, so max reports the cold-run bound
+    // instead of a misleading zero.
+    val shuffles: Map[String, (Long, Long)] = runs.map { r =>
+      r.counts.groupBy(_._1.query).map { case (q, cs) =>
+        q -> (cs.values.map(_.shuffleRead).sum, cs.values.map(_.shuffleWrite).sum)
+      }
+    }.reduce { (a, b) =>
       (a.keySet ++ b.keySet).map { k =>
         val (ar, aw) = a.getOrElse(k, (0L, 0L)); val (br, bw) = b.getOrElse(k, (0L, 0L))
         k -> (math.max(ar, br), math.max(aw, bw))
       }.toMap
     }
-    val (wall, _, _, _, _) = runs.minBy(_._1)
-    val results = runs.map(_._3).reduce { (a, b) =>
-      a.map { case (k, v) =>
-        val w = b.getOrElse(k, v)
-        // -1 marks a failure; min() must not prefer it over a real timing
-        k -> (if (v < 0) w else if (w < 0) v else math.min(v, w))
-      }
-    }
+    val wall = runs.map(_.wall).min
+    // per query, its fastest repeat (-1 marks a failure and never wins)
+    val best: Map[String, (QueryRun, Repeat)] = order.map { case (name, _) =>
+      val tries = runs.map(r => (r.queries(name), r))
+      name -> tries.filter(_._1.sec >= 0).sortBy(_._1.sec).headOption.getOrElse(tries.head)
+    }.toMap
+    val results: Map[String, Double] = best.map { case (k, (q, _)) => k -> q.sec }
+    val traceJson = best.toSeq.sortBy(_._1).map { case (name, (q, r)) =>
+      def ms(phase: String) = q.phasesMs.getOrElse(phase, 0L)
+      def counts(phase: String) =
+        r.counts.getOrElse(QueryTrace.Key(name, phase), QueryTrace.NoCounts).json
+      s""""$name":{"rows":${q.rows},"build_ms":${q.buildMs},""" +
+        s""""analysis_ms":${ms("analysis")},"optimization_ms":${ms("optimization")},""" +
+        s""""planning_ms":${ms("planning")},"exec_ms":${q.execMs},""" +
+        s""""build":${counts(QueryTrace.Build)},"exec":${counts(QueryTrace.Exec)}}"""
+    }.mkString("{", ",", "}")
 
     val qs = results.toSeq.sortBy(_._1)
       .map { case (k, v) => s"\"" + k + "\":" + v }.mkString("{", ",", "}")
     val sumSec = results.valuesIterator.filter(_ >= 0).sum
     val failures = results.valuesIterator.count(_ < 0)
-    val walls = runs.map(_._1).mkString("[", ",", "]")
-    val loads = runs.map(_._2).mkString("[", ",", "]")
-    val probes = runs.map(_._5).mkString("[", ",", "]")
+    val walls = runs.map(_.wall).mkString("[", ",", "]")
+    val loads = runs.map(_.load).mkString("[", ",", "]")
+    val probes = runs.map(_.probe).mkString("[", ",", "]")
+    val peakHeaps = runs.map(_.peakHeapMb).mkString("[", ",", "]")
     // Round-14 verdict #1: `contended` is a PRE-SESSION verdict, and a
     // record whose repeats disagree wildly was shipping "contended: false"
     // next to a 63% wall jump — two contradictory stories in one JSON.
@@ -359,9 +457,9 @@ object Bench {
     // repeat 1 pays the per-dir model training (v2/v3/v4 memoize per
     // directory) — a structural ~2x every round, not contention — so the
     // wall spread reads repeats 2..N when there are at least three
-    val steadyWalls = if (runs.size >= 3) runs.tail.map(_._1) else runs.map(_._1)
+    val steadyWalls = if (runs.size >= 3) runs.tail.map(_.wall) else runs.map(_.wall)
     val wallSpread = math.round(spread(steadyWalls) * 100) / 100.0
-    val probeSpread = math.round(spread(runs.map(_._5)) * 100) / 100.0
+    val probeSpread = math.round(spread(runs.map(_.probe)) * 100) / 100.0
     val contendedDuringRun = wallSpread > 1.25 || probeSpread > 1.25
     val contentionJson =
       s""""contended_pre_session":$contended,"contended_during_run":$contendedDuringRun,""" +
@@ -391,7 +489,7 @@ object Bench {
     val summary =
       s"""{"metric":"total","value":$headline,"unit":"sec","n":${results.size},"failures":$failures,"queries":$qsCompact,"sf":"$sfDir","threads":$threads,"sum_query_sec":$sumSec,"repeats":$repeats,"walls":$walls,"load_avg_1m":$loads,"core_probe_sec":$probes,"load_note":"per-repeat load_avg_1m samples include this bench's own local[$cpus] load",$contentionJson,"waited_for_quiet_sec":$waitedSec,"contended":$contended,"shuffle_read_bytes_total":$shufRTotal,"shuffle_write_bytes_total":$shufWTotal}"""
     val full =
-      s"""{"metric":"total","value":$headline,"unit":"sec","queries":$qs,"sf":"$sfDir","threads":$threads,"sum_query_sec":$sumSec,"repeats":$repeats,"walls":$walls,"load_avg_1m":$loads,"core_probe_sec":$probes,"load_note":"per-repeat load_avg_1m samples include this bench's own local[$cpus] load",$contentionJson,"waited_for_quiet_sec":$waitedSec,"contended":$contended,"shuffle_read_bytes":$shufR,"shuffle_write_bytes":$shufW}"""
+      s"""{"metric":"total","value":$headline,"unit":"sec","queries":$qs,"sf":"$sfDir","threads":$threads,"sum_query_sec":$sumSec,"repeats":$repeats,"walls":$walls,"load_avg_1m":$loads,"core_probe_sec":$probes,"load_note":"per-repeat load_avg_1m samples include this bench's own local[$cpus] load",$contentionJson,"waited_for_quiet_sec":$waitedSec,"contended":$contended,"shuffle_read_bytes":$shufR,"shuffle_write_bytes":$shufW,"peak_heap_mb":$peakHeaps,"trace":$traceJson}"""
     // A SPARK_GRAFT_BENCH_ONLY-filtered run must not clobber the committed
     // full-suite record with an n=1 artifact (and a typo'd filter would
     // silently persist n=0): targeted runs only write when the caller

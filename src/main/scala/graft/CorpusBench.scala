@@ -56,16 +56,8 @@ import org.apache.spark.sql.functions._
 object CorpusBench {
 
   private def session(): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "131072")
-      .getOrCreate()
+    val spark = GraftSession.local("graft-corpusbench", cpusInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    spark.sparkContext.setCheckpointDir(GraftSession.DefaultCheckpointDir)
     spark
   }
 

@@ -5,7 +5,10 @@ import org.apache.spark.sql.SparkSession
 /** Library entry point: a SparkSession builder preconfigured the way every
   * graft deployment should start, so `GraftSession.builder("app")
   * .master(...).getOrCreate()` is the one-liner between "cluster" and
-  * "running the catalog".
+  * "running the catalog". Every session in this repository starts here:
+  * the single-JVM mains (Bench, Verify, the stream/corpus/skew benches,
+  * Explain, JobsMain, ApiMain) and the test harness through [[local]], the
+  * benchmark through [[builder]].
   *
   * What it pins, and why:
   *  - `spark.sql.extensions` → [[graft.functions.GraftExtensions]]: the
@@ -29,9 +32,9 @@ import org.apache.spark.sql.SparkSession
   */
 object GraftSession {
 
-  /** Default reliable-checkpoint home, shared by every entry point (this
-    * builder, `Bench`, `Verify`): one definition so the checkpoint home
-    * cannot silently diverge between them. On a cluster, override with
+  /** Default reliable-checkpoint home, set as `spark.checkpoint.dir` by the
+    * contract (SparkContext applies it at start-up), so every session
+    * built here checkpoints under one home. On a cluster, override with
     * durable shared storage. Each SparkContext checkpoints into its own
     * UUID subdirectory under this path; `Reuse.materialize` registers a
     * shutdown hook that deletes that subdirectory so repeated runs don't
@@ -74,4 +77,13 @@ object GraftSession {
       case (b, (k, v)) => b.config(k, v)
     }
   }
+
+  /** The contract on a single JVM: [[builder]] with `local[cpus]`, `cpus`
+    * shuffle partitions and the web UI off. Returns the builder, so a
+    * caller can still add its own confs (FAIR pools, a state-store
+    * provider, another checkpoint dir) before `getOrCreate()`. */
+  def local(appName: String, cpus: Int): SparkSession.Builder =
+    builder(appName, cpus)
+      .master(s"local[$cpus]")
+      .config("spark.ui.enabled", "false")
 }

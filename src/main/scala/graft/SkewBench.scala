@@ -109,10 +109,7 @@ object SkewBench {
     val fanout = if (args.length > 2) args(2).toInt else 8
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
 
-    val spark = GraftSession.builder("graft-skewbench", shufflePartitions = cpus.toInt)
-      .master(s"local[$cpus]")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local("graft-skewbench", cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     // The dimension must NOT broadcast in any arm: at fixture scale every

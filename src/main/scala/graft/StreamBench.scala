@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.streaming.EventStreams
@@ -58,15 +58,8 @@ object StreamBench {
     * the batch chain over the identical staged slices. */
   private def corpusIngest(baseSf: String, sliceSf: String, n: Int): Unit = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "131072")
-      .getOrCreate()
+    val spark = GraftSession.local("graft-streamcorpus", cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    spark.sparkContext.setCheckpointDir(GraftSession.DefaultCheckpointDir)
     val work = Files.createTempDirectory("graft-streamcorpus").toString
 
     def docsOf(dir: String) = graft.io.Tables.documents(spark, dir)
@@ -158,13 +151,10 @@ object StreamBench {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val work = Files.createTempDirectory("graft-streambench").toString
 
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
     val spark = EventStreams.rocksDbStateStoreConfigs
-      .foldLeft(builder) { case (b, (k, v)) => b.config(k, v) }
+      .foldLeft(GraftSession.local("graft-streambench", cpus.toInt)) {
+        case (b, (k, v)) => b.config(k, v)
+      }
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._

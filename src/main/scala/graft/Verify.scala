@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -11,19 +10,8 @@ object Verify {
       if (args.length > 2) Some(args(2).split(",").toSet) else None
     def selected(name: String): Boolean = only.forall(_.contains(name))
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // same object-hash-aggregate tuning as GraftSession/Bench (bounded
-      // buffers make 128k in-memory groups safe; see GraftSession.configs)
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "131072")
-      .getOrCreate()
+    val spark = GraftSession.local("graft-verify", cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // reliable-checkpoint home for Reuse.materialize (local run: tmp dir;
-    // a cluster deployment points this at durable shared storage)
-    spark.sparkContext.setCheckpointDir(GraftSession.DefaultCheckpointDir)
     new java.io.File(outDir).mkdirs()
     val failed = scala.collection.mutable.LinkedHashMap.empty[String, String]
     SparkEntry.queries.filter(e => selected(e._1)).foreach { case (name, fn) =>

@@ -27,10 +27,6 @@ final class Jobs(spark: SparkSession, store: TableStore) {
     * can load exactly what train saved. */
   val modelStore = new graft.finance.ml.ModelStore(spark, s"${store.root}/.models")
 
-  private def readOrEmpty(table: String, schema: org.apache.spark.sql.types.StructType): DataFrame =
-    if (store.exists(table)) store.read(table)
-    else spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-
   /** Head of `z_a_rebuild_historic_data` (the dbt seed refresh,
     * `dbt_project.yml:6-16`): re-load every seed CSV present in `seedDir`
     * into its warehouse table through the declared schema via
@@ -60,21 +56,9 @@ final class Jobs(spark: SparkSession, store: TableStore) {
     * refreshed catalog. */
   def refreshCategoryCatalog(
       now: java.sql.Timestamp = java.sql.Timestamp.from(java.time.Instant.now())): DataFrame = {
-    import org.apache.spark.sql.types.{StringType, StructField, StructType}
-    // the in-use scan touches only the category columns; before the first
-    // model run the derived facts don't exist yet — scan empty frames with
-    // just those columns (same shape the reference gets from its
-    // swallowed-exception branch, category_service.py:39-40)
-    val catCols = StructType(Seq(
-      StructField("master_category", StringType),
-      StructField("predicted_master_category", StringType)))
-    val catalog = readOrEmpty("categories", CategoryCatalog.schema)
-    val inUse = Serving.inUseCategories(
-      readOrEmpty("user_categories", Schemas.userCategories),
-      readOrEmpty("fct_trxns_categorized", catCols),
-      readOrEmpty("fct_trxns_with_predictions", catCols))
+    val catalog = store.readOrEmpty("categories", CategoryCatalog.schema)
     val next = CategoryCatalog.syncInUse(
-      CategoryCatalog.ensureDefaults(catalog, lit(now)), inUse, lit(now))
+      CategoryCatalog.ensureDefaults(catalog, lit(now)), Serving.inUseCategories(store), lit(now))
     store.overwrite("categories", next)
     store.read("categories")
   }
@@ -94,12 +78,12 @@ final class Jobs(spark: SparkSession, store: TableStore) {
     * scores. */
   def buildFacts(fullRefreshValidated: Boolean = false): Unit = {
     val stgSf = Staging.stgSimplefin(
-      readOrEmpty("raw_simplefin", Schemas.simplefinRaw),
-      readOrEmpty("seed_account_mapping_simplefin", Schemas.accountMappingSimplefin),
-      readOrEmpty("seed_transaction_exclusions", Schemas.transactionExclusions))
+      store.readOrEmpty("raw_simplefin", Schemas.simplefinRaw),
+      store.readOrEmpty("seed_account_mapping_simplefin", Schemas.accountMappingSimplefin),
+      store.readOrEmpty("seed_transaction_exclusions", Schemas.transactionExclusions))
     val stgHist = Staging.stgHistoric(
-      readOrEmpty("historic_transactions", Schemas.historicRaw),
-      readOrEmpty("seed_account_mapping_historic", Schemas.accountMappingHistoric))
+      store.readOrEmpty("historic_transactions", Schemas.historicRaw),
+      store.readOrEmpty("seed_account_mapping_historic", Schemas.accountMappingHistoric))
     val trxns = Marts.intTrxns(stgSf, stgHist)
     val features = Marts.intTrxnsFeatures(trxns)
     store.overwrite("int_trxns_features", features)
@@ -108,7 +92,7 @@ final class Jobs(spark: SparkSession, store: TableStore) {
     store.overwrite("fct_trxns_categorized", categorized)
 
     val userValidated = Staging.stgUserValidatedCategories(
-      readOrEmpty("user_categories", Schemas.userCategories),
+      store.readOrEmpty("user_categories", Schemas.userCategories),
       store.read("int_trxns_features"))
 
     if (fullRefreshValidated || !store.exists("fct_validated_trxns"))
@@ -131,7 +115,7 @@ final class Jobs(spark: SparkSession, store: TableStore) {
     * prediction columns. */
   def buildPredictionsFact(): Unit = {
     val preds = Staging.stgPredictions(
-      readOrEmpty("predicted_transactions", Schemas.predictedTransactions))
+      store.readOrEmpty("predicted_transactions", Schemas.predictedTransactions))
     store.overwrite("fct_trxns_with_predictions",
       Marts.fctTrxnsWithPredictions(store.read("fct_trxns_uncategorized"), preds))
   }

@@ -32,10 +32,7 @@ object JobsMain {
   def main(args: Array[String]): Unit = {
     val Array(warehouseDir, jobName) = args.take(2)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = GraftSession.builder("graft-jobs", cpus.toInt)
-      .master(s"local[$cpus]")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local("graft-jobs", cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     try run(spark, warehouseDir, jobName)
     finally spark.stop()

@@ -2,6 +2,7 @@ package graft.finance
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 /** The serving layer: the reference's FastAPI read queries as typed
   * DataFrame functions (`ui/backend/services/transaction_service.py`,
@@ -186,6 +187,21 @@ object Serving {
         .filter(col("category") =!= "UNCERTAIN"))
       .distinct()
       .orderBy(col("category"))
+  }
+
+  /** [[inUseCategories]] over a warehouse's stored tables. Only the
+    * category columns are scanned; before the first model run the derived
+    * facts don't exist yet and read as empty frames of just those columns
+    * (the shape the reference gets from its swallowed-exception branch,
+    * `category_service.py:39-40`). */
+  def inUseCategories(store: TableStore): DataFrame = {
+    val catCols = StructType(Seq(
+      StructField("master_category", StringType),
+      StructField("predicted_master_category", StringType)))
+    inUseCategories(
+      store.readOrEmpty("user_categories", Schemas.userCategories),
+      store.readOrEmpty("fct_trxns_categorized", catCols),
+      store.readOrEmpty("fct_trxns_with_predictions", catCols))
   }
 
   /** Connection-health stats (`api/control_center.py:77-128`): J7

@@ -1,9 +1,10 @@
 package graft.finance
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Managed parquet tables with the reference's three mutation protocols
   * (SURVEY §2.8), built on an atomic directory-swap so readers never see a
@@ -34,24 +35,11 @@ final class TableStore(spark: SparkSession, val root: String) {
   def read(table: String): DataFrame =
     graft.io.SchemaMemo.read(spark, dir(table).toString)
 
-  /** Full refresh with physical layout for big tables (SURVEY §4: the
-    * reference's B-tree indexes map to partition pruning + sorted files):
-    * hive-partition by `partitionBy` (e.g. import_date — scans with a date
-    * predicate prune whole directories) and sort rows within each file by
-    * `sortBy` (e.g. transaction_id — min/max page stats make point lookups
-    * skip row groups). */
-  def overwritePartitioned(
-      table: String, df: DataFrame,
-      partitionBy: Seq[String], sortBy: Seq[String]): Unit = {
-    val sorted =
-      if (sortBy.isEmpty) df
-      else df.sortWithinPartitions((partitionBy ++ sortBy).map(col): _*)
-    val target = dir(table)
-    val tmp = Paths.get(root, s".${table}__tmp")
-    deleteRecursively(tmp)
-    sorted.write.mode("overwrite").partitionBy(partitionBy: _*).parquet(tmp.toString)
-    swapInto(tmp, target)
-  }
+  /** [[read]], or an empty frame of `schema` while the table does not
+    * exist yet (a fresh warehouse before the first job run). */
+  def readOrEmpty(table: String, schema: StructType): DataFrame =
+    if (exists(table)) read(table)
+    else spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
 
   /** Dynamic partition overwrite — the date-partitioned BACKFILL protocol:
     * only the partitions PRESENT in the batch are replaced (wholesale —

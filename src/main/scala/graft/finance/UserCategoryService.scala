@@ -44,10 +44,7 @@ final class UserCategoryService(
   private val Table = "user_categories"
   private val Key = "transaction_id"
 
-  private def existing(): DataFrame =
-    if (store.exists(Table)) store.read(Table)
-    else spark.createDataFrame(
-      spark.sparkContext.emptyRDD[Row], Schemas.userCategories)
+  private def existing(): DataFrame = store.readOrEmpty(Table, Schemas.userCategories)
 
   private def existingRow(transactionId: String): Option[Row] =
     existing().filter(col(Key) === transactionId).limit(1).collect().headOption

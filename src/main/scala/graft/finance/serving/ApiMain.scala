@@ -3,7 +3,7 @@ package graft.finance.serving
 import java.net.{HttpURLConnection, URI}
 import java.nio.charset.StandardCharsets
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Row, SparkSession}
 
 import graft.GraftSession
 import graft.finance.{Schemas, Serving, TableStore, UserCategoryService}
@@ -34,10 +34,7 @@ object ApiMain {
       sys.error("usage: ApiMain <warehouseDir> [port]"))
     val port = args.lift(1).map(_.toInt).getOrElse(8000)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = GraftSession.builder("graft-api", cpus.toInt)
-      .master(s"local[$cpus]")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local("graft-api", cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val server = build(spark, warehouseDir, port).start()
     System.err.println(s"[api] serving on 127.0.0.1:${server.boundPort}")
@@ -49,11 +46,7 @@ object ApiMain {
   def build(spark: SparkSession, warehouseDir: String, port: Int = 0): ApiServer = {
     val store = new TableStore(spark, warehouseDir)
 
-    def tableOrEmpty(name: String, schema: org.apache.spark.sql.types.StructType): DataFrame =
-      if (store.exists(name)) store.read(name)
-      else spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
-
-    def userCategories() = tableOrEmpty("user_categories", Schemas.userCategories)
+    def userCategories() = store.readOrEmpty("user_categories", Schemas.userCategories)
 
     // Pre-initialization (before the first JobsMain run) the derived marts
     // don't exist; list endpoints must degrade to an empty page — the
@@ -85,23 +78,13 @@ object ApiMain {
 
     // the serving read join (J6): predictions view + live overrides
     def joined() = Serving.servingJoin(
-      tableOrEmpty("fct_trxns_with_predictions", predictionsSchema),
+      store.readOrEmpty("fct_trxns_with_predictions", predictionsSchema),
       userCategories())
 
     val service = new UserCategoryService(spark, store, () => joined())
 
     // in-use scan for the catalog listing, as Jobs.refreshCategoryCatalog
-    def inUse() = {
-      import org.apache.spark.sql.types.{StringType, StructField, StructType}
-      val catCols = StructType(Seq(
-        StructField("master_category", StringType),
-        StructField("predicted_master_category", StringType)))
-      Serving.inUseCategories(
-        userCategories(),
-        tableOrEmpty("fct_trxns_categorized", catCols),
-        tableOrEmpty("fct_trxns_with_predictions", catCols))
-    }
-    val catalogSvc = new CategoryCatalogService(spark, store, () => inUse())
+    val catalogSvc = new CategoryCatalogService(spark, store, () => Serving.inUseCategories(store))
     val backupSvc = new BackupService(warehouseDir,
       sys.env.getOrElse("GRAFT_BACKUP_DIR", s"$warehouseDir/../backups"))
 
@@ -125,12 +108,12 @@ object ApiMain {
 
     new ApiServer(
       joined = () => joined(),
-      validated = () => tableOrEmpty("fct_validated_trxns", validatedSchema),
-      simplefinRaw = () => tableOrEmpty("raw_simplefin", Schemas.simplefinRaw),
+      validated = () => store.readOrEmpty("fct_validated_trxns", validatedSchema),
+      simplefinRaw = () => store.readOrEmpty("raw_simplefin", Schemas.simplefinRaw),
       userCategories = Some(service),
       trigger = trigger,
       categoryCatalog = Some(catalogSvc),
-      registry = Some(() => tableOrEmpty("model_registry", Schemas.modelRegistry)),
+      registry = Some(() => store.readOrEmpty("model_registry", Schemas.modelRegistry)),
       backups = Some(backupSvc),
       simplefinWarnings = warningsFetch,
       port = port,

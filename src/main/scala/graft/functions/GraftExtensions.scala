@@ -7,12 +7,12 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 /** SparkSessionExtensions hook registering the graft native expressions as
   * SQL functions, so they are reachable from `spark.sql` / pure-SQL
-  * clients, not only the Column API:
+  * clients, not only the Column API. [[graft.GraftSession]] sets it; on
+  * any other builder:
   *
   * {{{
-  * SparkSession.builder()
-  *   .withExtensions(new GraftExtensions)   // or
-  *   .config("spark.sql.extensions", "graft.functions.GraftExtensions")
+  * builder.withExtensions(new GraftExtensions)   // or
+  * builder.config("spark.sql.extensions", "graft.functions.GraftExtensions")
   * }}}
   *
   * Registered: `float_vector_dot(a, b)`, `long_vector_sqdist(a, b)`,

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 /** Multi-dimensional data layout: Z-order (Morton) clustering.
   *
-  * Partitioned writes (`TableStore.overwritePartitioned`) prune on ONE
+  * Partitioned writes (`DataFrameWriter.partitionBy`) prune on ONE
   * dimension and bucketing (`io/Bucketing`) co-locates ONE join key. When
   * scans filter on TWO independent columns (date × account, cell × shard),
   * sorting by either one scatters the other across every file. Interleaving

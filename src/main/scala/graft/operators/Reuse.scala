@@ -22,7 +22,7 @@ import org.apache.spark.storage.StorageLevel
   *  - no checkpoint dir (bare dev session) → eager `localCheckpoint`:
   *    single-JVM fallback where "executor loss" means the JVM died anyway.
   *
-  * `graft.GraftSession`, `Verify`, `Bench` and the test harness all set a
+  * Every session starts from `graft.GraftSession`, whose contract sets a
   * checkpoint dir, so the reliable path is the one actually exercised.
   */
 object Reuse {
@@ -181,7 +181,7 @@ object Reuse {
   // (cc labels, graph scores) hold strong references until JVM exit — so
   // repeated runs would accumulate checkpoint blocks under the shared
   // checkpoint home forever. Each SparkContext checkpoints into its own
-  // UUID subdirectory (SparkContext.setCheckpointDir), so deleting THAT
+  // UUID subdirectory (`SparkContext.getCheckpointDir`), so deleting THAT
   // directory at JVM shutdown is safe for concurrent applications.
   private val cleanupRegistered = new ConcurrentHashMap[String, java.lang.Boolean]()
 

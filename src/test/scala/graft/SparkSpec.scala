@@ -4,7 +4,8 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local SparkSession for test suites. Small shuffle-partition count:
+/** Shared local SparkSession for test suites, built on the session contract
+  * ([[GraftSession.local]]) with four cores and four shuffle partitions:
   * test fixtures are tiny and 200 empty partitions only slow the suite. */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
@@ -13,18 +14,14 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+  /** Checkpoint home of the test session: a fresh temp dir per test JVM, so
+    * `Reuse.materialize` exercises the same reliable path a cluster
+    * deployment runs without sharing the default home. */
+  lazy val checkpointDir: String =
+    java.nio.file.Files.createTempDirectory("graft-test-ckpt").toString
+
+  lazy val session: SparkSession =
+    GraftSession.local("graft-test", 4)
+      .config("spark.checkpoint.dir", checkpointDir)
       .getOrCreate()
-    // reliable-checkpoint home so Reuse.materialize exercises the same
-    // (durable) path in tests that a cluster deployment runs
-    s.sparkContext.setCheckpointDir(
-      java.nio.file.Files.createTempDirectory("graft-test-ckpt").toString)
-    s
-  }
 }

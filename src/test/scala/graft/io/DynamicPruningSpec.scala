@@ -3,8 +3,8 @@ package graft.io
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
-/** Dynamic partition pruning (DPP) over the hive-partitioned layout
-  * `TableStore.overwritePartitioned` writes — the third scan-reduction
+/** Dynamic partition pruning (DPP) over a hive-partitioned layout
+  * (`partitionBy` writes) — the third scan-reduction
   * lever next to static partition pruning (LayoutSpec) and bucketed joins
   * (BucketingSpec). At 100 TB the shape is: a date-partitioned fact joined
   * to a small filtered dim on the partition column — the dim filter is

@@ -81,4 +81,16 @@ class FixtureSchemaSpec extends SparkSpec {
     val row = df.selectExpr("min(ts)", "max(ts)").head()
     assert(!row.isNullAt(0) && !row.isNullAt(1))
   }
+
+  test("events reader turns a timestamp[ns] ts into a µs timestamp") {
+    // a three-row events file written by pyarrow with ts as
+    // TIMESTAMP(NANOS, isAdjustedToUTC=false); sub-µs digits truncate
+    val dir = new java.io.File(getClass.getResource("/nanos/events.parquet").toURI).getParent
+    val df = Tables.events(spark, dir)
+    assert(df.schema("ts").dataType == TimestampNTZType)
+    val row = df.selectExpr("min(ts)", "max(ts)", "count(*)").head()
+    assert(row.get(0) == java.time.LocalDateTime.parse("2024-01-01T00:00:00.000001"))
+    assert(row.get(1) == java.time.LocalDateTime.parse("2024-03-15T12:30:45.123456"))
+    assert(row.getLong(2) == 3L)
+  }
 }
