@@ -7,11 +7,12 @@ import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong, LongAdder}
 import scala.jdk.CollectionConverters._
 
-/** The bench's one per-query listener. Jobs are attributed through two
-  * thread-local properties set around each query: `graft.bench.query`
-  * (the query name) and `graft.bench.phase` — `build` while the query's
-  * DataFrame is constructed (eager work such as `Reuse.materializeFiles`
-  * writes runs here), `exec` for the measured action. Spark captures local
+/** The bench's one listener. Jobs are attributed through two thread-local
+  * properties: `graft.bench.query` (a catalog query's name, or a leg's) and
+  * `graft.bench.phase` — for a query `build` while its DataFrame is
+  * constructed (eager work such as `Reuse.materializeFiles` writes runs
+  * here) and `exec` for the measured action, for a leg the running
+  * section ([[Bench.Leg]]). Spark captures local
   * properties into every job the thread submits, and through
   * SQLExecution's capture into its broadcast side jobs too. Stages map to
   * the (query, phase) of the job that submits them; stage completions and
@@ -21,7 +22,7 @@ import scala.jdk.CollectionConverters._
   * noisy, so a plan regression that adds an exchange diffs cleanly from
   * run to run; the exception is work a per-directory memo shares between
   * queries (the g1/g2/g4/g7 trade graph, the v2-v5 tokenizer models),
-  * charged to whichever query fills the memo first.
+  * built once and charged to the query that asks for it first.
   *
   * Per (query, phase) it counts jobs, stages that ran, tasks, shuffle
   * read/write bytes, memory and disk spill bytes, and the peak execution
@@ -67,6 +68,10 @@ private[graft] final class QueryTrace extends SparkListener {
     tallies.clear()
     out
   }
+
+  /** Remove and return one (query, phase)'s counts ([[QueryTrace.NoCounts]]
+    * if it ran no job). Drain the bus first, as for [[snapshotAndReset]]. */
+  def take(k: Key): Counts = Option(tallies.remove(k)).map(_.counts).getOrElse(NoCounts)
 
   /** Block until every queued listener event has been delivered.
     * `LiveListenerBus.waitUntilEmpty` is `private[spark]`, public at the
@@ -131,89 +136,175 @@ private[graft] final case class QueryRun(
   def execMs: Long = math.max(0L, math.round(sec * 1000) - buildMs - phasesMs.values.sum)
 }
 
-/** Benchmark main: one JSON line with per-query seconds at the target SF.
+/** The benchmark main, one harness with modes:
   *
-  * Throughput harness, not a latency harness: the suite is ~70 independent
-  * queries, most of which leave local[32] mostly idle (a single-row-group
-  * fixture scan is ONE task; a 3-group aggregate uses 3 reducers), so
-  * running them strictly one-after-another measures mostly Spark's
-  * per-query scheduling floor — ~0.2-0.3 s × 70 queries of idle cores. The
-  * suite therefore executes on SPARK_GRAFT_BENCH_THREADS (default 8) driver
-  * threads submitting concurrent jobs into one SparkSession, the standard
-  * multi-tenant shape for a Spark cluster: FAIR scheduling, one pool per
-  * worker thread, so no query starves the rest. `value` is the wall-clock
-  * of the whole measured batch — work/time, the quantity that actually
-  * extrapolates to cluster throughput. Per-query seconds are reported too,
-  * but under concurrency they include scheduler wait: they locate hotspots,
-  * their SUM (also reported, as `sum_query_sec`) exceeds the wall.
-  * SPARK_GRAFT_BENCH_THREADS=1 recovers the old sequential behavior
-  * (value ≈ sum of per-query times).
+  *  - `runMain graft.Bench` — the catalog suite: one JSON line with
+  *    per-query seconds at the target SF (described below).
+  *  - `runMain graft.Bench corpus full|incremental|chain|divergence ...` —
+  *    the corpus pipeline legs ([[CorpusLegs]]).
+  *  - `runMain graft.Bench stream events|corpus ...` — the streaming legs
+  *    ([[StreamLegs]]).
   *
-  * Each query is first executed once against the sf0.001 fixture to pay
-  * one-time costs that are data-independent — plan analysis, whole-stage
-  * code generation, JIT — exactly once, outside the measured run (the
-  * codegen cache keys on generated source, which is identical across scale
-  * factors). The warmup timings also order the measured run longest-first
-  * (LPT scheduling), so the concurrent batch doesn't end on one heavy
-  * straggler. Set SPARK_GRAFT_WARMUP=0 to measure cold instead.
+  * Every mode opens its session through [[session]] and measures through
+  * [[QueryTrace]]: a leg's timed sections run through [[Leg.section]], and
+  * each record it prints carries a `trace` field with the job, stage, task,
+  * shuffle, spill and peak-memory counts of its sections. A leg whose gate
+  * fails exits 1.
   *
-  * Materialization: a plain count() would let Catalyst prune every
-  * projection expression (map-only queries would time a metadata-ish scan),
-  * so the measured action is `collect()` of one hash aggregate over EVERY
-  * output column of every row (plus the row count) — all computed work is
-  * forced, one row crosses to the driver, and the timed `QueryExecution`
-  * is the one whose planning phases are recorded. A failed query reports
-  * -1 and logs to stderr rather than recording a fast fake timing.
+  * The catalog suite is a throughput harness, not a latency harness: most
+  * queries leave the cores idle (a single-row-group fixture scan is one
+  * task), so run one after another they would measure mostly Spark's
+  * per-query scheduling floor. The suite runs on SPARK_GRAFT_BENCH_THREADS
+  * (default 8) driver threads submitting concurrent jobs into one session
+  * (FAIR scheduling, one pool per worker thread). `value` is the wall of
+  * the whole measured batch; per-query seconds include scheduler wait, so
+  * they locate hotspots and their sum (`sum_query_sec`) exceeds the wall.
+  * SPARK_GRAFT_BENCH_THREADS=1 runs the queries one at a time.
   *
-  * Output contract: the FINAL stdout line is the totals JSON
-  * (`{"metric":"total","value":<best wall>,"queries":{...},...}`) — nothing
-  * follows it, and build.sbt routes forked stdout through unprefixed so the
-  * driver can `json.loads` the last line. Round-16 contract gap, closed
-  * round 17: the driver's round-over-round comparator reads the per-query
-  * seconds map from this line (`PERF_r16.json` came back with
-  * `per_query: {}` / `n_common: 0` because the map lived only in
-  * BENCH_LOCAL.json), so the final line now carries `"queries"` (seconds,
-  * ms-rounded to keep the line compact; full-precision values still ship in
-  * BENCH_LOCAL.json together with the per-query shuffle bytes). The suite
-  * runs SPARK_GRAFT_BENCH_REPEATS times (default 3 — the committed records are all best-of-3, and repeat 1 pays the per-dir model training); the headline is the
-  * best wall, and every repeat's wall + 1-min load average ships in the
-  * record (`walls`, `load_avg_1m`, `core_probe_sec` — a fixed
-  * single-thread integer loop timed before each repeat, the host-weather
-  * signal load/steal can't see (round-13: same-code walls moved 21→33 s
-  * at load < 0.5) — plus an explicit `contended` flag when the quiet-wait
-  * budget expired with the box still loud) so box contention is
-  * self-diagnosing. Per-query shuffle read/write BYTES ship
-  * in the full record (`shuffle_read_bytes`/`shuffle_write_bytes`, max
-  * across repeats — see [[QueryTrace]]), and so does `trace`: per query,
-  * from its fastest repeat, `rows`, `build_ms`, `analysis_ms`,
-  * `optimization_ms`, `planning_ms`, `exec_ms` (these sum to the query's
-  * seconds) and the [[QueryTrace]] counts of its `build` and `exec`
-  * phases. `peak_heap_mb` holds one value per repeat: the sum of the heap
-  * pools' peaks (an upper bound of the heap's peak), reset before each
-  * repeat.
-  * Before anything starts the run gates on a quiet box (load_avg_1m <
+  * Each query first runs once on the sf0.001 fixture
+  * (SPARK_GRAFT_WARMUP_SF_DIR) to pay analysis, codegen and JIT outside the
+  * measured run; the warmup timings order the measured run longest-first,
+  * so the batch does not end on one heavy straggler. SPARK_GRAFT_WARMUP=0
+  * measures cold.
+  *
+  * The measured action is `collect()` of one hash aggregate over every
+  * output column of every row plus the row count ([[measured]]): a plain
+  * count() would let Catalyst prune the projections, and the timed
+  * `QueryExecution` is the one whose planning phases are recorded. A
+  * failed query reports -1 seconds, and a run with any failure reports
+  * `value: null`.
+  *
+  * The suite runs SPARK_GRAFT_BENCH_REPEATS times (default 3; repeat 1
+  * pays the per-directory model training); the headline is the best wall.
+  * The FINAL stdout line is the totals JSON (`{"metric":"total","value":
+  * <best wall>,"queries":{...},...}`, per-query seconds ms-rounded);
+  * build.sbt passes forked stdout through unprefixed so a reader can parse
+  * the last line. Host weather ships with it: per repeat the wall, the
+  * 1-min load average and `core_probe_sec` ([[coreProbeSec]]), the
+  * pre-session `contended` verdict ([[awaitQuietBox]]: load_avg_1m below
   * SPARK_GRAFT_BENCH_MAX_LOAD, default 5, waiting up to
-  * SPARK_GRAFT_BENCH_WAIT_SEC, default 300) — see [[awaitQuietBox]].
+  * SPARK_GRAFT_BENCH_WAIT_SEC, default 300) and the in-run spread flags.
+  * The full record (`BENCH_LOCAL.json`, or SPARK_GRAFT_BENCH_OUT) adds
+  * full-precision seconds, per-query shuffle read/write bytes (max across
+  * repeats), `peak_heap_mb` per repeat (the sum of the heap pools' peaks,
+  * reset before each repeat) and `trace`: per query, from its fastest
+  * repeat, `rows`, `build_ms`, `analysis_ms`, `optimization_ms`,
+  * `planning_ms`, `exec_ms` (summing to its seconds) and the
+  * [[QueryTrace]] counts of its `build` and `exec` phases.
   *
-  * Recipes (all through the variables above; a filtered run writes its
-  * record only to SPARK_GRAFT_BENCH_OUT):
+  * Recipes (a SPARK_GRAFT_BENCH_ONLY-filtered run writes its record only
+  * to SPARK_GRAFT_BENCH_OUT):
   *  - Phase split of one query: `SPARK_GRAFT_BENCH_ONLY=t16_ccnet_buckets
-  *    SPARK_GRAFT_BENCH_THREADS=1 SPARK_GRAFT_BENCH_OUT=/tmp/t16.json` —
-  *    `trace.t16_ccnet_buckets` splits build, plan and exec time, and
-  *    counts the jobs the build phase ran apart from the measured ones.
-  *  - Solo timing: the same with `SPARK_GRAFT_BENCH_REPEATS=N`; `walls`
-  *    holds every repeat, `trace.<q>.rows` the row count.
-  *  - Memory headroom at a scale above the fixtures (spill, peak execution
-  *    memory, peak heap): `SPARK_GRAFT_SF_DIR=<e.g. an sf4 dir>
+  *    SPARK_GRAFT_BENCH_THREADS=1 SPARK_GRAFT_BENCH_OUT=/tmp/t16.json`.
+  *  - Solo timing: the same with `SPARK_GRAFT_BENCH_REPEATS=N`.
+  *  - Memory headroom above the fixtures (spill, peak execution memory,
+  *    peak heap): `SPARK_GRAFT_SF_DIR=<e.g. an sf4 dir>
   *    SPARK_GRAFT_BENCH_THREADS=1 SPARK_GRAFT_BENCH_REPEATS=1`, one query
-  *    per run so `peak_heap_mb` is that query's. The heavy tail worth
-  *    probing: d14_exact_substring_dedup, d15_semdedup_cells,
-  *    d16_semdedup_centroid_keep, g1_pagerank, g2_hits,
-  *    g4_label_propagation, g6_triangle_count, x10_cluster_shard,
+  *    per run. The heavy tail worth probing: d14_exact_substring_dedup,
+  *    d15_semdedup_cells, d16_semdedup_centroid_keep, g1_pagerank,
+  *    g2_hits, g4_label_propagation, g6_triangle_count, x10_cluster_shard,
   *    t16_ccnet_buckets, dq3_column_profile, t10_tfidf_keywords,
   *    b1_bloom_decontamination.
   */
 object Bench {
+
+  private def cpus: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+
+  /** The one session setup of every mode: [[GraftSession.local]] on
+    * SPARK_GRAFT_CPUS cores plus the mode's own confs. */
+  private def session(app: String, confs: Map[String, String]): SparkSession = {
+    val spark = confs.foldLeft(GraftSession.local(app, cpus)) {
+      case (b, (k, v)) => b.config(k, v)
+    }.getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
+  def main(args: Array[String]): Unit =
+    if (args.isEmpty) suite()
+    else {
+      val confs =
+        if (args.take(2).sameElements(Seq("stream", "events")))
+          graft.streaming.EventStreams.rocksDbStateStoreConfigs
+        else Map.empty[String, String]
+      val spark = session(s"graft-bench-${args.take(2).mkString("-")}", confs)
+      val ok = try { leg(spark, args.toList); true } catch { case e: Throwable =>
+        System.err.println(s"[bench] ${args.mkString(" ")} FAILED: $e"); false
+      } finally spark.stop()
+      if (!ok) sys.exit(1)
+    }
+
+  /** Run one leg on `spark`; returns the records it printed. A failed gate
+    * throws. */
+  private[graft] def leg(spark: SparkSession, args: List[String]): Seq[String] = {
+    val l = new Leg(spark, args.take(2).mkString("_"))
+    try {
+      args match {
+        case "corpus" :: "full" :: rest => CorpusLegs.full(l, rest)
+        case "corpus" :: "incremental" :: rest => CorpusLegs.incremental(l, rest)
+        case "corpus" :: "chain" :: rest => CorpusLegs.chain(l, rest)
+        case "corpus" :: "divergence" :: rest => CorpusLegs.divergence(l, rest)
+        case "stream" :: "events" :: rest => StreamLegs.events(l, rest)
+        case "stream" :: "corpus" :: rest => StreamLegs.corpus(l, rest)
+        case _ => throw new IllegalArgumentException(
+          "usage: graft.Bench [corpus full|incremental|chain|divergence ... | stream events|corpus ...]")
+      }
+      l.records
+    } finally l.close()
+  }
+
+  private val OtherPhase = "other"
+
+  /** One leg's measuring. Every job its thread runs — and the threads that
+    * thread starts, such as a streaming query's, which inherit Spark's
+    * local properties — carries `graft.bench.query` = the leg's name and
+    * `graft.bench.phase` = the running [[section]], or `other` between
+    * sections. */
+  private[graft] final class Leg(val spark: SparkSession, name: String) extends AutoCloseable {
+    private val sc = spark.sparkContext
+    private val trace = new QueryTrace
+    private val pending = scala.collection.mutable.LinkedHashMap.empty[String, QueryTrace.Counts]
+    private val printed = Seq.newBuilder[String]
+    sc.addSparkListener(trace)
+    sc.setLocalProperty(QueryTrace.QueryProp, name)
+    sc.setLocalProperty(QueryTrace.PhaseProp, OtherPhase)
+
+    private def take(phase: String): QueryTrace.Counts = {
+      trace.drainListenerBus(sc)
+      trace.take(QueryTrace.Key(name, phase))
+    }
+
+    /** Run `body` as the timed section `phase`; returns its result and
+      * seconds. Its counts join the next [[emit]]ted record. */
+    def section[T](phase: String)(body: => T): (T, Double) = {
+      sc.setLocalProperty(QueryTrace.PhaseProp, phase)
+      val t0 = System.nanoTime()
+      try (body, (System.nanoTime() - t0) / 1e9)
+      finally {
+        sc.setLocalProperty(QueryTrace.PhaseProp, OtherPhase)
+        pending(phase) = take(phase)
+      }
+    }
+
+    /** Print one JSON record: `fields` plus `trace`, the counts of every
+      * section since the previous record and of the work between them. */
+    def emit(fields: String): Unit = {
+      pending(OtherPhase) = take(OtherPhase)
+      val record = pending.map { case (p, c) => s""""$p":${c.json}""" }
+        .mkString(s"""{$fields,"trace":{""", ",", "}}")
+      pending.clear()
+      printed += record
+      println(record)
+    }
+
+    def records: Seq[String] = printed.result()
+
+    def close(): Unit = {
+      sc.removeSparkListener(trace)
+      sc.setLocalProperty(QueryTrace.QueryProp, null)
+      sc.setLocalProperty(QueryTrace.PhaseProp, null)
+    }
+  }
 
   private def loadAvg1m: Double = {
     val l = java.lang.management.ManagementFactory
@@ -221,15 +312,10 @@ object Bench {
     math.round(l * 100) / 100.0
   }
 
-  /** Host-weather probe (round-13 lesson): a FIXED single-thread integer
-    * loop timed before each repeat. Same-code bench walls moved 21 → 33 s
-    * within one session while 1-min load stayed < 0.5, steal stayed 0 and
-    * the nominal CPU frequency never moved — per-core throughput on a
-    * shared host varies invisibly to every signal `contended`/`load_avg_1m`
-    * can see. The probe's seconds ship per repeat (`core_probe_sec`), so a
-    * reader of the record alone can tell "slow box phase" from "slow code":
-    * identical plans with probe 0.2 s vs 0.4 s is weather, not regression.
-    * JIT is paid by one unrecorded warmup call before the repeats. */
+  /** Host-weather probe: a fixed single-thread integer loop timed before
+    * each repeat. Per-core throughput on a shared host varies where the
+    * load average cannot see it; identical plans with a probe of 0.2 s vs
+    * 0.4 s is weather, not a regression. */
   private def coreProbeSec(): Double = {
     val t0 = System.nanoTime()
     var x = 0x9E3779B97F4A7C15L
@@ -243,15 +329,11 @@ object Bench {
     math.round((System.nanoTime() - t0) / 1e9 * 1000) / 1000.0
   }
 
-  /** Round-6 verdict #6: a contended box can inflate the recorded wall
-    * ~5-8× (112.9 s vs 21.7 s quiet on identical code), and that noise then
-    * lives forever in the driver's BENCH_r{N}.json. Gate the measured run
-    * on a quiet 1-minute load average: poll until load < maxLoad or the
-    * wait budget runs out (never hang the harness — a permanently busy box
-    * still produces a record, marked contended via the shipped load
-    * samples). Returns seconds waited. Must run BEFORE the SparkSession
-    * spins up: our own executor threads would otherwise feed the average
-    * we are gating on. */
+  /** Gate the measured run on a quiet box: poll until the 1-min load
+    * average is below `maxLoad` or `budgetSec` runs out (a busy box still
+    * produces a record, marked contended). Returns seconds waited. Runs
+    * before the session starts, whose executor threads would feed the
+    * average it gates on. */
   private def awaitQuietBox(maxLoad: Double, budgetSec: Int): Double = {
     val t0 = System.nanoTime()
     var load = loadAvg1m
@@ -307,31 +389,20 @@ object Bench {
   private def peakHeapMb: Long =
     heapPools.map(_.getPeakUsage.getUsed).sum / (1024 * 1024)
 
-  def main(args: Array[String]): Unit = {
+  private def suite(): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val warmDir = sys.env.getOrElse("SPARK_GRAFT_WARMUP_SF_DIR", "/root/testdata/sf0.001")
     val warmup = sys.env.getOrElse("SPARK_GRAFT_WARMUP", "1") != "0" &&
       new java.io.File(warmDir).isDirectory
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val threads = sys.env.getOrElse("SPARK_GRAFT_BENCH_THREADS", "8").toInt
     val maxLoad = sys.env.getOrElse("SPARK_GRAFT_BENCH_MAX_LOAD", "5").toDouble
     val waitBudget = sys.env.getOrElse("SPARK_GRAFT_BENCH_WAIT_SEC", "300").toInt
     val waitedSec = awaitQuietBox(maxLoad, waitBudget)
-    // Round-11 verdict #2 / round-10 #5: a capture that proceeded with the
-    // box still loud must say so IN the record — a reader of BENCH_r{N}
-    // .json alone could not tell a 2x regression from neighbor noise. The
-    // snapshot protocol treats contended=true as "re-run before committing".
-    // contended is a PRE-SESSION verdict by construction: once our own
-    // local[32] executor threads spin up, the 1-min load average measures
-    // mostly US (round-12 verdict: repeat loads of 8-19 on an otherwise
-    // quiet box are self-load), so per-repeat samples cannot distinguish
-    // external contention — they ship in `load_avg_1m` for diagnosis, with
-    // `load_note` in the record saying exactly that.
+    // `contended` is a pre-session verdict: once the executors run, the
+    // load average measures mostly this bench, so the per-repeat samples
+    // ship for diagnosis only (`load_note`).
     val contended = loadAvg1m >= maxLoad || waitedSec >= waitBudget
-    val spark = GraftSession.local("graft-bench", cpus.toInt)
-      .config("spark.scheduler.mode", "FAIR")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = session("graft-bench", Map("spark.scheduler.mode" -> "FAIR"))
     val trace = new QueryTrace
     spark.sparkContext.addSparkListener(trace)
 
@@ -357,11 +428,8 @@ object Bench {
       out.asScala.toMap
     }
 
-    // Fixed alphabetical base order: per-query numbers stay comparable
-    // across rounds (Map iteration order shifts whenever the catalog
-    // changes).
-    // SPARK_GRAFT_BENCH_ONLY=name1,name2 — targeted local timing runs
-    // (never set by the driver; the contract run covers the full catalog).
+    // Alphabetical base order keeps per-query numbers comparable as the
+    // catalog changes; SPARK_GRAFT_BENCH_ONLY=name1,name2 filters it.
     val onlyFilter: String => Boolean =
       sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(",").toSet) match {
         case Some(names) => names.contains(_)
@@ -372,22 +440,12 @@ object Bench {
       if (warmup) runAll(queries, warmDir).map { case (n, r) => n -> r.sec } else Map.empty
     val order = queries.sortBy { case (n, _) => (-warmTimes.getOrElse(n, 0.0), n) }
 
-    // Best-of-N (default 3): on a shared box one contended sample can
-    // masquerade as a 5× regression (round-5 lesson: 82.6 s at load ~3.3 vs
-    // 14.1 s at load 1.5 on identical code). Each repeat records its wall
-    // and the 1-min load average at start; the headline is the BEST wall,
-    // per-query seconds are the min across repeats, and all samples ship in
-    // the record so a contended round is self-diagnosing.
     val repeats = math.max(1, sys.env.getOrElse("SPARK_GRAFT_BENCH_REPEATS", "3").toInt)
-    // quiesce the async listener bus before EVERY snapshot: trailing
-    // TaskEnd events from the batch that just returned would otherwise
-    // bleed into the next repeat's tallies
+    // drain the listener bus before every snapshot, so trailing task ends
+    // never bleed into the next repeat's tallies
     trace.drainListenerBus(spark.sparkContext)
     trace.snapshotAndReset() // discard warmup tallies
-    // TWO unrecorded warmup calls: one invocation of the 150M-iteration
-    // loop may not reach the top JIT tier, and a repeat-1 probe reading
-    // high for residual compilation would masquerade as a slow-box phase —
-    // the probe must measure weather, never JIT.
+    // two unrecorded probe calls, so the first recorded one is past JIT
     coreProbeSec(); coreProbeSec()
     final case class Repeat(wall: Double, load: Double, probe: Double, peakHeapMb: Long,
         queries: Map[String, QueryRun], counts: Map[QueryTrace.Key, QueryTrace.Counts])
@@ -401,11 +459,8 @@ object Bench {
       trace.drainListenerBus(spark.sparkContext)
       Repeat(wall, load, probe, peakHeapMb, res, trace.snapshotAndReset())
     }
-    // Per-query shuffle bytes (both phases): MAX across repeats.
-    // Deterministic plans give identical tallies every repeat (max is
-    // exact); memoized-model entries (v2/v3/v4 train once per dir) only
-    // shuffle on the repeat that trains, so max reports the cold-run bound
-    // instead of a misleading zero.
+    // Per-query shuffle bytes (both phases): max across repeats, so a
+    // memo-fed query reports the repeat that trained, not a zero.
     val shuffles: Map[String, (Long, Long)] = runs.map { r =>
       r.counts.groupBy(_._1.query).map { case (q, cs) =>
         q -> (cs.values.map(_.shuffleRead).sum, cs.values.map(_.shuffleWrite).sum)
@@ -441,22 +496,15 @@ object Bench {
     val loads = runs.map(_.load).mkString("[", ",", "]")
     val probes = runs.map(_.probe).mkString("[", ",", "]")
     val peakHeaps = runs.map(_.peakHeapMb).mkString("[", ",", "]")
-    // Round-14 verdict #1: `contended` is a PRE-SESSION verdict, and a
-    // record whose repeats disagree wildly was shipping "contended: false"
-    // next to a 63% wall jump — two contradictory stories in one JSON.
-    // The in-run verdict uses the evidence the record already carries:
-    // repeats run IDENTICAL plans on identical data, so a wall spread or
-    // core-probe spread beyond noise (25%) is host weather by
-    // construction — nothing code-side differs between repeats. A single
-    // repeat can't self-diagnose this way (spread needs >= 2 samples);
-    // it reports false and the per-repeat fields remain the evidence.
+    // The in-run verdict: repeats run identical plans on identical data, so
+    // a wall or core-probe spread beyond 25% is host weather. One repeat
+    // has no spread and reports false.
     def spread(xs: Seq[Double]): Double = {
       val pos = xs.filter(_ > 0)
       if (pos.size < 2) 1.0 else pos.max / pos.min
     }
-    // repeat 1 pays the per-dir model training (v2/v3/v4 memoize per
-    // directory) — a structural ~2x every round, not contention — so the
-    // wall spread reads repeats 2..N when there are at least three
+    // repeat 1 pays the per-directory model training, so the wall spread
+    // reads repeats 2..N when there are at least three
     val steadyWalls = if (runs.size >= 3) runs.tail.map(_.wall) else runs.map(_.wall)
     val wallSpread = math.round(spread(steadyWalls) * 100) / 100.0
     val probeSpread = math.round(spread(runs.map(_.probe)) * 100) / 100.0
@@ -465,11 +513,7 @@ object Bench {
       s""""contended_pre_session":$contended,"contended_during_run":$contendedDuringRun,""" +
         s""""wall_spread":$wallSpread,"core_probe_spread":$probeSpread,""" +
         s""""contention_note":"contended_pre_session gates on 1-min load before our own executors spin up; contended_during_run flags steady-state (repeat>=2) wall or core-probe spread >1.25x on identical plans - the one-loud-repeat class. UNIFORM host-weather inflation is invisible to every intra-run signal (r14: all repeats +34% with flat probes); compare walls cross-round at matching core_probe_sec, and re-capture on a quiet box before committing when either flag is true.""""
-    // A run with ANY failed query has no comparable wall: erroring queries
-    // cost ~0 s, so the total reads as a phantom speedup (round-7 lesson —
-    // 26 failures made a broken round look 1.8× faster). Emit value:null
-    // so a consumer reading only metric/value is FORCED to handle the
-    // invalid-run case; the failure count and per-query data still ship.
+    // a failed query costs ~0 s, so a run with one has no comparable wall
     val headline = if (failures > 0) "null" else wall.toString
     val shufR = shuffles.toSeq.sortBy(_._1)
       .map { case (k, (r, _)) => s"\"" + k + "\":" + r }.mkString("{", ",", "}")
@@ -477,10 +521,7 @@ object Bench {
       .map { case (k, (_, w)) => s"\"" + k + "\":" + w }.mkString("{", ",", "}")
     val shufRTotal = shuffles.valuesIterator.map(_._1).sum
     val shufWTotal = shuffles.valuesIterator.map(_._2).sum
-    // ms-rounded per-query seconds for the stdout totals line: the driver's
-    // per-query comparator needs the map in the FINAL line (round-16
-    // PERF came back empty reading only totals), and rounding keeps the
-    // line ~6 KB instead of ~9 KB; BENCH_LOCAL.json keeps full precision.
+    // ms-rounded per-query seconds keep the stdout totals line compact
     val qsCompact = results.toSeq.sortBy(_._1)
       .map { case (k, v) =>
         val r = if (v < 0) "-1" else (math.round(v * 1000) / 1000.0).toString
@@ -490,10 +531,8 @@ object Bench {
       s"""{"metric":"total","value":$headline,"unit":"sec","n":${results.size},"failures":$failures,"queries":$qsCompact,"sf":"$sfDir","threads":$threads,"sum_query_sec":$sumSec,"repeats":$repeats,"walls":$walls,"load_avg_1m":$loads,"core_probe_sec":$probes,"load_note":"per-repeat load_avg_1m samples include this bench's own local[$cpus] load",$contentionJson,"waited_for_quiet_sec":$waitedSec,"contended":$contended,"shuffle_read_bytes_total":$shufRTotal,"shuffle_write_bytes_total":$shufWTotal}"""
     val full =
       s"""{"metric":"total","value":$headline,"unit":"sec","queries":$qs,"sf":"$sfDir","threads":$threads,"sum_query_sec":$sumSec,"repeats":$repeats,"walls":$walls,"load_avg_1m":$loads,"core_probe_sec":$probes,"load_note":"per-repeat load_avg_1m samples include this bench's own local[$cpus] load",$contentionJson,"waited_for_quiet_sec":$waitedSec,"contended":$contended,"shuffle_read_bytes":$shufR,"shuffle_write_bytes":$shufW,"peak_heap_mb":$peakHeaps,"trace":$traceJson}"""
-    // A SPARK_GRAFT_BENCH_ONLY-filtered run must not clobber the committed
-    // full-suite record with an n=1 artifact (and a typo'd filter would
-    // silently persist n=0): targeted runs only write when the caller
-    // explicitly names an output file.
+    // a filtered run writes only to a file the caller names, never over
+    // the full-suite record
     val explicitOut = sys.env.get("SPARK_GRAFT_BENCH_OUT")
     if (sys.env.contains("SPARK_GRAFT_BENCH_ONLY") && explicitOut.isEmpty)
       System.err.println("[bench] filtered run: skipping BENCH_LOCAL.json (set SPARK_GRAFT_BENCH_OUT to persist)")
@@ -502,13 +541,7 @@ object Bench {
       java.nio.file.Files.write(out, (summary + "\n" + full + "\n").getBytes("UTF-8"))
     } catch { case e: Throwable => System.err.println(s"[bench] could not persist BENCH_LOCAL.json: ${e.getMessage}") }
     spark.stop()
-    // Self-evidencing headline, LAST (round-5 lesson: the driver parses the
-    // final stdout line as JSON; printed earlier it scrolls out of the tail
-    // window, printed under sbt's logger it gains an "[info] " prefix —
-    // build.sbt sets run/outputStrategy := StdoutOutput so this passes
-    // through unprefixed). Since round 17 the line carries the ms-rounded
-    // per-query map — the driver's comparator contract — full precision and
-    // per-query shuffle bytes stay in BENCH_LOCAL.json.
+    // the totals line is the LAST stdout line
     println(summary)
   }
 }

@@ -50,12 +50,12 @@ object DedupCatalog {
     * Session-keyed because a DataFrame is unusable cross-session; no
     * eviction — one tiny label table per fixture dir for the session's
     * lifetime. */
-  private val ccLabelCache = new scala.collection.concurrent.TrieMap[
-    (org.apache.spark.sql.SparkSession, String), org.apache.spark.sql.DataFrame]
+  private val ccLabelCache =
+    new Memo[(org.apache.spark.sql.SparkSession, String), org.apache.spark.sql.DataFrame]
 
   private def ccLabelsDF(
       spark: org.apache.spark.sql.SparkSession, dir: String): org.apache.spark.sql.DataFrame =
-    ccLabelCache.getOrElseUpdate((spark, dir), {
+    ccLabelCache((spark, dir)) {
       // Reuse.materialize: RELIABLE checkpoint under a configured dir
       // (cluster-survivable), localCheckpoint only as the bare-session
       // fallback — the round-10 g6 posture applied to every one-shot
@@ -63,7 +63,7 @@ object DedupCatalog {
       graft.operators.Reuse.materialize(
         graft.operators.ConnectedComponents
           .label(simhashPairsDF(spark, dir), "doc1", "doc2"))
-    })
+    }
 
   /** Doc ids that ride the d3/d5 packed-long encodings must fit 31 bits: a
     * doc_id in [2^31, 2^32) would set the sign bit of `doc<<32 | other`,

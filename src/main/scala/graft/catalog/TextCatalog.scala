@@ -106,15 +106,14 @@ object TextCatalog {
 
   // The learned merge table is a model ARTIFACT of the corpus (deterministic
   // in the input dir), so v2 and v3 share one training run per dir instead
-  // of each paying the K iteration rounds. Concurrent first calls may race
-  // and both train — benign: identical results, last write wins.
-  private val learned =
-    new scala.collection.concurrent.TrieMap[String, Seq[graft.operators.BpeLearn.Merge]]
+  // of each paying the K iteration rounds; concurrent first callers wait
+  // for the one run.
+  private val learned = new Memo[String, Seq[graft.operators.BpeLearn.Merge]]
   private def learnedMerges(spark: org.apache.spark.sql.SparkSession, dir: String) =
-    learned.getOrElseUpdate(dir, {
+    learned(dir) {
       val wc = graft.operators.BpeLearn.wordCounts(Tables.documentsFanned(spark, dir))
       graft.operators.BpeLearn.learn(wc, BpeMerges)
-    })
+    }
 
   // hard-EM round count for v4 — like BpeMerges, declared before `all`
   // (unigramOracle(UnigramRounds) is evaluated eagerly when `all` builds)
@@ -125,13 +124,12 @@ object TextCatalog {
   // merge table, so Verify/Bench/specs pay the two EM rounds once per dir.
   // The collected result is vocab-sized by construction: KeepK multi-char
   // pieces + the corpus alphabet.
-  private val unigramTrained =
-    new scala.collection.concurrent.TrieMap[String, Seq[(String, Long, Long)]]
+  private val unigramTrained = new Memo[String, Seq[(String, Long, Long)]]
   private def unigramVocab(spark: org.apache.spark.sql.SparkSession, dir: String) =
-    unigramTrained.getOrElseUpdate(dir, {
+    unigramTrained(dir) {
       graft.operators.UnigramLM.train(Tables.documentsFanned(spark, dir), UnigramRounds)
         .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq
-    })
+    }
 
   /** t1's scorer, shared with t13's evaluation: per-doc stopword hits per
     * language + the deterministic argmax chain. Map-only projection. */

@@ -681,9 +681,10 @@ object CorpusPipeline {
     // but on templated corpora a single shared 3-gram flags nearly
     // everything — production decontamination (Lee et al. 2022, Gopher)
     // matches LONG n-grams (8–13 tokens), which only near-copies of the
-    // held-out text can share; CorpusBench runs with 8. Probing happens on
-    // the CURRENT corpus (post-scrub), so a contaminating span already
-    // erased by ExactSubstr no longer flags its document.
+    // held-out text can share; the `graft.Bench corpus` legs run with 8.
+    // Probing happens on the CURRENT corpus (post-scrub), so a
+    // contaminating span already erased by ExactSubstr no longer flags
+    // its document.
     val refHashes = heldOut
       .select(explode(WordShingles(col("text"), decontamShingle)).as("s"))
       .select(shingleHash(col("s")).as("h")).distinct()

@@ -17,7 +17,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * Trigger granularity is an execution knob, not semantics: N triggers of
   * one slice each produce the identical corpus to the N-step batch chain
   * over the same slices (StreamingIngestSpec gates streamed ≡ chained via
-  * the chain leg's exact multiset fingerprint; StreamBench's corpus leg
+  * the chain leg's exact multiset fingerprint; `graft.Bench stream corpus`
   * measures it at fixture scale). The append-only doc_id contract is the
   * stream's responsibility (ingestion sequence numbers), enforced loudly
   * by runIncremental's existing require per batch — a source that replays

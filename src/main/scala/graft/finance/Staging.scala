@@ -190,11 +190,6 @@ object Staging {
       .filter(col("rn") === 1)
   }
 
-  /** `stg_predictions_archive.sql` — the un-deduped prediction history. */
-  def stgPredictionsArchive(predicted: DataFrame): DataFrame =
-    predicted.select("transaction_id", "predicted_master_category",
-      "prediction_confidence", "model_version", "prediction_timestamp")
-
   /** `stg_user_validated_categories.sql`: validated-only filter (P10),
     * left join onto the feature mart (J5), user-over-derived category
     * override (P11), user_notes/category_changed_at passthrough. */

@@ -64,38 +64,6 @@ final class TableStore(spark: SparkSession, val root: String) {
     graft.io.SchemaMemo.invalidate(dir(table).toString)
   }
 
-  /** Bucketed managed table for co-located joins (SURVEY §4 / builder
-    * prompt: "bucketing for co-located joins"): both sides of a recurring
-    * equi-join written with the same bucket spec join WITHOUT a shuffle —
-    * the exchange disappears from the plan because each bucket pairs off
-    * by file. Registered in the session catalog under `table`; readers use
-    * `spark.table(table)`. At warehouse scale this is the fact–fact join
-    * strategy (e.g. transactions ⋈ predictions on transaction_id) where
-    * neither side broadcasts. */
-  def overwriteBucketed(
-      table: String, df: DataFrame, bucketCol: String, numBuckets: Int = 32): Unit = {
-    // bucketing metadata lives in the catalog, so the directory-swap
-    // protocol doesn't apply; instead each overwrite writes a fresh
-    // versioned path and atomically repoints the catalog entry, then
-    // removes the previous generation — readers resolve via the catalog
-    // and never list a half-written directory.
-    val previous: Option[String] =
-      try {
-        val t = spark.sessionState.catalog.getTableMetadata(
-          org.apache.spark.sql.catalyst.TableIdentifier(table))
-        t.storage.locationUri.map(Paths.get(_).toString)
-      } catch { case _: Exception => None }
-    val versioned = Paths.get(root, s".${table}__gen${System.nanoTime()}")
-    df.write.mode("overwrite")
-      .format("parquet")
-      .option("path", versioned.toString)
-      .bucketBy(numBuckets, bucketCol)
-      .sortBy(bucketCol)
-      .saveAsTable(table)
-    previous.filter(_ != versioned.toString)
-      .foreach(p => deleteRecursively(Paths.get(p)))
-  }
-
   /** Full refresh: write to a temp sibling, swap atomically. The written
     * schema is memoized for the generation the swap publishes, so reading
     * the table back starts no inference job. */

@@ -4,10 +4,9 @@ import java.time.{Instant, LocalDate, ZoneOffset}
 import java.util.Base64
 import scala.collection.mutable
 import scala.util.matching.Regex
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.Row
 import org.json4s._
 import org.json4s.jackson.JsonMethods
-import graft.finance.Schemas
 
 /** SimpleFIN Bridge extractor — SURVEY §2.1 S1/S2
   * (`dagster/extractors/simplefin_api.py:36-276`): chunked paginated pulls,
@@ -17,8 +16,9 @@ import graft.finance.Schemas
   *
   * The HTTP transport is injectable (`Transport`) so the connector is fully
   * testable with zero egress; the chunk loop stays driver-side — it is 5
-  * tiny HTTP calls, not a distributed workload. The flattened rows become a
-  * `DataFrame` with [[Schemas.simplefinRaw]] for the raw append load (S3).
+  * tiny HTTP calls, not a distributed workload. The flattened rows follow
+  * the column order of [[graft.finance.Schemas.simplefinRaw]], the raw
+  * append load's schema (S3).
   */
 object SimplefinConnector {
 
@@ -208,12 +208,6 @@ object SimplefinConnector {
       if (added > 0) okInstitutions += institution
     }
     (rows.toSeq, errors.toSeq, okInstitutions.toSet)
-  }
-
-  /** S3: the flattened rows as a raw-schema DataFrame ready for append. */
-  def toDataFrame(spark: SparkSession, result: FetchResult): DataFrame = {
-    import scala.jdk.CollectionConverters._
-    spark.createDataFrame(result.rows.asJava, Schemas.simplefinRaw)
   }
 
   private def str(v: JValue): Option[String] = v match {

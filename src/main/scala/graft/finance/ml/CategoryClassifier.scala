@@ -5,7 +5,7 @@ import org.apache.spark.ml.classification.RandomForestClassifier
 import org.apache.spark.ml.evaluation.MulticlassClassificationEvaluator
 import org.apache.spark.ml.feature._
 import org.apache.spark.ml.functions.vector_to_array
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -223,20 +223,5 @@ object CategoryClassifier {
       confidenceOf(probs).as("prediction_confidence"),
       lit(modelVersion).as("model_version"),
       current_timestamp().as("prediction_timestamp"))
-  }
-
-  /** M9: calibration curve for one class — uniform 10-bin bucket of
-    * predicted probability vs empirical accuracy. A groupBy over
-    * `floor(p*10)`, no driver-side state. */
-  def calibrationCurve(predictions: DataFrame, classIndex: Int): DataFrame = {
-    val p = vector_to_array(col("probability")).getItem(classIndex)
-    predictions
-      .withColumn("_bin", least(floor(p * 10), lit(9)))
-      .groupBy(col("_bin"))
-      .agg(
-        avg(p).as("mean_predicted"),
-        avg(when(col("_label") === classIndex, 1.0).otherwise(0.0)).as("fraction_positive"),
-        count(lit(1)).as("n"))
-      .orderBy(col("_bin"))
   }
 }

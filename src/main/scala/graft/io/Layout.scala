@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 /** Multi-dimensional data layout: Z-order (Morton) clustering.
   *
   * Partitioned writes (`DataFrameWriter.partitionBy`) prune on ONE
-  * dimension and bucketing (`io/Bucketing`) co-locates ONE join key. When
+  * dimension and bucketing (`bucketBy`) co-locates ONE join key. When
   * scans filter on TWO independent columns (date × account, cell × shard),
   * sorting by either one scatters the other across every file. Interleaving
   * the bits of both keys (public technique: Morton 1966; the layout behind

@@ -1,6 +1,6 @@
 package graft.multimodal
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -307,15 +307,4 @@ object Multimodal {
         substring_index(lit(""), "", 0).as("_dummy"))
       .withColumn("frame_payload_offset", col("frame_no") * frameBytes)
       .drop("_dummy")
-
-  /** Resize plumbing: records the target geometry per asset (the real
-    * resample happens in the codec at read time — this is the metadata
-    * contract downstream training readers consume). */
-  def withResizeTarget(assets: DataFrame, maxEdge: Int): DataFrame =
-    decodeImages(assets)
-      .withColumn("scale",
-        when(greatest(col("width"), col("height")) <= maxEdge, lit(1.0))
-          .otherwise(lit(maxEdge) / greatest(col("width"), col("height"))))
-      .withColumn("target_width", ceil(col("width") * col("scale")).cast("int"))
-      .withColumn("target_height", ceil(col("height") * col("scale")).cast("int"))
 }

@@ -27,7 +27,7 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape: one key-partitioned full-outer join — sort-merge at fact
   * scale, exchange-free when both sides are bucketed by the key
-  * (io/Bucketing, the i5 posture) — then a codegen'd filter + projection.
+  * (`bucketBy` on the key, the i5 posture) — then a codegen'd filter + projection.
   * No second pass, no driver state: the decision for every row is local to
   * its key's partition.
   *

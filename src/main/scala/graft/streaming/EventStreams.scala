@@ -339,7 +339,7 @@ final case class UserEventIn(user_id: Long, value: Double, ts_s: Long)
   * kill that lands between the file source's metadata-log append and the
   * offset WAL write makes the restarted query legitimately RE-PLAN the
   * in-flight batch (Spark merges the un-WAL'd source-log entries into one
-  * batch — observed in StreamBench: 8 files in the replayed batch, 7 total
+  * batch — observed in `graft.Bench stream events`: 8 files in the replayed batch, 7 total
   * batches vs the reference's 8), and a double fold then differs in the
   * last ulps purely from summation order while exactly-once still holds.
   * With integer micro-units the recovered result is bit-exact under ANY

@@ -4,8 +4,9 @@ import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 
-/** The bench's per-query record: [[Bench.runQuery]] under a [[QueryTrace]],
-  * checked against an independent job counter and a plain `count()`. */
+/** The bench's records — a catalog query's through [[Bench.runQuery]]
+  * under a [[QueryTrace]], and a leg's through [[Bench.leg]] — checked
+  * against an independent job counter and a plain `count()`. */
 class BenchSpec extends SparkSpec {
   import BenchSpec.Traced
 
@@ -62,6 +63,35 @@ class BenchSpec extends SparkSpec {
     val t = traced("t16_ccnet_buckets")
     checkRecord("t16_ccnet_buckets", t)
     assert(t.build.jobs > 0, "t16's materializeFiles writes run while the frame is built")
+  }
+
+  test("corpus chain, 1 slice: the record's trace counts every job the leg ran") {
+    import org.json4s._
+    val sc = spark.sparkContext
+    val controlJobs = new AtomicInteger
+    val control = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit = { controlJobs.incrementAndGet(); () }
+    }
+    val bus = new QueryTrace
+    bus.drainListenerBus(sc)
+    sc.addSparkListener(control)
+    val records =
+      try Bench.leg(spark, List("corpus", "chain", sfDir, sfDir, "1"))
+      finally {
+        bus.drainListenerBus(sc)
+        sc.removeSparkListener(control)
+      }
+    assert(records.size == 1)
+    val record = org.json4s.jackson.JsonMethods.parse(records.head)
+    assert(record \ "final_equals_rebuild" == JBool(true))
+    val phases = (record \ "trace").asInstanceOf[JObject].obj.map { case (phase, counts) =>
+      phase -> (counts \ "jobs").asInstanceOf[JInt].num.toLong
+    }.toMap
+    assert(Set("base", "slice_1", "rebuild", "other").subsetOf(phases.keySet), s"phases: $phases")
+    assert(phases("base") > 0 && phases("slice_1") > 0 && phases("rebuild") > 0, s"phases: $phases")
+    assert(phases.values.sum == controlJobs.get,
+      s"trace counted ${phases.values.sum} jobs ($phases), control saw ${controlJobs.get}")
+    assert(sc.getLocalProperty(QueryTrace.QueryProp) == null)
   }
 
   test("a failing query reports -1 seconds and no rows") {

@@ -173,25 +173,6 @@ class TableStoreSpec extends SparkSpec {
       ("d4", 7L, "g")))                       // new partition appended
   }
 
-  test("bucketed tables join without a shuffle; re-overwrite cleans old generation") {
-    val root = Files.createTempDirectory("graft-bk")
-    val store = new TableStore(spark, root.toString)
-    val a = (0 until 1000).map(i => (s"t$i", i * 2)).toDF("transaction_id", "x")
-    val b = (0 until 1000).map(i => (s"t$i", i * 3)).toDF("transaction_id", "y")
-    store.overwriteBucketed("bk_a", a, "transaction_id", numBuckets = 4)
-    store.overwriteBucketed("bk_a", a, "transaction_id", numBuckets = 4) // repoint + cleanup
-    store.overwriteBucketed("bk_b", b, "transaction_id", numBuckets = 4)
-    import scala.jdk.CollectionConverters._
-    val genDirs = Files.list(root).iterator().asScala
-      .count(_.getFileName.toString.startsWith(".bk_a__gen"))
-    assert(genDirs == 1, s"stale bucketed generations not cleaned (found $genDirs)")
-    val joined = spark.table("bk_a").join(spark.table("bk_b"), "transaction_id")
-    val plan = joined.queryExecution.executedPlan.toString
-    assert(!plan.contains("Exchange hashpartitioning"),
-      s"bucketed join must not shuffle:\n$plan")
-    assert(joined.count() == 1000)
-  }
-
   test("registry flags recomputed by window: latest vs active") {
     val reg = Seq(
       ("v1", "2024-01-01 00:00:00", "trained"),

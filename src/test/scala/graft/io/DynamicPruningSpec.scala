@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 /** Dynamic partition pruning (DPP) over a hive-partitioned layout
   * (`partitionBy` writes) — the third scan-reduction
   * lever next to static partition pruning (LayoutSpec) and bucketed joins
-  * (BucketingSpec). At 100 TB the shape is: a date-partitioned fact joined
+  * (CorpusStateBucketedSpec). At 100 TB the shape is: a date-partitioned fact joined
   * to a small filtered dim on the partition column — the dim filter is
   * only known at RUNTIME, so static pruning can't fire; DPP broadcasts the
   * dim's partition keys and skips the fact's non-matching directories

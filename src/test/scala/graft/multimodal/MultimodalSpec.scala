@@ -87,25 +87,4 @@ class MultimodalSpec extends SparkSpec {
       else assert(v > 0.9f, s"cell ($r,$c)=$v should be bright")
     }
   }
-
-  test("withResizeTarget computes true target geometry from real bytes") {
-    val r = Multimodal.withResizeTarget(realAssets, maxEdge = 100)
-      .filter(col("asset_id") === 1L).head
-    assert(r.getAs[Int]("target_width") == 100)  // 200x80 halves to 100x40
-    assert(r.getAs[Int]("target_height") == 40)
-    val small = Multimodal.withResizeTarget(realAssets, maxEdge = 100)
-      .filter(col("asset_id") === 2L).head
-    assert(small.getAs[Int]("target_width") == 33) // already within the cap
-    assert(small.getAs[Int]("target_height") == 47)
-  }
-
-  test("withResizeTarget caps the long edge") {
-    val out = Multimodal.withResizeTarget(assets, maxEdge = 128)
-    val bad = out.filter(greatest(col("target_width"), col("target_height")) > 128)
-    assert(bad.count() == 0)
-    // aspect preserved within rounding
-    val r = out.head
-    val scale = r.getAs[Double]("scale")
-    assert(scale <= 1.0)
-  }
 }

@@ -26,7 +26,7 @@ class AnnIndexSpec extends SparkSpec {
     val idx = AnnIndex.build(corpus, "embedding", nCells = 8, seed = 42L)
     val queries = corpus.filter(col("vec_id") < 8)
 
-    val exact = AnnIndex.bruteForceTopK(corpus, queries, "vec_id", "embedding", k = 10)
+    val exact = AnnOracle.bruteForceTopK(corpus, queries, "vec_id", "embedding", k = 10)
       .select("query_id", "neighbor_id")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).groupBy(_._1)
       .view.mapValues(_.map(_._2).toSet).toMap
@@ -54,7 +54,7 @@ class AnnIndexSpec extends SparkSpec {
     // same curve oracle-hashed, this gates the real-KMeans operator form.
     val idx = AnnIndex.build(corpus, "embedding", nCells = 8, seed = 42L)
     val queries = corpus.filter(col("vec_id") < 8)
-    val exact = AnnIndex.bruteForceTopK(corpus, queries, "vec_id", "embedding", k = 10)
+    val exact = AnnOracle.bruteForceTopK(corpus, queries, "vec_id", "embedding", k = 10)
       .select("query_id", "neighbor_id")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).groupBy(_._1)
       .view.mapValues(_.map(_._2).toSet).toMap

@@ -50,7 +50,7 @@ class PqIndexSpec extends SparkSpec {
   test("ADC shortlist + exact rescore reaches high recall vs brute force") {
     val enc = PqIndex.encode(cb, corpus, "vec_id", "embedding")
     val queries = corpus.filter(col("vec_id") < 8)
-    val exact = AnnIndex.bruteForceTopK(corpus, queries, "vec_id", "embedding", k = 10)
+    val exact = AnnOracle.bruteForceTopK(corpus, queries, "vec_id", "embedding", k = 10)
       .select("query_id", "neighbor_id")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).groupBy(_._1)
       .view.mapValues(_.map(_._2).toSet).toMap
@@ -95,7 +95,7 @@ class PqIndexSpec extends SparkSpec {
       .select("query_id", "neighbor_id")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).groupBy(_._1)
       .view.mapValues(_.map(_._2).toSet).toMap
-    val exact = AnnIndex.bruteForceTopK(corpus, queries, "vec_id", "embedding", k = 10)
+    val exact = AnnOracle.bruteForceTopK(corpus, queries, "vec_id", "embedding", k = 10)
       .select("query_id", "neighbor_id")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).groupBy(_._1)
       .view.mapValues(_.map(_._2).toSet).toMap

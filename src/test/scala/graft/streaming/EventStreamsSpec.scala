@@ -98,7 +98,7 @@ class EventStreamsSpec extends SparkSpec {
   }
 
   test("interval join results are invariant to micro-batch granularity") {
-    // Round-14 verdict #7: StreamBench's default trigger for the join
+    // The `graft.Bench stream events` leg's default trigger for the join
     // moved 4 → 16 files; this pins the claim that made the move safe —
     // trigger size is an EXECUTION knob, not semantics. The same
     // event-time-ordered event set, delivered as one batch vs five
