@@ -279,7 +279,7 @@ private[graft] object StreamLegs {
       qB.processAllAvailable()
       qB
     }
-    val batchesB = Option(qB.lastProgress).map(_.batchId + 1).getOrElse(0L) - batchesA
+    val batchesB = batchesAfterRestart(Option(qB.lastProgress).map(_.batchId), batchesA)
     qB.stop()
 
     // SYMMETRIC compare: rows in either run but not the other. A
@@ -302,4 +302,11 @@ private[graft] object StreamLegs {
     require(mismatch == 0L, s"RECOVERY MISMATCH: $mismatch rows differ")
     require(stateBoundViolations == 0, s"$stateBoundViolations state bound(s) violated")
   }
+
+  /** Batches the restarted query ran: its batch ids continue from the
+    * checkpoint, so this is its last batch id + 1 minus the `batchesA`
+    * committed before the kill, and 0 when it ran none (segment A drained
+    * the whole fixture before the kill landed). */
+  private[graft] def batchesAfterRestart(lastBatchIdB: Option[Long], batchesA: Long): Long =
+    lastBatchIdB.fold(0L)(_ + 1 - batchesA)
 }

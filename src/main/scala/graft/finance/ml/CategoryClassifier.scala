@@ -121,14 +121,17 @@ object CategoryClassifier {
   }
 
   /** sklearn `class_weight='balanced'`: weight(c) = n / (k · n_c), attached
-    * as the RF weight column via a broadcast join on label. */
-  def withBalancedWeights(train: DataFrame): DataFrame = {
-    val counts = train.groupBy(col(labelCol)).agg(count(lit(1)).as("_n_c"))
-    val n = train.count().toDouble
-    val k = counts.count().toDouble
-    train.join(broadcast(counts), Seq(labelCol))
-      .withColumn("_weight", lit(n) / (lit(k) * col("_n_c")))
-      .drop("_n_c")
+    * as the RF weight column. One job collects the per-label counts (one
+    * row per class); `n`, `k` and the weights are derived on the driver and
+    * attached as a literal label → weight map. Returns the weighted frame
+    * and `n`. */
+  def withBalancedWeights(train: DataFrame): (DataFrame, Long) = {
+    val counts = train.groupBy(col(labelCol)).agg(count(lit(1)))
+      .collect().map(r => r.getString(0) -> r.getLong(1))
+    val n = counts.map(_._2).sum
+    val k = counts.length.toDouble
+    val weights = counts.map { case (c, nc) => c -> n.toDouble / (k * nc) }.toMap
+    (train.withColumn("_weight", element_at(typedLit(weights), col(labelCol))), n)
   }
 
   /** NaN-fill before transform, as predict does (`classifier_predict.py`):
@@ -149,7 +152,7 @@ object CategoryClassifier {
       return Skipped("insufficient_data", nSamples)
 
     val (train0, test) = stratifiedSplit(data, 0.2, cfg.seed)
-    val train = withBalancedWeights(train0)
+    val (train, nTrain) = withBalancedWeights(train0)
     val model = pipeline(cfg).fit(train)
     val labels = model.stages.collectFirst { case s: StringIndexerModel => s.labelsArray(0) }.get
 
@@ -164,7 +167,7 @@ object CategoryClassifier {
         "precision_weighted" -> m("weightedPrecision"),
         "recall_weighted" -> m("weightedRecall")) ++ macroMetrics(predictions)
     }
-    Trained(model, labels, metrics, train0.count(), test.count(), labels.length)
+    Trained(model, labels, metrics, nTrain, test.count(), labels.length)
   }
 
   /** Macro precision/recall/F1 with sklearn zero_division=0: per-class

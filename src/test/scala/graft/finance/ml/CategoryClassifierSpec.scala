@@ -139,7 +139,7 @@ class CategoryClassifierSpec extends SparkSpec {
       .withColumn("has_transport_keyword", lit(0)).withColumn("has_shop_keyword", lit(0))
       .withColumn("has_flight_keyword", lit(0)).withColumn("has_credit_fee_keyword", lit(0))
       .withColumn("has_interest_keyword", lit(0))
-    val data = CategoryClassifier.withBalancedWeights(base)
+    val (data, _) = CategoryClassifier.withBalancedWeights(base)
     val model = CategoryClassifier.pipeline(fastCfg).fit(data)
 
     // vocabulary must be exactly sklearn's min_df=2 / max_df=0.95 selection
@@ -212,11 +212,29 @@ class CategoryClassifierSpec extends SparkSpec {
   test("balanced weights follow n/(k*n_c)") {
     val df = labeled(90).filter(col("master_category") =!= "Income")
       .union(labeled(90).filter(col("master_category") === "Income").limit(10))
-    val w = CategoryClassifier.withBalancedWeights(df)
+    val w = CategoryClassifier.withBalancedWeights(df)._1
       .select("master_category", "_weight").distinct()
       .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
     // n=70, k=3... actually classes: Dining 30, Travel 30, Income 10 → n=70
     assert(math.abs(w("Income") - 70.0 / (3 * 10)) < 1e-9)
     assert(math.abs(w("Dining") - 70.0 / (3 * 30)) < 1e-9)
+  }
+
+  test("balanced weights equal the two-count broadcast-join formula row for row; n is the row count") {
+    val df = labeled(90).filter(col("master_category") =!= "Income")
+      .union(labeled(90).filter(col("master_category") === "Income").limit(7))
+    val (weighted, n) = CategoryClassifier.withBalancedWeights(df)
+    // reference: n and k from two count jobs, n_c attached by a broadcast
+    // join on the label
+    val counts = df.groupBy(col("master_category")).agg(count(lit(1)).as("_n_c"))
+    val nOld = df.count().toDouble
+    val kOld = counts.count().toDouble
+    val old = df.join(broadcast(counts), Seq("master_category"))
+      .withColumn("_weight", lit(nOld) / (lit(kOld) * col("_n_c")))
+    def byId(frame: DataFrame) = frame.select("transaction_id", "_weight")
+      .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
+    assert(n == 67L && n.toDouble == nOld)
+    assert(byId(weighted) == byId(old)) // exact, not within a tolerance
+    assert(weighted.columns.toSeq == df.columns.toSeq :+ "_weight")
   }
 }
