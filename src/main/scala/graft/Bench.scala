@@ -10,7 +10,7 @@ import scala.jdk.CollectionConverters._
 /** The bench's one listener. Jobs are attributed through two thread-local
   * properties: `graft.bench.query` (a catalog query's name, or a leg's) and
   * `graft.bench.phase` — for a query `build` while its DataFrame is
-  * constructed (eager work such as `Reuse.materializeFiles` writes runs
+  * constructed (eager work such as `Reuse.materialize` writes runs
   * here) and `exec` for the measured action, for a leg the running
   * section ([[Bench.Leg]]). Spark captures local
   * properties into every job the thread submits, and through

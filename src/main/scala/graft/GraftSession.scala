@@ -32,13 +32,13 @@ import org.apache.spark.sql.SparkSession
   */
 object GraftSession {
 
-  /** Default reliable-checkpoint home, set as `spark.checkpoint.dir` by the
-    * contract (SparkContext applies it at start-up), so every session
-    * built here checkpoints under one home. On a cluster, override with
-    * durable shared storage. Each SparkContext checkpoints into its own
-    * UUID subdirectory under this path; `Reuse.materialize` registers a
-    * shutdown hook that deletes that subdirectory so repeated runs don't
-    * accumulate checkpoint blocks. */
+  /** Default home of `Reuse.materialize`'s files, set as
+    * `spark.checkpoint.dir` by the contract (SparkContext applies it at
+    * start-up). On a cluster, override with durable shared storage. Each
+    * SparkContext gets its own UUID subdirectory under this path;
+    * `Reuse.release` deletes a frame's files when its caller is done with
+    * them, and a shutdown hook deletes the subdirectory with whatever is
+    * left, so repeated runs don't accumulate files. */
   val DefaultCheckpointDir: String =
     s"${sys.props.getOrElse("java.io.tmpdir", "/tmp")}/graft-checkpoints"
 
@@ -57,18 +57,14 @@ object GraftSession {
     // 128k in-memory groups is tens of MB per partition; past that the
     // sort fallback still protects memory.
     "spark.sql.objectHashAggregate.sortBased.fallbackThreshold" -> "131072",
-    // Reliable-checkpoint home for operators/Reuse.materialize (g6's edge
-    // reuse, and any multi-consumer intermediate): on a cluster, OVERRIDE
-    // this with durable shared storage (HDFS/object store) — an
+    // Home of operators/Reuse.materialize's parquet files (every
+    // multi-consumer intermediate and iterative round): on a cluster,
+    // OVERRIDE this with durable shared storage (HDFS/object store) — an
     // executor-local or node-local path defeats the recoverability the
-    // reliable path exists for. The default keeps single-JVM runs working
-    // out of the box; disk lifecycle is two-tier — the cleaner drops files
-    // for frames that get garbage-collected mid-session, and
-    // Reuse.materialize's shutdown hook removes this app's checkpoint
-    // subdirectory at exit (session-lifetime caches hold strong
-    // references, so the cleaner alone never fires for them).
-    "spark.checkpoint.dir" -> DefaultCheckpointDir,
-    "spark.cleaner.referenceTracking.cleanCheckpoints" -> "true")
+    // files exist for. The default keeps single-JVM runs working out of the
+    // box. Reuse.release deletes a frame's files when its caller is done,
+    // and a shutdown hook removes this app's subdirectory at exit.
+    "spark.checkpoint.dir" -> DefaultCheckpointDir)
 
   def builder(appName: String, shufflePartitions: Int = 200): SparkSession.Builder = {
     require(shufflePartitions > 0, "shufflePartitions must be positive")

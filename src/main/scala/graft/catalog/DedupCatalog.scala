@@ -43,10 +43,9 @@ object DedupCatalog {
     * per (session, dir) exactly like ExtensionCatalog.graphScores — x10 is
     * d8's labels plus a pure md5-bucket map, and at corpus scale a second
     * full contraction is the single most expensive thing in the catalog.
-    * The entry is the final star forest's label projection, checkpointed
-    * and materialized so both consumers read blocks (the contraction's own
-    * free discipline only preserves the LAST round's edge set; pinning the
-    * projection keeps reuse safe even if a future refactor frees it).
+    * The entry is the final star forest's label projection, materialized
+    * so both consumers read one file set instead of re-running the
+    * projection's distinct.
     * Session-keyed because a DataFrame is unusable cross-session; no
     * eviction — one tiny label table per fixture dir for the session's
     * lifetime. */
@@ -56,10 +55,6 @@ object DedupCatalog {
   private def ccLabelsDF(
       spark: org.apache.spark.sql.SparkSession, dir: String): org.apache.spark.sql.DataFrame =
     ccLabelCache((spark, dir)) {
-      // Reuse.materialize: RELIABLE checkpoint under a configured dir
-      // (cluster-survivable), localCheckpoint only as the bare-session
-      // fallback — the round-10 g6 posture applied to every one-shot
-      // multi-consumer reuse site.
       graft.operators.Reuse.materialize(
         graft.operators.ConnectedComponents
           .label(simhashPairsDF(spark, dir), "doc1", "doc2"))

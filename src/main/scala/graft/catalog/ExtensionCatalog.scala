@@ -65,9 +65,9 @@ object ExtensionCatalog {
   private val CmP = graft.functions.CountMinSketch.P
 
   // Centrality vectors are deterministic corpus ARTIFACTS (the learnedMerges
-  // posture): train once per (session, dir), hand back the checkpointed
-  // result — its blocks stay alive precisely because the iteration loops
-  // free only superseded rounds, never the returned vector. Keyed by
+  // posture): train once per (session, dir), hand back the materialized
+  // result — its files stay alive because the iteration loops release
+  // only superseded rounds, never the returned vector. Keyed by
   // session too: a DataFrame is unusable from a different SparkSession.
   // Envelope: no eviction — entries are k-row score vectors pinned for the
   // session's lifetime, and a harness that builds a fresh session per run
@@ -1752,7 +1752,7 @@ object ExtensionCatalog {
             FROM pairs)
       WHERE nn_rank <= 3"""))))  { (spark, dir) =>
       import org.apache.spark.sql.expressions.Window
-      // memoized + checkpointed (the tradeGraphEdges idiom): the assignment
+      // memoized + materialized (the tradeGraphEdges idiom): the assignment
       // tower (distances + argmin window) feeds BOTH join branches and
       // every repeat — one 20k-row table, computed once per (session, dir)
       val assign = kmCellAssignments(spark, dir)
@@ -1923,7 +1923,7 @@ object ExtensionCatalog {
       // ratio_micro by the doc's count c instead of re-touching tokens
       // (Σ_tokens ratio ≡ Σ_buckets c·ratio, exact integers, same 2^63
       // contract as before since each term is bounded by the old sum).
-      val wd = graft.operators.Reuse.materializeFiles(
+      val wd = graft.operators.Reuse.materialize(
         tok.groupBy(col("doc_id"), col("lang"), col("bucket"))
           .agg(count(lit(1)).as("c")))
       val counts = wd.groupBy(col("bucket")).agg(
@@ -2087,13 +2087,11 @@ object ExtensionCatalog {
   /** The g1/g2 graph: directed supplier→customer trade edges from
     * lineitem⋈orders (distinct), the reverse edge only for finalized
     * orders — customers without one stay dangling. Customer ids offset by
-    * 1e6 to keep the key spaces disjoint. Memoized as ONE checkpointed
+    * 1e6 to keep the key spaces disjoint. Memoized as ONE materialized
     * list per (session, dir) so g1 and g2 don't each pay the join+distinct
-    * (the operators' prepGraph then canonicalizes from the cached blocks). */
+    * (the operators' prepGraph then canonicalizes from its files). */
   private def tradeGraphEdges(spark: org.apache.spark.sql.SparkSession, dir: String): org.apache.spark.sql.DataFrame =
     graphScores((spark, dir, "edges")) {
-      // Reuse.materialize: reliable checkpoint when a dir is configured
-      // (cluster-survivable), localCheckpoint fallback (g6 posture)
       graft.operators.Reuse.materialize(tradeGraphEdgesUncached(spark, dir))
     }
 
@@ -2267,14 +2265,13 @@ object ExtensionCatalog {
       .agg(sum((col("v") - col("cval")) * (col("v") - col("cval"))).as("d2"))
   }
 
-  /** The memoized, checkpointed final-centroid cell assignment `(vec_id,
+  /** The memoized, materialized final-centroid cell assignment `(vec_id,
     * cid, d2)` — one table per (session, dir), shared by s9's kNN join and
     * d15/d16's SemDeDup compositions (the tradeGraphEdges idiom: the
-    * assignment tower feeds several branches; Reuse.materialize is a
-    * reliable checkpoint when a dir is configured, localCheckpoint
-    * fallback). `d2` is the own-cell squared distance — one extra long per
-    * row, and it is d16's centroid-distance keep rank, so carrying it here
-    * avoids a second checkpoint of the same tower. */
+    * assignment tower feeds several branches). `d2` is the own-cell
+    * squared distance — one extra long per row, and it is d16's
+    * centroid-distance keep rank, so carrying it here avoids a second
+    * write of the same tower. */
   private[catalog] def kmCellAssignments(
       spark: org.apache.spark.sql.SparkSession, dir: String): org.apache.spark.sql.DataFrame =
     graphScores((spark, dir, "s9assign")) {

@@ -308,14 +308,9 @@ object SimilarityCatalog {
       """)) { (spark, dir) =>
       // both the degree pass and the two orientation joins re-read the
       // edge list; one materialization beats three re-computations of the
-      // banded pair generation. Round-17 (VERDICT r16 #5): materializeFiles
-      // (write + read back) instead of persist+checkpoint — one serial job
-      // instead of two (the eager count pass + the checkpoint-write pass),
-      // same durable cluster-survivable home (round-9 verdict #4 stands:
-      // executor-local blocks are unrecoverable on a real cluster; these
-      // are files in the checkpoint home), and every consumer here
-      // shuffles immediately so the read-back layout is irrelevant.
-      val pairs = graft.operators.Reuse.materializeFiles(
+      // banded pair generation. Every consumer here shuffles immediately,
+      // so the read-back layout is irrelevant.
+      val pairs = graft.operators.Reuse.materialize(
         nearDupPairs(spark, dir).select(col("label"), col("v1"), col("v2")))
       val und = pairs.select(col("label"), col("v1").as("v"), col("v2").as("w"))
         .unionByName(pairs.select(col("label"), col("v2").as("v"), col("v1").as("w")))
@@ -553,7 +548,7 @@ object SimilarityCatalog {
     // band-colliding neighbor sits at cosine >= the threshold.
     //
     // Scale shape: the cell assignment is the memoized g3 tower (one
-    // checkpointed vocab of (vec_id, cid)); the pair fan-out is DOUBLY
+    // materialized vocab of (vec_id, cid)); the pair fan-out is DOUBLY
     // blocked — by SRP band bucket (capped) AND by cell membership — so
     // per-bucket work stays Σ min(|bucket|, cap)² and the cell test is two
     // id-keyed hash joins of the candidate list (ids only) against the
@@ -1048,9 +1043,9 @@ object SimilarityCatalog {
       // reused); the probed-cell candidates are a SUBSET of the exact
       // leg's candidate set — (query, candidate-label) pairs selected by
       // `legs` — so they derive from the same scored rows by a broadcast
-      // key join. materializeFiles computes the scored set once (tiny:
+      // key join. materialize computes the scored set once (tiny:
       // |queries| × corpus rows of 4 scalar columns).
-      val scored = graft.operators.Reuse.materializeFiles(
+      val scored = graft.operators.Reuse.materialize(
         c.join(broadcast(q.select(col("query_id"), col("q_emb"), col("q_norm"))),
             col("neighbor_id") =!= col("query_id"))
           .select(col("query_id"), col("neighbor_id"), col("label"), cos))

@@ -67,14 +67,14 @@ object TextCatalog {
           transform(slice(col("toks"), i + 2, lit(1)),
             y => struct(x.as("a"), y.as("b")))))).as("p"))
       .select(col("doc_id"), col("p.a").as("a"), col("p.b").as("b"))
-    // pc is MATERIALIZED (round-17, guide §2.4/§3.3): it feeds uc, the q
+    // pc is MATERIALIZED: it feeds uc, the q
     // join's probe side, and (through q) the per-doc verify join — without
     // the cut the physical plan re-ran the full bigram explode + partial
     // aggregate once per consumer (three Generate towers in t12's before
     // plan). The pair-count table is vocab²-bounded (tiny next to the
     // instance stream), so one write + re-reads beat two extra corpus
     // explosions at any scale.
-    val pc = graft.operators.Reuse.materializeFiles(
+    val pc = graft.operators.Reuse.materialize(
       bi.groupBy(col("a"), col("b")).agg(count(lit(1)).as("c_ab")))
     // c(a·) = Σ_b c(a,b): roll the PAIR table up instead of re-scanning
     // the instance stream — the second aggregate runs over vocab²-sized
@@ -680,7 +680,7 @@ object TextCatalog {
       // aggregate ran once per branch. One write of the (doc, term, tf)
       // index (the artifact a production pipeline persists anyway) halves
       // the corpus passes; df is now a rollup over the index files.
-      val tf = graft.operators.Reuse.materializeFiles(
+      val tf = graft.operators.Reuse.materialize(
         tok.groupBy(col("doc_id"), col("term")).agg(count(lit(1)).as("tf")))
       val dfT = tf.groupBy(col("term"))
         .agg(count(lit(1)).cast("double").as("df"))
@@ -1038,7 +1038,7 @@ object TextCatalog {
       // 8-thread suite, where cores are busy, favours writing it once, and
       // at corpus scale that is the only right form (2× a 100 TB pipeline
       // is never free).
-      val scored = graft.operators.Reuse.materializeFiles(bigramLmDocScores(spark, dir)
+      val scored = graft.operators.Reuse.materialize(bigramLmDocScores(spark, dir)
         .join(Tables.documents(spark, dir)
           .filter(col("lang").isNotNull)
           .select(col("doc_id"), col("lang")), Seq("doc_id"))

@@ -593,13 +593,13 @@ object CorpusPipeline {
       s"tokenizer must be 'bpe' or 'unigram', got '$tokenizer'")
     val spark = docs.sparkSession
     val manifest = Seq.newBuilder[Manifest]
-    // Every recorded stage is MATERIALIZED (Reuse.materialize: persist +
-    // reliable checkpoint) before its manifest count: each stage output is
+    // Every recorded stage is MATERIALIZED (Reuse.materialize: one parquet
+    // write, read back) before its manifest count: each stage output is
     // consumed by the count, by the next stage, and often by several
     // internal branches — without materialization every consumer
     // re-executes the whole upstream chain and the pipeline goes quadratic
     // in stages (measured: 108 s → 23 s at sf0.1 for the identical work).
-    // The raw ingest frame is the one exception: checkpointing the input
+    // The raw ingest frame is the one exception: materializing the input
     // corpus would copy it (at 100 TB, a second corpus); its manifest
     // count falls out of the quality gate's attribution aggregate.
     def record(stage: String, df: DataFrame): DataFrame = {

@@ -103,26 +103,6 @@ final class TableStore(spark: SparkSession, val root: String) {
       overwrite(table, kept.unionByName(batch))
     }
 
-  /** Field-wise merge persisted: the get-or-create + per-field-update
-    * protocol of [[TableStore.mergeFieldwise]] against a stored table.
-    * On a missing table the merge runs against an empty frame with the
-    * batch's schema plus the touch column, so created-row defaults apply
-    * from the very first batch. */
-  def upsertFieldwise(
-      table: String,
-      batch: DataFrame,
-      key: String,
-      assigned: Seq[String],
-      whenProvided: Seq[String],
-      defaults: Map[String, org.apache.spark.sql.Column],
-      touch: (String, org.apache.spark.sql.Column)): Unit = {
-    val existing =
-      if (exists(table)) read(table)
-      else batch.withColumn(touch._1, touch._2).limit(0)
-    overwrite(table, TableStore.mergeFieldwise(
-      existing, batch, key, assigned, whenProvided, defaults, touch))
-  }
-
   private def deleteRecursively(p: Path): Unit = graft.finance.ops.FileTrees.delete(p)
 }
 
@@ -177,7 +157,7 @@ object TableStore {
         (assigned ++ whenProvided).map(c => col(c).as(s"_b_$c")): _*)
     // at-most-one-row-per-key is a documented contract — enforce it like
     // the null-key guard: duplicate batch keys would fan out the join and
-    // persist duplicate rows through upsertFieldwise (the reference's
+    // persist duplicate rows through the store (the reference's
     // per-row get-or-create cannot produce duplicates). The window rides
     // the same key exchange the join needs.
     val b = b0

@@ -10,8 +10,9 @@ import org.apache.spark.sql.functions._
   * over the parquet warehouse: get-or-create categorize, validation /
   * notes / forecast-exclusion updates, and set-based bulk validation.
   *
-  * Every mutation is a [[TableStore.upsertFieldwise]] batch against
-  * `user_categories` — the reference's per-row get-or-create +
+  * Every mutation is one [[TableStore.mergeFieldwise]] batch against
+  * `user_categories`, persisted with [[TableStore.overwrite]] — the
+  * reference's per-row get-or-create +
   * per-field-update protocol, already proven by the `i4_fieldwise_merge`
   * oracle. Point lookups (does a row exist; what category would a created
   * row take) are bounded `limit(1)` control-plane reads, the sanctioned
@@ -64,8 +65,8 @@ final class UserCategoryService(
     transactions().filter(col(Key) === transactionId).limit(1).count() > 0
 
   /** Merge against [[existing]] (full canonical schema even before the
-    * table's first write — upsertFieldwise's batch-derived template would
-    * narrow the table if the first-ever mutation were a validation), then
+    * table's first write — a template derived from the batch would narrow
+    * the table if the first-ever mutation were a validation), then
     * persist through the atomic swap. */
   private def merge(
       batch: DataFrame,

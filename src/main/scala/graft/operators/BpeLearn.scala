@@ -87,23 +87,26 @@ object BpeLearn {
       col("cnt"))
 
   /** How many cache-over-cache merge rounds may chain before the lineage
-    * is cut with [[Reuse.round]]. Each round's plan is one projection over
+    * is cut with [[Reuse.materialize]]. Each round's plan is one projection over
     * the previous round's cached frame, so WITHOUT a cut the logical plan
     * deepens by one layer per merge — at real merge counts (tens of
     * thousands) driver-side analysis goes quadratic and an executor loss
     * recomputes through every unpersisted layer back to the corpus scan.
-    * A periodic checkpoint bounds plan depth and recovery cost at
-    * `interval` layers while costing one vocab-sized write per interval. */
+    * A periodic cut bounds plan depth and recovery cost at `interval`
+    * layers while costing one vocab-sized write per interval. */
   private val CheckpointInterval = 32
 
   /** Learn `numMerges` merges. Stops early if the corpus runs out of
     * repeated pairs. Caches each round's vocab-sized rendering and frees the
     * previous one, so storage is bounded at two renderings regardless of K;
-    * every [[CheckpointInterval]]-th rendering is additionally routed
-    * through [[Reuse.round]] (cluster-survivable lineage cut). */
+    * every [[CheckpointInterval]]-th rendering is written through
+    * [[Reuse.materialize]] instead (cluster-survivable lineage cut). */
   def learn(wordCounts: DataFrame, numMerges: Int): Seq[Merge] = {
     var words = initialSymbols(wordCounts).cache()
     var prev: Option[DataFrame] = None
+    // the latest cut round: every later cached rendering recomputes from
+    // its files after a lost block, so it is released at the next cut
+    var cut: Option[DataFrame] = None
     val merges = Seq.newBuilder[Merge]
     var rank = 1
     var done = false
@@ -114,28 +117,25 @@ object BpeLearn {
       // bounded at two vocab-sized renderings with no extra count() job.
       val top = pairCounts(words)
         .orderBy(col("c").desc, col("a"), col("b")).limit(1).collect()
-      Reuse.seal(words) // cut rounds: checkpoint written by that collect
-      prev.foreach { p => p.unpersist(); Reuse.freeRound(p) }
+      prev.filterNot(cut.contains).foreach(Reuse.release)
       prev = Some(words)
       if (top.isEmpty) done = true
       else {
         val (a, b, c) = (top(0).getString(0), top(0).getString(1), top(0).getLong(2))
         merges += Merge(rank, a, b, c)
-        // Lineage cut rides the NEXT round's collect (Reuse.round is lazy),
-        // so the cadence costs no extra job. Cut rounds do NOT also take a
-        // plain .cache(): in reliable mode Reuse.round persists internally
-        // (and seal below releases it), and in local mode the round's
-        // blocks are its storage — a second cache layer would leak (its
-        // handle would be unreachable from the wrapper frame).
+        // a cut round is read from its files, so it takes no cache
         val rendered = words.select(applyMerge(col("w"), a, b).as("w"), col("cnt"))
         words =
-          if (rank % CheckpointInterval == 0) Reuse.round(rendered)
-          else rendered.cache()
+          if (rank % CheckpointInterval == 0) {
+            val m = Reuse.materialize(rendered)
+            cut.foreach(Reuse.release)
+            cut = Some(m)
+            m
+          } else rendered.cache()
         rank += 1
       }
     }
-    prev.foreach { p => p.unpersist(); Reuse.freeRound(p) }
-    words.unpersist(); Reuse.freeRound(words)
+    (prev.toSeq ++ cut :+ words).distinct.foreach(Reuse.release)
     merges.result()
   }
 }

@@ -34,17 +34,13 @@ import org.apache.spark.sql.functions._
   * Convergence is detected structurally: the set is the fixpoint IFF it is
   * already a star forest (see `isStarForest`), checked by one aggregate per
   * round — never a collected set comparison, and no extra "did anything
-  * change" confirm round. Each round's edge set goes through
-  * `Reuse.round` (read twice: once by the next round, once by the
+  * change" confirm round. Each round's edge set is written once through
+  * `Reuse.materialize` (read twice: once by the next round, once by the
   * convergence aggregate; the truncated plan also keeps every round's
-  * analysis O(1) and avoids SPARK-21478 cache-rebuild cascades), and the
-  * SUPERSEDED round is freed explicitly via `Reuse.freeRound`, so live
-  * storage is bounded at two rounds' edge sets no matter how many rounds
-  * run; the final round's (smallest) set stays materialized for the label
-  * projection the caller consumes. Under a checkpoint dir (every
-  * production session, plus Verify/Bench/tests here) the round cut is a
-  * RELIABLE checkpoint — preemptible-executor-survivable; the bare-session
-  * fallback is `localCheckpoint`.
+  * analysis O(1)), and the SUPERSEDED round is released right away, so
+  * live storage is bounded at two rounds' edge sets no matter how many
+  * rounds run; the final round's (smallest) set stays for the label
+  * projection the caller consumes.
   *
   * NOTE: `label` is necessarily EAGER — the round count is data-dependent,
   * so calling it runs Spark jobs (the rounds) before returning the final
@@ -60,17 +56,12 @@ object ConnectedComponents {
     * coalesce to the node's own id for singleton semantics.
     */
   def label(edges: DataFrame, src: String, dst: String, maxIter: Int = 50): DataFrame = {
-    var e = edges
+    var e = Reuse.materialize(edges
       .select(
         greatest(col(src).cast("long"), col(dst).cast("long")).as("u"),
         least(col(src).cast("long"), col(dst).cast("long")).as("v"))
       .filter(col("u").isNotNull && col("v").isNotNull && col("u") =!= col("v"))
-      .distinct()
-      .transform(Reuse.round)
-
-    // shared with the other iterative graph operators — rationale at the
-    // definition (PageRank.freeBlocks)
-    def freeBlocks(df: DataFrame): Unit = PageRank.freeBlocks(df)
+      .distinct())
 
     /** Termination test that doubles as a correctness certificate: a
       * canonically-oriented edge set is the algorithm's fixpoint IFF it is
@@ -126,21 +117,12 @@ object ConnectedComponents {
         .distinct()
     }
 
-    val debug = sys.env.contains("GRAFT_CC_DEBUG")
-    var t0 = System.nanoTime()
     var converged = isStarForest(e)
-    Reuse.seal(e) // materialized by that aggregate; feeder cache is dead
-    if (debug) System.err.println(
-      f"[cc] init check: ${(System.nanoTime() - t0) / 1e9}%.2f s")
     var iter = 0
     while (!converged && iter < maxIter) {
-      t0 = System.nanoTime()
-      val next = smallStar(largeStar(e)).transform(Reuse.round)
-      converged = isStarForest(next) // first action: materializes the checkpoint
-      Reuse.seal(next)
-      if (debug) System.err.println(
-        f"[cc] round ${iter + 1}: ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      freeBlocks(e) // superseded round: bounded storage, deterministic
+      val next = Reuse.materialize(smallStar(largeStar(e)))
+      converged = isStarForest(next)
+      Reuse.release(e)
       e = next
       iter += 1
     }

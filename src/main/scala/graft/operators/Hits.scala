@@ -23,7 +23,7 @@ import org.apache.spark.sql.functions._
   * Nodes without in-edges get authority 0; without out-edges, hub 0.
   * Same iteration discipline as PageRank: two keyed shuffles per
   * half-round, one max scalar to the driver, storage bounded at two
-  * checkpointed vectors.
+  * materialized vectors.
   */
 object Hits {
 
@@ -36,58 +36,39 @@ object Hits {
     require(iterations >= 1, "iterations must be >= 1")
     val g = PageRank.prepGraph(edges, srcCol, dstCol)
     // HITS reads only the canonical edges and nodes — g.withDeg is never
-    // touched, so the degree-annotated checkpoint is never built here
+    // touched, so the degree-annotated list is never written here
     val (e, nodes) = (g.edges, g.nodes)
 
-    // (node, hub, auth) — one vector carries both scores.
-    // Free discipline: a finalized LOCAL checkpoint whose blocks are
-    // dropped CANNOT recompute (LocalCheckpointRDD throws — the bare-
-    // session mode of Reuse.round; the reliable mode re-reads files), so a
-    // vector is freed only AFTER the job that materializes its sole
-    // dependent has completed — `retired` holds the one vector awaiting
-    // that job.
-    // Storage stays bounded at two score vectors plus one retiree.
-    // plain frame: a projection over the file-backed nodes (see the
-    // PageRank init-vector note — a round mark here never writes files)
+    // (node, hub, auth) — one vector carries both scores; each half-round
+    // is written once and the vector it supersedes is released right away.
+    // plain frame: a projection over the materialized nodes
     var scores = nodes
       .withColumn("hub", lit(unit)).withColumn("auth", lit(unit))
-    var retired: Option[DataFrame] = None
     var iter = 0
     while (iter < iterations) {
       // authority half: pull hub mass along edges, max-normalize
       val rawA = e.join(scores, e("src") === scores("node"))
         .groupBy(col("dst").as("node")).agg(sum(col("hub")).as("raw"))
       val maxA = rawA.agg(coalesce(max(col("raw")), lit(0L))).head.getLong(0)
-      Reuse.seal(scores) // materialized by that collect; feeder cache is dead
-      // that collect materialized `scores` — its parent can go now
-      retired.foreach(PageRank.freeBlocks); retired = None
       require(maxA > 0, "HITS: graph has edges but no authority mass") // unreachable: hubs start at unit
-      val withAuth = scores.drop("auth").join(rawA, Seq("node"), "left")
+      val withAuth = Reuse.materialize(scores.drop("auth").join(rawA, Seq("node"), "left")
         .withColumn("auth",
           expr(s"CAST(coalesce(raw, 0L) AS DECIMAL(38,0)) * ${unit}L div ${maxA}L"))
-        .drop("raw")
-        .transform(Reuse.round)
+        .drop("raw"))
+      Reuse.release(scores)
       // hub half: pull the fresh authority mass back, max-normalize
       val rawH = e.join(withAuth, e("dst") === withAuth("node"))
         .groupBy(col("src").as("node")).agg(sum(col("auth")).as("raw"))
       val maxH = rawH.agg(coalesce(max(col("raw")), lit(0L))).head.getLong(0)
-      Reuse.seal(withAuth) // materialized by that collect
       require(maxH > 0, "HITS: graph has edges but no hub mass")
-      // maxH materialized `withAuth`, the only reader of `scores`
-      PageRank.freeBlocks(scores)
-      val next = withAuth.drop("hub").join(rawH, Seq("node"), "left")
+      scores = Reuse.materialize(withAuth.drop("hub").join(rawH, Seq("node"), "left")
         .withColumn("hub",
           expr(s"CAST(coalesce(raw, 0L) AS DECIMAL(38,0)) * ${unit}L div ${maxH}L"))
         .drop("raw")
-        .select(col("node"), col("hub"), col("auth"))
-        .transform(Reuse.round)
-      retired = Some(withAuth) // freed once `next` materializes
-      scores = next
+        .select(col("node"), col("hub"), col("auth")))
+      Reuse.release(withAuth)
       iter += 1
     }
-    scores.count() // materialize the final vector so the last retiree can go
-    Reuse.seal(scores) // final round is file-backed now; drop its feeder cache
-    retired.foreach(PageRank.freeBlocks)
     g.free()
     scores
   }

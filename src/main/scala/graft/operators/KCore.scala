@@ -26,11 +26,10 @@ import org.apache.spark.sql.functions._
   * against the alive set on both endpoints), one degree aggregate, and a
   * left join back onto the alive set — all shuffles keyed on node id, no
   * driver state; work per round is O(surviving edges) and the alive set
-  * only shrinks. Each round's annotated frame goes through [[Reuse.round]]
-  * (reliable checkpoint under a checkpoint dir), and because EVERY round's
-  * removals feed the final report, no round is freed early — live
-  * storage is bounded by `rounds` node-sized frames, a constant of the
-  * operator, not the data.
+  * only shrinks. Each round's annotated frame is written once through
+  * [[Reuse.materialize]], and because EVERY round's removals feed the
+  * final report, no round is released — live storage is bounded by
+  * `rounds` node-sized frames, a constant of the operator, not the data.
   */
 object KCore {
 
@@ -59,10 +58,8 @@ object KCore {
         .join(alive.select(col("node").as("dst")), Seq("dst"))
         .groupBy(col("src").as("node")).agg(count(lit(1)).as("d"))
       // a node isolated by earlier peels has no degree row → d = 0
-      val ann = Reuse.round(
+      val ann = Reuse.materialize(
         alive.join(deg, Seq("node"), "left_outer").na.fill(0L, Seq("d")))
-      ann.count() // materialize the round (writes its checkpoint files)
-      Reuse.seal(ann) // feeder cache is dead once the files exist
       parts += ann.filter(col("d") < k)
         .select(col("node"), lit(i.toLong).as("removed_round"),
           col("d").as("last_deg"))
@@ -70,10 +67,10 @@ object KCore {
       lastAnn = ann
       i += 1
     }
-    // every round's checkpointed frame feeds the final report (its removed
-    // slice), so none is freed — bounded by `rounds`, not the data. The
-    // edge list, though, is dead once the last round materialized.
-    PageRank.freeBlocks(sym)
+    // every round's materialized frame feeds the final report (its removed
+    // slice), so none is released — bounded by `rounds`, not the data. The
+    // edge list, though, is dead once the last round is written.
+    Reuse.release(sym)
     parts += lastAnn.filter(col("d") >= k)
       .select(col("node"), lit(0L).as("removed_round"), col("d").as("last_deg"))
     parts.reduce(_.unionByName(_))

@@ -35,10 +35,9 @@ object KMeansQuantized {
     require(k >= 1, "k must be >= 1")
     require(iterations >= 1, "iterations must be >= 1")
     val spark = points.sparkSession
-    val pe = points
+    val pe = Reuse.materialize(points
       .select(col("vec_id"), posexplode(col("q")).as(Seq("pos", "v")))
-      .select(col("vec_id"), col("pos").cast("long").as("pos"), col("v"))
-      .transform(Reuse.round)
+      .select(col("vec_id"), col("pos").cast("long").as("pos"), col("v")))
 
     // seed: the k smallest ids (bounded collect: k longs)
     val ids = points.select("vec_id").orderBy("vec_id").limit(k)
@@ -48,7 +47,6 @@ object KMeansQuantized {
     var cent: Map[(Int, Long), Long] = pe
       .filter(col("vec_id").isin(ids.map(Long.box): _*))
       .collect().map(r => (cidOf(r.getLong(0)), r.getLong(1)) -> r.getLong(2)).toMap
-    Reuse.seal(pe) // that collect materialized pe; its feeder cache is dead
     var sizes: Map[Int, Long] = Map.empty
 
     var iter = 0
@@ -73,7 +71,7 @@ object KMeansQuantized {
       cent = cent.map { case (key, old) => key -> newCent.getOrElse(key, old) }
       iter += 1
     }
-    PageRank.freeBlocks(pe)
+    Reuse.release(pe)
     val rows = cent.toSeq.map { case ((c, p), v) =>
       Row(c, p, v, sizes.getOrElse(c, 0L))
     }

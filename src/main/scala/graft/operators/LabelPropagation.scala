@@ -23,12 +23,11 @@ import org.apache.spark.sql.functions._
   * each round is one keyed join (labels onto the symmetrized edge list),
   * one (node, label) count aggregate, and one per-node argmax window over
   * the aggregate's OWN exchange — all shuffles keyed on node id, no driver
-  * state. Each round's label vector goes through `Reuse.round` (reliable
-  * checkpoint under a checkpoint dir, `localCheckpoint` in a bare dev
-  * session); the superseded round is freed, bounding live storage at two
-  * vectors plus the edge list regardless of round count. The window
-  * partition buffers one node's DISTINCT NEIGHBOR LABELS (≤ degree, and
-  * collapsing every round), not its edges.
+  * state. Each round's label vector is written once through
+  * `Reuse.materialize` and the superseded round is released right away,
+  * bounding live storage at two vectors plus the edge list regardless of
+  * round count. The window partition buffers one node's DISTINCT NEIGHBOR
+  * LABELS (≤ degree, and collapsing every round), not its edges.
   */
 object LabelPropagation {
 
@@ -42,9 +41,7 @@ object LabelPropagation {
     require(iters >= 1, s"iters must be >= 1, got $iters")
     val sym = PageRank.symmetrizedHot(edges, srcCol, dstCol)
 
-    // plain frame: round 1's own checkpoint mark sits above this one in
-    // every job, so a lazy mark here would never write its files — the
-    // recompute path is one distinct over the file-backed sym
+    // plain frame: one distinct over the materialized sym
     var labels = sym.select(col("src").as("node")).distinct()
       .select(col("node"), col("node").as("lbl"))
     var iter = 0
@@ -58,20 +55,17 @@ object LabelPropagation {
       // pick is deterministic under any partitioning
       val best = Window.partitionBy(col("node"))
         .orderBy(col("c").desc, col("lbl").asc)
-      val next = votes
+      val next = Reuse.materialize(votes
         .withColumn("rn", row_number().over(best))
         .filter(col("rn") === 1)
-        .select(col("node"), col("lbl"))
-        .transform(Reuse.round)
-      next.count() // materialize before freeing the superseded round
-      Reuse.seal(next) // the count wrote its checkpoint; feeder cache is dead
-      PageRank.freeBlocks(labels)
+        .select(col("node"), col("lbl")))
+      Reuse.release(labels)
       labels = next
       iter += 1
     }
-    // the edge list must not outlive the propagation in executor storage;
-    // the returned vector's blocks are self-contained after the count above
-    PageRank.freeBlocks(sym)
+    // the edge list must not outlive the propagation; the returned vector
+    // reads only its own files
+    Reuse.release(sym)
     labels.select(col("node"), col("lbl").as("label"))
   }
 }

@@ -14,10 +14,10 @@ import org.apache.spark.sql.functions._
   * destination — both shuffles keyed on node id, so a cluster partitions
   * them; no driver-side state beyond the dangling-mass scalar (one number
   * per round, the fixed-size-reduction posture). Every round's rank vector
-  * goes through [[Reuse.round]] (reliable checkpoint under a checkpoint
-  * dir — cluster-survivable lineage cuts — `localCheckpoint` in a bare
-  * dev session) and the superseded round is freed, bounding live storage
-  * at two vectors no matter how many rounds run.
+  * is written once through [[Reuse.materialize]] (a lineage cut an
+  * executor loss re-reads) and the superseded round is released right
+  * away, bounding live storage at two vectors no matter how many rounds
+  * run.
   *
   * Semantics (the standard ones, so scores are comparable to reference
   * implementations): damping `d`, uniform teleport `(1−d)/n`, and dangling
@@ -26,79 +26,55 @@ import org.apache.spark.sql.functions._
   */
 object PageRank {
 
-  /** Shared graph prep for both rank variants: checkpointed canonical edge
+  /** Shared graph prep for both rank variants: materialized canonical edge
     * list, node set, node count, out-degrees — and, built on first use
     * only, the degree-annotated edge list the PageRank rounds reuse.
     * [[Hits]] shares the prep but never reads degrees, so the annotated
-    * list (and its checkpoint) must not be constructed for it at all
-    * (advisor round-6): it is materialized lazily and freed only if it was
-    * ever built. */
+    * list is not written for it at all: it is materialized on first use
+    * and released only if it was ever built. */
   private[operators] final class Graph(
       val edges: DataFrame, val nodes: DataFrame, val n: Long,
       val outDeg: DataFrame) {
     private var deg: Option[DataFrame] = None
-    /** Degree-annotated edge list, checkpointed once and reused every
-      * PageRank round. */
+    /** Degree-annotated edge list, materialized once and cached: every
+      * PageRank round re-reads it. */
     def withDeg: DataFrame = synchronized {
-      // EAGER materialize, not Reuse.round: a lazily-marked frame that is
-      // only ever computed UNDER a round's own marked RDD never gets its
-      // checkpoint written (RDD.doCheckpoint stops at the first marked
-      // RDD per branch) — the eager form runs its own write job now, so
-      // the reused annotated list really is file-backed.
-      if (deg.isEmpty) deg = Some(Reuse.materializeHot(edges.join(outDeg, "src")))
+      if (deg.isEmpty) deg = Some(Reuse.materialize(edges.join(outDeg, "src")).cache())
       deg.get
     }
-    /** Release the prep checkpoints once the trained vector is finalized
-      * (its blocks are self-contained after a materializing count) — the
-      * edge list must not outlive training in executor storage. */
+    /** Release the prep frames once the final vector is written — the
+      * edge list must not outlive training. */
     def free(): Unit = synchronized {
-      freeBlocks(edges); freeBlocks(nodes); deg.foreach(freeBlocks); deg = None
+      Reuse.release(edges); Reuse.release(nodes); deg.foreach(Reuse.release); deg = None
     }
   }
 
   private[operators] def prepGraph(edges: DataFrame, srcCol: String, dstCol: String): Graph = {
-    // Eager materialize (not Reuse.round): the edge list is read by every
-    // round but always BELOW the round's own checkpoint mark, so a lazy
-    // mark would never write its files (see withDeg).
-    val e = Reuse.materializeHot(edges.select(
+    // cached: every round re-reads the edge list
+    val e = Reuse.materialize(edges.select(
         col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
-      .filter(col("src").isNotNull && col("dst").isNotNull))
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct()
-      .transform(Reuse.round)
+      .filter(col("src").isNotNull && col("dst").isNotNull)).cache()
+    val nodes = Reuse.materialize(e.select(col("src").as("node"))
+      .union(e.select(col("dst").as("node"))).distinct())
     val n = nodes.count()
-    Reuse.seal(nodes) // count wrote the checkpoint; the feeder cache is dead
     require(n > 0, "PageRank: empty graph")
     // per-source fanout once, reused every round
     val outDeg = e.groupBy(col("src")).agg(count(lit(1)).as("deg"))
     new Graph(e, nodes, n, outDeg)
   }
 
-  /** Free a superseded round deterministically. `Dataset.unpersist`
-    * DIRECTLY on a round would be the wrong tool: it is non-cascading
-    * (SPARK-21478), so dependent cached rounds would be rebuilt from FULL
-    * lineage — measured 10-20× slower; [[Reuse.freeRound]] releases the
-    * round's cache handle and blocks behind the checkpoint boundary,
-    * where nothing downstream can rebuild from lineage. Best-effort
-    * (ContextCleaner GC remains the fallback). Shared by every iterative
-    * graph operator (ConnectedComponents, Hits, KMeansQuantized). */
-  private[operators] def freeBlocks(df: DataFrame): Unit = Reuse.freeRound(df)
-
   /** Shared undirected-graph prologue for the iterative operators that
     * work on the SYMMETRIZED view ([[LabelPropagation]], [[KCore]]):
     * normalize to long (src, dst), drop nulls and self-loops, union the
-    * reverse direction, dedup, and eager-materialize with a memory tier —
-    * NOT `Reuse.round`, because the edge list is read by every round but
-    * always below the round's own checkpoint mark, so a lazy mark would
-    * never write its files (RDD.doCheckpoint stops at the first marked
-    * RDD per branch). Release with [[freeBlocks]] when the loop ends. */
+    * reverse direction, dedup, materialize and cache (every round re-reads
+    * it). Release with [[Reuse.release]] when the loop ends. */
   private[operators] def symmetrizedHot(
       edges: DataFrame, srcCol: String, dstCol: String): DataFrame = {
     val e = edges.select(
         col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
       .filter(col("src").isNotNull && col("dst").isNotNull && col("src") =!= col("dst"))
-    Reuse.materializeHot(
-      e.union(e.select(col("dst").as("src"), col("src").as("dst"))).distinct())
+    Reuse.materialize(
+      e.union(e.select(col("dst").as("src"), col("src").as("dst"))).distinct()).cache()
   }
 
   /** Ranks after `iterations` rounds: (node, rank). Nodes = every distinct
@@ -115,42 +91,30 @@ object PageRank {
     val g = prepGraph(edges, srcCol, dstCol)
     // one row per source, probed by the dangling anti-join EVERY round —
     // without this the groupBy over the edge list re-runs per iteration
-    val outDeg = Reuse.materializeHot(g.outDeg)
+    val outDeg = Reuse.materialize(g.outDeg).cache()
     val (nodes, withDeg) = (g.nodes, g.withDeg)
     val n = g.n.toDouble
 
-    // Free discipline (the Hits lesson): a finalized local checkpoint with
-    // dropped blocks cannot recompute, so the superseded vector is freed
-    // only AFTER the next round's collect has materialized its dependent.
-    // plain frame: a trivial projection over the file-backed nodes — a
-    // round mark here would never write its files (round 1's own mark
-    // sits above it in every job) and only waste a feeder cache
+    // plain frame: a projection over the materialized nodes
     var ranks = nodes.withColumn("rank", lit(1.0))
-    var retired: Option[DataFrame] = None
     var iter = 0
     while (iter < iterations) {
       // dangling mass: one scalar to the driver per round
       val dangling = ranks.join(outDeg, ranks("node") === outDeg("src"), "left_anti")
         .agg(coalesce(sum(col("rank")), lit(0.0))).head.getDouble(0)
-      Reuse.seal(ranks) // materialized by that collect; feeder cache is dead
-      retired.foreach(freeBlocks); retired = None // that collect materialized `ranks`
       val contribs = withDeg
         .join(ranks, withDeg("src") === ranks("node"))
         .select(col("dst").as("node"), (col("rank") / col("deg")).as("c"))
         .groupBy(col("node")).agg(sum(col("c")).as("contrib"))
       val base = (1.0 - damping) + damping * dangling / n
-      val next = nodes.join(contribs, Seq("node"), "left")
+      val next = Reuse.materialize(nodes.join(contribs, Seq("node"), "left")
         .select(col("node"),
-          (lit(base) + lit(damping) * coalesce(col("contrib"), lit(0.0))).as("rank"))
-        .transform(Reuse.round)
-      retired = Some(ranks)
+          (lit(base) + lit(damping) * coalesce(col("contrib"), lit(0.0))).as("rank")))
+      Reuse.release(ranks)
       ranks = next
       iter += 1
     }
-    ranks.count() // materialize the final vector so the last retiree can go
-    Reuse.seal(ranks) // final round is file-backed now; drop its feeder cache
-    retired.foreach(freeBlocks)
-    freeBlocks(outDeg)
+    Reuse.release(outDeg)
     g.free()
     ranks
   }
@@ -169,7 +133,7 @@ object PageRank {
     * envelope: 85·n·unit must fit a long → n ≤ ~1e8 at unit=1e9; shrink
     * `unit` beyond that. Same iteration discipline as [[ranks]]: two keyed
     * shuffles per round, one scalar to the driver, storage bounded at two
-    * checkpointed vectors. */
+    * materialized vectors. */
   def ranksQuantized(
       edges: DataFrame,
       srcCol: String,
@@ -178,36 +142,28 @@ object PageRank {
       unit: Long = 1000000000L): DataFrame = {
     require(iterations >= 1, "iterations must be >= 1")
     val g = prepGraph(edges, srcCol, dstCol)
-    val outDeg = Reuse.materializeHot(g.outDeg) // see ranks()
+    val outDeg = Reuse.materialize(g.outDeg).cache() // see ranks()
     val (nodes, n, withDeg) = (g.nodes, g.n, g.withDeg)
 
-    // same deferred-free discipline as `ranks` (the Hits lesson)
     var ranks = nodes.withColumn("s", lit(unit)) // plain: see ranks()
-    var retired: Option[DataFrame] = None
     var iter = 0
     while (iter < iterations) {
       val dangling = ranks.join(outDeg, ranks("node") === outDeg("src"), "left_anti")
         .agg(coalesce(sum(col("s")), lit(0L))).head.getLong(0)
-      Reuse.seal(ranks) // materialized by that collect; feeder cache is dead
-      retired.foreach(freeBlocks); retired = None
       val share = dangling / n
       val contribs = withDeg
         .join(ranks, withDeg("src") === ranks("node"))
         .select(col("dst").as("node"), expr("s div deg").as("c"))
         .groupBy(col("node")).agg(sum(col("c")).as("contrib"))
-      val next = nodes.join(contribs, Seq("node"), "left")
+      val next = Reuse.materialize(nodes.join(contribs, Seq("node"), "left")
         .withColumn("acc",
           lit(15L) * lit(unit) + lit(85L) * (coalesce(col("contrib"), lit(0L)) + lit(share)))
-        .select(col("node"), expr("acc div 100").as("s"))
-        .transform(Reuse.round)
-      retired = Some(ranks)
+        .select(col("node"), expr("acc div 100").as("s")))
+      Reuse.release(ranks)
       ranks = next
       iter += 1
     }
-    ranks.count() // materialize the final vector so the last retiree can go
-    Reuse.seal(ranks) // final round is file-backed now; drop its feeder cache
-    retired.foreach(freeBlocks)
-    freeBlocks(outDeg)
+    Reuse.release(outDeg)
     g.free()
     ranks
   }

@@ -2,199 +2,93 @@ package graft.operators
 
 import java.util.concurrent.ConcurrentHashMap
 
+import org.apache.hadoop.fs.Path
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.storage.StorageLevel
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 
-/** Multi-consumer materialization of an intermediate DataFrame.
+/** The one materialization primitive: write an intermediate once as
+  * parquet and read it back, the write-then-read shape the reference gives
+  * every dbt table.
   *
-  * The pattern: a computed frame (edge list, assignment table) is read by
-  * several downstream branches; without materialization each branch
-  * re-executes the producing plan (and Spark's lazy evaluation happily
-  * recomputes an expensive join three times).
+  * A computed frame (an edge list, an assignment table, a loop's round) is
+  * often read by several consumers; without materialization each one
+  * re-executes the producing plan. [[materialize]] runs the plan in one
+  * job and hands back a plain parquet scan, so every consumer reads files
+  * and an executor loss re-reads them instead of recomputing.
   *
-  * Mode is decided by the session's checkpoint configuration:
-  *  - checkpoint dir set → RELIABLE `checkpoint()`: blocks are written to
-  *    durable storage (HDFS/object store on a cluster), lineage is
-  *    truncated SAFELY — an executor loss re-reads the checkpoint instead
-  *    of killing the job. This is the only mode fit for 100 TB plans
-  *    (round-9 verdict: `localCheckpoint`'s executor-local blocks are
-  *    unrecoverable).
-  *  - no checkpoint dir (bare dev session) → eager `localCheckpoint`:
-  *    single-JVM fallback where "executor loss" means the JVM died anyway.
+  * The files live under the session's checkpoint dir, which the
+  * `graft.GraftSession` contract always sets (on a cluster, durable shared
+  * storage). [[release]] deletes a frame's files once its last consumer
+  * has run; whatever is still alive at exit goes with the app's checkpoint
+  * dir in a shutdown hook.
   *
-  * Every session starts from `graft.GraftSession`, whose contract sets a
-  * checkpoint dir, so the reliable path is the one actually exercised.
+  * The read-back is an ordinary file scan: it carries no output
+  * partitioning from the plan that produced it, and its row order across
+  * partitions follows Spark's file packing. A consumer that needs either
+  * states it.
   */
 object Reuse {
 
-  /** Materialize `df` eagerly for reuse; returns the checkpointed frame. */
+  private val MatPrefix = "mat-"
+
+  /** Writes `df` once to `<checkpoint dir>/mat-<uuid>` and returns its
+    * read-back under `df`'s own schema (columns come back nullable). */
   def materialize(df: DataFrame): DataFrame = {
-    val sc = df.sparkSession.sparkContext
-    if (sc.getCheckpointDir.isDefined) {
-      registerCheckpointCleanup(sc)
-      // Reliable checkpoint alone runs the plan TWICE: the eager count job
-      // computes it, then RDD.doCheckpoint launches a second job that
-      // recomputes every partition to write the files (the documented
-      // "persist before checkpoint" caveat). Persisting first means the
-      // count job populates the cache and the write job reads blocks — the
-      // expensive plan executes exactly once.
-      val cached = df.persist(StorageLevel.MEMORY_AND_DISK)
-      try cached.checkpoint() // eager; durable blocks, cluster-survivable
-      finally cached.unpersist(blocking = false) // write job already done
-    } else {
-      val d = df.localCheckpoint(eager = false)
-      d.count() // materialize so consumers read blocks, not the plan
-      d
-    }
-  }
-
-  /** [[materialize]] via durable FILES (round-17, guide §3.3 "materialise
-    * an intermediate (write + read back)" / VERDICT r16 #5): write the
-    * frame once to a UUID-unique parquet directory under the session's
-    * checkpoint home and read it back under the frame's own schema. ONE
-    * job instead of the persist+checkpoint pair's two (the eager count
-    * pass plus the checkpoint-write pass), nothing for CacheManager to
-    * pin, and the read-back is a plain splittable scan — the
-    * write-audit-publish shape a production pipeline takes anyway. Equally
-    * cluster-survivable: the parquet files live in the same durable home
-    * as reliable checkpoints and an executor loss re-reads them. Falls
-    * back to [[materialize]]'s localCheckpoint in a bare dev session.
-    * Cleanup rides the same shutdown hook (the UUID directory lives under
-    * the app's checkpoint home). Prefer this for frames whose consumers
-    * shuffle anyway (joins/aggregates); keep [[materialize]] where a
-    * downstream stage does heavy per-row CPU map work straight off the
-    * blocks, because a handful of tiny read-back files can coalesce into
-    * one scan task. */
-  def materializeFiles(df: DataFrame): DataFrame = {
     val spark = df.sparkSession
-    val sc = spark.sparkContext
-    sc.getCheckpointDir match {
-      case Some(home) =>
-        registerCheckpointCleanup(sc)
-        val path = home.stripSuffix("/") + "/mat-" + java.util.UUID.randomUUID()
-        df.write.parquet(path)
-        spark.read.schema(df.schema).parquet(path)
-      case None => materialize(df)
-    }
+    val path = s"${home(spark.sparkContext)}/$MatPrefix${java.util.UUID.randomUUID()}"
+    df.write.parquet(path)
+    spark.read.schema(df.schema).parquet(path)
   }
 
-  /** LAZY per-round materialization for iterative operators (PageRank,
-    * HITS, label propagation, connected components, k-means): reliable
-    * checkpoint when the session has a checkpoint dir, `localCheckpoint`
-    * in a bare dev session — the same mode rule as [[materialize]], but
-    * lazy in both modes so the loop's own first action on the round (its
-    * convergence aggregate) is what materializes it; no extra job is
-    * spent per round. In reliable mode the frame is persisted first: the
-    * checkpoint-write job that Spark launches at the end of that first
-    * action would otherwise recompute the round's whole plan (the
-    * documented persist-before-checkpoint caveat); with the cache
-    * populated by the action itself, the write job reads blocks. The
-    * cache handle is tracked so [[freeRound]] can release it when the
-    * round is superseded — live storage stays bounded at two rounds
-    * whatever the round count, while lineage is cut at a
-    * cluster-survivable boundary every round (an executor loss re-reads
-    * checkpoint files instead of killing a 100 TB job — localCheckpoint's
-    * executor-local blocks cannot do that).
-    */
-  def round(df: DataFrame): DataFrame = {
+  /** Unpersists `df` and, when `df` is the read-back of a [[materialize]]
+    * directory under this app's checkpoint dir, deletes that directory.
+    * Any other frame keeps its files. The frame is unreadable afterwards. */
+  def release(df: DataFrame): Unit = {
+    df.unpersist(blocking = false)
     val sc = df.sparkSession.sparkContext
-    if (sc.getCheckpointDir.isDefined) {
-      registerCheckpointCleanup(sc)
-      val cached = df.persist(StorageLevel.MEMORY_AND_DISK)
-      val out = cached.checkpoint(eager = false)
-      roundCaches.put(out, cached)
-      out
-    } else df.localCheckpoint(eager = false)
-  }
-
-  /** Release a LIVE round's feeder cache once the round has materialized.
-    * In reliable mode the cache exists only so the checkpoint-write job
-    * (which runs at the end of the round's first action) reads blocks
-    * instead of recomputing the plan; every read AFTER that goes to the
-    * checkpoint files, so from then on the cache is dead weight — call
-    * this right after the materializing action and the frame stays fully
-    * readable. In local mode this is a no-op (the round's blocks ARE its
-    * backing). Idempotent. Without it, a round the caller keeps forever
-    * (the returned final vector) would pin its feeder cache for the JVM
-    * lifetime — CacheManager holds registered plans strongly, so the weak
-    * registry alone cannot reclaim them. */
-  def seal(df: DataFrame): Unit = {
-    val cached = roundCaches.remove(df)
-    if (cached != null) {
-      try cached.unpersist(blocking = false)
-      catch { case scala.util.control.NonFatal(_) => () }
+    matDir(df, sc).foreach { p =>
+      p.getFileSystem(sc.hadoopConfiguration).delete(p, true)
     }
   }
 
-  /** [[materialize]] plus a MEMORY tier on the result, for frames an
-    * iterative loop re-reads every round (the edge list every PageRank
-    * round joins, LPA's symmetrized edges): the checkpoint files stay the
-    * durable recovery path, but steady-state reads come from blocks
-    * instead of re-scanning the object store once per round. Reliable
-    * mode only — in a bare session the local-checkpoint blocks already
-    * ARE the memory tier, and a second plan-level cache would just double
-    * the storage. Release with [[freeRound]] when the loop ends. */
-  def materializeHot(df: DataFrame): DataFrame = {
-    val m = materialize(df)
-    if (df.sparkSession.sparkContext.getCheckpointDir.isDefined)
-      m.persist(StorageLevel.MEMORY_AND_DISK)
-    m
+  /** The `mat-*` directory `df` reads, when `df` is exactly such a read-back. */
+  private def matDir(df: DataFrame, sc: SparkContext): Option[Path] = {
+    val roots = df.queryExecution.analyzed match {
+      case LogicalRelation(fs: HadoopFsRelation, _, _, _, _) => fs.location.rootPaths
+      case _ => Nil
+    }
+    (roots, sc.getCheckpointDir) match {
+      case (Seq(p), Some(dir)) if p.getName.startsWith(MatPrefix) =>
+        val home = new Path(dir)
+        val fs = home.getFileSystem(sc.hadoopConfiguration)
+        if (fs.makeQualified(p.getParent) == fs.makeQualified(home)) Some(p) else None
+      case _ => None
+    }
   }
 
-  /** Free a SUPERSEDED round produced by [[round]] (or a hot frame from
-    * [[materializeHot]]): [[seal]], plus the frame's own plan-level cache
-    * if any, plus its materialized blocks. Call it only once the round's
-    * sole dependent has materialized (the loops' deferred-free
-    * discipline): in local mode the blocks are the round's only backing
-    * and a freed-but-unmaterialized local round cannot compute at all
-    * (LocalCheckpointRDD cannot recompute), so this is a destructive
-    * retirement, not a cancel. */
-  def freeRound(df: DataFrame): Unit = {
-    seal(df)
-    // plan-level cache (materializeHot's memory tier); no-op otherwise.
-    // Non-cascading is fine: dependents sit behind their own checkpoint
-    // cuts, never on this cache.
-    try df.unpersist(blocking = false)
-    catch { case scala.util.control.NonFatal(_) => () }
-    // local mode (and any leftover blocks of the checkpointed RDD itself)
-    try df.queryExecution.analyzed match {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.unpersist(false); ()
-      case _ => ()
-    } catch { case scala.util.control.NonFatal(_) => () }
+  private def home(sc: SparkContext): String = {
+    val dir = sc.getCheckpointDir.getOrElse(throw new IllegalStateException(
+      "Reuse.materialize writes under the session's checkpoint dir, and this " +
+        "session has none: start it from graft.GraftSession, or set spark.checkpoint.dir"))
+    registerCleanup(sc, dir)
+    dir.stripSuffix("/")
   }
 
-  /** Checkpointed-frame → its pre-checkpoint cache handle, so freeing a
-    * round can release the cache that fed its checkpoint write. Entries
-    * are removed on free (a loop holds at most two); WEAK keys, because a
-    * round the caller keeps without ever freeing (the returned final
-    * vector) must not pin its entry for the JVM lifetime — once the
-    * caller drops the frame the entry clears and ContextCleaner reclaims
-    * the cache. The value holds no reference to the key (the cache handle
-    * is the PRE-checkpoint Dataset), so weak semantics actually fire. */
-  private val roundCaches =
-    java.util.Collections.synchronizedMap(
-      new java.util.WeakHashMap[DataFrame, DataFrame]())
-
-  // Spark never deletes an application's reliable-checkpoint directory:
-  // `spark.cleaner.referenceTracking.cleanCheckpoints` only fires when the
-  // checkpointed RDD is garbage-collected, and session-lifetime caches
-  // (cc labels, graph scores) hold strong references until JVM exit — so
-  // repeated runs would accumulate checkpoint blocks under the shared
-  // checkpoint home forever. Each SparkContext checkpoints into its own
-  // UUID subdirectory (`SparkContext.getCheckpointDir`), so deleting THAT
-  // directory at JVM shutdown is safe for concurrent applications.
+  // Each SparkContext gets its own UUID subdirectory under the checkpoint
+  // home (`SparkContext.getCheckpointDir`), so deleting THAT directory at
+  // JVM shutdown removes this app's unreleased frames and nothing of a
+  // concurrent application's.
   private val cleanupRegistered = new ConcurrentHashMap[String, java.lang.Boolean]()
 
-  private def registerCheckpointCleanup(sc: org.apache.spark.SparkContext): Unit =
-    sc.getCheckpointDir.foreach { dir =>
-      if (cleanupRegistered.putIfAbsent(dir, java.lang.Boolean.TRUE) == null) {
-        val conf = new org.apache.hadoop.conf.Configuration(sc.hadoopConfiguration)
-        Runtime.getRuntime.addShutdownHook(new Thread(() => {
-          try {
-            val p = new org.apache.hadoop.fs.Path(dir)
-            p.getFileSystem(conf).delete(p, true)
-          } catch { case _: Throwable => () } // best-effort: never block exit
-        }, s"graft-checkpoint-cleanup"))
-      }
+  private def registerCleanup(sc: SparkContext, dir: String): Unit =
+    if (cleanupRegistered.putIfAbsent(dir, java.lang.Boolean.TRUE) == null) {
+      val conf = new org.apache.hadoop.conf.Configuration(sc.hadoopConfiguration)
+      Runtime.getRuntime.addShutdownHook(new Thread(() => {
+        try {
+          val p = new Path(dir)
+          p.getFileSystem(conf).delete(p, true)
+        } catch { case _: Throwable => () } // best-effort: never block exit
+      }, "graft-checkpoint-cleanup"))
     }
 }

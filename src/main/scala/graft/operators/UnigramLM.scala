@@ -206,10 +206,10 @@ object UnigramLM {
   /** The full trainer: seed → `rounds` hard-EM rounds (score, Viterbi-
     * segment, prune) → final scored vocabulary `(piece, c, bits)`. The
     * corpus is touched exactly once (the word-count shuffle inside
-    * [[wordCounts]]); the word and substring tables are checkpointed once
+    * [[wordCounts]]); the word and substring tables are materialized once
     * and reread every round; each round's pruned vocabulary is
-    * checkpointed so lineage never stacks Viterbi towers (the BpeLearn
-    * discipline). Driver state per round: ONE Long (the vocabulary
+    * materialized so lineage never stacks Viterbi towers, and the round it
+    * supersedes is released. Driver state per round: ONE Long (the vocabulary
     * total, embedded as a literal into the next round's scoring — the
     * t8/b1 posture). */
   def train(docs: DataFrame, rounds: Int): DataFrame = {
@@ -222,9 +222,12 @@ object UnigramLM {
       pieces.agg(coalesce(sum(col("c")), lit(0L))).head.getLong(0)
     var t = total()
     for (_ <- 1 to rounds) {
-      pieces = Reuse.materialize(prune(viterbiUsage(subs, scored(pieces, t)), wc))
+      val next = Reuse.materialize(prune(viterbiUsage(subs, scored(pieces, t)), wc))
+      Reuse.release(pieces)
+      pieces = next
       t = total()
     }
+    Reuse.release(wc); Reuse.release(subs)
     scored(pieces, t).select(col("piece"), col("c"), col("bits"))
   }
 }

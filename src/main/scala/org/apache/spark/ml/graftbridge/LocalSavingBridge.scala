@@ -18,7 +18,4 @@ object LocalSavingBridge {
     state.set(true)
     try body finally state.set(previous)
   }
-
-  /** Whether local saving is on for this thread. */
-  def localSaving: Boolean = ReadWriteUtils.localSavingModeState.get()
 }

@@ -62,7 +62,7 @@ class BenchSpec extends SparkSpec {
   test("t16_ccnet_buckets: eager build-time writes are counted apart from the measured jobs") {
     val t = traced("t16_ccnet_buckets")
     checkRecord("t16_ccnet_buckets", t)
-    assert(t.build.jobs > 0, "t16's materializeFiles writes run while the frame is built")
+    assert(t.build.jobs > 0, "t16's Reuse.materialize writes run while the frame is built")
   }
 
   test("corpus chain, 1 slice: the record's trace counts every job the leg ran") {

@@ -9,7 +9,9 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Session-contract lint over the program's sources: every session starts
   * from [[GraftSession]], so no other file calls `SparkSession.builder()`,
   * and no file sets a checkpoint dir by hand (the contract's
-  * `spark.checkpoint.dir` does, and a caller overrides it as a conf). Model
+  * `spark.checkpoint.dir` does, and a caller overrides it as a conf).
+  * Intermediates materialize one way: no source checkpoints a Dataset or
+  * RDD, and only `Reuse` names its `mat-` directories. Model
   * I/O keeps to one path: Spark ML's private `ReadWriteUtils` is named only
   * by the bridge under `org/apache/spark/ml/graftbridge/`, and only
   * `ModelStore` loads a `PipelineModel`. */
@@ -50,6 +52,15 @@ class SessionLintSpec extends AnyFunSuite {
   test("no source calls setCheckpointDir") {
     val hits = offenders("""setCheckpointDir\s*\(""")
     assert(hits.isEmpty, s"set spark.checkpoint.dir through the contract: ${hits.mkString(", ")}")
+  }
+
+  test("nothing checkpoints, and only Reuse.scala names the mat- directories") {
+    val hits = offenders("""\.checkpoint\s*\(|localCheckpoint\s*\(""")
+    assert(hits.isEmpty, s"materialize through Reuse.materialize: ${hits.mkString(", ")}")
+    assert(offenders("\"mat-\"").exists(_.contains("Reuse.scala")),
+      "Reuse.scala itself must match the pattern")
+    val mat = offenders("\"mat-\"", named("Reuse.scala"))
+    assert(mat.isEmpty, s"only Reuse owns its directories: ${mat.mkString(", ")}")
   }
 
   test("ReadWriteUtils appears only under org/apache/spark/ml/graftbridge/") {

@@ -15,8 +15,8 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
 object SparkSpec {
   /** Checkpoint home of the test session: a fresh temp dir per test JVM, so
-    * `Reuse.materialize` exercises the same reliable path a cluster
-    * deployment runs without sharing the default home. */
+    * `Reuse.materialize` writes its files where a cluster deployment would,
+    * without sharing the default home. */
   lazy val checkpointDir: String =
     java.nio.file.Files.createTempDirectory("graft-test-ckpt").toString
 

@@ -158,13 +158,13 @@ class PlanLintSpec extends SparkSpec {
     "o5_registry_history" -> ("Window(coalesce(pmod(year(o_orderdate), 1), 0))",
       "model-registry history: rows = training runs (fixture synthesizes a thin 1/97 orders slice)"),
     "x14_dsir_selection" -> ("Window(coalesce(pmod(bucket, 1), 0))",
-      "ratio-model totals over the 64-bucket hashed-unigram grid: operator constant; `bucket` is md5(w) % 64 computed BEFORE the materializeFiles cut, and the window's child is the Aggregate by that read-back column (<= 64 rows, plans/r17/x14_dsir_selection_after.txt)"),
+      "ratio-model totals over the 64-bucket hashed-unigram grid: operator constant; `bucket` is md5(w) % 64 computed BEFORE the Reuse.materialize cut, and the window's child is the Aggregate by that read-back column (<= 64 rows, plans/r17/x14_dsir_selection_after.txt)"),
     "v1_vocab_build" -> ("Window(pmod(count(1), 1))",
       "dense-id assignment over the top-1000 rows AFTER the limit: operator constant"),
     "t13_langid_confusion" -> ("Window(lang)",
       "row totals over the (true_lang x predicted_lang) confusion grid: langs^2 rows"),
     "t16_ccnet_buckets" -> ("Window(lang); Window(lang); Window(lang, b)",
-      "the x11 two-phase form itself: within-bucket rank spread over the (lang, <=1001-bucket) grid keys, offsets over the grid rows; `b` is mean_micro div 1000 computed BEFORE the round-17 materializeFiles cut, so the flagged key is the read-back column, not the inline expression — same audited bounded grid"),
+      "the x11 two-phase form itself: within-bucket rank spread over the (lang, <=1001-bucket) grid keys, offsets over the grid rows; `b` is mean_micro div 1000 computed BEFORE the Reuse.materialize cut, so the flagged key is the read-back column, not the inline expression — same audited bounded grid"),
     "e10_transition_matrix" -> ("Window(event_type)",
       "row shares over the (from_type x to_type) transition grid: types^2 rows"),
     "x16_compaction_bins" -> ("Window(event_type)",

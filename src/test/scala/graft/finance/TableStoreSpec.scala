@@ -245,26 +245,6 @@ class TableStoreSpec extends SparkSpec {
     assert(got("t1").getAs[java.sql.Timestamp]("updated_at") == t0)
   }
 
-  test("upsertFieldwise persists the merge through the store (missing table included)") {
-    val store = freshStore()
-    val b1 = Seq(("t1", "Dining", Some("s"), Some("n1"), Some(true), Option.empty[Boolean]))
-      .toDF("transaction_id", "master_category", "source_category",
-        "notes", "validated", "exclude_from_forecast")
-    store.upsertFieldwise("uc", b1, "transaction_id",
-      ucAssigned, ucProvided, ucDefaults, "updated_at" -> lit(t0))
-    val b2 = Seq(("t1", "Dining", Some("s"), Option.empty[String],
-      Option.empty[Boolean], Some(true)))
-      .toDF("transaction_id", "master_category", "source_category",
-        "notes", "validated", "exclude_from_forecast")
-    store.upsertFieldwise("uc", b2, "transaction_id",
-      ucAssigned, ucProvided, ucDefaults, "updated_at" -> lit(t1))
-    val r = store.read("uc").collect().head
-    assert(r.getAs[String]("notes") == "n1")            // kept from batch 1
-    assert(r.getAs[Boolean]("validated"))               // kept from batch 1
-    assert(r.getAs[Boolean]("exclude_from_forecast"))   // updated by batch 2
-    assert(r.getAs[java.sql.Timestamp]("updated_at") == t1)
-  }
-
   test("mergeFieldwise rejects duplicate batch keys loudly") {
     val existing = ucRows(("t1", "Gas", Some("s"), None, Some(false), Some(false), t0))
     val batch = Seq(

@@ -7,7 +7,7 @@ import java.io.IOException
 import scala.jdk.CollectionConverters._
 import org.apache.commons.compress.archivers.tar.{TarArchiveEntry, TarArchiveOutputStream}
 import org.apache.commons.compress.compressors.bzip2.BZip2CompressorOutputStream
-import org.apache.spark.ml.graftbridge.LocalSavingBridge
+import org.apache.spark.ml.graftbridge.LocalSavingProbe
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -136,7 +136,7 @@ class ModelStoreSpec extends SparkSpec {
     }
     assert(labels.toSeq == trained.labels.toSeq)
     assert(scores(loaded, labels) == expected)
-    assert(!LocalSavingBridge.localSaving)
+    assert(!LocalSavingProbe.localSaving)
   }
 
   test("a Spark-default-layout dir still loads through load and loadForPredict") {
@@ -160,9 +160,9 @@ class ModelStoreSpec extends SparkSpec {
     val before = extractionDirs()
     val (store, root) = newStore()
     store.save(trained.model, trained.labels, "v1")
-    assert(!LocalSavingBridge.localSaving)
+    assert(!LocalSavingProbe.localSaving)
     store.load("v1")
-    assert(!LocalSavingBridge.localSaving)
+    assert(!LocalSavingProbe.localSaving)
 
     // a readable archive whose pipeline metadata is corrupt fails inside
     // the local-saving section
@@ -172,13 +172,13 @@ class ModelStoreSpec extends SparkSpec {
     writeArchive(broken.resolve(ModelStore.Archive), "metadata" -> "{not json")
     val e = intercept[IllegalStateException](store.loadForPredict(Some(registry("broken"))))
     assert(e.getMessage.contains("failed to load"))
-    assert(!LocalSavingBridge.localSaving)
+    assert(!LocalSavingProbe.localSaving)
 
     // bytes that are no archive at all fail before it
     Files.writeString(broken.resolve(ModelStore.Archive), "not an archive")
     val e2 = intercept[IllegalStateException](store.loadForPredict(Some(registry("broken"))))
     assert(e2.getMessage.contains("failed to load"))
-    assert(!LocalSavingBridge.localSaving)
+    assert(!LocalSavingProbe.localSaving)
     assert(extractionDirs() == before)
   }
 
@@ -192,6 +192,6 @@ class ModelStoreSpec extends SparkSpec {
     val e = intercept[IOException](store.load("evil"))
     assert(e.getMessage.contains("outside the extraction dir"))
     assert(!Files.exists(Paths.get(System.getProperty("java.io.tmpdir"), escaped)))
-    assert(!LocalSavingBridge.localSaving)
+    assert(!LocalSavingProbe.localSaving)
   }
 }

@@ -3,8 +3,8 @@
 #  - a src/main/scala file that defines no `main` and none of whose
 #    top-level objects, classes or traits is named by another file under
 #    src/main/scala, perfbench/src or deploy/;
-#  - a def (not an override) whose name occurs in those trees only on the
-#    lines that define it.
+#  - a def (not an override) whose name occurs in the code of those trees
+#    (comments dropped) only on the lines that define it.
 # Prints one line per finding and nothing when everything is reached.
 # Usage: tools/unreached.sh
 set -euo pipefail
@@ -24,7 +24,11 @@ done
 
 words=$(mktemp); defs=$(mktemp)
 trap 'rm -f "$words" "$defs"' EXIT
-grep -rhoE --exclude-dir=target '[A-Za-z_][A-Za-z0-9_]*' "${roots[@]}" | sort | uniq -c \
+# words are counted in code only: `//` comments and scaladoc lines (those
+# starting with `*` or `/**`) are dropped first, so a def that only prose
+# names stays unreached
+grep -rh --exclude-dir=target '' "${roots[@]}" | grep -vE '^\s*(\*|/\*\*)' | sed -E 's#//.*##' \
+  | grep -oE '[A-Za-z_][A-Za-z0-9_]*' | sort | uniq -c \
   | awk '{print $2, $1}' | sort > "$words"
 grep -rhE '^\s*((private|protected)(\[[A-Za-z]+\])? |final |implicit |lazy )*def [A-Za-z_][A-Za-z0-9_]*' \
   src/main/scala | sed -E 's/.*def ([A-Za-z_][A-Za-z0-9_]*).*/\1/' | sort | uniq -c \
