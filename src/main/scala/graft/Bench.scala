@@ -130,10 +130,28 @@ private[graft] object QueryTrace {
 /** One measured run of one query: total seconds (-1 for a failure), output
   * rows, the build wall, and the planning phases of the measured action's
   * own `QueryExecution` (analysis, optimization, planning). Execution is
-  * the rest: `sec` minus build and the phases. */
+  * the rest: `sec` minus build and the phases. `codegen` is the JVM's
+  * Janino compiles over the run ([[Codegen]]): the query's own only when
+  * nothing else ran beside it. */
 private[graft] final case class QueryRun(
-    sec: Double, rows: Long, buildMs: Long, phasesMs: Map[String, Long]) {
+    sec: Double, rows: Long, buildMs: Long, phasesMs: Map[String, Long],
+    codegen: Codegen = Codegen(0, 0)) {
   def execMs: Long = math.max(0L, math.round(sec * 1000) - buildMs - phasesMs.values.sum)
+}
+
+/** Janino compiles (misses of Spark's compiled-class cache) and their
+  * nanoseconds. Spark counts both JVM-wide (`CodegenMetrics`,
+  * `CodeGenerator.compileTime`), so the difference of two [[Codegen.now]]
+  * readings holds everything compiled between them, on any thread. */
+private[graft] final case class Codegen(compiles: Long, nanos: Long) {
+  def -(o: Codegen): Codegen = Codegen(compiles - o.compiles, nanos - o.nanos)
+  def json: String = s""""codegen_compiles":$compiles,"codegen_ms":${nanos / 1000000}"""
+}
+
+private[graft] object Codegen {
+  def now(): Codegen = Codegen(
+    org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount,
+    org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime)
 }
 
 /** The benchmark main, one harness with modes:
@@ -165,7 +183,15 @@ private[graft] final case class QueryRun(
   * (SPARK_GRAFT_WARMUP_SF_DIR) to pay analysis, codegen and JIT outside the
   * measured run; the warmup timings order the measured run longest-first,
   * so the batch does not end on one heavy straggler. SPARK_GRAFT_WARMUP=0
-  * measures cold.
+  * measures cold. The compiled classes outlive the warmup because the
+  * session contract sizes Spark's codegen cache to the catalog's working
+  * set ([[GraftSession]]). At sf0.1 on 4 cores one cold pass compiles
+  * about 2,400 classes; after the warmup the first measured repeat
+  * compiles 160-172 and later ones 10-34. Before the measured repeats,
+  * every table of the measured directory is read once through
+  * [[graft.io.SchemaMemo]], unmeasured, so no measured query's build
+  * carries a first-read schema-inference job and per-query job counts do
+  * not depend on the run order.
   *
   * The measured action is `collect()` of one hash aggregate over every
   * output column of every row plus the row count ([[measured]]): a plain
@@ -186,11 +212,14 @@ private[graft] final case class QueryRun(
   * SPARK_GRAFT_BENCH_WAIT_SEC, default 300) and the in-run spread flags.
   * The full record (`BENCH_LOCAL.json`, or SPARK_GRAFT_BENCH_OUT) adds
   * full-precision seconds, per-query shuffle read/write bytes (max across
-  * repeats), `peak_heap_mb` per repeat (the sum of the heap pools' peaks,
-  * reset before each repeat) and `trace`: per query, from its fastest
-  * repeat, `rows`, `build_ms`, `analysis_ms`, `optimization_ms`,
-  * `planning_ms`, `exec_ms` (summing to its seconds) and the
-  * [[QueryTrace]] counts of its `build` and `exec` phases.
+  * repeats), per repeat `peak_heap_mb` (the sum of the heap pools' peaks,
+  * reset before each repeat), `codegen_compiles` and `codegen_ms` (the
+  * repeat's Janino compiles and their time, [[Codegen]]), and `trace`: per
+  * query, from its fastest repeat, `rows`, `build_ms`, `analysis_ms`,
+  * `optimization_ms`, `planning_ms`, `exec_ms` (summing to its seconds),
+  * the [[QueryTrace]] counts of its `build` and `exec` phases and, when
+  * SPARK_GRAFT_BENCH_THREADS=1, its own `codegen_compiles` and
+  * `codegen_ms`.
   *
   * Recipes (a SPARK_GRAFT_BENCH_ONLY-filtered run writes its record only
   * to SPARK_GRAFT_BENCH_OUT):
@@ -362,6 +391,7 @@ object Bench {
     val sc = spark.sparkContext
     sc.setLocalProperty(QueryTrace.QueryProp, name)
     sc.setLocalProperty(QueryTrace.PhaseProp, QueryTrace.Build)
+    val cg0 = Codegen.now()
     val t0 = System.nanoTime()
     try {
       val df = fn(spark, dir)
@@ -373,7 +403,7 @@ object Bench {
       val phases = out.queryExecution.tracker.phases.map { case (p, s) =>
         p -> (s.endTimeMs - s.startTimeMs)
       }
-      QueryRun(sec, rows, buildMs, phases)
+      QueryRun(sec, rows, buildMs, phases, Codegen.now() - cg0)
     } catch { case e: Throwable =>
       System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
       QueryRun(-1.0, -1L, 0L, Map.empty)
@@ -439,6 +469,10 @@ object Bench {
     val warmTimes: Map[String, Double] =
       if (warmup) runAll(queries, warmDir).map { case (n, r) => n -> r.sec } else Map.empty
     val order = queries.sortBy { case (n, _) => (-warmTimes.getOrElse(n, 0.0), n) }
+    // infer every measured table's schema now, so the inference job lands
+    // on no measured query (class scaladoc)
+    graft.io.Tables.names.filter(n => new java.io.File(s"$sfDir/$n.parquet").exists)
+      .foreach(n => graft.io.Tables(spark, sfDir, n))
 
     val repeats = math.max(1, sys.env.getOrElse("SPARK_GRAFT_BENCH_REPEATS", "3").toInt)
     // drain the listener bus before every snapshot, so trailing task ends
@@ -448,16 +482,19 @@ object Bench {
     // two unrecorded probe calls, so the first recorded one is past JIT
     coreProbeSec(); coreProbeSec()
     final case class Repeat(wall: Double, load: Double, probe: Double, peakHeapMb: Long,
-        queries: Map[String, QueryRun], counts: Map[QueryTrace.Key, QueryTrace.Counts])
+        codegen: Codegen, queries: Map[String, QueryRun],
+        counts: Map[QueryTrace.Key, QueryTrace.Counts])
     val runs = (1 to repeats).map { _ =>
       val load = loadAvg1m
       val probe = coreProbeSec()
       heapPools.foreach(_.resetPeakUsage())
+      val cg0 = Codegen.now()
       val t0 = System.nanoTime()
       val res = runAll(order, sfDir)
       val wall = (System.nanoTime() - t0) / 1e9
+      val codegen = Codegen.now() - cg0
       trace.drainListenerBus(spark.sparkContext)
-      Repeat(wall, load, probe, peakHeapMb, res, trace.snapshotAndReset())
+      Repeat(wall, load, probe, peakHeapMb, codegen, res, trace.snapshotAndReset())
     }
     // Per-query shuffle bytes (both phases): max across repeats, so a
     // memo-fed query reports the repeat that trained, not a zero.
@@ -485,6 +522,7 @@ object Bench {
       s""""$name":{"rows":${q.rows},"build_ms":${q.buildMs},""" +
         s""""analysis_ms":${ms("analysis")},"optimization_ms":${ms("optimization")},""" +
         s""""planning_ms":${ms("planning")},"exec_ms":${q.execMs},""" +
+        (if (threads == 1) q.codegen.json + "," else "") +
         s""""build":${counts(QueryTrace.Build)},"exec":${counts(QueryTrace.Exec)}}"""
     }.mkString("{", ",", "}")
 
@@ -496,6 +534,8 @@ object Bench {
     val loads = runs.map(_.load).mkString("[", ",", "]")
     val probes = runs.map(_.probe).mkString("[", ",", "]")
     val peakHeaps = runs.map(_.peakHeapMb).mkString("[", ",", "]")
+    val compiles = runs.map(_.codegen.compiles).mkString("[", ",", "]")
+    val compileMs = runs.map(_.codegen.nanos / 1000000).mkString("[", ",", "]")
     // The in-run verdict: repeats run identical plans on identical data, so
     // a wall or core-probe spread beyond 25% is host weather. One repeat
     // has no spread and reports false.
@@ -530,7 +570,7 @@ object Bench {
     val summary =
       s"""{"metric":"total","value":$headline,"unit":"sec","n":${results.size},"failures":$failures,"queries":$qsCompact,"sf":"$sfDir","threads":$threads,"sum_query_sec":$sumSec,"repeats":$repeats,"walls":$walls,"load_avg_1m":$loads,"core_probe_sec":$probes,"load_note":"per-repeat load_avg_1m samples include this bench's own local[$cpus] load",$contentionJson,"waited_for_quiet_sec":$waitedSec,"contended":$contended,"shuffle_read_bytes_total":$shufRTotal,"shuffle_write_bytes_total":$shufWTotal}"""
     val full =
-      s"""{"metric":"total","value":$headline,"unit":"sec","queries":$qs,"sf":"$sfDir","threads":$threads,"sum_query_sec":$sumSec,"repeats":$repeats,"walls":$walls,"load_avg_1m":$loads,"core_probe_sec":$probes,"load_note":"per-repeat load_avg_1m samples include this bench's own local[$cpus] load",$contentionJson,"waited_for_quiet_sec":$waitedSec,"contended":$contended,"shuffle_read_bytes":$shufR,"shuffle_write_bytes":$shufW,"peak_heap_mb":$peakHeaps,"trace":$traceJson}"""
+      s"""{"metric":"total","value":$headline,"unit":"sec","queries":$qs,"sf":"$sfDir","threads":$threads,"sum_query_sec":$sumSec,"repeats":$repeats,"walls":$walls,"load_avg_1m":$loads,"core_probe_sec":$probes,"load_note":"per-repeat load_avg_1m samples include this bench's own local[$cpus] load",$contentionJson,"waited_for_quiet_sec":$waitedSec,"contended":$contended,"shuffle_read_bytes":$shufR,"shuffle_write_bytes":$shufW,"peak_heap_mb":$peakHeaps,"codegen_compiles":$compiles,"codegen_ms":$compileMs,"trace":$traceJson}"""
     // a filtered run writes only to a file the caller names, never over
     // the full-suite record
     val explicitOut = sys.env.get("SPARK_GRAFT_BENCH_OUT")

@@ -868,7 +868,7 @@ object ParityCatalog {
         ORDER BY lower(c.name), c.name
       """)) { (spark, dir) =>
       import graft.finance.CategoryCatalog
-      val now = lit(java.sql.Timestamp.valueOf("2026-01-01 00:00:00"))
+      val now = java.sql.Timestamp.valueOf("2026-01-01 00:00:00")
       // in-use names: confidently-predicted event types plus one default
       // ('Gas', exercises in_use-on-default) and the reserved UNCERTAIN
       // (must be skipped by the sync)

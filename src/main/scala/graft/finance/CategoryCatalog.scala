@@ -1,6 +1,8 @@
 package graft.finance
 
-import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
+import java.sql.Timestamp
+
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -21,8 +23,11 @@ import org.apache.spark.sql.types._
   * control-plane table, the same sanctioned shape as the ModelStore top-1
   * pick, never a data-plane collect.
   *
-  * `now` is a caller-supplied timestamp column (`lit(...)` in jobs) so
-  * replays and oracle comparisons stay deterministic.
+  * `now` is a caller-supplied timestamp so replays and oracle comparisons
+  * stay deterministic. It rides in the new rows as data, not as a literal:
+  * a timestamp literal is compiled into the generated code, so a service
+  * that lists the catalog with a fresh `now` per request would compile new
+  * classes on every request.
   */
 object CategoryCatalog {
 
@@ -47,35 +52,39 @@ object CategoryCatalog {
   def emptyCatalog(spark: SparkSession): DataFrame =
     spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
 
-  private def names(spark: SparkSession, ns: Seq[String]): DataFrame =
-    spark.createDataset(ns)(Encoders.STRING).toDF("name")
+  /** `ns` as (name, created_at) rows, each stamped `now`. */
+  private def names(spark: SparkSession, ns: Seq[String], now: Timestamp): DataFrame =
+    spark.createDataFrame(ns.map(n => (n, now))).toDF("name", "created_at")
 
-  private def newRows(nameRows: DataFrame, isActive: Boolean, now: Column): DataFrame =
+  private def newRows(nameRows: DataFrame, isActive: Boolean): DataFrame =
     nameRows.select(
       col("name"),
       col("name").isInCollection(DefaultCategories).as("is_default"),
       lit(isActive).as("is_active"),
-      now.cast("timestamp").as("created_at"))
+      col("created_at"))
 
   /** Insert any missing default categories — idempotent
     * (`category_service.py:44-50`). Defaults are always seeded with
     * `is_default = true` even though `newRows` would derive the same. */
-  def ensureDefaults(catalog: DataFrame, now: Column): DataFrame = {
-    val missing = names(catalog.sparkSession, DefaultCategories)
+  def ensureDefaults(catalog: DataFrame, now: Timestamp): DataFrame = {
+    val missing = names(catalog.sparkSession, DefaultCategories, now)
       .join(catalog.select("name"), Seq("name"), "left_anti")
-    catalog.unionByName(newRows(missing, isActive = true, now))
+    catalog.unionByName(newRows(missing, isActive = true))
   }
 
   /** Add catalog rows for in-use names the catalog is missing; existing
     * rows are untouched, so deactivation is never overridden
     * (`category_service.py:53-67`). `inUse` carries the names in its first
     * column (e.g. [[Serving.inUseCategories]] output). */
-  def syncInUse(catalog: DataFrame, inUse: DataFrame, now: Column): DataFrame = {
+  def syncInUse(catalog: DataFrame, inUse: DataFrame, now: Timestamp): DataFrame = {
+    // the names come from a scan, so the stamp is a literal here: a
+    // catalog refresh runs once per job, not once per request
     val candidates = inUse.select(col(inUse.columns.head).as("name"))
       .filter(col("name").isNotNull && col("name") =!= Reserved)
       .distinct()
       .join(catalog.select("name"), Seq("name"), "left_anti")
-    catalog.unionByName(newRows(candidates, isActive = true, now))
+      .withColumn("created_at", lit(now))
+    catalog.unionByName(newRows(candidates, isActive = true))
   }
 
   /** Catalog listing with default / active / in-use metadata, sorted
@@ -100,7 +109,7 @@ object CategoryCatalog {
   /** Add a custom category, or reactivate an inactive one; rejects blank
     * names, the UNCERTAIN reservation, and active duplicates
     * (`category_service.py:104-143`). Returns the new catalog. */
-  def addCategory(catalog: DataFrame, name: String, now: Column): DataFrame = {
+  def addCategory(catalog: DataFrame, name: String, now: Timestamp): DataFrame = {
     val cleaned = Option(name).getOrElse("").trim
     require(cleaned.nonEmpty, "Category name is required")
     require(cleaned.toUpperCase != Reserved, "UNCERTAIN is reserved and cannot be added")
@@ -113,7 +122,7 @@ object CategoryCatalog {
         when(col("name") === cleaned, lit(true)).otherwise(col("is_active")))
     } else {
       catalog.unionByName(
-        newRows(names(catalog.sparkSession, Seq(cleaned)), isActive = true, now))
+        newRows(names(catalog.sparkSession, Seq(cleaned), now), isActive = true))
     }
   }
 
@@ -122,13 +131,13 @@ object CategoryCatalog {
     * (`category_service.py:146-173`). Existing transactions are left
     * unchanged. Returns the new catalog. */
   def setCategoryActive(
-      catalog: DataFrame, name: String, isActive: Boolean, now: Column): DataFrame = {
+      catalog: DataFrame, name: String, isActive: Boolean, now: Timestamp): DataFrame = {
     val exists = catalog.filter(col("name") === name).limit(1).collect().nonEmpty
     if (!exists) {
       if (isActive)
         throw new IllegalArgumentException(s"Category '$name' not found")
       catalog.unionByName(
-        newRows(names(catalog.sparkSession, Seq(name)), isActive = false, now))
+        newRows(names(catalog.sparkSession, Seq(name), now), isActive = false))
     } else {
       catalog.withColumn("is_active",
         when(col("name") === name, lit(isActive)).otherwise(col("is_active")))

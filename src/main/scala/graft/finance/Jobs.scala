@@ -58,7 +58,7 @@ final class Jobs(spark: SparkSession, store: TableStore) {
       now: java.sql.Timestamp = java.sql.Timestamp.from(java.time.Instant.now())): DataFrame = {
     val catalog = store.readOrEmpty("categories", CategoryCatalog.schema)
     val next = CategoryCatalog.syncInUse(
-      CategoryCatalog.ensureDefaults(catalog, lit(now)), Serving.inUseCategories(store), lit(now))
+      CategoryCatalog.ensureDefaults(catalog, now), Serving.inUseCategories(store), now)
     store.overwrite("categories", next)
     store.read("categories")
   }
@@ -215,9 +215,12 @@ final class Jobs(spark: SparkSession, store: TableStore) {
       nTrain: Long, nTest: Long, nClasses: Int, reason: String): DataFrame = {
     val metricsJson = metrics.map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")
     import spark.implicits._
-    Seq((version, status, metricsJson, nTrain, nTest, nClasses, Option(reason)))
-      .toDF("model_version", "status", "metrics_json", "n_train", "n_test", "n_classes", "reason")
-      .withColumn("training_timestamp", current_timestamp())
+    // the stamp rides in the row as data: a timestamp literal (what
+    // current_timestamp() becomes) is compiled into generated code
+    val trainedAt = new java.sql.Timestamp(System.currentTimeMillis())
+    Seq((version, status, metricsJson, nTrain, nTest, nClasses, Option(reason), trainedAt))
+      .toDF("model_version", "status", "metrics_json", "n_train", "n_test", "n_classes",
+        "reason", "training_timestamp")
       .withColumn("file_path", lit(s"${store.root}/.models/$version"))
       .withColumn("is_active", lit(false))
       .withColumn("is_latest", lit(false))

@@ -1,6 +1,7 @@
 package graft.finance
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.util.concurrent.locks.ReentrantReadWriteLock
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -21,8 +22,20 @@ import org.apache.spark.sql.types.StructType
   * functionally and swaps the directory. At 100 TB the same protocols run
   * against a transactional table format's MERGE — the call sites don't
   * change, only this class.
+  *
+  * [[lock]] guards the swap: a publish holds it exclusively only for the
+  * rename pair and the delete of the old directory, so a reader that holds
+  * it shared (an API request, see [[graft.finance.serving.ApiServer]])
+  * never lists a directory that is moved or deleted under it. Writing the
+  * new generation takes no lock.
   */
 final class TableStore(spark: SparkSession, val root: String) {
+
+  /** Fair read/write lock of this store's publishes: shared by readers that
+    * must not see a swap mid-read, exclusive inside [[overwrite]]'s swap.
+    * A thread that holds it shared cannot publish (a read lock does not
+    * upgrade): such a swap throws instead of deadlocking. */
+  val lock: ReentrantReadWriteLock = new ReentrantReadWriteLock(true)
 
   private def dir(table: String): Path = Paths.get(root, table)
 
@@ -77,11 +90,17 @@ final class TableStore(spark: SparkSession, val root: String) {
   }
 
   private def swapInto(tmp: Path, target: Path): Unit = {
+    if (lock.getReadHoldCount > 0 && !lock.isWriteLockedByCurrentThread)
+      throw new IllegalStateException(
+        s"publishing ${target.getFileName} while holding the store's shared lock would deadlock")
     val old = Paths.get(root, s".${target.getFileName}__old")
-    deleteRecursively(old)
-    if (Files.exists(target)) Files.move(target, old, StandardCopyOption.ATOMIC_MOVE)
-    Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE)
-    deleteRecursively(old)
+    deleteRecursively(old) // left by a swap that died mid-way; no reader lists it
+    lock.writeLock.lock()
+    try {
+      if (Files.exists(target)) Files.move(target, old, StandardCopyOption.ATOMIC_MOVE)
+      Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE)
+      deleteRecursively(old)
+    } finally lock.writeLock.unlock()
   }
 
   /** Append-only incremental merge: insert only batch rows whose `key` is
@@ -127,7 +146,10 @@ object TableStore {
     *
     * `batch` must carry `key ++ assigned ++ whenProvided` and at most one
     * row per key; keys must be non-null on both sides (enforced). Output
-    * columns = existing's columns.
+    * columns = existing's columns. `touch` names the stamped column and
+    * its value, evaluated over the batch's rows: a per-call stamp can ride
+    * in the batch as data (`col(...)`), where a timestamp literal would be
+    * compiled into the generated code, one new class per call.
     */
   def mergeFieldwise(
       existing: DataFrame,
@@ -153,8 +175,8 @@ object TableStore {
       col(key).as("_mk") +: lit(true).as("_e_present") +:
         existing.columns.map(c => col(c).as(s"_e_$c")): _*)
     val b0 = guardKey(batch).select(
-      col(key).as("_mk") +: lit(true).as("_b_present") +:
-        (assigned ++ whenProvided).map(c => col(c).as(s"_b_$c")): _*)
+      (col(key).as("_mk") +: lit(true).as("_b_present") +: touchVal.as("_b_touch") +:
+        (assigned ++ whenProvided).map(c => col(c).as(s"_b_$c"))): _*)
     // at-most-one-row-per-key is a documented contract — enforce it like
     // the null-key guard: duplicate batch keys would fan out the join and
     // persist duplicate rows through the store (the reference's
@@ -175,7 +197,7 @@ object TableStore {
       val out =
         if (c == key) col("_mk")
         else if (c == touchCol)
-          when(fromBatch, touchVal.cast(existing.schema(touchCol).dataType)).otherwise(ex)
+          when(fromBatch, col("_b_touch").cast(existing.schema(touchCol).dataType)).otherwise(ex)
         else if (assigned.contains(c)) when(fromBatch, col(s"_b_$c")).otherwise(ex)
         else if (whenProvided.contains(c))
           when(created, coalesce(col(s"_b_$c"), defaults.getOrElse(c, lit(null))))

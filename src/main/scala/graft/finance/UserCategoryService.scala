@@ -67,7 +67,10 @@ final class UserCategoryService(
   /** Merge against [[existing]] (full canonical schema even before the
     * table's first write — a template derived from the batch would narrow
     * the table if the first-ever mutation were a validation), then
-    * persist through the atomic swap. */
+    * persist through the atomic swap. `batch` carries the edit's
+    * `updated_at` stamp in its rows, as data: a timestamp literal would be
+    * compiled into the merge's generated code, so every edit would compile
+    * new classes. */
   private def merge(
       batch: DataFrame,
       assigned: Seq[String],
@@ -75,7 +78,7 @@ final class UserCategoryService(
       defaults: Map[String, org.apache.spark.sql.Column]): Unit =
     store.overwrite(Table, TableStore.mergeFieldwise(
       existing(), batch, Key, assigned, whenProvided, defaults,
-      touch = ("updated_at", lit(now()))))
+      touch = ("updated_at", col("updated_at"))))
 
   private def resultRow(transactionId: String): UserCategoryRow = {
     val r = existingRow(transactionId).getOrElse(
@@ -100,12 +103,12 @@ final class UserCategoryService(
       excludeFromForecast: Option[Boolean] = None): UserCategoryRow = {
     val batch = Seq((transactionId, masterCategory, sourceCategory.orNull,
         notes.orNull, validated.map(Boolean.box).orNull,
-        excludeFromForecast.map(Boolean.box).orNull))
+        excludeFromForecast.map(Boolean.box).orNull, now()))
       .toDF(Key, "master_category", "source_category", "notes", "validated",
-        "exclude_from_forecast")
+        "exclude_from_forecast", "updated_at")
       .select(col(Key), col("master_category"), col("source_category"),
         col("notes"), col("validated").cast("boolean"),
-        col("exclude_from_forecast").cast("boolean"))
+        col("exclude_from_forecast").cast("boolean"), col("updated_at"))
     merge(batch,
       assigned = Seq("master_category", "source_category"),
       whenProvided = Seq("notes", "validated", "exclude_from_forecast"),
@@ -123,8 +126,8 @@ final class UserCategoryService(
       else Some(fallbackCategory(transactionId).getOrElse(throw new NoCategoryError(
         s"No category found for transaction $transactionId. Please assign a category first.")))
     val batch = Seq((transactionId, category.orNull, validated,
-        null.asInstanceOf[java.lang.Boolean]))
-      .toDF(Key, "master_category", "validated", "exclude_from_forecast")
+        null.asInstanceOf[java.lang.Boolean], now()))
+      .toDF(Key, "master_category", "validated", "exclude_from_forecast", "updated_at")
     merge(batch,
       assigned = Seq("validated"),
       whenProvided = Seq("master_category", "exclude_from_forecast"),
@@ -137,7 +140,7 @@ final class UserCategoryService(
   def updateNotes(transactionId: String, notes: Option[String]): UserCategoryRow = {
     if (existingRow(transactionId).isEmpty)
       throw new NoCategoryError(s"No user category found for transaction $transactionId")
-    val batch = Seq((transactionId, notes.orNull)).toDF(Key, "notes")
+    val batch = Seq((transactionId, notes.orNull, now())).toDF(Key, "notes", "updated_at")
     merge(batch, assigned = Seq("notes"), whenProvided = Nil, defaults = Map.empty)
     resultRow(transactionId)
   }
@@ -153,8 +156,8 @@ final class UserCategoryService(
         s"No category found for transaction $transactionId. " +
           "Please assign a category before excluding from forecast.")))
     val batch = Seq((transactionId, category.orNull, excludeFromForecast,
-        null.asInstanceOf[java.lang.Boolean]))
-      .toDF(Key, "master_category", "exclude_from_forecast", "validated")
+        null.asInstanceOf[java.lang.Boolean], now()))
+      .toDF(Key, "master_category", "exclude_from_forecast", "validated", "updated_at")
     merge(batch,
       assigned = Seq("exclude_from_forecast"),
       whenProvided = Seq("master_category", "validated"),
@@ -194,7 +197,8 @@ final class UserCategoryService(
     * changed, as the endpoint reports. */
   def bulkValidate(transactionIds: Seq[String]): Long = {
     if (transactionIds.isEmpty) return 0L
-    val ids = transactionIds.distinct.toDF(Key)
+    val stamp = now()
+    val ids = transactionIds.distinct.map(id => (id, stamp)).toDF(Key, "updated_at")
     val uc = existing().select(
       col(Key), col("validated").as("_uc_validated"), lit(true).as("_uc_present"))
     val fallback = transactions().select(
@@ -211,7 +215,8 @@ final class UserCategoryService(
       // existing rows ship null here → coalesce keeps their stored category
       when(col("_uc_present").isNull, col("_fb_category")).as("master_category"),
       lit(true).as("validated"),
-      lit(null).cast("boolean").as("exclude_from_forecast"))
+      lit(null).cast("boolean").as("exclude_from_forecast"),
+      col("updated_at"))
     val n = batch.count()
     if (n > 0)
       merge(batch,

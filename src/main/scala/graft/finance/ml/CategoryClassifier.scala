@@ -219,12 +219,17 @@ object CategoryClassifier {
     val probs = vector_to_array(col("probability"))
     val labelExpr = element_at(
       array(labels.map(lit): _*), col("_prediction").cast("int") + 1)
+    // A timestamp literal (what current_timestamp() becomes) is compiled
+    // into the generated code, so every scoring run would compile new
+    // classes. An array literal is passed to the code as an object instead,
+    // and exploding its one element stamps each row without a literal.
+    val stamp = explode(typedLit(Array(new java.sql.Timestamp(System.currentTimeMillis()))))
     scored.select(
       col("transaction_id"),
       thresholdLabel(probs, labelExpr, confidenceThreshold)
         .as("predicted_master_category"),
       confidenceOf(probs).as("prediction_confidence"),
       lit(modelVersion).as("model_version"),
-      current_timestamp().as("prediction_timestamp"))
+      stamp.as("prediction_timestamp"))
   }
 }

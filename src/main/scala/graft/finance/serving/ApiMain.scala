@@ -21,7 +21,11 @@ import graft.finance.connector.JobLaunchClient
   * dbt-materialized tables. A table's schema is inferred once per
   * directory generation ([[graft.io.SchemaMemo]]), so a request re-infers
   * only what a swap replaced. The server answers up to one request per
-  * session core at once, under [[ApiServer]]'s read/write lock contract.
+  * session core at once. One [[TableStore]] backs every service, and the
+  * server shares its lock ([[ApiServer]]'s lock contract): reads hold it
+  * shared, edits serialize on the server's writer mutex and hold it
+  * exclusively only for their swap, so reads serve while an edit's Spark
+  * jobs run.
   * The write half (user-category mutations) and the Dagster trigger
   * (`GRAFT_DAGSTER_URL`, same GraphQL client the reference's backend uses,
   * also behind the debounced retrain of All-Data edits) are wired when
@@ -117,7 +121,8 @@ object ApiMain {
       backups = Some(backupSvc),
       simplefinWarnings = warningsFetch,
       port = port,
-      workers = spark.sparkContext.defaultParallelism)
+      workers = spark.sparkContext.defaultParallelism,
+      tableLock = store.lock)
   }
 
   /** JDK-only POST transport for the GraphQL launch client. */

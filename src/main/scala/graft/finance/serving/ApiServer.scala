@@ -4,7 +4,7 @@ import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
 import java.time.LocalDate
 import java.util.concurrent.{ExecutorService, Executors}
-import java.util.concurrent.locks.ReentrantReadWriteLock
+import java.util.concurrent.locks.{Lock, ReentrantLock, ReentrantReadWriteLock}
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import org.apache.spark.sql.DataFrame
@@ -27,14 +27,23 @@ import graft.finance.ops.Debouncer
   * the tables' current state, matching the per-request DB session of the
   * reference. The Spark driver hosts the server; executors never see it.
   *
-  * Concurrency: requests run on a fixed pool of `workers` daemon threads,
-  * and every route holds one fair read/write lock for the whole request.
-  * Routes that only read (every GET, and the trigger routes, which only
-  * call the orchestrator) share it, so their Spark jobs overlap. Routes
-  * that change the warehouse (the POST/PUT edits of transactions,
-  * validated categories and categories, and backup run/restore/schedule)
-  * hold it exclusively: a read–merge–swap–re-read of `user_categories` is
-  * atomic, and no read lists a directory while this server swaps it.
+  * Concurrency: requests run on a fixed pool of `workers` daemon threads
+  * under two locks. `tableLock` is the fair read/write lock of the
+  * [[graft.finance.TableStore]] the services publish through
+  * ([[ApiMain.build]] passes `store.lock`), and the store takes it
+  * exclusively only while it swaps a table's directory. `writer` is this
+  * server's edit mutex.
+  *  - Routes that only read (every GET, and the trigger routes, which only
+  *    call the orchestrator) hold `tableLock` shared for the whole request,
+  *    so their Spark jobs overlap and no swap moves a directory they list.
+  *  - Edits (the POST/PUT routes of transactions, validated categories and
+  *    categories) hold only `writer`: edits run one at a time, so a
+  *    read–merge–swap–re-read of a table is atomic against other edits,
+  *    while reads keep serving during the merge's Spark jobs. An edit waits
+  *    at its swap for in-flight reads to drain.
+  *  - Backup run, restore and schedule take `writer` and then `tableLock`
+  *    exclusively for the whole request (one acquisition order, so no
+  *    deadlock with an edit's swap): they copy or replace the whole tree.
   *
   * An accepted All-Data category edit schedules
   * `5_full_refresh_validated_retrain_repredict` through `retrainDebouncer`
@@ -55,7 +64,8 @@ final class ApiServer(
     port: Int = 0,
     workers: Int = Runtime.getRuntime.availableProcessors,
     retrainDebouncer: Debouncer =
-      new Debouncer(Debouncer.DefaultDebounceSeconds * 1000L)) {
+      new Debouncer(Debouncer.DefaultDebounceSeconds * 1000L),
+    tableLock: ReentrantReadWriteLock = new ReentrantReadWriteLock(true)) {
 
   private val pool: ExecutorService =
     Executors.newFixedThreadPool(math.max(1, workers), (r: Runnable) => {
@@ -63,7 +73,7 @@ final class ApiServer(
       t.setDaemon(true)
       t
     })
-  private val lock = new ReentrantReadWriteLock(true)
+  private val writer = new ReentrantLock(true)
 
   private val server = HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
   server.setExecutor(pool)
@@ -82,14 +92,22 @@ final class ApiServer(
   def stop(): Unit = { server.stop(0); pool.shutdown() }
   def boundPort: Int = server.getAddress.getPort
 
-  /** Run `handler` under the shared lock if the request only reads the
-    * warehouse (a GET or a trigger), else under the exclusive one. */
+  /** Run `handler` under the locks its route needs (class scaladoc): the
+    * shared `tableLock` for a read or a trigger, `writer` and then the
+    * exclusive `tableLock` for a backup mutation, `writer` for an edit. */
   private def guarded(handler: HttpExchange => Unit)(ex: HttpExchange): Unit = {
-    val readsOnly = ex.getRequestMethod == "GET" ||
-      ex.getRequestURI.getPath.split("/").lastOption.exists(_.startsWith("trigger-"))
-    val held = if (readsOnly) lock.readLock else lock.writeLock
-    held.lock()
-    try handler(ex) finally held.unlock()
+    val path = ex.getRequestURI.getPath
+    if (ex.getRequestMethod == "GET" ||
+        path.split("/").lastOption.exists(_.startsWith("trigger-")))
+      holding(tableLock.readLock)(handler(ex))
+    else if (path.startsWith("/api/backup"))
+      holding(writer)(holding(tableLock.writeLock)(handler(ex)))
+    else holding(writer)(handler(ex))
+  }
+
+  private def holding(l: Lock)(body: => Unit): Unit = {
+    l.lock()
+    try body finally l.unlock()
   }
 
   private def exchange(

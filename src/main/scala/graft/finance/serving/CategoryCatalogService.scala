@@ -3,7 +3,6 @@ package graft.finance.serving
 import java.sql.Timestamp
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.functions.lit
 
 import graft.finance.{CategoryCatalog, TableStore}
 
@@ -29,21 +28,21 @@ final class CategoryCatalogService(
     * case-insensitively. Seeds defaults first so a fresh warehouse lists
     * the standard catalog (the reference seeds on service init). */
   def list(): Seq[Row] = {
-    val seeded = CategoryCatalog.ensureDefaults(catalog(), lit(now()))
+    val seeded = CategoryCatalog.ensureDefaults(catalog(), now())
     CategoryCatalog.listCatalog(seeded, inUse()).collect().toSeq
   }
 
   /** Active names for dropdowns (`category_service.py:91-101`). */
   def activeNames(): Seq[String] =
     CategoryCatalog.activeCategoryNames(
-      CategoryCatalog.ensureDefaults(catalog(), lit(now())))
+      CategoryCatalog.ensureDefaults(catalog(), now()))
       .collect().map(_.getString(0)).toSeq
 
   /** POST /api/categories — add or reactivate; IllegalArgumentException
     * maps to the route's 400. Returns the row as listed. */
   def add(name: String): Row = {
     val next = CategoryCatalog.addCategory(
-      CategoryCatalog.ensureDefaults(catalog(), lit(now())), name, lit(now()))
+      CategoryCatalog.ensureDefaults(catalog(), now()), name, now())
     store.overwrite(Table, next)
     rowFor(name.trim)
   }
@@ -52,7 +51,7 @@ final class CategoryCatalogService(
     * the route's 404 (activating a missing name). */
   def setActive(name: String, isActive: Boolean): Row = {
     val next = CategoryCatalog.setCategoryActive(
-      CategoryCatalog.ensureDefaults(catalog(), lit(now())), name, isActive, lit(now()))
+      CategoryCatalog.ensureDefaults(catalog(), now()), name, isActive, now())
     store.overwrite(Table, next)
     rowFor(name)
   }

@@ -13,6 +13,7 @@ class GraftSessionSpec extends SparkSpec {
     assert(c("spark.sql.adaptive.skewJoin.enabled") == "true")
     assert(c("spark.sql.parquet.compression.codec") == "zstd")
     assert(c("spark.sql.shuffle.partitions") == "64")
+    assert(c("spark.sql.codegen.cache.maxEntries") == "4096")
   }
 
   test("rejects a non-positive shuffle-partition count") {
@@ -31,6 +32,7 @@ class GraftSessionSpec extends SparkSpec {
     assert(spark.conf.get("spark.sql.session.timeZone") == "UTC")
     assert(spark.conf.get("spark.sql.shuffle.partitions") == "4")
     assert(spark.conf.get("spark.sql.objectHashAggregate.sortBased.fallbackThreshold") == "131072")
+    assert(spark.conf.get("spark.sql.codegen.cache.maxEntries") == "4096")
     // SparkContext applies spark.checkpoint.dir at start-up, under its own
     // per-application subdirectory
     val ckpt = spark.sparkContext.getCheckpointDir

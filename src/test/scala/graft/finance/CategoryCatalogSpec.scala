@@ -12,8 +12,8 @@ import org.apache.spark.sql.functions._
 class CategoryCatalogSpec extends SparkSpec {
   import spark.implicits._
 
-  private val now = lit(java.sql.Timestamp.valueOf("2026-01-01 00:00:00"))
-  private val later = lit(java.sql.Timestamp.valueOf("2026-02-01 00:00:00"))
+  private val now = java.sql.Timestamp.valueOf("2026-01-01 00:00:00")
+  private val later = java.sql.Timestamp.valueOf("2026-02-01 00:00:00")
 
   private def empty = CategoryCatalog.emptyCatalog(spark)
 

@@ -70,7 +70,7 @@ class JobsSpec extends SparkSpec {
     assert(names.contains("Dining") && names.contains("Travel") && names.contains("Gas"))
     assert(!names.contains("UNCERTAIN"))
     store.overwrite("categories",
-      CategoryCatalog.setCategoryActive(store.read("categories"), "Dining", isActive = false, lit(now)))
+      CategoryCatalog.setCategoryActive(store.read("categories"), "Dining", isActive = false, now))
     val cat2 = jobs.refreshCategoryCatalog(now).collect()
     assert(cat2.length == cat1.length)            // idempotent, no duplicates
     val dining = cat2.find(_.getAs[String]("name") == "Dining").get

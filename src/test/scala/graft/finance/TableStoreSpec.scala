@@ -135,6 +135,17 @@ class TableStoreSpec extends SparkSpec {
     }
   }
 
+  test("a publish on a thread holding the store's shared lock throws instead of deadlocking") {
+    val store = freshStore()
+    store.lock.readLock.lock()
+    try {
+      val e = intercept[IllegalStateException](store.overwrite("t", Seq(1, 2).toDF("x")))
+      assert(e.getMessage.contains("shared lock"))
+    } finally store.lock.readLock.unlock()
+    store.overwrite("t", Seq(1, 2).toDF("x"))
+    assert(store.read("t").count() == 2)
+  }
+
   test("appendNew never updates existing rows (append-only incremental)") {
     val store = freshStore()
     store.appendNew("fct", Seq(("t1", "Dining")).toDF("transaction_id", "cat"), "transaction_id")

@@ -2,9 +2,10 @@ package graft.finance.serving
 
 import java.net.{HttpURLConnection, URI}
 import java.nio.charset.StandardCharsets
+import java.sql.Timestamp
 import java.time.LocalDate
 import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
+import java.util.concurrent.atomic.{AtomicBoolean, AtomicInteger, AtomicLong, AtomicReference}
 
 import scala.jdk.CollectionConverters._
 
@@ -127,26 +128,30 @@ class ApiServerSpec extends SparkSpec {
     try f(server.boundPort) finally server.stop()
   }
 
+  /** The write half's view of the fixture's transactions. */
+  private val transactionsFixture = () => joinedFixture.select(
+    col("transaction_id"),
+    col("uc_master_category").as("master_category"),
+    col("predicted_master_category"))
+
   /** Server with the write half wired: a fresh warehouse-backed
     * UserCategoryService and a recording trigger. */
   private def withWritableServer[A](
       joined: () => DataFrame = () => joinedFixture,
       trigger: Option[String => String] = Some(name => s"run-for-$name"),
-      retrain: Debouncer = new Debouncer(45000L))(f: (Int, TableStore) => A): A = {
+      retrain: Debouncer = new Debouncer(45000L),
+      now: () => Timestamp = () => Timestamp.valueOf("2024-02-03 00:00:00"))(
+      f: (Int, TableStore) => A): A = {
     val wh = java.nio.file.Files.createTempDirectory("graft-api-wh").toString
     val store = new TableStore(spark, wh)
-    val tx = () => joinedFixture.select(
-      col("transaction_id"),
-      col("uc_master_category").as("master_category"),
-      col("predicted_master_category"))
-    val svc = new UserCategoryService(spark, store, tx,
-      now = () => java.sql.Timestamp.valueOf("2024-02-03 00:00:00"))
+    val svc = new UserCategoryService(spark, store, transactionsFixture, now)
     val server = new ApiServer(
       joined, () => validatedFixture, () => simplefinFixture,
       userCategories = Some(svc),
       trigger = trigger,
       today = () => LocalDate.parse("2024-02-03"),
-      retrainDebouncer = retrain).start()
+      retrainDebouncer = retrain,
+      tableLock = store.lock).start()
     try f(server.boundPort, store) finally server.stop()
   }
 
@@ -561,6 +566,117 @@ class ApiServerSpec extends SparkSpec {
         assert(got == last.get((id, field)), s"$id.$field lost an update")
       }
     }
+  }
+
+  test("a GET completes while an edit is held inside its merge") {
+    // the edit's stamp is taken while it builds its merge batch: hold it
+    // there, after its reads and before its swap
+    val held = new CountDownLatch(1)
+    val release = new CountDownLatch(1)
+    val armed = new AtomicBoolean(false)
+    val now = () => {
+      if (armed.getAndSet(false)) { held.countDown(); release.await(120, TimeUnit.SECONDS) }
+      Timestamp.valueOf("2024-02-03 00:00:00")
+    }
+    withWritableServer(now = now) { (port, _) =>
+      armed.set(true)
+      val edit = new AtomicReference[(Int, String)]()
+      val editor = new Thread(() => edit.set(send(port, "POST",
+        "/api/transactions/t1/categorize", """{"master_category":"Held"}""")))
+      editor.start()
+      try {
+        assert(held.await(60, TimeUnit.SECONDS), "the edit never reached its merge")
+        val read = new AtomicReference[(Int, String)]()
+        val reader = new Thread(() => read.set(get(port, "/api/transactions?limit=2")))
+        reader.start()
+        reader.join(60000)
+        assert(read.get != null, "the GET waited behind the held edit")
+        assert(read.get._1 == 200, read.get._2)
+      } finally release.countDown()
+      editor.join(120000)
+      assert(edit.get != null && edit.get._1 == 200 && edit.get._2.contains("Held"))
+    }
+  }
+
+  test("readers looping across 50 edits never get a 500 or a missing table") {
+    val wh = java.nio.file.Files.createTempDirectory("graft-api-swap").toString
+    val store = new TableStore(spark, wh)
+    val predictions = joinedFixture.drop("uc_validated", "uc_master_category", "uc_notes")
+    // every page reads the stored user_categories: a swap under a reader
+    // fails its read (PATH_NOT_FOUND or a deleted file), a 500
+    val joined = () => Serving.servingJoin(predictions, store.read("user_categories"))
+    val svc = new UserCategoryService(spark, store, transactionsFixture)
+    svc.categorize("t1", "Seed")
+    val server = new ApiServer(
+      joined, () => validatedFixture, () => simplefinFixture,
+      userCategories = Some(svc),
+      today = () => LocalDate.parse("2024-02-03"),
+      tableLock = store.lock).start()
+    try {
+      val port = server.boundPort
+      val done = new AtomicBoolean(false)
+      val failures = new ConcurrentLinkedQueue[String]()
+      val reads = new AtomicInteger()
+      val readers = (0 until 3).map { _ =>
+        val t = new Thread(() =>
+          while (!done.get) {
+            val (status, body) = get(port, "/api/transactions?limit=5")
+            reads.incrementAndGet()
+            if (status != 200 || !body.contains("\"total_count\":5") ||
+                !body.contains("\"uc_master_category\":\"Seed\""))
+              failures.add(s"$status $body")
+          })
+        t.start(); t
+      }
+      try {
+        for (i <- 0 until 50) {
+          val (status, body) = send(port, "PUT", "/api/transactions/t1/notes",
+            s"""{"notes":"n$i"}""")
+          assert(status == 200, body)
+        }
+      } finally {
+        done.set(true)
+        readers.foreach(_.join(60000))
+      }
+      assert(failures.isEmpty, failures.asScala.take(3).mkString("\n"))
+      assert(reads.get >= 50, s"only ${reads.get} reads overlapped the edits")
+      assert(store.read("user_categories").collect().head.getAs[String]("notes") == "n49")
+    } finally server.stop()
+  }
+
+  test("a repeated edit and a repeated GET /api/categories compile no new classes") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    // a clock that moves a second per call: every request gets a new stamp
+    val clock = new AtomicLong(
+      Timestamp.valueOf("2024-02-03 00:00:00").getTime)
+    val tick = () => new Timestamp(clock.addAndGet(1000L))
+    val wh = java.nio.file.Files.createTempDirectory("graft-api-codegen").toString
+    val store = new TableStore(spark, wh)
+    val server = new ApiServer(
+      () => joinedFixture, () => validatedFixture, () => simplefinFixture,
+      userCategories = Some(new UserCategoryService(spark, store, transactionsFixture, tick)),
+      categoryCatalog = Some(new CategoryCatalogService(spark, store,
+        () => Seq("Gas", "CustomCat").toDF("category"), tick)),
+      today = () => LocalDate.parse("2024-02-03"),
+      tableLock = store.lock).start()
+    try {
+      val port = server.boundPort
+      def edit(): Unit = {
+        val (s, b) = send(port, "POST", "/api/transactions/t2/categorize",
+          """{"master_category":"Groceries","notes":"weekly"}""")
+        assert(s == 200, b)
+      }
+      def categories(): Unit = {
+        val (s, b) = get(port, "/api/categories")
+        assert(s == 200 && b.contains("Groceries"), b)
+      }
+      // the first edit creates the table, the second is the first over a
+      // stored table: both pay their compiles
+      edit(); edit(); categories()
+      val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      edit(); categories()
+      assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before == 0)
+    } finally server.stop()
   }
 
   test("All-Data category edits debounce into one retrain launch; unconfigured launches none") {
