@@ -632,7 +632,7 @@ object DedupCatalog {
     // difference between shuffling the fact table and dropping 90% of it
     // at the scan; Spark's own runtime row-group filters cover simple
     // equi-joins, but an explicit mergeable bloom composes with arbitrary
-    // downstream plans (and streams — see EventStreams.dropProbablySeen).
+    // downstream plans, streaming ones included.
     // The key hash is xxhash64: Spark-side only (the filter never reaches
     // the output), so cross-engine md5 parity is not needed here.
     QueryDef(

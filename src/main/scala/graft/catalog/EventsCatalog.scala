@@ -120,7 +120,7 @@ object EventsCatalog {
     // round-2 lesson: to_timestamp would yield TIMESTAMPTZ).
     QueryDef(
       "e6_sliding_window",
-      "Streaming analog (EventStreams.slidingCounts): 1-hour windows sliding every 15 min — each event in 4 overlapping windows; batch twin of the watermarked sliding aggregate",
+      "Sliding-window aggregation (Spark's window(ts, '1 hour', '15 minutes')): 1-hour windows sliding every 15 min — each event in 4 overlapping windows; batch form of the watermarked sliding aggregate",
       Some("""
         SELECT make_timestamp(epoch_us(ts) // 900000000 * 900000000
                               - k * 900000000) AS window_start,
@@ -232,7 +232,7 @@ object EventsCatalog {
     },
 
     // ---- E9: stream dedup (dropDuplicatesWithinWatermark twin) -------------
-    // The batch twin of EventStreams.appendOnlyByKey: keep the FIRST
+    // The batch twin of a streaming dedup: keep the FIRST
     // arrival per dedup key, drop later repeats. The streaming form
     // (`dropDuplicatesWithinWatermark`) keeps whichever row arrives first
     // and evicts key state past the watermark; the deterministic batch
@@ -244,7 +244,7 @@ object EventsCatalog {
     // delivery collapsing retried sends of the same logical action.
     QueryDef(
       "e9_stream_dedup",
-      "Stream-dedup twin (EventStreams.appendOnlyByKey / dropDuplicatesWithinWatermark): first arrival per (user_id, event_type, day) wins under the deterministic (ts, event_id) order — one window pass, rn=1 pushed map-side",
+      "Stream-dedup twin (dropDuplicatesWithinWatermark): first arrival per (user_id, event_type, day) wins under the deterministic (ts, event_id) order — one window pass, rn=1 pushed map-side",
       Some("""
         WITH keyed AS (
           SELECT event_id, user_id, event_type, CAST(ts AS DATE) AS day, ts, value,
@@ -307,11 +307,11 @@ object EventsCatalog {
     // e4's inner join answers "which purchases preceded this click"; the
     // left-outer form answers the attribution question warehouses actually
     // ask — "which clicks CONVERTED, and which did not" — unmatched clicks
-    // survive with null purchase columns. In the streaming twin
-    // (EventStreams.clickPurchaseLeftOuter, EventStreamsSpec) the null row
-    // can only be emitted once the click-side watermark proves no matching
-    // purchase can still arrive — the outer-join-needs-watermark rule —
-    // making this the canonical "late data vs completeness" operator. Batch
+    // survive with null purchase columns. In a streaming left-outer join
+    // the null row can only be emitted once the click-side watermark
+    // proves no matching purchase can still arrive — the
+    // outer-join-needs-watermark rule — making this the canonical "late
+    // data vs completeness" operator. Batch
     // shape: the identical range condition, one user-keyed exchange; the
     // null fraction is the unconverted-click rate at any scale.
     QueryDef(

@@ -1061,11 +1061,10 @@ object ExtensionCatalog {
     // a touched day's rows absent from the batch VANISH (what separates
     // this from i2's key-level upsert), untouched days are never read or
     // rewritten. At 100 TB this is how a late-arriving day is restated:
-    // one directory, not the table. The REAL write path is
-    // `TableStore.overwriteDynamicPartitions` (Spark-native
-    // partitionOverwriteMode=dynamic, spec-gated in TableStoreSpec); this
-    // entry pins the protocol's read-side algebra: anti-join on the
-    // batch's distinct partition set (tiny → broadcast) ∪ the batch.
+    // one directory, not the table. The finance warehouse publishes only
+    // whole tables (`TableStore.overwrite`); this entry pins the
+    // protocol's read-side algebra: anti-join on the batch's distinct
+    // partition set (tiny → broadcast) ∪ the batch.
     QueryDef(
       "i9_partition_overwrite",
       "Dynamic partition overwrite protocol: base days not touched by the restatement batch survive untouched; touched days are replaced wholesale (dropped rows vanish) — anti-join on the batch's distinct day set ∪ batch",
@@ -1972,10 +1971,10 @@ object ExtensionCatalog {
     // 256×256 (ship-date, partkey) grid, cuts the 16-bit morton keys into
     // 64 files, and emits each file's bounding box plus the needs_read
     // verdict for a fixed 2-D range query — i.e. the skipping index
-    // itself, which is what makes the layout auditable cross-engine (the
-    // production WRITE is io/Layout.writeZOrdered — repartitionByRange on
-    // the morton key — so parquet's ordinary per-file min/max BECOME these
-    // boxes; LayoutSpec measures the real-file pruning win). Everything is
+    // itself, which is what makes the layout auditable cross-engine (a
+    // Z-clustered write — repartitionByRange on the morton key — makes
+    // parquet's ordinary per-file min/max BECOME these boxes; LayoutSpec
+    // measures the pruning win over a linear sort). Everything is
     // shift/mask/div builtins in whole-stage codegen: map-only until one
     // partial-aggregated 64-group exchange. Quantization bounds come from
     // a 1-row broadcast aggregate (span/max), not hardcoded constants, so
@@ -2031,14 +2030,10 @@ object ExtensionCatalog {
     // then pays a task + an open per file. Compaction groups small files
     // into rewrite bins near a target size WITHOUT crossing table
     // partitions (a cross-partition output file would break partition
-    // pruning). io/Compaction executes compaction against a real directory
-    // two ways, both CompactionSpec-gated: driver-side FFD (`compact`) and
-    // the one-job distributed rewrite (`compactDistributed` — one shuffle
-    // keyed on the planned bin, exactly one output file per bin, same
-    // staged-swap/_COMMITTED protocol). THIS entry gates their shared
-    // distributed planner `Compaction.planBins` — for when the file listing
-    // is itself big data (a lake catalog's metadata table lists millions
-    // of files) and driver-side planning is the collect() anti-pattern.
+    // pruning). THIS entry gates the distributed planner
+    // `Compaction.planBins` — for when the file listing is itself big
+    // data (a lake catalog's metadata table lists millions of files) and
+    // driver-side planning is the collect() anti-pattern.
     // Two windows bounded by files-per-partition, never the listing.
     // Files here are synthesized from events as one per (event_type
     // partition, ingest day); the 24 KB target is sized so the sweep

@@ -1007,12 +1007,8 @@ object ParityCatalog {
     // ---- DQ5: the profiler's SKETCH path — the PRODUCTION plan --------------
     // dq3 gates the exact Expand form; this entry runs the form you'd run
     // at 100 TB — Profiler.profileApprox, HLL distincts, ONE aggregate, NO
-    // Expand. Rounds 5–12 gated the sketch through profileApproxGated,
-    // which computed the exact Expand NEXT to the sketch purely to emit an
-    // in-row accuracy boolean — 5.9 s of gate scaffolding sitting at #1 in
-    // the bench suite (round-12 verdict #6). The accuracy bound now lives
-    // in ProfilerSpec (|HLL − exact| <= 3·rsd·exact on the sf0.001 events
-    // fixture, the identical computation at test SF), and THIS entry
+    // Expand. The accuracy bound lives in ProfilerSpec (|HLL − exact| <=
+    // 3·rsd·exact on the sf0.001 events fixture), and THIS entry
     // hash-gates what the production plan can cross-engine-gate: the exact
     // legs (counts, nulls, micro null fraction, lexicographic min/max)
     // value-strict, plus `approx_positive` — the HLL estimate is >= 1 iff

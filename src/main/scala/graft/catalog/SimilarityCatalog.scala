@@ -680,8 +680,7 @@ object SimilarityCatalog {
     },
 
     // ---- S8: product-quantization encode + ADC search ----------------------
-    // The PQ CONTRACT oracle-gated (operators/PqIndex is the production
-    // mapPartitions path with KMeans codebooks; its float/RNG training
+    // The PQ CONTRACT oracle-gated (float/RNG-trained KMeans codebooks
     // can't hash-compare, so this entry states the machinery in the g3
     // integer-exact posture): micro-unit coordinates, 4 subspaces × 16
     // dims, SAMPLE codebooks (the 4 smallest vec_ids' subvectors — no

@@ -49,20 +49,6 @@ final class Jobs(spark: SparkSession, store: TableStore) {
     }
   }
 
-  /** Category catalog refresh (`category_service.py:70-101` — the ensure +
-    * sync every catalog read performs): seed missing defaults, add in-use
-    * names from the live tables, persist via the store. Run after
-    * [[runAllModels]] so the in-use scan sees fresh facts. Returns the
-    * refreshed catalog. */
-  def refreshCategoryCatalog(
-      now: java.sql.Timestamp = java.sql.Timestamp.from(java.time.Instant.now())): DataFrame = {
-    val catalog = store.readOrEmpty("categories", CategoryCatalog.schema)
-    val next = CategoryCatalog.syncInUse(
-      CategoryCatalog.ensureDefaults(catalog, now), Serving.inUseCategories(store), now)
-    store.overwrite("categories", next)
-    store.read("categories")
-  }
-
   /** `3_run_all_dbt_models` — recompute the full transform DAG: the facts,
     * then the predictions fact. Set `fullRefreshValidated` for the
     * `z_b`/`5_` full-refresh variants. */
@@ -176,12 +162,10 @@ final class Jobs(spark: SparkSession, store: TableStore) {
   /** `2_ingest_and_predict` head, at-scale form (round-9 verdict #7): pull
     * the whole access-URL fleet through the `graft-simplefin` DSv2 source —
     * one task per url×chunk, fetch + retry on EXECUTOR threads — and
-    * append the batch to the raw table. The driver-side
-    * `SimplefinConnector.fetchAll` stays as the one-URL parity path (it
-    * keeps the reference's swallow-a-bad-chunk semantics,
-    * `simplefin_service.py`); this is the path a many-executor deployment
-    * runs, and a bad chunk fails the job loudly instead. `nowEpoch` is
-    * explicit because the chunk grid must be deterministic per batch.
+    * append the batch to the raw table. Unlike the reference's
+    * swallow-a-bad-chunk loop (`simplefin_service.py`), a bad chunk fails
+    * the job loudly. `nowEpoch` is explicit because the chunk grid must be
+    * deterministic per batch.
     * Returns the ingested batch's row count. */
   def ingestFleet(
       accessUrls: Seq[String],

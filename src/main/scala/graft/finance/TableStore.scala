@@ -54,29 +54,6 @@ final class TableStore(spark: SparkSession, val root: String) {
     if (exists(table)) read(table)
     else spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
 
-  /** Dynamic partition overwrite — the date-partitioned BACKFILL protocol:
-    * only the partitions PRESENT in the batch are replaced (wholesale —
-    * a touched partition's rows not in the batch disappear, which is the
-    * point of a restatement); untouched partitions' files are never
-    * listed, rewritten, or even read. At 100 TB this is how a
-    * late-arriving day is restated: one directory rewritten, not the
-    * table. Uses Spark's native `partitionOverwriteMode=dynamic` as a
-    * per-write option (no session-conf mutation — catalog queries share
-    * the session). Atomicity contract is Spark's own dynamic-overwrite
-    * commit (per-partition staging) — same contract as Hive/Spark
-    * INSERT OVERWRITE, weaker than [[overwrite]]'s whole-table swap but
-    * scoped to exactly the restated partitions. */
-  def overwriteDynamicPartitions(
-      table: String, batch: DataFrame, partitionBy: Seq[String]): Unit = {
-    require(partitionBy.nonEmpty, "overwriteDynamicPartitions needs partition columns")
-    batch.write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy(partitionBy: _*)
-      .parquet(dir(table).toString)
-    // the directory keeps its inode: drop its schema rather than trust mtime
-    graft.io.SchemaMemo.invalidate(dir(table).toString)
-  }
-
   /** Full refresh: write to a temp sibling, swap atomically. The written
     * schema is memoized for the generation the swap publishes, so reading
     * the table back starts no inference job. */

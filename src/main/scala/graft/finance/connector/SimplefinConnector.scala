@@ -8,17 +8,18 @@ import org.apache.spark.sql.Row
 import org.json4s._
 import org.json4s.jackson.JsonMethods
 
-/** SimpleFIN Bridge extractor — SURVEY §2.1 S1/S2
-  * (`dagster/extractors/simplefin_api.py:36-276`): chunked paginated pulls,
+/** SimpleFIN Bridge extractor pieces — SURVEY §2.1 S1/S2
+  * (`dagster/extractors/simplefin_api.py:36-276`): the 45-day chunk grid,
   * Basic-Auth parsed from the access URL, retrying transport, account →
-  * transaction flattening, in-flight transaction_id dedup, per-chunk error
-  * isolation, error-message sanitization.
+  * transaction flattening with transaction_id dedup, error-message
+  * sanitization. The `graft-simplefin` DSv2 source
+  * (`graft.sources.SimplefinTableProvider`) runs them, one task per
+  * (access URL, chunk).
   *
   * The HTTP transport is injectable (`Transport`) so the connector is fully
-  * testable with zero egress; the chunk loop stays driver-side — it is 5
-  * tiny HTTP calls, not a distributed workload. The flattened rows follow
-  * the column order of [[graft.finance.Schemas.simplefinRaw]], the raw
-  * append load's schema (S3).
+  * testable with zero egress. The flattened rows follow the column order of
+  * [[graft.finance.Schemas.simplefinRaw]], the raw append load's schema
+  * (S3).
   */
 object SimplefinConnector {
 
@@ -99,67 +100,16 @@ object SimplefinConnector {
   def sanitizeError(msg: String): String =
     tokenRe.replaceAllIn(urlRe.replaceAllIn(msg, "[URL_REMOVED]"), "[TOKEN_REMOVED]")
 
-  final case class FetchResult(
-      rows: Seq[Row],
-      errors: Seq[String],
-      successfulInstitutions: Set[String],
-      failedChunks: Int)
-
-  /** Fetch all chunks, flatten `accounts[].transactions[]` to raw rows with
-    * in-flight transaction_id dedup and per-chunk error isolation: a failed
-    * chunk logs and continues (`:245-249`), it never fails the extraction. */
-  def fetchAll(
-      transport: Transport,
-      accessUrl: String,
-      nowEpoch: Long,
-      policy: RetryPolicy = RetryPolicy()): FetchResult = {
-    val (base, auth) = parseAccessUrl(accessUrl)
-    val importTs = Instant.ofEpochSecond(nowEpoch)
-    val importTimestamp = importTs.atOffset(ZoneOffset.UTC).toLocalDateTime.toString.replace('T', ' ')
-    val importDate = importTs.atOffset(ZoneOffset.UTC).toLocalDate.toString
-
-    val seen = mutable.Set[String]()
-    val rows = mutable.ArrayBuffer[Row]()
-    val errors = mutable.ArrayBuffer[String]()
-    val okInstitutions = mutable.Set[String]()
-    var failedChunks = 0
-
-    chunkRanges(nowEpoch).foreach { case (s, e) =>
-      val url = s"$base/accounts?start-date=$s&end-date=$e"
-      try {
-        val (status, body) = getWithRetry(transport, url, auth, policy)
-        if (status == 403) throw HttpError(403,
-          "Authentication failed (403). The access URL may be invalid, expired, or revoked.")
-        if (status == 402) throw HttpError(402,
-          "Payment required (402). The SimpleFIN service may require payment.")
-        if (status >= 400) throw HttpError(status, s"HTTP $status")
-
-        val (chunkRows, chunkErrs, chunkInstitutions) =
-          parseChunk(body, seen, importTimestamp, importDate)
-        rows ++= chunkRows
-        errors ++= chunkErrs
-        okInstitutions ++= chunkInstitutions
-      } catch {
-        case HttpError(st, m) if st == 402 || st == 403 => throw HttpError(st, m) // surface immediately
-        case e: Exception =>
-          failedChunks += 1
-          errors += sanitizeError(s"Request failed for range $s-$e: ${e.getMessage}")
-      }
-    }
-    FetchResult(rows.toSeq, errors.toSeq, okInstitutions.toSet, failedChunks)
-  }
-
   /** One chunk body → (raw rows, sanitized API errors, institutions that
-    * contributed rows). `seen` dedups transaction ids — fetchAll passes one
-    * set across chunks (the reference's in-flight dedup); the DSv2 source
-    * (`graft.sources.SimplefinTableProvider`) passes a per-chunk set and
-    * leaves cross-chunk dedup to the warehouse's W1 latest-dedup, which a
-    * parallel reader can't share state for. */
+    * contributed rows). Transaction ids are deduped within the chunk;
+    * cross-chunk dedup is the warehouse's W1 latest-dedup, since the DSv2
+    * source (`graft.sources.SimplefinTableProvider`) parses chunks in
+    * parallel tasks that share no state. */
   def parseChunk(
       body: String,
-      seen: mutable.Set[String],
       importTimestamp: String,
       importDate: String): (Seq[Row], Seq[String], Set[String]) = {
+    val seen = mutable.Set[String]()
     val rows = mutable.ArrayBuffer[Row]()
     val errors = mutable.ArrayBuffer[String]()
     val okInstitutions = mutable.Set[String]()

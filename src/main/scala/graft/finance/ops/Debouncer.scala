@@ -38,6 +38,8 @@ final class Debouncer(
     pending = Some((cancel, token))
   }
 
+  /** Whether an action is scheduled and has not fired. Only OpsSpec reads
+    * it, to observe the race above. */
   def hasPending: Boolean = lock.synchronized(pending.isDefined)
 }
 

@@ -87,7 +87,7 @@ object ApiMain {
 
     val service = new UserCategoryService(spark, store, () => joined())
 
-    // in-use scan for the catalog listing, as Jobs.refreshCategoryCatalog
+    // in-use scan for the catalog listing
     val catalogSvc = new CategoryCatalogService(spark, store, () => Serving.inUseCategories(store))
     val backupSvc = new BackupService(warehouseDir,
       sys.env.getOrElse("GRAFT_BACKUP_DIR", s"$warehouseDir/../backups"))

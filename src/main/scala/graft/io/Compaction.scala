@@ -1,108 +1,27 @@
 package graft.io
 
-import org.apache.hadoop.fs.{FileSystem, FileUtil, Path}
-import org.apache.spark.sql.SparkSession
-
-/** Small-file compaction — the steady-state ops problem of every
+/** Small-file compaction planning — the steady-state ops problem of every
   * incremental lake layout: append-shaped writers (TableStore.appendNew,
   * streaming sinks) accrete files far below the scan-efficient size, and
   * each one costs a task, a footer read, and scheduler pressure; at 100 TB
   * a table can rot into millions of KB-files that make scans
   * metadata-bound. Compaction rewrites many small files into few
-  * target-sized ones without changing a row.
-  *
-  * Planning is first-fit-decreasing over the FILE LISTING — metadata, not
-  * data (the listing is how any engine plans a scan, and it lives on the
-  * driver). FFD gives the convergence property a scheduled job needs: no
-  * two output groups can still merge under the target, so one pass reaches
-  * a fixpoint instead of re-rewriting data every run. Files over the
-  * target get a singleton group.
-  *
-  * Crash safety is by construction, not by cleanup:
-  *
-  *  - Phase 1 builds the COMPLETE new layout in a staging directory
-  *    without ever mutating the source: merged groups are read+written,
-  *    singletons are COPIED (bounded write amplification traded for the
-  *    invariant that the source stays whole until commit).
-  *  - Phase 2 writes a `_COMMITTED` marker; only then
-  *  - Phase 3 swaps directories (rename out, rename in, delete old), with
-  *    every rename's boolean result CHECKED — Hadoop signals failure by
-  *    returning false, not throwing.
-  *
-  * A crash at ANY point leaves a state [[recover]] can repair without data
-  * loss: an unmarked staging dir is garbage (the source is still
-  * complete); a marked one plus a missing source means the swap died
-  * mid-flight and is rolled forward; a leftover `_old` dir with the source
-  * present is a completed swap's debris. `compact` runs recovery on entry.
-  * Concurrent READERS may observe a brief not-found window between the two
-  * swap renames — this is a single-writer maintenance operation, not a
-  * transactional commit (that is what table formats add).
+  * target-sized ones without changing a row; this object plans which files
+  * share an output file.
   */
 object Compaction {
 
-  final case class FileInfo(path: String, bytes: Long)
-  final case class Group(files: Seq[FileInfo]) {
-    def bytes: Long = files.map(_.bytes).sum
-  }
-  final case class Stats(filesBefore: Int, filesAfter: Int, bytes: Long)
-
-  private val Marker = "_COMMITTED"
-
-  // siblings via getParent/getName, not string concat: a trailing-slash
-  // caller would otherwise place staging INSIDE the data directory and the
-  // phase-3 swap renames would fail mid-operation.
-  private def sibling(dir: String, suffix: String): Path = {
-    val p = new Path(dir)
-    new Path(p.getParent, p.getName + suffix)
-  }
-  private def stagedPath(dir: String) = sibling(dir, "._compact_tmp")
-  private def oldPath(dir: String) = sibling(dir, "._compact_old")
-
-  /** Data files directly under `dir` (no recursion — partitioned layouts
-    * compact per partition directory, which also bounds one run's blast
-    * radius; [[compact]] refuses a directory with subdirectories). */
-  def listDataFiles(spark: SparkSession, dir: String): Seq[FileInfo] = {
-    val p = new Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) Seq.empty
-    else fs.listStatus(p).toSeq
-      .filter(s => s.isFile && !s.getPath.getName.startsWith("_")
-        && !s.getPath.getName.startsWith("."))
-      .map(s => FileInfo(s.getPath.toString, s.getLen))
-  }
-
-  /** First-fit-decreasing byte-bin planning: every file in exactly one
-    * group, no multi-file group over `targetBytes`, files over the target
-    * isolated as singletons, and — the FFD guarantee next-fit lacks — NO
-    * TWO GROUPS whose total still fits the target (if two such groups
-    * existed, every file of the later one fit the earlier one when it was
-    * placed). Deterministic (size desc, path tiebreak). */
-  def planGroups(files: Seq[FileInfo], targetBytes: Long): Seq[Group] = {
-    require(targetBytes > 0, "targetBytes must be positive")
-    val sorted = files.sortBy(f => (-f.bytes, f.path))
-    val bins = scala.collection.mutable.ArrayBuffer.empty[
-      (scala.collection.mutable.ArrayBuffer[FileInfo], Long)]
-    sorted.foreach { f =>
-      bins.indexWhere { case (_, used) => used + f.bytes <= targetBytes } match {
-        case -1 => bins += ((scala.collection.mutable.ArrayBuffer(f), f.bytes))
-        case i => val (buf, used) = bins(i); buf += f; bins(i) = (buf, used + f.bytes)
-      }
-    }
-    bins.map { case (buf, _) => Group(buf.toSeq) }.toSeq
-  }
-
-  /** Distributed twin of [[planGroups]] for when the file listing is
-    * itself big data: a lake catalog's metadata table (Iceberg's `files`,
-    * a Delta log checkpoint) lists MILLIONS of files across thousands of
-    * table partitions — planning that on the driver is the collect()
+  /** Bin-pack planning for when the file listing is itself big data: a
+    * lake catalog's metadata table (Iceberg's `files`, a Delta log
+    * checkpoint) lists MILLIONS of files across thousands of table
+    * partitions — planning that on the driver is the collect()
     * anti-pattern. This form plans in the engine: within each table
     * partition (bins must never span partitions — a cross-partition output
     * file would break partition pruning), order files by (size DESC,
     * file_id) and cut the running total at the target: `bin =
     * cum_before div target` — sorted-fill, the planner approximation real
     * systems use (a bin can overflow by at most one file; exact packing is
-    * NP-hard; unlike [[planGroups]]'s FFD it trades the one-pass-fixpoint
-    * guarantee for a single window pass with no per-bin driver state).
+    * NP-hard) in a single window pass with no per-bin driver state.
     * Oversize files land in sparse singleton bins. Both windows partition
     * by the table partition (+bin), so sorts are bounded by
     * files-per-partition, never the listing.
@@ -132,200 +51,5 @@ object Compaction {
     binned
       .withColumn("bin_bytes", sum(sizeCol).over(perBin))
       .withColumn("n_files_in_bin", count(lit(1)).over(perBin))
-  }
-
-  private def mustRename(fs: FileSystem, src: Path, dst: Path): Unit =
-    require(fs.rename(src, dst),
-      s"Compaction: rename $src -> $dst failed (Hadoop returned false); " +
-        "aborting before any destructive step")
-
-  /** Phases 2+3 shared by [[compact]] and [[compactDistributed]]: write the
-    * `_COMMITTED` marker into the complete staged layout, then the checked
-    * three-rename swap. Everything before this call must leave the source
-    * directory untouched — that invariant is what makes [[recover]] safe. */
-  private def commitAndSwap(fs: FileSystem, dir: String, staged: Path): Unit = {
-    fs.create(new Path(staged, Marker), true).close()
-    val p = new Path(dir)
-    val old = oldPath(dir)
-    mustRename(fs, p, old)
-    mustRename(fs, staged, p)
-    fs.delete(new Path(dir, Marker), false)
-    fs.delete(old, true)
-    ()
-  }
-
-  /** Repair the debris of a crashed run. Safe in every reachable state
-    * because phase 1 never mutates the source:
-    *  - source present + unmarked staging → staging is garbage, drop it
-    *  - source present + marked staging   → swap never started, drop it
-    *    (the source is a complete equivalent layout)
-    *  - source MISSING + `_old` present   → the swap's first rename ran:
-    *    roll BACK by restoring `_old` (marked staging, if intact, is then
-    *    redundant and dropped — the next run recompacts)
-    *  - `_old` present + source present   → a finished swap's debris, drop */
-  def recover(spark: SparkSession, dir: String): Unit = {
-    val p = new Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val staged = stagedPath(dir)
-    val old = oldPath(dir)
-    if (!fs.exists(p) && fs.exists(old)) mustRename(fs, old, p)
-    if (fs.exists(old) && fs.exists(p)) { fs.delete(old, true); () }
-    if (fs.exists(staged)) { fs.delete(staged, true); () }
-  }
-
-  /** Compact `dir` to ~`targetBytes` files. Runs [[recover]] first;
-    * refuses a directory that contains subdirectories (partitioned roots
-    * are compacted per partition). */
-  def compact(spark: SparkSession, dir: String, targetBytes: Long): Stats = {
-    recover(spark, dir)
-    val p = new Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(p), s"Compaction: $dir does not exist")
-    val subdirs = fs.listStatus(p).filter(_.isDirectory).map(_.getPath.getName)
-    require(subdirs.isEmpty,
-      s"Compaction: $dir contains subdirectories (${subdirs.take(3).mkString(", ")}…) — " +
-        "a partitioned layout is compacted per partition directory, and a " +
-        "whole-directory swap here would destroy the unlisted partitions")
-    val files = listDataFiles(spark, dir)
-    val groups = planGroups(files, targetBytes)
-
-    // ---- phase 1: build the complete new layout; source untouched --------
-    val staged = stagedPath(dir)
-    fs.mkdirs(staged)
-    groups.zipWithIndex.foreach { case (g, i) =>
-      if (g.files.size == 1) {
-        // COPY, not move: until commit, `dir` must remain the complete
-        // authoritative layout a retry can always fall back to
-        val src = new Path(g.files.head.path)
-        FileUtil.copy(fs, src, fs, new Path(staged, f"keep-$i%05d-${src.getName}"),
-          false, spark.sparkContext.hadoopConfiguration)
-        ()
-      } else {
-        val groupDir = new Path(staged, f"group-$i%05d")
-        spark.read.parquet(g.files.map(_.path): _*)
-          .coalesce(1)
-          .write.parquet(groupDir.toString)
-        fs.listStatus(groupDir).filter(_.isFile)
-          .filter(s => !s.getPath.getName.startsWith("_"))
-          .foreach(s => mustRename(fs, s.getPath,
-            new Path(staged, f"merged-$i%05d-${s.getPath.getName}")))
-        fs.delete(groupDir, true)
-        ()
-      }
-    }
-
-    // ---- phases 2+3: marker, then checked swap ----------------------------
-    commitAndSwap(fs, dir, staged)
-    Stats(files.size, listDataFiles(spark, dir).size, files.map(_.bytes).sum)
-  }
-
-  /** In-engine execution of [[planBins]]'s plan over one partition
-    * directory — x16's execution half. [[compact]] runs a DRIVER loop of
-    * per-group jobs (fine for one directory's worth of files); at lake
-    * scale the plan is itself a table and the rewrite must be ONE job:
-    * here every bin is materialized concurrently — a single shuffle keyed
-    * on the planned bin id moves each row to its bin's reducer, and the
-    * writer emits exactly one file per bin. The shuffle moves the same
-    * bytes any rewrite must move; what changes is scheduling: thousands
-    * of bins become one stage, not thousands of sequential driver jobs.
-    *
-    * Deliberate deltas from [[compact]], both documented trade-offs:
-    *  - oversize singletons are REWRITTEN, not copied — uniform output
-    *    encoding (fresh row groups, stats, one file per bin) for bounded
-    *    extra write amplification;
-    *  - output rows are the same multiset but not byte-order-identical
-    *    within a file (shuffle order) — parquet consumers never depend on
-    *    intra-file order, and the spec gates the multiset.
-    *
-    * Crash safety is IDENTICAL to [[compact]]: the whole new layout is
-    * built in the staging sibling (the Spark job writes under it; the
-    * source is only ever read), then the same `_COMMITTED` marker +
-    * checked swap, so [[recover]] handles every crash state unchanged. */
-  def compactDistributed(spark: SparkSession, dir: String, targetBytes: Long): Stats = {
-    import org.apache.spark.sql.functions._
-    recover(spark, dir)
-    val p = new Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(p), s"Compaction: $dir does not exist")
-    val subdirs = fs.listStatus(p).filter(_.isDirectory).map(_.getPath.getName)
-    require(subdirs.isEmpty,
-      s"Compaction: $dir contains subdirectories (${subdirs.take(3).mkString(", ")}…) — " +
-        "a partitioned layout is compacted per partition directory")
-    val files = listDataFiles(spark, dir)
-    if (files.isEmpty) return Stats(0, 0, 0L)
-
-    // the plan, in-engine: planBins over the listing (one directory = one
-    // table partition, so partCol is a constant; the window is bounded by
-    // files-per-directory — planBins' contract)
-    val listing = spark.createDataFrame(files)
-    // Join key spelling (round-14 ADVICE): input_file_name() returns the
-    // URI-ENCODED path (Spark's PartitionedFile spelling — a space is
-    // %20), while FileStatus.getPath.toString is decoded. Encode the
-    // listing side the same way Spark does (Path.toUri percent-encodes
-    // illegal characters exactly like SparkPath, which wraps it) so a
-    // directory with spaces/%/# in its name joins correctly; the scheme
-    // prefix is then normalized off both sides ("file:///x" vs "file:/x").
-    val encode = udf((p: String) => new Path(p).toUri.toString)
-    val plan = planBins(listing, lit(0), col("path"), col("bytes"), targetBytes)
-      .select(
-        regexp_replace(encode(col("path")), "^[a-z][a-zA-Z0-9+.-]*:/+", "/").as("_src"),
-        col("bin").as("_bin"))
-    val nBins = plan.select("_bin").distinct().count().toInt
-
-    // ---- phase 1: one job builds the complete new layout ------------------
-    val staged = stagedPath(dir)
-    fs.mkdirs(staged)
-    val dataDir = new Path(staged, "data")
-    spark.read.parquet(files.map(_.path): _*)
-      .withColumn("_src",
-        regexp_replace(input_file_name(), "^[a-z][a-zA-Z0-9+.-]*:/+", "/"))
-      .join(broadcast(plan), Seq("_src"))
-      .drop("_src")
-      // all of a bin's rows land on one reducer; partitionBy then emits
-      // exactly one file per bin (a reducer holding several bins still
-      // writes them to separate files)
-      .repartition(math.max(nBins, 1), col("_bin"))
-      .write.partitionBy("_bin").parquet(dataDir.toString)
-
-    // flatten bin directories into the flat compacted layout
-    val binDirs = fs.listStatus(dataDir).filter(_.isDirectory)
-    binDirs.foreach { bd =>
-      val parts = fs.listStatus(bd.getPath).filter(_.isFile)
-        .filter(s => !s.getPath.getName.startsWith("_"))
-      require(parts.length == 1,
-        s"Compaction: bin ${bd.getPath.getName} wrote ${parts.length} files — " +
-          "one-file-per-bin invariant broken; aborting before commit (source untouched)")
-      val binId = bd.getPath.getName.stripPrefix("_bin=").toLong
-      mustRename(fs, parts.head.getPath,
-        new Path(staged, f"bin-$binId%05d-${parts.head.getPath.getName}"))
-    }
-    fs.delete(dataDir, true)
-
-    // ---- completeness invariant BEFORE the destructive swap ---------------
-    // Rows reach their bins via the input_file_name() join above; any
-    // path-spelling mismatch between that column and the listing would
-    // silently DROP every row of the affected file, and the swap would
-    // then replace the source with an incomplete layout (round-14
-    // ADVICE). Gate on exact row counts — both sides are parquet
-    // footer-metadata counts, no data re-read — and abort with the
-    // source untouched on any loss.
-    val rawCount = spark.read.parquet(files.map(_.path): _*).count()
-    val stagedFiles = fs.listStatus(staged).filter(_.isFile)
-      .filter(s => !s.getPath.getName.startsWith("_"))
-      .map(_.getPath.toString)
-    val stagedCount =
-      if (stagedFiles.isEmpty) 0L
-      else spark.read.parquet(stagedFiles.toSeq: _*).count()
-    if (stagedCount != rawCount) {
-      fs.delete(staged, true)
-      throw new IllegalStateException(
-        s"Compaction: staged layout holds $stagedCount rows but the source " +
-          s"holds $rawCount — a plan/row join mismatch dropped data; " +
-          "aborted before the swap, source untouched")
-    }
-
-    // ---- phases 2+3: marker, then checked swap ----------------------------
-    commitAndSwap(fs, dir, staged)
-    Stats(files.size, listDataFiles(spark, dir).size, files.map(_.bytes).sum)
   }
 }

@@ -16,9 +16,9 @@ import org.apache.spark.sql.functions._
   * of the file, at the cost of neither being perfectly clustered.
   *
   * The interleave is a pure bitwise expression tree (shifts/masks/adds —
-  * whole-stage codegen, no UDF), and the write is
-  * `repartitionByRange(zkey).sortWithinPartitions(zkey)`: a range exchange
-  * plus local sorts, never a single-partition global sort.
+  * whole-stage codegen, no UDF); a Z-clustered write is
+  * `repartitionByRange(zkey).sortWithinPartitions(zkey)` on it, a range
+  * exchange plus local sorts, never a single-partition global sort.
   */
 object Layout {
 
@@ -40,29 +40,10 @@ object Layout {
     terms.reduce(_ + _)
   }
 
-  /** Write `df` Z-clustered on two columns: range-partition then locally
-    * sort by the interleaved key, so each output file covers a rectangle
-    * of (c1, c2) space and row-group stats prune on either column. */
-  def writeZOrdered(
-      df: DataFrame, path: String, c1: String, c2: String,
-      bits: Int = 16, numFiles: Int = 0): Unit = {
-    require(!df.columns.contains("_zkey"),
-      "input already has a column named _zkey; rename it first " +
-        "(it would be silently overwritten and dropped)")
-    val zkey = zorder2(col(c1), col(c2), bits).as("_zkey")
-    val keyed = df.withColumn("_zkey", zkey)
-    val ranged =
-      if (numFiles > 0) keyed.repartitionByRange(numFiles, col("_zkey"))
-      else keyed.repartitionByRange(col("_zkey"))
-    ranged.sortWithinPartitions(col("_zkey"))
-      .drop("_zkey")
-      .write.mode("overwrite").parquet(path)
-  }
-
   /** The skipping index a Z-layout produces, made explicit: per-file
     * row count and min/max bounding box in BOTH quantized dimensions
     * (`file_id` = the top `fileBits` bits of the 2×8-bit Morton key, i.e.
-    * a contiguous key range ≙ one output file of `writeZOrdered`). This is
+    * a contiguous key range ≙ one output file of a Z-clustered write). This is
     * what parquet's ordinary per-file column stats BECOME under the
     * layout — computing it directly is what makes the layout auditable
     * cross-engine (catalog entry `x15_zorder_layout`). One 64-group

@@ -23,8 +23,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
   * A directory swapped in, by this JVM or by another process such as a
   * `JobsMain` run, is a new inode with a new mtime, so the next read
   * re-infers, unless the writer [[record]]ed the schema of the generation
-  * it published. A writer that changes a directory in place calls
-  * [[invalidate]]. Each path holds one entry (a newer generation replaces
+  * it published. Each path holds one entry (a newer generation replaces
   * the older), and an entry holds only the StructType: no rows, no file
   * listings.
   */
@@ -70,7 +69,8 @@ object SchemaMemo {
   def record(path: String, staged: String, written: StructType): Unit =
     generation(staged).foreach(gen => entries.put(key(path), Entry(gen, nullable(written))))
 
-  /** The memoized schema of `path`'s current generation, if any. */
+  /** The memoized schema of `path`'s current generation, if any. Only
+    * TableStoreSpec reads it, to tell a memo hit from a re-inference. */
   private[graft] def memoized(path: String): Option[StructType] =
     Option(entries.get(key(path))).filter(e => generation(path).contains(e.generation))
       .map(_.schema)
@@ -84,7 +84,4 @@ object SchemaMemo {
     case m: MapType => MapType(nullableType(m.keyType), nullableType(m.valueType), valueContainsNull = true)
     case other => other
   }
-
-  /** Drop `path`'s entry: for writers that change a directory in place. */
-  def invalidate(path: String): Unit = entries.remove(key(path))
 }

@@ -16,7 +16,7 @@ import org.apache.spark.sql.functions._
   * which is vocabulary-sized (~10^6–10^7 rows at 100 TB, independent of
   * corpus row count). Per iteration: one small aggregation for weighted
   * adjacent-pair counts, one single-row argmax `collect()` (bounded driver
-  * state: exactly one `(pair, count)` per round, the AnnIndex posture), one
+  * state: exactly one `(pair, count)` per round), one
   * map-only rewrite of the word renderings. No iteration re-reads the corpus.
   *
   * Determinism contract (this feeds a DuckDB-hash-checked catalog entry):

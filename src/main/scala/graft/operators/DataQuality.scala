@@ -78,32 +78,4 @@ object DataQuality {
   /** Union the per-check plans into one report frame. */
   def report(checks: Seq[DataFrame]): DataFrame =
     checks.reduce(_.unionByName(_))
-
-  /** True iff every check reports zero violations — the `dbt build` gate:
-    * fail the run, not the downstream consumers. */
-  def passes(reportDf: DataFrame): Boolean =
-    reportDf.agg(sum(col("violations"))).head.getLong(0) == 0L
-
-  /** In-flight audit metrics via `Dataset.observe` (Catalyst
-    * `CollectMetrics`): the counters ride the SAME pass as the job that
-    * writes the data — at 100 TB the difference between "audit" and
-    * "audit = second full scan". Standard counters: row count, per-column
-    * null counts, and a min/max pair for a freshness column. Returns the
-    * instrumented frame plus the [[org.apache.spark.sql.Observation]];
-    * read `observation.get` AFTER the caller's own action has run (write,
-    * count, …) — observe never triggers work by itself. The same frame
-    * works under Structured Streaming via a QueryProgress listener. */
-  def observed(
-      df: DataFrame,
-      nullCols: Seq[String],
-      rangeCol: Option[String] = None): (DataFrame, org.apache.spark.sql.Observation) = {
-    val obs = org.apache.spark.sql.Observation()
-    val metrics =
-      count(lit(1)).as("n_rows") +:
-        (nullCols.map(c =>
-          sum(when(col(c).isNull, 1L).otherwise(0L)).as(s"nulls_$c")) ++
-          rangeCol.toSeq.flatMap(c =>
-            Seq(min(col(c)).as(s"min_$c"), max(col(c)).as(s"max_$c"))))
-    (df.observe(obs, metrics.head, metrics.tail: _*), obs)
-  }
 }

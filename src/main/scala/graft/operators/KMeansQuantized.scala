@@ -5,11 +5,11 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Integer-quantized Lloyd's k-means (public: Lloyd 1982) — the clustering
-  * trainer behind IVF-style ANN indexes ([[AnnIndex]] fits double KMeans;
-  * this is the cross-engine-CHECKABLE mode, the g1/g2 posture applied to
-  * clustering): coordinates quantized to micro-units as longs, distances
-  * and centroid updates in exact integer arithmetic, ties broken by
-  * cluster id, so any engine computes identical centroids.
+  * trainer behind IVF-style ANN indexes in its cross-engine-CHECKABLE
+  * mode (the g1/g2 posture applied to clustering): coordinates quantized
+  * to micro-units as longs, distances and centroid updates in exact
+  * integer arithmetic, ties broken by cluster id, so any engine computes
+  * identical centroids.
   *
   * Semantics per round: assign each point to the centroid minimizing the
   * exact integer squared distance (tie → lowest cid); new centroid
@@ -21,10 +21,9 @@ import org.apache.spark.sql.functions._
   * Scale shape: the per-round assignment is one broadcast join of the
   * (pos, v) long table against k·d centroid rows plus one aggregate;
   * driver state is the k·d centroid matrix per round (bounded by the
-  * operator's contract that k·d is codebook-sized, the AnnIndex/PqIndex
-  * posture — NOT data-sized). Overflow envelope: d·(2·max|q|)² and
-  * n·max|q| must fit a long — micro-unit quantization holds to |v| ≤ ~3e3
-  * and trillions of rows.
+  * operator's contract that k·d is codebook-sized — NOT data-sized).
+  * Overflow envelope: d·(2·max|q|)² and n·max|q| must fit a long —
+  * micro-unit quantization holds to |v| ≤ ~3e3 and trillions of rows.
   */
 object KMeansQuantized {
 

@@ -38,21 +38,7 @@ object Profiler {
   def profileApprox(df: DataFrame, cols: Seq[String], rsd: Double = 0.05): DataFrame =
     build(df, cols, c => approx_count_distinct(col(c), rsd))
 
-  /** The accuracy-check form of [[profileApprox]] (the k1 technique —
-    * round-5 verdict #4): computes BOTH distinct forms in one aggregate,
-    * emits the exact columns value-strict plus an in-row boolean that the
-    * HLL estimate lands within 3·rsd of the exact count. The exact Expand
-    * here is CHECK machinery at test SF — ProfilerSpec runs it on the
-    * events fixture and asserts every bound (round-12 verdict #6 moved it
-    * there from the dq5 catalog entry, whose bench cost is now the
-    * production no-Expand [[profileApprox]] plan). */
-  def profileApproxGated(df: DataFrame, cols: Seq[String], rsd: Double = 0.05): DataFrame =
-    build(df, cols, c => count_distinct(col(c)),
-      approxGate = Some(rsd))
-
-  private def build(
-      df: DataFrame, cols: Seq[String], distinctAgg: String => Column,
-      approxGate: Option[Double] = None): DataFrame = {
+  private def build(df: DataFrame, cols: Seq[String], distinctAgg: String => Column): DataFrame = {
     require(cols.nonEmpty, "Profiler: at least one column")
     val missing = cols.filterNot(df.columns.contains)
     require(missing.isEmpty, s"Profiler: unknown columns ${missing.mkString(", ")}")
@@ -61,24 +47,19 @@ object Profiler {
         (count(lit(1)) - count(col(c))).as(s"_nn$i"),
         distinctAgg(c).as(s"_nd$i"),
         min(col(c).cast("string")).as(s"_mn$i"),
-        max(col(c).cast("string")).as(s"_mx$i")) ++
-        approxGate.map(rsd => approx_count_distinct(col(c), rsd).as(s"_na$i"))
+        max(col(c).cast("string")).as(s"_mx$i"))
     }
     val one = df.agg(flat.head, flat.tail: _*)
     val rows = cols.zipWithIndex.map { case (c, i) =>
-      val base = Seq(
+      struct(
         lit(c).as("col_name"), col("n_rows"),
         col(s"_nn$i").as("n_nulls"),
         // nullif: a zero-row feed profiles as NULL null-fraction instead of
         // tripping ANSI DIVIDE_BY_ZERO
         expr(s"(_nn$i * CAST(1000000 AS BIGINT)) div nullif(n_rows, CAST(0 AS BIGINT))")
           .as("null_frac_micro"),
-        col(s"_nd$i").as("n_distinct")) ++
-        approxGate.map(rsd =>
-          (abs(col(s"_na$i") - col(s"_nd$i"))
-            <= lit(3 * rsd) * col(s"_nd$i")).as("nd_in_bounds")) ++
-        Seq(col(s"_mn$i").as("min_str"), col(s"_mx$i").as("max_str"))
-      struct(base: _*)
+        col(s"_nd$i").as("n_distinct"),
+        col(s"_mn$i").as("min_str"), col(s"_mx$i").as("max_str"))
     }
     one.select(explode(array(rows: _*)).as("p")).select(col("p.*"))
   }

@@ -72,7 +72,7 @@ object SemDeDup {
 
   /** Capped per-cell member table `(cid, vec_id, d2, embedding)` — the
     * persistable semantic state of a built corpus: each cell keeps its
-    * first `maxCell` members by vec_id (the same cap [[centroidKeepDrops]]
+    * first `maxCell` members by vec_id (the same cap [[dropsUnder]]
     * applies to its pair fan-out, so state size is bounded by k·maxCell
     * whatever the corpus). `e` must carry vec_id + embCol. */
   def cellMembers(
@@ -105,7 +105,7 @@ object SemDeDup {
     *    direction corpus immutability allows);
     *  - stored members are capped at maxCell per cell, so a slice doc
     *    whose only similar neighbor was capped out survives (the same
-    *    recall trade [[centroidKeepDrops]] makes at build time);
+    *    recall trade [[dropsUnder]] makes at build time);
     *  - a rebuild refits centroids over corpus ∪ slice; drift between the
     *    stored and refit cells can re-block pairs across cell boundaries
     *    (the reason rebuilds rerun the batch operator).
@@ -158,27 +158,14 @@ object SemDeDup {
     dropsFrom(members).unionByName(dropsFrom(sliceCapped)).distinct()
   }
 
-  /** The vec_ids DROPPED by the centroid-distance keep rule.
+  /** The vec_ids DROPPED by the centroid-distance keep rule under FIXED
+    * (already-fit) centroids — the corpus pipeline fits once and reuses
+    * the centroid table for the drop rule, the persisted state, and the
+    * incremental probe.
     *
     * `e` must carry `vec_id: long` and `embCol: array` (float or double).
-    * Shuffles: the Lloyd rounds (bounded, k·d centroids to the driver per
-    * round), one cell-keyed exchange for the capped pair fan-out, two
+    * Shuffles: one cell-keyed exchange for the capped pair fan-out, two
     * id-keyed joins for the verify, one distinct on the drop ids. */
-  def centroidKeepDrops(
-      e: DataFrame,
-      k: Int,
-      iterations: Int,
-      threshold: Double,
-      maxCell: Int = 256,
-      embCol: String = "embedding"): DataFrame = {
-    val cent = KMeansQuantized.fit(quantize(e, embCol), k, iterations)
-    dropsUnder(e, cent, threshold, maxCell, embCol)
-  }
-
-  /** [[centroidKeepDrops]] under FIXED (already-fit) centroids — the
-    * shared core that lets the corpus pipeline fit once and reuse the
-    * centroid table for the drop rule, the persisted state, and the
-    * incremental probe. */
   def dropsUnder(
       e: DataFrame,
       cent: DataFrame,

@@ -1,7 +1,6 @@
 package graft.sources
 
 import java.util
-import scala.collection.mutable
 
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
@@ -21,20 +20,18 @@ import graft.finance.connector.SimplefinConnector
   *   - **one InputPartition per (access URL, date chunk)** (`SimplefinConnector
   *     .chunkRanges`, the reference's 45-day windows over a 200-day
   *     lookback): a FLEET of access URLs fans out URLs × chunks tasks that
-  *     fetch IN PARALLEL on executors, where `fetchAll` walks one URL's
-  *     chunks sequentially on the driver. At one account that saves
-  *     little; at a fleet it is the difference between an ingest job and
-  *     an ingest bottleneck. Failures stay isolated per (url, chunk) task:
+  *     fetch IN PARALLEL on executors. At one account that saves little;
+  *     at a fleet it is the difference between an ingest job and an
+  *     ingest bottleneck. Failures stay isolated per (url, chunk) task:
   *     the error names the URL by ORDINAL (never the credentialed URL
   *     itself), and Spark's retry machinery re-runs only that task.
   *   - **per-chunk failure = task failure** → Spark's retry/blacklist
-  *     machinery, not a swallowed error counter (fetchAll's per-chunk
-  *     isolation remains the parity behavior for the reference's
-  *     log-and-continue semantics; the source states the at-scale
-  *     contract: an ingest that "succeeded" read every chunk).
-  *   - per-chunk transaction-id dedup only — a parallel reader cannot
-  *     share the in-flight `seen` set; cross-chunk duplicates are the
-  *     warehouse's W1 latest-import dedup's job (already in the pipeline).
+  *     machinery, not a swallowed error counter: unlike the reference's
+  *     log-and-continue chunk loop, an ingest that "succeeded" read every
+  *     chunk.
+  *   - per-chunk transaction-id dedup only — parallel readers share no
+  *     state; cross-chunk duplicates are the warehouse's W1 latest-import
+  *     dedup's job (already in the pipeline).
   *
   * Transports resolve executor-side through [[SimplefinTransports]], a
   * process-local registry: tests register fakes under a key and pass
@@ -182,7 +179,7 @@ final class SimplefinPartitionReader(chunk: SimplefinChunk)
     val importTs = java.time.Instant.ofEpochSecond(c.nowEpoch)
       .atOffset(java.time.ZoneOffset.UTC)
     val (parsed, _, _) = SimplefinConnector.parseChunk(
-      body, mutable.Set.empty,
+      body,
       importTs.toLocalDateTime.toString.replace('T', ' '),
       importTs.toLocalDate.toString)
     parsed.iterator.map(r => toCatalyst(r).asInstanceOf[InternalRow])

@@ -49,20 +49,6 @@ object EventStreams {
       .select(col("window.start").as("window_start"), col("event_type"),
         col("n_events"), col("total_value"))
 
-  /** Streaming twin of e6: 1-hour windows sliding every 15 minutes —
-    * each event lands in 4 overlapping windows (trend smoothing without
-    * waiting a full hour for the next point). Same watermark/state story
-    * as [[tumblingCounts]], ×4 open-window state. */
-  def slidingCounts(
-      events: DataFrame,
-      watermark: String = "2 hours"): DataFrame =
-    events
-      .withWatermark("ts", watermark)
-      .groupBy(window(col("ts"), "1 hour", "15 minutes"), col("event_type"))
-      .agg(count(lit(1)).as("n_events"))
-      .select(col("window.start").as("window_start"), col("event_type"),
-        col("n_events"))
-
   final case class Event(event_id: Long, ts: Timestamp, user_id: Long,
       event_type: String, value: Double)
   final case class SessionState(sessionId: Long, lastTs: Long, count: Long)
@@ -109,119 +95,6 @@ object EventStreams {
       }
   }
 
-  final case class FunnelState(
-      resolved: Seq[Long], // final first-passage epoch-ms per completed stage
-      pending: Seq[(Int, Long)]) // (stage index, epoch ms), all ≥ last watermark
-  final case class FunnelDepth(user_id: Long, depth: Int, frontier_ms: Long)
-
-  /** Streaming twin of the batch e7 funnel, correct under OUT-OF-ORDER
-    * arrival — the part a naive "advance on match" stream gets wrong: a
-    * late `view` with an earlier timestamp can retroactively unlock clicks
-    * that already streamed past. Event-time discipline fixes it without
-    * unbounded replay: events at-or-above the watermark are BUFFERED (the
-    * region where earlier-timestamped data may still arrive — bounded by
-    * the watermark delay, the same bound every stateful operator here
-    * leans on); once the watermark passes them they are FINAL, get sorted
-    * and replayed through the greedy first-passage scan, and leave state
-    * forever. Per-user state is the resolved chain (≤ nStages longs) plus
-    * the in-flight buffer. Emits an updated (user, depth, frontier) row
-    * whenever finalized data deepens the funnel. Events LATER than the
-    * watermark delay never reach the operator — the engine drops them
-    * upstream, the standard event-time admission contract (pick the delay
-    * to cover the source's real disorder). */
-  def funnelDepth(
-      events: Dataset[Event],
-      stages: Seq[String] = Seq("view", "click", "purchase"),
-      watermark: String = "2 hours",
-      maxBuffer: Int = 4096): Dataset[FunnelDepth] = {
-    import events.sparkSession.implicits._
-    val stageIdx = stages.zipWithIndex.toMap
-    events
-      .withWatermark("ts", watermark)
-      .filter(e => stageIdx.contains(e.event_type))
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[FunnelState, FunnelDepth](
-        OutputMode.Update, GroupStateTimeout.EventTimeTimeout) {
-        (userId: Long, rows: Iterator[Event], state: GroupState[FunnelState]) =>
-          val st = state.getOption.getOrElse(FunnelState(Seq.empty, Seq.empty))
-          // a key is re-invoked either with new rows OR by the event-time
-          // timeout below — the timeout is what finalizes a user whose
-          // buffered events age past the watermark while OTHER keys'
-          // data advances it (with no timeout, an idle key's funnel
-          // would never resolve)
-          val incoming =
-            if (state.hasTimedOut) Seq.empty
-            else rows.map(e => (stageIdx(e.event_type), e.ts.getTime)).toSeq
-          val wm = state.getCurrentWatermarkMs()
-          val all = st.pending ++ incoming
-          // below the watermark nothing earlier can arrive: finalize
-          val (fin, rawPending) = all.partition(_._2 < wm)
-          var resolved = st.resolved
-          // greedy first-passage scan over the finalized events in time
-          // order (ts first, then stage — a same-timestamp later stage must
-          // NOT ride its unlocker: the chain is strictly increasing)
-          fin.sortBy { case (s, t) => (t, s) }.foreach { case (s, t) =>
-            if (s == resolved.size &&
-              (resolved.isEmpty || t > resolved.last)) resolved = resolved :+ t
-          }
-          // keep only events that can still extend the chain: pending ts is
-          // always above the watermark that FINALIZED each resolved stage,
-          // so a stage already resolved can never improve, and the chain is
-          // strictly increasing past resolved.last. A completed funnel
-          // needs no buffer at all.
-          val frontier = resolved.lastOption.getOrElse(Long.MinValue)
-          val relevant =
-            if (resolved.size == stages.size) Seq.empty
-            else rawPending.filter { case (s, t) => s >= resolved.size && t > frontier }
-          // overflow degrades THIS key instead of killing the query: the
-          // EARLIEST events are the first-passage candidates, so drop the
-          // latest tail beyond maxBuffer (logged — a bot key emitting more
-          // than maxBuffer funnel events per watermark window may resolve
-          // to a shallower depth than a full replay would)
-          val stillPending =
-            if (relevant.size <= maxBuffer) relevant
-            else {
-              org.slf4j.LoggerFactory.getLogger("graft.streaming.EventStreams")
-                .warn(s"funnelDepth: user $userId exceeded maxBuffer=$maxBuffer " +
-                  s"in-flight events (${relevant.size}); dropping the latest " +
-                  s"${relevant.size - maxBuffer} — depth may under-resolve for this key")
-              relevant.sortBy { case (s, t) => (t, s) }.take(maxBuffer)
-            }
-          state.update(FunnelState(resolved, stillPending))
-          if (stillPending.nonEmpty)
-            state.setTimeoutTimestamp(
-              math.max(stillPending.map(_._2).min, wm + 1))
-          if (resolved.size > st.resolved.size)
-            Iterator(FunnelDepth(userId, resolved.size, resolved.last))
-          else Iterator.empty
-      }
-  }
-
-  /** Incremental-fact twin (SURVEY §2.8 as a stream): append-only dedup by
-    * key across micro-batches. `dropDuplicatesWithinWatermark` is the form
-    * whose state the watermark actually evicts — plain
-    * `dropDuplicates("event_id")` (without the event-time column in the
-    * subset) keeps every key ever seen and grows state forever. */
-  def appendOnlyByKey(events: DataFrame, watermark: String = "2 hours"): DataFrame =
-    events.withWatermark("ts", watermark).dropDuplicatesWithinWatermark("event_id")
-
-  /** Ingestion-time corpus filter: drop stream rows whose key is (maybe)
-    * already in a historical corpus, using a [[graft.functions.BloomBits]]
-    * filter built ONCE over the corpus and embedded in the streaming plan
-    * as a literal. STATELESS — unlike a stream-static anti-join, nothing
-    * is re-scanned or re-broadcast per micro-batch, and unlike
-    * dropDuplicatesWithinWatermark nothing accrues state: the filter is a
-    * few hundred KB of bits probed inside whole-stage codegen, the right
-    * shape when the dedup reference is billions of historical keys.
-    * Asymmetry is explicit in the name: bloom "no" is definitive, so a
-    * kept row is GUARANTEED new; a dropped row is only PROBABLY seen
-    * (false-positive rate set at build time) — the lossy-but-bounded trade
-    * every ingestion dedup at corpus scale makes, with the exact confirm
-    * join (b1 posture) as the lossless alternative. */
-  def dropProbablySeen(stream: DataFrame, corpusBloom: Array[Byte], keyCol: String): DataFrame =
-    stream.filter(!graft.functions.BloomBits.bloomMightContain(
-      lit(corpusBloom), xxhash64(col(keyCol))))
-
   /** Stream-static enrichment join: attach dimension attributes to every
     * event as it arrives — the standard "enrich the stream with the
     * customer table" shape. STATELESS: the static side is broadcast into
@@ -263,36 +136,6 @@ object EventStreams {
       col("user_id") === col("p_user_id")
         && col("p_ts") <= col("c_ts")
         && col("p_ts") >= col("c_ts") - expr(s"INTERVAL $maxLagSeconds SECONDS"))
-      .select(col("event_id"), col("user_id"), col("c_ts"), col("p_ts"),
-        col("purchase_value"))
-  }
-
-  /** LEFT-OUTER stream-stream interval join: every click is emitted —
-    * matched clicks immediately with their purchase columns, unmatched
-    * clicks with NULLs, but only once the watermark proves no matching
-    * purchase can still arrive (a click at t can match purchases up to t,
-    * so its null row is releasable when the purchase-side watermark passes
-    * t). This is why Structured Streaming REQUIRES the watermark + event
-    * time range condition for outer joins: without the bound, "no match"
-    * is never final. State stays O(lag window) exactly as in the inner
-    * form; the null rows are the unconverted-click stream that attribution
-    * pipelines aggregate. Batch twin: `e11_interval_left_outer`. */
-  def clickPurchaseLeftOuter(
-      events: DataFrame,
-      maxLagSeconds: Long = 3600,
-      watermark: String = "2 hours"): DataFrame = {
-    val purchases = events.filter(col("event_type") === "purchase")
-      .select(col("user_id").as("p_user_id"), col("ts").as("p_ts"),
-        col("value").as("purchase_value"))
-      .withWatermark("p_ts", watermark)
-    val clicks = events.filter(col("event_type") === "click")
-      .select(col("event_id"), col("user_id"), col("ts").as("c_ts"))
-      .withWatermark("c_ts", watermark)
-    clicks.join(purchases,
-      col("user_id") === col("p_user_id")
-        && col("p_ts") <= col("c_ts")
-        && col("p_ts") >= col("c_ts") - expr(s"INTERVAL $maxLagSeconds SECONDS"),
-      "left_outer")
       .select(col("event_id"), col("user_id"), col("c_ts"), col("p_ts"),
         col("purchase_value"))
   }

@@ -2,7 +2,6 @@ package graft.finance
 
 import graft.SparkSpec
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 
 /** Every branch of the reference category lifecycle
   * (`category_service.py:44-173`): idempotent seeding, in-use sync that

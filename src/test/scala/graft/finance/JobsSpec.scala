@@ -58,20 +58,27 @@ class JobsSpec extends SparkSpec {
     jobs.runAllModels()
     assert(store.read("fct_validated_trxns").count() == 61)
 
-    // category catalog refresh: defaults seeded + in-use names from the
-    // live warehouse ('Dining'/'Travel' from the historic fact, none of
-    // which are defaults), idempotent, deactivation preserved
+    // category catalog refresh (`category_service.py:70-101`, ensure +
+    // sync): defaults seeded + in-use names from the live warehouse
+    // ('Dining'/'Travel' from the historic fact, none of which are
+    // defaults), idempotent, deactivation preserved
     val now = java.sql.Timestamp.valueOf("2026-01-01 00:00:00")
-    // materialize eagerly: the returned frame lazily references parquet
-    // files that the next overwrite swaps away
-    val cat1 = jobs.refreshCategoryCatalog(now).collect()
+    // collected eagerly: the read lazily references parquet files that the
+    // next overwrite swaps away
+    def refreshCatalog(): Array[Row] = {
+      val catalog = store.readOrEmpty("categories", CategoryCatalog.schema)
+      store.overwrite("categories", CategoryCatalog.syncInUse(
+        CategoryCatalog.ensureDefaults(catalog, now), Serving.inUseCategories(store), now))
+      store.read("categories").collect()
+    }
+    val cat1 = refreshCatalog()
     assert(cat1.length >= 19 + 2)
     val names = cat1.map(_.getAs[String]("name")).toSet
     assert(names.contains("Dining") && names.contains("Travel") && names.contains("Gas"))
     assert(!names.contains("UNCERTAIN"))
     store.overwrite("categories",
       CategoryCatalog.setCategoryActive(store.read("categories"), "Dining", isActive = false, now))
-    val cat2 = jobs.refreshCategoryCatalog(now).collect()
+    val cat2 = refreshCatalog()
     assert(cat2.length == cat1.length)            // idempotent, no duplicates
     val dining = cat2.find(_.getAs[String]("name") == "Dining").get
     assert(!dining.getAs[Boolean]("is_active"))   // deactivation preserved

@@ -1,9 +1,8 @@
 package graft.finance
 
-import graft.SparkSpec
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
-import org.scalacheck.{Gen, Prop, Properties}
+import org.scalacheck.{Gen, Properties}
 import org.scalacheck.Prop.forAll
 import scala.jdk.CollectionConverters._
 

@@ -66,21 +66,6 @@ class TableStoreSpec extends SparkSpec {
       Seq((2L, "b", true)))
   }
 
-  test("an overwriteDynamicPartitions restatement is visible on the next read") {
-    val store = freshStore()
-    store.overwriteDynamicPartitions("daily",
-      Seq(("d1", 1L), ("d2", 2L)).toDF("day", "id"), Seq("day"))
-    assert(store.read("daily").count() == 2)
-    // restate every partition with a new column: the in-place rewrite
-    // keeps the directory, and the next read must still see the new shape
-    store.overwriteDynamicPartitions("daily",
-      Seq(("d1", 10L, "x"), ("d2", 20L, "y")).toDF("day", "id", "tag"), Seq("day"))
-    val r = store.read("daily")
-    assert(r.columns.toSet == Set("day", "id", "tag"))
-    assert(r.collect().map(x => (x.getAs[String]("day"), x.getAs[Long]("id"),
-      x.getAs[String]("tag"))).toSet == Set(("d1", 10L, "x"), ("d2", 20L, "y")))
-  }
-
   test("a directory swapped in from outside the store is re-inferred") {
     val root = Files.createTempDirectory("graft-store").toString
     val serving = new TableStore(spark, root)
@@ -161,27 +146,6 @@ class TableStoreSpec extends SparkSpec {
     store.upsert("pred", Seq(("t2", "v2"), ("t3", "v2")).toDF("transaction_id", "mv"), "transaction_id")
     val got = store.read("pred").collect().map(r => r.getString(0) -> r.getString(1)).toMap
     assert(got == Map("t1" -> "v1", "t2" -> "v2", "t3" -> "v2"))
-  }
-
-  test("overwriteDynamicPartitions replaces only the batch's partitions, wholesale") {
-    val store = freshStore()
-    // base: three day-partitions, two rows each
-    store.overwriteDynamicPartitions("fct_daily",
-      Seq(("d1", 1L, "a"), ("d1", 2L, "b"),
-          ("d2", 3L, "c"), ("d2", 4L, "d"),
-          ("d3", 5L, "e"), ("d3", 6L, "f"))
-        .toDF("day", "id", "v"), Seq("day"))
-    // restatement: d2 wholesale (one row survives — the dropped row must
-    // VANISH, which is what distinguishes this from upsert) + new d4
-    store.overwriteDynamicPartitions("fct_daily",
-      Seq(("d2", 3L, "RESTATED"), ("d4", 7L, "g")).toDF("day", "id", "v"), Seq("day"))
-    val got = store.read("fct_daily").collect()
-      .map(r => (r.getAs[String]("day"), r.getAs[Long]("id"), r.getAs[String]("v"))).toSet
-    assert(got == Set(
-      ("d1", 1L, "a"), ("d1", 2L, "b"),      // untouched partition intact
-      ("d2", 3L, "RESTATED"),                 // replaced wholesale: id=4 gone
-      ("d3", 5L, "e"), ("d3", 6L, "f"),      // untouched partition intact
-      ("d4", 7L, "g")))                       // new partition appended
   }
 
   test("registry flags recomputed by window: latest vs active") {

@@ -30,16 +30,11 @@ class SimplefinConnectorSpec extends SparkSpec {
   }
 
   test("extra JSON object spillover is serialized, not dropped") {
-    val transport = new Transport {
-      def get(url: String, auth: String, t: Int): (Int, String) =
-        (200, """{"errors":[],"accounts":[{"id":"a1","name":"C",
-            "org":{"name":"B","domain":"d"},
-            "transactions":[{"id":"t1","amount":"-1.00","posted":1690000000,
-              "extra":{"payee":"ACME","code":7}}]}]}""")
-    }
-    val result = fetchAll(transport, accessUrl, 1700000000L,
-      RetryPolicy(total = 0, sleeper = _ => ()))
-    val extra = result.rows.head.getString(12)
+    val (rows, _, _) = parseChunk("""{"errors":[],"accounts":[{"id":"a1","name":"C",
+        "org":{"name":"B","domain":"d"},
+        "transactions":[{"id":"t1","amount":"-1.00","posted":1690000000,
+          "extra":{"payee":"ACME","code":7}}]}]}""", "2023-11-14 22:13:20", "2023-11-14")
+    val extra = rows.head.getString(12)
     assert(extra != null && extra.contains("\"payee\":\"ACME\"") && extra.contains("\"code\":7"))
   }
 
@@ -72,42 +67,20 @@ class SimplefinConnectorSpec extends SparkSpec {
     assert(calls == 1)
   }
 
-  test("fetchAll: flattens, dedups across chunks, isolates chunk failures") {
-    var call = 0
-    val transport = new Transport {
-      def get(url: String, auth: String, t: Int): (Int, String) = {
-        call += 1
-        call match {
-          case 1 => (200, payload("a1", Seq(("t1", "-5.00", 1690000000L), ("t2", "3.50", 1690001000L))))
-          case 2 => (200, payload("a1", Seq(("t2", "3.50", 1690001000L), ("t3", "9.99", 1690002000L)))) // t2 repeated
-          case 3 => throw new java.io.IOException("connection reset to https://bridge.example.org/x")
-          case _ => (200, payload("a1", Nil))
-        }
-      }
-    }
-    val result = fetchAll(transport, accessUrl, 1700000000L,
-      RetryPolicy(total = 0, sleeper = _ => ()))
-    assert(result.rows.map(_.getString(0)).sorted == Seq("t1", "t2", "t3"))
-    assert(result.failedChunks == 1)
-    assert(result.successfulInstitutions == Set("Bank"))
-    // sanitization stripped the URL from the isolated error
-    assert(result.errors.exists(_.contains("[URL_REMOVED]")))
-    assert(!result.errors.exists(_.contains("bridge.example.org")))
+  test("parseChunk: flattens, dedups ids, sanitizes errors") {
+    val body = payload("a1", Seq(("t1", "-5.00", 1690000000L), ("t2", "3.50", 1690001000L),
+        ("t2", "3.50", 1690001000L), ("t3", "9.99", 1690002000L)))
+      .replace("\"errors\":[]", "\"errors\":[\"rate limited at https://bridge.example.org/x\"]")
+    val (rows, errors, institutions) = parseChunk(body, "2023-11-14 22:13:20", "2023-11-14")
+    assert(rows.map(_.getString(0)).sorted == Seq("t1", "t2", "t3"))
+    assert(institutions == Set("Bank"))
+    // sanitization stripped the URL from the API error
+    assert(errors == Seq("rate limited at [URL_REMOVED]"))
 
-    val t1 = result.rows.find(_.getString(0) == "t1").get
+    val t1 = rows.find(_.getString(0) == "t1").get
     def field(name: String) = t1.get(graft.finance.Schemas.simplefinRaw.fieldIndex(name))
     assert(field("amount").asInstanceOf[java.math.BigDecimal].toPlainString == "-5.00")
     assert(field("posted_date") == "2023-07-22")
-
-  }
-
-  test("402/403 surface immediately from fetchAll") {
-    val forbidden = new Transport {
-      def get(url: String, auth: String, t: Int): (Int, String) = (403, "")
-    }
-    val e = intercept[HttpError](
-      fetchAll(forbidden, accessUrl, 1700000000L, RetryPolicy(total = 0, sleeper = _ => ())))
-    assert(e.status == 403)
   }
 
   test("sanitizeError strips URLs and long tokens") {

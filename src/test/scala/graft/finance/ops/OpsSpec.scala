@@ -1,7 +1,7 @@
 package graft.finance.ops
 
 import graft.SparkSpec
-import java.nio.file.{Files, Paths}
+import java.nio.file.Files
 import java.time.Instant
 import scala.collection.mutable
 

@@ -1,7 +1,6 @@
 package graft.functions
 
 import graft.SparkSpec
-import org.apache.spark.sql.functions._
 
 /** Edge cases of the doc-frequency-bounded list aggregate that the generic
   * boundedDocLists property check (DedupBucketsCheck) cannot pin down:

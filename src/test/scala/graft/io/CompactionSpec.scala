@@ -1,44 +1,9 @@
 package graft.io
 
 import graft.SparkSpec
-import graft.io.Compaction.{FileInfo, planGroups}
 
 class CompactionSpec extends SparkSpec {
   import spark.implicits._
-
-  test("planGroups: exactly-once, bounded multi-file groups, oversized isolated") {
-    val files = Seq(
-      FileInfo("a", 700), FileInfo("b", 300), FileInfo("c", 300),
-      FileInfo("d", 200), FileInfo("e", 1500), FileInfo("f", 100))
-    val groups = planGroups(files, targetBytes = 1000)
-    val planned = groups.flatMap(_.files.map(_.path))
-    assert(planned.sorted == files.map(_.path).sorted)
-    assert(groups.filter(_.files.size > 1).forall(_.bytes <= 1000))
-    val big = groups.find(_.files.exists(_.path == "e")).get
-    assert(big.files.size == 1)
-  }
-
-  test("planGroups (FFD) converges: no two planned groups still merge under the target") {
-    // the next-fit counterexample: 700,600,300,200 @ 1000 -> NF leaves
-    // [700] and [200] mergeable; FFD must pack [700+300], [600+200]
-    val files = Seq(FileInfo("a", 700), FileInfo("b", 600),
-      FileInfo("c", 300), FileInfo("d", 200))
-    val groups = planGroups(files, 1000)
-    assert(groups.size == 2)
-    for {
-      i <- groups.indices; j <- groups.indices if i < j
-    } assert(groups(i).bytes + groups(j).bytes > 1000,
-      s"groups $i and $j still merge: ${groups(i)} + ${groups(j)}")
-  }
-
-  test("planGroups is deterministic under input order") {
-    val files = (1 to 50).map(i => FileInfo(s"f$i", (i * 37 % 400 + 10).toLong))
-    val a = planGroups(files, 512).map(_.files.map(_.path))
-    val b = planGroups(scala.util.Random.shuffle(files.toList), 512).map(_.files.map(_.path))
-    assert(a == b)
-  }
-
-  // ---- planBins: the distributed planner twin ------------------------------
 
   private def bins(rows: Seq[(String, String, Long)], target: Long) = {
     import org.apache.spark.sql.functions.col
@@ -86,145 +51,5 @@ class CompactionSpec extends SparkSpec {
     assert(bad.isEmpty, "a bin exceeded target + its largest file")
     // and every file appears exactly once
     assert(out.count() == 200 && out.select("file_id").distinct().count() == 200)
-  }
-
-  test("compact merges small files, copies the oversized one intact, loses no row") {
-    val dir = java.nio.file.Files.createTempDirectory("compaction").toString + "/t"
-    // 12 tiny files plus one deliberately big one (many rows) so the
-    // singleton keep/copy branch is really exercised
-    (0 until 12).foreach { i =>
-      Seq.tabulate(50)(j => (i.toLong * 50 + j, s"row-$i-$j"))
-        .toDF("id", "payload")
-        .coalesce(1).write.mode("append").parquet(dir)
-    }
-    Seq.tabulate(20000)(j => (100000L + j, s"big-$j")).toDF("id", "payload")
-      .coalesce(1).write.mode("append").parquet(dir)
-    val before = Compaction.listDataFiles(spark, dir)
-    assert(before.size == 13)
-    val bigBefore = before.maxBy(_.bytes)
-    val target = before.filter(_.bytes < bigBefore.bytes).map(_.bytes).sum / 3
-    assert(bigBefore.bytes > target, "fixture: the big file must exceed the target")
-    val stats = Compaction.compact(spark, dir, target)
-    assert(stats.filesBefore == 13)
-    assert(stats.filesAfter < 13, s"expected fewer files, got ${stats.filesAfter}")
-    // the big file was copied byte-identically (size preserved, keep- prefix)
-    val after = Compaction.listDataFiles(spark, dir)
-    val kept = after.filter(_.path.split("/").last.startsWith("keep-"))
-    assert(kept.map(_.bytes).contains(bigBefore.bytes),
-      s"big file not carried over intact: $kept")
-    // not a row lost or duplicated
-    val back = spark.read.parquet(dir)
-    assert(back.count() == 600 + 20000)
-    assert(back.select("id").distinct().count() == 600 + 20000)
-    // no staging scaffolding left behind
-    val leftovers = new java.io.File(dir).getParentFile.listFiles()
-      .map(_.getName).filter(_.contains("_compact"))
-    assert(leftovers.isEmpty, leftovers.mkString(","))
-  }
-
-  test("compact refuses a partitioned root instead of destroying unlisted subdirs") {
-    val dir = java.nio.file.Files.createTempDirectory("compaction_part").toString + "/t"
-    Seq((1L, "a", "p1"), (2L, "b", "p2")).toDF("id", "payload", "part")
-      .write.partitionBy("part").parquet(dir)
-    val e = intercept[IllegalArgumentException](
-      Compaction.compact(spark, dir, 1000000))
-    assert(e.getMessage.contains("subdirectories"))
-    // nothing was touched
-    assert(spark.read.parquet(dir).count() == 2)
-  }
-
-  test("compactDistributed: one job materializes the planBins plan — file count = bin count, row multiset identical") {
-    import org.apache.spark.sql.functions.col
-    val dir = java.nio.file.Files.createTempDirectory("compaction_dist").toString + "/t"
-    (0 until 12).foreach { i =>
-      Seq.tabulate(50)(j => (i.toLong * 50 + j, s"row-$i-$j"))
-        .toDF("id", "payload")
-        .coalesce(1).write.mode("append").parquet(dir)
-    }
-    Seq.tabulate(20000)(j => (100000L + j, s"big-$j")).toDF("id", "payload")
-      .coalesce(1).write.mode("append").parquet(dir)
-    val before = Compaction.listDataFiles(spark, dir)
-    assert(before.size == 13)
-    val beforeRows = spark.read.parquet(dir).collect().map(_.toString).sorted.toSeq
-    val bigBytes = before.map(_.bytes).max
-    val target = before.filter(_.bytes < bigBytes).map(_.bytes).sum / 3
-
-    // the plan the execution must realize (same inputs, same planner)
-    val expectedBins = Compaction.planBins(
-        spark.createDataFrame(before),
-        org.apache.spark.sql.functions.lit(0), col("path"), col("bytes"), target)
-      .select("bin").distinct().count()
-
-    val stats = Compaction.compactDistributed(spark, dir, target)
-    assert(stats.filesBefore == 13)
-    val after = Compaction.listDataFiles(spark, dir)
-    assert(after.size.toLong == expectedBins,
-      s"file count ${after.size} != planned bin count $expectedBins")
-    assert(after.size < 13)
-    assert(after.forall(_.path.split("/").last.startsWith("bin-")))
-    // byte-identical row multiset (order within a file may differ)
-    val afterRows = spark.read.parquet(dir).collect().map(_.toString).sorted.toSeq
-    assert(afterRows == beforeRows)
-    // no staging scaffolding left behind
-    val leftovers = new java.io.File(dir).getParentFile.listFiles()
-      .map(_.getName).filter(_.contains("_compact"))
-    assert(leftovers.isEmpty, leftovers.mkString(","))
-    // and it self-recovers on entry exactly like compact(): state A debris
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.mkdirs(new org.apache.hadoop.fs.Path(dir + "._compact_tmp"))
-    val stats2 = Compaction.compactDistributed(spark, dir, target * 10)
-    assert(spark.read.parquet(dir).collect().map(_.toString).sorted.toSeq == beforeRows)
-    assert(stats2.filesAfter <= stats.filesAfter)
-  }
-
-  test("compactDistributed: path spellings with spaces and percents survive, " +
-      "and the completeness invariant guards the swap") {
-    // Round-14 ADVICE: the row→bin join runs on input_file_name(), whose
-    // URI-encoded spelling ("%20" for a space) differed from the
-    // listing's decoded FileStatus spelling — a directory with such
-    // characters silently dropped every row of every file before the
-    // destructive swap. The directory name here carries a space AND a
-    // percent; the row multiset must survive compaction bit-identically
-    // (and the new pre-swap row-count invariant would abort, source
-    // untouched, if any spelling ever diverges again).
-    val base = java.nio.file.Files.createTempDirectory("compaction enc%odd").toString
-    val dir = base + "/t able 5%"
-    (0 until 6).foreach { i =>
-      Seq.tabulate(40)(j => (i.toLong * 40 + j, s"enc-$i-$j"))
-        .toDF("id", "payload")
-        .coalesce(1).write.mode("append").parquet(dir)
-    }
-    val before = spark.read.parquet(dir).collect().map(_.toString).sorted.toSeq
-    val files = Compaction.listDataFiles(spark, dir)
-    assert(files.size == 6)
-    val stats = Compaction.compactDistributed(spark, dir, files.map(_.bytes).sum)
-    assert(stats.filesBefore == 6)
-    val after = spark.read.parquet(dir).collect().map(_.toString).sorted.toSeq
-    assert(after == before, s"rows changed under an encoded path: ${after.size} vs ${before.size}")
-    assert(Compaction.listDataFiles(spark, dir).size < 6)
-  }
-
-  test("recover: unmarked staging is dropped, a stranded swap is rolled back") {
-    import org.apache.hadoop.fs.Path
-    val base = java.nio.file.Files.createTempDirectory("compaction_rec").toString
-    val dir = base + "/t"
-    Seq((1L, "x")).toDF("id", "payload").coalesce(1).write.parquet(dir)
-    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // crash state A: phase-1 leftovers (unmarked staging) — source complete
-    fs.mkdirs(new Path(dir + "._compact_tmp"))
-    Compaction.recover(spark, dir)
-    assert(!fs.exists(new Path(dir + "._compact_tmp")))
-    assert(spark.read.parquet(dir).count() == 1)
-    // crash state B: first swap rename ran, second never did — roll back
-    fs.rename(new Path(dir), new Path(dir + "._compact_old"))
-    assert(!fs.exists(new Path(dir)))
-    Compaction.recover(spark, dir)
-    assert(fs.exists(new Path(dir)) && !fs.exists(new Path(dir + "._compact_old")))
-    assert(spark.read.parquet(dir).count() == 1)
-    // and compact() itself self-recovers on entry: run it on state A again
-    fs.mkdirs(new Path(dir + "._compact_tmp"))
-    val stats = Compaction.compact(spark, dir, 1000000)
-    assert(stats.filesAfter >= 1 && spark.read.parquet(dir).count() == 1)
   }
 }

@@ -24,13 +24,6 @@ class LayoutSpec extends SparkSpec {
     assert(z == 5L)
   }
 
-  test("writeZOrdered rejects an input that already has a _zkey column") {
-    val df = Seq((1, 2, 9L)).toDF("x", "y", "_zkey")
-    val e = intercept[IllegalArgumentException](
-      Layout.writeZOrdered(df, "/tmp/never-written", "x", "y"))
-    assert(e.getMessage.contains("_zkey"))
-  }
-
   test("zorder2 is monotone within a row/column of the grid") {
     // along a fixed b, increasing a must increase z (prefix bits agree)
     val z = (0 until 64)
@@ -100,26 +93,5 @@ class LayoutSpec extends SparkSpec {
       "date-sorted files carry useless full-range boxes in the other dimension")
     val linRead = linear.filter(col("needs_read")).count()
     assert(linRead == 16 && zRead * 8 == linRead)
-  }
-
-  test("writeZOrdered round-trips the data and clusters files by rectangles") {
-    val dir = java.nio.file.Files.createTempDirectory("zorder").toString + "/t"
-    val grid = (for { x <- 0 until 32; y <- 0 until 32 } yield (x, y)).toDF("x", "y")
-    Layout.writeZOrdered(grid, dir, "x", "y", bits = 5, numFiles = 4)
-    val back = spark.read.parquet(dir)
-    assert(back.count() == 1024)
-    assert(back.columns.toSet == Set("x", "y")) // _zkey dropped
-    // each file covers a bounded rectangle: per-file x-range and y-range
-    // must both be narrower than the full domain in at least one file set —
-    // concretely no file may span the whole of BOTH dimensions
-    val spans = back.withColumn("f", input_file_name())
-      .groupBy("f")
-      .agg((max("x") - min("x")).as("xs"), (max("y") - min("y")).as("ys"))
-      .collect().map(r => (r.getInt(1), r.getInt(2)))
-    // sampled range boundaries may leave one straddling file; the rest must
-    // be rectangle-bounded (that bound is what row-group pruning uses)
-    val unbounded = spans.count { case (xs, ys) => xs == 31 && ys == 31 }
-    assert(spans.nonEmpty && unbounded <= 1,
-      s"too many files span the full domain in both dims: ${spans.mkString(",")}")
   }
 }

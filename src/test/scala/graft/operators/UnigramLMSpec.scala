@@ -105,7 +105,7 @@ class UnigramLMSpec extends SparkSpec {
           UnigramLM.scored(p, 37L)))) {
       val native = UnigramLM.viterbiUsage(subs, vocab)
         .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-      val unrolled = UnigramLM.viterbiUsageUnrolled(subs, vocab)
+      val unrolled = UnigramViterbiOracle.viterbiUsageUnrolled(subs, vocab)
         .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
       assert(native == unrolled,
         s"native vs unrolled diverged:\n native=$native\n unrolled=$unrolled")

@@ -57,23 +57,6 @@ class EventStreamsSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("appendOnlyByKey drops duplicate event_ids across micro-batches") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    val input = MemoryStream[(Long, Timestamp, String)]
-    val events = input.toDF().toDF("event_id", "ts", "payload")
-    val q = EventStreams.appendOnlyByKey(events)
-      .writeStream.format("memory").queryName("appendonly")
-      .outputMode("append").start()
-    try {
-      input.addData((1L, ts("2024-01-01 10:00:00"), "a"))
-      q.processAllAvailable()
-      input.addData((1L, ts("2024-01-01 10:00:00"), "a"), (2L, ts("2024-01-01 10:01:00"), "b"))
-      q.processAllAvailable()
-      assert(spark.table("appendonly").count() == 2)
-    } finally q.stop()
-  }
-
   test("stream-stream interval join matches clicks to in-window purchases only") {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
@@ -130,63 +113,6 @@ class EventStreamsSpec extends SparkSpec {
     assert(oneBatch == fiveBatches,
       s"join results changed with trigger granularity: $oneBatch vs $fiveBatches")
     assert(oneBatch == Set((3L, 1L, 10.0), (4L, 2L, 20.0)))
-  }
-
-  test("left-outer interval join emits the null row only after the watermark") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    val input = MemoryStream[(Long, Timestamp, Long, String, Double)]
-    val events = input.toDF().toDF("event_id", "ts", "user_id", "event_type", "value")
-    val q = EventStreams.clickPurchaseLeftOuter(events, maxLagSeconds = 3600)
-      .writeStream.format("memory").queryName("ssleftjoin")
-      .outputMode("append").start()
-    def emitted() = spark.table("ssleftjoin")
-      .select("event_id", "user_id", "purchase_value")
-      .collect()
-      .map(r => (r.getLong(0), r.getLong(1),
-        if (r.isNullAt(2)) None else Some(r.getDouble(2)))).toSet
-    try {
-      input.addData(
-        (1L, ts("2024-01-01 09:30:00"), 1L, "purchase", 10.0),
-        (5L, ts("2024-01-01 10:00:00"), 1L, "click", 0.0),    // converted
-        (6L, ts("2024-01-01 10:00:00"), 3L, "click", 0.0))    // never converts
-      q.processAllAvailable()
-      // the matched row streams out immediately; the unmatched click CANNOT
-      // — "no purchase arrived" is not final until the watermark says so
-      assert(emitted() == Set((5L, 1L, Some(10.0))))
-      // advance BOTH sides' event time to 14:00 → watermark 12:00 > click
-      // time, so click 6's no-match verdict becomes final
-      input.addData(
-        (7L, ts("2024-01-01 14:00:00"), 9L, "purchase", 99.0),
-        (8L, ts("2024-01-01 14:00:00"), 8L, "click", 0.0))
-      q.processAllAvailable()
-      // null emission happens in a batch AFTER the watermark advance commits
-      input.addData((9L, ts("2024-01-01 14:05:00"), 8L, "click", 0.0))
-      q.processAllAvailable()
-      // clicks 8/9 sit above the watermark and stay buffered in state —
-      // completeness is only ever claimed BEHIND the watermark
-      assert(emitted() == Set((5L, 1L, Some(10.0)), (6L, 3L, None)))
-    } finally q.stop()
-  }
-
-  test("slidingCounts places each event in its 4 overlapping hour windows") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    val input = MemoryStream[(Long, Timestamp, Long, String, Double)]
-    val events = input.toDF()
-      .toDF("event_id", "ts", "user_id", "event_type", "value")
-    val q = EventStreams.slidingCounts(events)
-      .writeStream.format("memory").queryName("sliding")
-      .outputMode("update").start()
-    try {
-      input.addData((1L, ts("2024-01-01 10:31:00"), 1L, "click", 0.0))
-      q.processAllAvailable()
-      val starts = spark.table("sliding")
-        .collect().map(r => (r.getTimestamp(0).toString, r.getLong(2))).toSet
-      assert(starts == Set( // 10:31 falls in windows starting 09:45..10:30
-        ("2024-01-01 09:45:00.0", 1L), ("2024-01-01 10:00:00.0", 1L),
-        ("2024-01-01 10:15:00.0", 1L), ("2024-01-01 10:30:00.0", 1L)))
-    } finally q.stop()
   }
 
   test("tumbling aggregation state survives a checkpointed restart") {
@@ -417,101 +343,6 @@ class EventStreamsSpec extends SparkSpec {
     }
   }
 
-  test("dropProbablySeen filters a stream against a static corpus bloom, stateless") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    // corpus of seen doc keys -> one fixed-size filter, built in batch
-    val corpus = (0L until 500L).map(i => s"doc-$i").toDF("doc_key")
-    val bloom = corpus
-      .agg(graft.functions.BloomBits.bloomBuild(xxhash64(col("doc_key")), 1 << 16, 7))
-      .head.getAs[Array[Byte]](0)
-    val input = MemoryStream[(Long, Timestamp, String)]
-    val stream = input.toDF().toDF("event_id", "ts", "doc_key")
-    val q = EventStreams.dropProbablySeen(stream, bloom, "doc_key")
-      .writeStream.format("memory").queryName("bloomdedup")
-      .outputMode("append").start()
-    try {
-      input.addData(
-        (1L, ts("2024-01-01 10:00:00"), "doc-3"),     // seen -> dropped
-        (2L, ts("2024-01-01 10:01:00"), "doc-499"),   // seen -> dropped
-        (3L, ts("2024-01-01 10:02:00"), "fresh-a"),   // new  -> kept
-        (4L, ts("2024-01-01 10:03:00"), "fresh-b"))   // new  -> kept
-      q.processAllAvailable()
-      val kept = spark.table("bloomdedup").select("doc_key")
-        .collect().map(_.getString(0)).toSet
-      // no false negatives: every corpus key is gone, with certainty
-      assert(!kept.contains("doc-3") && !kept.contains("doc-499"))
-      // kept rows are guaranteed new (these two could only vanish via a
-      // false positive; at 2^16 bits / 500 keys the fpp is ~1e-12)
-      assert(kept == Set("fresh-a", "fresh-b"))
-      // stateless: no state store operator at all in the streaming plan
-      assert(q.lastProgress.stateOperators.isEmpty)
-    } finally q.stop()
-  }
-
-  test("funnelDepth stays correct under out-of-order arrival (late view unlocks earlier clicks)") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    val input = MemoryStream[EventStreams.Event]
-    val q = EventStreams.funnelDepth(input.toDS(), watermark = "10 minutes")
-      .writeStream.format("memory").queryName("funnel")
-      .outputMode("update").start()
-    def ev(id: Long, t: String, user: Long, typ: String) =
-      EventStreams.Event(id, ts(t), user, typ, 0.0)
-    try {
-      // batch 1: click and purchase arrive FIRST — without a view nothing
-      // may resolve, and a naive advance-on-match stream would drop them
-      input.addData(
-        ev(1, "2024-01-01 10:05:00", 1, "click"),
-        ev(2, "2024-01-01 10:10:00", 1, "purchase"))
-      q.processAllAvailable()
-      assert(spark.table("funnel").isEmpty)
-      // batch 2: the LATE view, timestamped before both — but INSIDE the
-      // allowed lateness (watermark is 10:00 after batch 1; anything at or
-      // below it would be dropped upstream by the engine, the standard
-      // event-time admission contract)
-      input.addData(ev(3, "2024-01-01 10:01:00", 1, "view"))
-      q.processAllAvailable()
-      // batch 3: watermark pusher far in the future finalizes user 1
-      input.addData(ev(99, "2024-01-01 13:00:00", 2, "view"))
-      q.processAllAvailable()
-      input.addData(ev(100, "2024-01-01 16:00:00", 2, "click"))
-      q.processAllAvailable()
-      val depths = spark.table("funnel")
-        .groupBy("user_id").agg(max("depth").as("d"))
-        .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
-      // the late view unlocked the full chain: view@10:01 < click@10:05 <
-      // purchase@10:10 — depth 3, exactly what the batch e7 funnel computes
-      assert(depths.get(1L).contains(3), s"user 1: $depths")
-    } finally q.stop()
-  }
-
-  test("funnelDepth enforces strictly-increasing stage times (same-ts click does not ride its view)") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    val input = MemoryStream[EventStreams.Event]
-    val q = EventStreams.funnelDepth(input.toDS(), watermark = "1 minutes")
-      .writeStream.format("memory").queryName("funnel_ties")
-      .outputMode("update").start()
-    def ev(id: Long, t: String, user: Long, typ: String) =
-      EventStreams.Event(id, ts(t), user, typ, 0.0)
-    try {
-      input.addData(
-        ev(1, "2024-01-01 10:00:00", 1, "view"),
-        ev(2, "2024-01-01 10:00:00", 1, "click"), // same instant: no advance
-        ev(3, "2024-01-01 10:30:00", 1, "click"))
-      q.processAllAvailable()
-      input.addData(ev(9, "2024-01-01 12:00:00", 2, "view")) // watermark pusher
-      q.processAllAvailable()
-      val d = spark.table("funnel_ties").filter(col("user_id") === 1)
-        .agg(max("depth")).head.getInt(0)
-      assert(d == 2, s"expected view + the LATER click only, got depth $d")
-      val frontier = spark.table("funnel_ties").filter(col("user_id") === 1)
-        .agg(max("frontier_ms")).head.getLong(0)
-      assert(frontier == ts("2024-01-01 10:30:00").getTime)
-    } finally q.stop()
-  }
-
   test("streaming twin replays the driver events fixture and matches the batch e1 result") {
     // Round-7 chaos case: the driver regenerated /root/testdata with a new
     // parquet encoding for events.ts (timestamp[us], previously
@@ -565,31 +396,5 @@ class EventStreamsSpec extends SparkSpec {
       q.stop()
       graft.finance.ops.FileTrees.delete(streamDir)
     }
-  }
-
-  test("funnelDepth overflow degrades the hot key instead of killing the query") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    val input = MemoryStream[EventStreams.Event]
-    // maxBuffer 3: a bot key with more in-flight events must not crash
-    val q = EventStreams.funnelDepth(input.toDS(),
-        watermark = "1 minutes", maxBuffer = 3)
-      .writeStream.format("memory").queryName("funnel_hot")
-      .outputMode("update").start()
-    def ev(id: Long, t: String, user: Long, typ: String) =
-      EventStreams.Event(id, ts(t), user, typ, 0.0)
-    try {
-      // view first, then 6 clicks: 7 in-flight > maxBuffer; the EARLIEST
-      // survive the cut, so the chain still resolves correctly
-      input.addData(
-        (Seq(ev(1, "2024-01-01 10:00:00", 1, "view")) ++
-          (0 until 6).map(i => ev(10 + i, f"2024-01-01 10:0${i + 1}%d:00", 1, "click"))): _*)
-      q.processAllAvailable()
-      input.addData(ev(99, "2024-01-01 12:00:00", 2, "view")) // watermark pusher
-      q.processAllAvailable()
-      val d = spark.table("funnel_hot").filter(col("user_id") === 1)
-        .agg(max("depth")).head.getInt(0)
-      assert(d == 2, s"expected view + earliest click despite the cut, got $d")
-    } finally q.stop()
   }
 }
