@@ -208,8 +208,7 @@ private[graft] object Codegen {
   * the last line. Host weather ships with it: per repeat the wall, the
   * 1-min load average and `core_probe_sec` ([[coreProbeSec]]), the
   * pre-session `contended` verdict ([[awaitQuietBox]]: load_avg_1m below
-  * SPARK_GRAFT_BENCH_MAX_LOAD, default 5, waiting up to
-  * SPARK_GRAFT_BENCH_WAIT_SEC, default 300) and the in-run spread flags.
+  * 5, waiting up to 300 s) and the in-run spread flags.
   * The full record (`BENCH_LOCAL.json`, or SPARK_GRAFT_BENCH_OUT) adds
   * full-precision seconds, per-query shuffle read/write bytes (max across
   * repeats), per repeat `peak_heap_mb` (the sum of the heap pools' peaks,
@@ -358,21 +357,26 @@ object Bench {
     math.round((System.nanoTime() - t0) / 1e9 * 1000) / 1000.0
   }
 
+  /** The 1-min load average below which the box counts as quiet, and the
+    * seconds [[awaitQuietBox]] waits for it. */
+  private val MaxLoad = 5.0
+  private val WaitBudgetSec = 300
+
   /** Gate the measured run on a quiet box: poll until the 1-min load
-    * average is below `maxLoad` or `budgetSec` runs out (a busy box still
-    * produces a record, marked contended). Returns seconds waited. Runs
-    * before the session starts, whose executor threads would feed the
+    * average is below [[MaxLoad]] or [[WaitBudgetSec]] runs out (a busy box
+    * still produces a record, marked contended). Returns seconds waited.
+    * Runs before the session starts, whose executor threads would feed the
     * average it gates on. */
-  private def awaitQuietBox(maxLoad: Double, budgetSec: Int): Double = {
+  private def awaitQuietBox(): Double = {
     val t0 = System.nanoTime()
     var load = loadAvg1m
-    while (load >= maxLoad && (System.nanoTime() - t0) / 1e9 < budgetSec) {
-      System.err.println(f"[bench] load_avg_1m=$load%.2f >= $maxLoad%.1f — waiting for a quiet box")
+    while (load >= MaxLoad && (System.nanoTime() - t0) / 1e9 < WaitBudgetSec) {
+      System.err.println(f"[bench] load_avg_1m=$load%.2f >= $MaxLoad%.1f — waiting for a quiet box")
       Thread.sleep(15000)
       load = loadAvg1m
     }
     val waited = math.round((System.nanoTime() - t0) / 1e9 * 10) / 10.0
-    if (load >= maxLoad) System.err.println(
+    if (load >= MaxLoad) System.err.println(
       f"[bench] proceeding CONTENDED after $waited%.0f s (load_avg_1m=$load%.2f)")
     waited
   }
@@ -425,13 +429,11 @@ object Bench {
     val warmup = sys.env.getOrElse("SPARK_GRAFT_WARMUP", "1") != "0" &&
       new java.io.File(warmDir).isDirectory
     val threads = sys.env.getOrElse("SPARK_GRAFT_BENCH_THREADS", "8").toInt
-    val maxLoad = sys.env.getOrElse("SPARK_GRAFT_BENCH_MAX_LOAD", "5").toDouble
-    val waitBudget = sys.env.getOrElse("SPARK_GRAFT_BENCH_WAIT_SEC", "300").toInt
-    val waitedSec = awaitQuietBox(maxLoad, waitBudget)
+    val waitedSec = awaitQuietBox()
     // `contended` is a pre-session verdict: once the executors run, the
     // load average measures mostly this bench, so the per-repeat samples
     // ship for diagnosis only (`load_note`).
-    val contended = loadAvg1m >= maxLoad || waitedSec >= waitBudget
+    val contended = loadAvg1m >= MaxLoad || waitedSec >= WaitBudgetSec
     val spark = session("graft-bench", Map("spark.scheduler.mode" -> "FAIR"))
     val trace = new QueryTrace
     spark.sparkContext.addSparkListener(trace)

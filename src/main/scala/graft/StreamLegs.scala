@@ -240,8 +240,11 @@ private[graft] object StreamLegs {
         .filter(col("rk") === 1)
         .select(col("user_id"), col("n_events"), col("total_value"), col("last_seen_s"))
     }
+    // one file per trigger: at a small file count, larger triggers let
+    // segment A drain the fixture before its kill lands, and the restart
+    // would then recover nothing
     def startUls(outDir: String, ckpt: String) =
-      EventStreams.userLifetimeStats(src(4)).writeStream
+      EventStreams.userLifetimeStats(src(1)).writeStream
         .outputMode("update")
         .option("checkpointLocation", ckpt)
         .foreachBatch { (batch: DataFrame, batchId: Long) =>
@@ -261,7 +264,7 @@ private[graft] object StreamLegs {
     // fixture can drain in fewer than `killAfter` batches, or the query
     // can die with an error — polling a dead query would spin forever), or
     // a hard deadline as the last-resort hang guard.
-    val killAfter = 2L
+    val killAfter = 1L
     val (qA, segASec) = leg.section("segment_a") {
       val deadlineA = System.nanoTime() + 300L * 1000L * 1000L * 1000L // 300 s
       val qA = startUls(s"$work/uls-rec", s"$work/ckpt-uls-rec")
@@ -297,9 +300,12 @@ private[graft] object StreamLegs {
         s""""recovery_sec":${f"$recoverySec%.2f"},"batches_before_kill":$batchesA,""" +
         s""""batches_after_restart":$batchesB,"users":$nUsers,""" +
         s""""final_rows_match_uninterrupted":${mismatch == 0L}""")
-    // a violated state bound or a recovery mismatch fails the leg itself —
-    // a red exit code, not just a false flag in the JSON
+    // a violated state bound, a recovery mismatch or a restart that had
+    // nothing left to recover fails the leg itself — a red exit code, not
+    // just a false flag in the JSON
     require(mismatch == 0L, s"RECOVERY MISMATCH: $mismatch rows differ")
+    require(batchesB > 0,
+      s"RECOVERY NOT EXERCISED: segment A ran all $batchesA batches before the kill")
     require(stateBoundViolations == 0, s"$stateBoundViolations state bound(s) violated")
   }
 

@@ -22,10 +22,11 @@ import graft.finance.connector.JobLaunchClient
   * directory generation ([[graft.io.SchemaMemo]]), so a request re-infers
   * only what a swap replaced. The server answers up to one request per
   * session core at once. One [[TableStore]] backs every service, and the
-  * server shares its lock ([[ApiServer]]'s lock contract): reads hold it
-  * shared, edits serialize on the server's writer mutex and hold it
-  * exclusively only for their swap, so reads serve while an edit's Spark
-  * jobs run.
+  * server shares its lock (each route's access class, [[ApiServer]]'s
+  * lock contract): reads hold it shared, edits serialize on the server's
+  * writer mutex and hold it exclusively only for their swap, backups hold
+  * it exclusively, and the orchestrator calls hold no lock, so reads serve
+  * while an edit's Spark jobs run and a hung orchestrator stalls no one.
   * The write half (user-category mutations) and the Dagster trigger
   * (`GRAFT_DAGSTER_URL`, same GraphQL client the reference's backend uses,
   * also behind the debounced retrain of All-Data edits) are wired when

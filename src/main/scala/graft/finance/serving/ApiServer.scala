@@ -27,23 +27,37 @@ import graft.finance.ops.Debouncer
   * the tables' current state, matching the per-request DB session of the
   * reference. The Spark driver hosts the server; executors never see it.
   *
-  * Concurrency: requests run on a fixed pool of `workers` daemon threads
-  * under two locks. `tableLock` is the fair read/write lock of the
+  * Routing: `routes` declares each route once, as the reference's FastAPI
+  * decorators do: its method, its path template (a `{id}`/`{name}` segment
+  * captures, passed on exactly as `getPath` decoded it), its access class
+  * and its handler. One dispatcher on one `HttpServer` context serves
+  * them as Starlette's router would: the first route whose path and method
+  * match runs; a path that only other methods declare answers 405, any
+  * other path 404, both with FastAPI's JSON `detail`. A service that is
+  * `None` declares no routes, so its paths answer 404.
+  *
+  * Concurrency: requests run on a fixed pool of `workers` daemon threads.
+  * `tableLock` is the fair read/write lock of the
   * [[graft.finance.TableStore]] the services publish through
   * ([[ApiMain.build]] passes `store.lock`), and the store takes it
   * exclusively only while it swaps a table's directory. `writer` is this
-  * server's edit mutex.
-  *  - Routes that only read (every GET, and the trigger routes, which only
-  *    call the orchestrator) hold `tableLock` shared for the whole request,
-  *    so their Spark jobs overlap and no swap moves a directory they list.
-  *  - Edits (the POST/PUT routes of transactions, validated categories and
-  *    categories) hold only `writer`: edits run one at a time, so a
+  * server's edit mutex. A route's access class picks the locks it holds:
+  *  - `Read` (every GET but the warnings panel) holds `tableLock` shared
+  *    for the whole request, so reads' Spark jobs overlap and no swap
+  *    moves a directory they list.
+  *  - `Edit` (the transaction, validated-category and category edits)
+  *    holds only `writer`: edits run one at a time, so a
   *    read–merge–swap–re-read of a table is atomic against other edits,
   *    while reads keep serving during the merge's Spark jobs. An edit waits
   *    at its swap for in-flight reads to drain.
-  *  - Backup run, restore and schedule take `writer` and then `tableLock`
-  *    exclusively for the whole request (one acquisition order, so no
-  *    deadlock with an edit's swap): they copy or replace the whole tree.
+  *  - `Replace` (backup run, restore and schedule) takes `writer` and then
+  *    `tableLock` exclusively for the whole request (one acquisition order,
+  *    so no deadlock with an edit's swap): they copy or replace the whole
+  *    tree.
+  *  - `Outside` (the three triggers and the warnings panel) holds no lock:
+  *    they only call the orchestrator, whose calls can hang up to their
+  *    timeouts, and a hung call under the shared lock would hold an edit's
+  *    swap, and behind it (the lock is fair) every new read.
   *
   * An accepted All-Data category edit schedules
   * `5_full_refresh_validated_retrain_repredict` through `retrainDebouncer`
@@ -66,6 +80,7 @@ final class ApiServer(
     retrainDebouncer: Debouncer =
       new Debouncer(Debouncer.DefaultDebounceSeconds * 1000L),
     tableLock: ReentrantReadWriteLock = new ReentrantReadWriteLock(true)) {
+  import ApiServer._
 
   private val pool: ExecutorService =
     Executors.newFixedThreadPool(math.max(1, workers), (r: Runnable) => {
@@ -75,50 +90,93 @@ final class ApiServer(
     })
   private val writer = new ReentrantLock(true)
 
+  private val routes: Seq[Route] = Seq(
+    Route("GET", "/api/transactions", Read, c => transactions(c.query)),
+    Route("GET", "/api/transactions/categories/list", Read, _ => categoriesList()),
+    Route("GET", "/api/validated-transactions", Read, c => validatedTransactions(c.query)),
+    Route("GET", "/api/validated-transactions/categories/list", Read,
+      _ => validatedCategoriesList()),
+    Route("GET", "/api/validated-transactions/categories/all", Read, _ => categoriesAll()),
+    Route("GET", "/api/control-center/connections", Read, c => connections(c.query)),
+    Route("GET", "/api/control-center/initialization-status", Read,
+      _ => initializationStatus()),
+    Route("GET", "/api/control-center/simplefin-warnings", Outside,
+      c => warningsRoute(c.query))
+  ) ++ userCategories.toSeq.flatMap(svc => Seq(
+    Route("POST", "/api/transactions/bulk-validate", Edit, c => bulkValidateRoute(svc, c.body)),
+    Route("POST", "/api/transactions/{id}/categorize", Edit,
+      c => categorizeRoute(svc, c("id"), c.body)),
+    Route("PUT", "/api/transactions/{id}/validate", Edit,
+      c => validateRoute(svc, c("id"), c.body)),
+    Route("PUT", "/api/transactions/{id}/notes", Edit, c => notesRoute(svc, c("id"), c.body)),
+    Route("PUT", "/api/transactions/{id}/exclude-from-forecast", Edit,
+      c => excludeRoute(svc, c("id"), c.body)),
+    Route("PUT", "/api/validated-transactions/{id}/category", Edit,
+      c => validatedCategoryRoute(svc, c("id"), c.body))
+  )) ++ trigger.toSeq.flatMap(launch => Seq(
+    // `api/transactions.py:164-181` and `control_center.py`'s two triggers
+    Route("POST", "/api/transactions/trigger-refresh-validated", Outside,
+      _ => triggerJob(launch, "4_refresh_validated_retrain_repredict")),
+    Route("POST", "/api/control-center/trigger-ingest-and-predict", Outside,
+      _ => triggerJob(launch, "2_ingest_and_predict")),
+    Route("POST", "/api/control-center/trigger-initialization", Outside,
+      _ => triggerJob(launch, "1_dagster_init"))
+  )) ++ categoryCatalog.toSeq.flatMap(svc => Seq(
+    Route("GET", "/api/categories", Read,
+      _ => (200, svc.list().map(categoryJson).mkString("[", ",", "]"))),
+    Route("POST", "/api/categories", Edit, c => addCategoryRoute(svc, c.body)),
+    Route("PUT", "/api/categories/{name}/active", Edit,
+      c => categoryActiveRoute(svc, c("name"), c.body))
+  )) ++ registry.toSeq.flatMap(reg => Seq(
+    Route("GET", "/api/model-metrics/metrics/history", Read, _ => metricsHistory(reg())),
+    Route("GET", "/api/model-metrics/training-status", Read, _ => trainingStatus(reg()))
+  )) ++ backups.toSeq.flatMap(svc => Seq(
+    Route("POST", "/api/backup/run", Replace, _ => backupRunRoute(svc)),
+    Route("GET", "/api/backup/list", Read, _ => backupListRoute(svc)),
+    Route("POST", "/api/backup/restore", Replace, c => restoreRoute(svc, c.body)),
+    Route("GET", "/api/backup/schedule", Read, _ => (200, scheduleJson(svc.loadSchedule()))),
+    Route("POST", "/api/backup/schedule", Replace, c => saveScheduleRoute(svc, c.body)),
+    Route("GET", "/api/backup/download", Read, c => { downloadRoute(c.ex, svc); Streamed })
+  ))
+
   private val server = HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
   server.setExecutor(pool)
-  // HttpServer matches the longest context prefix; the exact-path check in
-  // `exchange` turns unknown subpaths into 404s as FastAPI's router would.
-  server.createContext("/api/transactions/categories/list",
-    guarded(exchange("/api/transactions/categories/list", categoriesList)))
-  server.createContext("/api/transactions", guarded(transactionsDispatch))
-  server.createContext("/api/validated-transactions", guarded(validatedDispatch))
-  server.createContext("/api/control-center", guarded(controlCenterDispatch))
-  server.createContext("/api/categories", guarded(categoriesDispatch))
-  server.createContext("/api/model-metrics", guarded(modelMetricsDispatch))
-  server.createContext("/api/backup", guarded(backupDispatch))
+  server.createContext("/", dispatch)
 
   def start(): ApiServer = { server.start(); this }
   def stop(): Unit = { server.stop(0); pool.shutdown() }
   def boundPort: Int = server.getAddress.getPort
 
-  /** Run `handler` under the locks its route needs (class scaladoc): the
-    * shared `tableLock` for a read or a trigger, `writer` and then the
-    * exclusive `tableLock` for a backup mutation, `writer` for an edit. */
-  private def guarded(handler: HttpExchange => Unit)(ex: HttpExchange): Unit = {
-    val path = ex.getRequestURI.getPath
-    if (ex.getRequestMethod == "GET" ||
-        path.split("/").lastOption.exists(_.startsWith("trigger-")))
-      holding(tableLock.readLock)(handler(ex))
-    else if (path.startsWith("/api/backup"))
-      holding(writer)(holding(tableLock.writeLock)(handler(ex)))
-    else holding(writer)(handler(ex))
+  /** Route one request: match, lock by access class, run, map a body
+    * parse error to 422 and any other failure to 500, respond. The
+    * response is written after the locks are released. */
+  private def dispatch(ex: HttpExchange): Unit = {
+    val path = segments(ex.getRequestURI.getPath)
+    val onPath = routes.flatMap(r => r.bind(path).map(r -> _))
+    val reply = onPath.find(_._1.method == ex.getRequestMethod) match {
+      case Some((route, captures)) =>
+        locked(route.access) {
+          try route.handle(new Call(ex, captures)) catch {
+            case e: ApiJson.ParseError => (422, bodyError(e.getMessage))
+            case e: Exception => (500, serverError(e))
+          }
+        }
+      case None if onPath.nonEmpty => (405, methodNotAllowed)
+      case None => (404, notFound)
+    }
+    if (reply ne Streamed) respond(ex, reply._1, reply._2)
   }
 
-  private def holding(l: Lock)(body: => Unit): Unit = {
+  private def locked[A](access: Access)(body: => A): A = access match {
+    case Read => holding(tableLock.readLock)(body)
+    case Edit => holding(writer)(body)
+    case Replace => holding(writer)(holding(tableLock.writeLock)(body))
+    case Outside => body
+  }
+
+  private def holding[A](l: Lock)(body: => A): A = {
     l.lock()
     try body finally l.unlock()
-  }
-
-  private def exchange(
-      exactPath: String,
-      route: Map[String, String] => (Int, String))(ex: HttpExchange): Unit = {
-    val (status, body) =
-      if (ex.getRequestURI.getPath != exactPath) (404, notFound)
-      else if (ex.getRequestMethod != "GET") (405, methodNotAllowed)
-      else try route(ApiParams.parseQueryString(ex.getRequestURI.getRawQuery))
-      catch { case e: Exception => (500, serverError(e)) }
-    respond(ex, status, body)
   }
 
   private def respond(ex: HttpExchange, status: Int, body: String): Unit = {
@@ -129,40 +187,7 @@ final class ApiServer(
     ex.close()
   }
 
-  /** The /api/transactions router (`api/transactions.py`): the GET list on
-    * the bare path plus the write half — categorize / validate / notes /
-    * exclude-from-forecast / bulk-validate / trigger — dispatched on
-    * (method, path tail) as FastAPI's path templates do. */
-  private def transactionsDispatch(ex: HttpExchange): Unit = {
-    val tail = ex.getRequestURI.getPath.stripPrefix("/api/transactions")
-      .split("/").filter(_.nonEmpty).toList
-    val (status, body) =
-      try (ex.getRequestMethod, tail) match {
-        case ("GET", Nil) =>
-          transactions(ApiParams.parseQueryString(ex.getRequestURI.getRawQuery))
-        case ("POST", List("bulk-validate")) => bulkValidateRoute(readBody(ex))
-        case ("POST", List("trigger-refresh-validated")) => triggerRefreshRoute()
-        case ("POST", List(id, "categorize")) => categorizeRoute(id, readBody(ex))
-        case ("PUT", List(id, "validate")) => validateRoute(id, readBody(ex))
-        case ("PUT", List(id, "notes")) => notesRoute(id, readBody(ex))
-        case ("PUT", List(id, "exclude-from-forecast")) => excludeRoute(id, readBody(ex))
-        case (_, Nil) => (405, methodNotAllowed)
-        case _ => (404, notFound)
-      } catch {
-        case e: ApiJson.ParseError => (422, bodyError(e.getMessage))
-        case e: Exception => (500, serverError(e))
-      }
-    respond(ex, status, body)
-  }
-
   // ---- request-body plumbing ----
-
-  private def readBody(ex: HttpExchange): Map[String, Any] =
-    ApiJson.parse(new String(ex.getRequestBody.readAllBytes(),
-      StandardCharsets.UTF_8)) match {
-      case m: Map[_, _] => m.asInstanceOf[Map[String, Any]]
-      case _ => throw new ApiJson.ParseError("expected a JSON object body")
-    }
 
   /** FastAPI's body-validation 422 shape. */
   private def bodyError(msg: String, field: String = "__root__"): String =
@@ -173,14 +198,14 @@ final class ApiServer(
   private def detail(msg: String): String =
     ApiJson.obj(Seq("detail" -> ApiJson.str(msg)))
 
-  private def requiredString(b: Map[String, Any], k: String): Either[(Int, String), String] =
+  private def requiredString(b: Map[String, Any], k: String): Either[Reply, String] =
     b.get(k) match {
       case Some(s: String) => Right(s)
       case Some(_) => Left((422, bodyError("str type expected", k)))
       case None => Left((422, bodyError("field required", k)))
     }
 
-  private def requiredBool(b: Map[String, Any], k: String): Either[(Int, String), Boolean] =
+  private def requiredBool(b: Map[String, Any], k: String): Either[Reply, Boolean] =
     b.get(k) match {
       case Some(v: Boolean) => Right(v)
       case Some(_) => Left((422, bodyError("bool type expected", k)))
@@ -192,12 +217,6 @@ final class ApiServer(
 
   private def optBool(b: Map[String, Any], k: String): Option[Boolean] =
     b.get(k).collect { case v: Boolean => v }
-
-  private def withService(f: UserCategoryService => (Int, String)): (Int, String) =
-    userCategories match {
-      case Some(svc) => f(svc)
-      case None => (404, notFound) // read-only deployment: write surface absent
-    }
 
   private def ucJson(r: Any): String = r match {
     case row: UserCategoryService#UserCategoryRow =>
@@ -214,124 +233,87 @@ final class ApiServer(
 
   // ---- write routes (`api/transactions.py:66-200`) ----
 
-  private def categorizeRoute(id: String, b: Map[String, Any]): (Int, String) =
-    withService { svc =>
-      requiredString(b, "master_category") match {
-        case Left(err) => err
-        case Right(master) =>
-          if (!svc.transactionExists(id)) (404, detail("Transaction not found"))
-          else (200, ucJson(svc.categorize(id, master,
-            sourceCategory = optString(b, "source_category"),
-            notes = optString(b, "notes"),
-            validated = optBool(b, "validated"),
-            excludeFromForecast = optBool(b, "exclude_from_forecast"))))
-      }
+  private def categorizeRoute(svc: UserCategoryService, id: String, b: Map[String, Any]): Reply =
+    requiredString(b, "master_category") match {
+      case Left(err) => err
+      case Right(master) =>
+        if (!svc.transactionExists(id)) (404, detail("Transaction not found"))
+        else (200, ucJson(svc.categorize(id, master,
+          sourceCategory = optString(b, "source_category"),
+          notes = optString(b, "notes"),
+          validated = optBool(b, "validated"),
+          excludeFromForecast = optBool(b, "exclude_from_forecast"))))
     }
 
-  private def validateRoute(id: String, b: Map[String, Any]): (Int, String) =
-    withService { svc =>
-      requiredBool(b, "validated") match {
-        case Left(err) => err
-        case Right(v) =>
-          try {
-            val r = svc.updateValidation(id, v)
-            (200, ApiJson.obj(Seq(
-              "transaction_id" -> ApiJson.str(id),
-              "validated" -> r.validated.toString)))
-          } catch {
-            case e: UserCategoryService.NoCategoryError => (404, detail(e.getMessage))
-          }
-      }
-    }
-
-  private def notesRoute(id: String, b: Map[String, Any]): (Int, String) =
-    withService { svc =>
-      try {
-        val r = svc.updateNotes(id, optString(b, "notes"))
-        (200, ApiJson.obj(Seq(
-          "transaction_id" -> ApiJson.str(id),
-          "notes" -> ApiJson.value(r.notes.orNull))))
-      } catch {
-        case e: UserCategoryService.NoCategoryError => (404, detail(e.getMessage))
-      }
-    }
-
-  private def excludeRoute(id: String, b: Map[String, Any]): (Int, String) =
-    withService { svc =>
-      requiredBool(b, "exclude_from_forecast") match {
-        case Left(err) => err
-        case Right(v) =>
-          try {
-            val r = svc.updateExcludeFromForecast(id, v)
-            (200, ApiJson.obj(Seq(
-              "transaction_id" -> ApiJson.str(id),
-              "exclude_from_forecast" -> r.excludeFromForecast.toString)))
-          } catch {
-            // this route maps ValueError to 400, not 404 (transactions.py:146)
-            case e: UserCategoryService.NoCategoryError => (400, detail(e.getMessage))
-          }
-      }
-    }
-
-  private def bulkValidateRoute(b: Map[String, Any]): (Int, String) =
-    withService { svc =>
-      b.get("transaction_ids") match {
-        case Some(ids: List[_]) if ids.forall(_.isInstanceOf[String]) =>
-          val n = svc.bulkValidate(ids.asInstanceOf[List[String]])
-          (200, ApiJson.obj(Seq(
-            "message" -> ApiJson.str(s"Marked $n transactions as validated"),
-            "updated_count" -> n.toString)))
-        case Some(_) => (422, bodyError("list of str expected", "transaction_ids"))
-        case None => (422, bodyError("field required", "transaction_ids"))
-      }
-    }
-
-  /** POST /api/transactions/trigger-refresh-validated
-    * (`api/transactions.py:164-181`): launch the refresh job by name via
-    * the injected launcher (JobLaunchClient or the Dagster glue). */
-  private def triggerRefreshRoute(): (Int, String) =
-    triggerJob("4_refresh_validated_retrain_repredict")
-
-  private def triggerJob(jobName: String): (Int, String) =
-    trigger match {
-      case None => (404, notFound)
-      case Some(launch) =>
+  private def validateRoute(svc: UserCategoryService, id: String, b: Map[String, Any]): Reply =
+    requiredBool(b, "validated") match {
+      case Left(err) => err
+      case Right(v) =>
         try {
-          val runId = launch(jobName)
+          val r = svc.updateValidation(id, v)
           (200, ApiJson.obj(Seq(
-            "success" -> "true",
-            "message" -> ApiJson.str("Dagster job triggered successfully"),
-            "run_id" -> ApiJson.str(runId))))
+            "transaction_id" -> ApiJson.str(id),
+            "validated" -> r.validated.toString)))
         } catch {
-          case e: Exception =>
-            (500, detail(s"Error triggering Dagster job: ${e.getMessage}"))
+          case e: UserCategoryService.NoCategoryError => (404, detail(e.getMessage))
         }
+    }
+
+  private def notesRoute(svc: UserCategoryService, id: String, b: Map[String, Any]): Reply =
+    try {
+      val r = svc.updateNotes(id, optString(b, "notes"))
+      (200, ApiJson.obj(Seq(
+        "transaction_id" -> ApiJson.str(id),
+        "notes" -> ApiJson.value(r.notes.orNull))))
+    } catch {
+      case e: UserCategoryService.NoCategoryError => (404, detail(e.getMessage))
+    }
+
+  private def excludeRoute(svc: UserCategoryService, id: String, b: Map[String, Any]): Reply =
+    requiredBool(b, "exclude_from_forecast") match {
+      case Left(err) => err
+      case Right(v) =>
+        try {
+          val r = svc.updateExcludeFromForecast(id, v)
+          (200, ApiJson.obj(Seq(
+            "transaction_id" -> ApiJson.str(id),
+            "exclude_from_forecast" -> r.excludeFromForecast.toString)))
+        } catch {
+          // this route maps ValueError to 400, not 404 (transactions.py:146)
+          case e: UserCategoryService.NoCategoryError => (400, detail(e.getMessage))
+        }
+    }
+
+  private def bulkValidateRoute(svc: UserCategoryService, b: Map[String, Any]): Reply =
+    b.get("transaction_ids") match {
+      case Some(ids: List[_]) if ids.forall(_.isInstanceOf[String]) =>
+        val n = svc.bulkValidate(ids.asInstanceOf[List[String]])
+        (200, ApiJson.obj(Seq(
+          "message" -> ApiJson.str(s"Marked $n transactions as validated"),
+          "updated_count" -> n.toString)))
+      case Some(_) => (422, bodyError("list of str expected", "transaction_ids"))
+      case None => (422, bodyError("field required", "transaction_ids"))
+    }
+
+  /** Launch a job by name via the injected launcher (JobLaunchClient or
+    * the Dagster glue). */
+  private def triggerJob(launch: String => String, jobName: String): Reply =
+    try {
+      val runId = launch(jobName)
+      (200, ApiJson.obj(Seq(
+        "success" -> "true",
+        "message" -> ApiJson.str("Dagster job triggered successfully"),
+        "run_id" -> ApiJson.str(runId))))
+    } catch {
+      case e: Exception =>
+        (500, detail(s"Error triggering Dagster job: ${e.getMessage}"))
     }
 
   // ---- /api/validated-transactions (`api/validated_transactions.py`) ----
 
-  private def validatedDispatch(ex: HttpExchange): Unit = {
-    val tail = ex.getRequestURI.getPath.stripPrefix("/api/validated-transactions")
-      .split("/").filter(_.nonEmpty).toList
-    val (status, body) =
-      try (ex.getRequestMethod, tail) match {
-        case ("GET", Nil) =>
-          validatedTransactions(ApiParams.parseQueryString(ex.getRequestURI.getRawQuery))
-        case ("GET", List("categories", "list")) => validatedCategoriesList()
-        case ("GET", List("categories", "all")) => categoriesAll()
-        case ("PUT", List(id, "category")) => validatedCategoryRoute(id, readBody(ex))
-        case (_, Nil) => (405, methodNotAllowed)
-        case _ => (404, notFound)
-      } catch {
-        case e: ApiJson.ParseError => (422, bodyError(e.getMessage))
-        case e: Exception => (500, serverError(e))
-      }
-    respond(ex, status, body)
-  }
-
   /** GET categories/list (`validated_transactions.py:176-188`): distinct
     * categories present in the validated fact. */
-  private def validatedCategoriesList(): (Int, String) = {
+  private def validatedCategoriesList(): Reply = {
     val names = validated()
       .select(col("master_category")).filter(col("master_category").isNotNull)
       .distinct().orderBy(col("master_category"))
@@ -341,7 +323,7 @@ final class ApiServer(
 
   /** GET categories/all (`validated_transactions.py:191-194` →
     * `get_categories`): the active catalog, defaults on any failure. */
-  private def categoriesAll(): (Int, String) = {
+  private def categoriesAll(): Reply = {
     val names =
       try categoryCatalog.map(_.activeNames())
         .getOrElse(CategoryCatalog.DefaultCategories.sorted)
@@ -351,46 +333,26 @@ final class ApiServer(
 
   /** PUT {id}/category (`validated_transactions.py:197-217`): All-Data
     * editor — only validated rows editable, errors map to 400. */
-  private def validatedCategoryRoute(id: String, b: Map[String, Any]): (Int, String) =
-    withService { svc =>
-      requiredString(b, "master_category") match {
-        case Left(err) => err
-        case Right(master) =>
-          try {
-            val r = svc.updateValidatedCategory(id, master)
-            trigger.foreach(launch => retrainDebouncer.call(() =>
-              launch("5_full_refresh_validated_retrain_repredict")))
-            (200, ApiJson.obj(Seq(
-              "transaction_id" -> ApiJson.str(r.transactionId),
-              "master_category" -> ApiJson.value(r.masterCategory.orNull),
-              "message" -> ApiJson.str(
-                "Category updated. Full refresh + retrain scheduled (~45s after your last edit)."))))
-          } catch {
-            case e: UserCategoryService.NoCategoryError => (400, detail(e.getMessage))
-          }
-      }
+  private def validatedCategoryRoute(
+      svc: UserCategoryService, id: String, b: Map[String, Any]): Reply =
+    requiredString(b, "master_category") match {
+      case Left(err) => err
+      case Right(master) =>
+        try {
+          val r = svc.updateValidatedCategory(id, master)
+          trigger.foreach(launch => retrainDebouncer.call(() =>
+            launch("5_full_refresh_validated_retrain_repredict")))
+          (200, ApiJson.obj(Seq(
+            "transaction_id" -> ApiJson.str(r.transactionId),
+            "master_category" -> ApiJson.value(r.masterCategory.orNull),
+            "message" -> ApiJson.str(
+              "Category updated. Full refresh + retrain scheduled (~45s after your last edit)."))))
+        } catch {
+          case e: UserCategoryService.NoCategoryError => (400, detail(e.getMessage))
+        }
     }
 
   // ---- /api/control-center (`api/control_center.py`) ----
-
-  private def controlCenterDispatch(ex: HttpExchange): Unit = {
-    val tail = ex.getRequestURI.getPath.stripPrefix("/api/control-center")
-      .split("/").filter(_.nonEmpty).toList
-    val (status, body) =
-      try (ex.getRequestMethod, tail) match {
-        case ("GET", List("connections")) =>
-          connections(ApiParams.parseQueryString(ex.getRequestURI.getRawQuery))
-        case ("GET", List("initialization-status")) => initializationStatus()
-        case ("GET", List("simplefin-warnings")) =>
-          warningsRoute(ApiParams.parseQueryString(ex.getRequestURI.getRawQuery))
-        case ("POST", List("trigger-ingest-and-predict")) =>
-          triggerJob("2_ingest_and_predict")
-        case ("POST", List("trigger-initialization")) =>
-          triggerJob("1_dagster_init")
-        case _ => (404, notFound)
-      } catch { case e: Exception => (500, serverError(e)) }
-    respond(ex, status, body)
-  }
 
   /** GET simplefin-warnings (`control_center.py:176-189`): WARNING/ERROR
     * logs from the most recent simplefin asset run, via the warnings
@@ -398,7 +360,7 @@ final class ApiServer(
     * pair). Like the reference, EVERY backend failure — including no
     * orchestrator configured at all — degrades to the empty response, 200:
     * the warnings panel must never take the control center down. */
-  private def warningsRoute(q: Map[String, String]): (Int, String) =
+  private def warningsRoute(q: Map[String, String]): Reply =
     ApiParams.warningsQuery(q) match {
       case Left(errs) => (422, ApiParams.errorBody(errs))
       case Right(limit) =>
@@ -422,7 +384,7 @@ final class ApiServer(
   /** GET initialization-status (`control_center.py:344-390`, the A11
     * existence check): empty source AND empty validated fact → needs init.
     * Any failure to check also reports needs-init, as the reference does. */
-  private def initializationStatus(): (Int, String) = {
+  private def initializationStatus(): Reply = {
     val (needsInit, message) =
       try {
         val hasSource = simplefinRaw().limit(1).count() > 0
@@ -443,37 +405,22 @@ final class ApiServer(
 
   // ---- /api/categories (`api/categories.py`) ----
 
-  private def categoriesDispatch(ex: HttpExchange): Unit = {
-    val tail = ex.getRequestURI.getPath.stripPrefix("/api/categories")
-      .split("/").filter(_.nonEmpty).toList
-    val (status, body) =
-      try (categoryCatalog, ex.getRequestMethod, tail) match {
-        case (None, _, _) => (404, notFound)
-        case (Some(svc), "GET", Nil) =>
-          (200, svc.list().map(categoryJson).mkString("[", ",", "]"))
-        case (Some(svc), "POST", Nil) =>
-          requiredString(readBody(ex), "name") match {
-            case Left(err) => err
-            case Right(name) =>
-              try (200, categoryJson(svc.add(name)))
-              catch { case e: IllegalArgumentException => (400, detail(e.getMessage)) }
-          }
-        case (Some(svc), "PUT", List(name, "active")) =>
-          requiredBool(readBody(ex), "is_active") match {
-            case Left(err) => err
-            case Right(active) =>
-              try (200, categoryJson(svc.setActive(
-                java.net.URLDecoder.decode(name, "UTF-8"), active)))
-              catch { case e: IllegalArgumentException => (404, detail(e.getMessage)) }
-          }
-        case (_, _, Nil) => (405, methodNotAllowed)
-        case _ => (404, notFound)
-      } catch {
-        case e: ApiJson.ParseError => (422, bodyError(e.getMessage))
-        case e: Exception => (500, serverError(e))
-      }
-    respond(ex, status, body)
-  }
+  private def addCategoryRoute(svc: CategoryCatalogService, b: Map[String, Any]): Reply =
+    requiredString(b, "name") match {
+      case Left(err) => err
+      case Right(name) =>
+        try (200, categoryJson(svc.add(name)))
+        catch { case e: IllegalArgumentException => (400, detail(e.getMessage)) }
+    }
+
+  private def categoryActiveRoute(
+      svc: CategoryCatalogService, name: String, b: Map[String, Any]): Reply =
+    requiredBool(b, "is_active") match {
+      case Left(err) => err
+      case Right(active) =>
+        try (200, categoryJson(svc.setActive(name, active)))
+        catch { case e: IllegalArgumentException => (404, detail(e.getMessage)) }
+    }
 
   /** CategoryResponse shape (`categories.py:18-23`). */
   private def categoryJson(r: org.apache.spark.sql.Row): String =
@@ -486,83 +433,56 @@ final class ApiServer(
 
   // ---- /api/model-metrics (`api/model_metrics.py`) ----
 
-  private def modelMetricsDispatch(ex: HttpExchange): Unit = {
-    val tail = ex.getRequestURI.getPath.stripPrefix("/api/model-metrics")
-      .split("/").filter(_.nonEmpty).toList
-    val (status, body) =
-      try (registry, ex.getRequestMethod, tail) match {
-        case (None, _, _) => (404, notFound)
-        case (Some(reg), "GET", List("metrics", "history")) =>
-          val rows = graft.finance.TableStore.metricsHistory(reg())
-          val history = ApiJson.rows(rows)
-          val n = rows.count()
-          (200, ApiJson.obj(Seq(
-            "metrics" -> history, "total_count" -> n.toString)))
-        case (Some(reg), "GET", List("training-status")) =>
-          val rows = graft.finance.TableStore.trainingStatus(reg()).collect()
-          rows.headOption match {
-            case None => (200, ApiJson.obj(Seq(
-              "status" -> ApiJson.str("not_found"),
-              "message" -> ApiJson.str("No training runs recorded"))))
-            case Some(r) => (200, ApiJson.row(r))
-          }
-        case _ => (404, notFound)
-      } catch { case e: Exception => (500, serverError(e)) }
-    respond(ex, status, body)
+  private def metricsHistory(reg: DataFrame): Reply = {
+    val rows = graft.finance.TableStore.metricsHistory(reg)
+    val history = ApiJson.rows(rows)
+    val n = rows.count()
+    (200, ApiJson.obj(Seq("metrics" -> history, "total_count" -> n.toString)))
   }
+
+  private def trainingStatus(reg: DataFrame): Reply =
+    graft.finance.TableStore.trainingStatus(reg).collect().headOption match {
+      case None => (200, ApiJson.obj(Seq(
+        "status" -> ApiJson.str("not_found"),
+        "message" -> ApiJson.str("No training runs recorded"))))
+      case Some(r) => (200, ApiJson.row(r))
+    }
 
   // ---- /api/backup (`api/backup.py`) ----
 
-  private def backupDispatch(ex: HttpExchange): Unit = {
-    val tail = ex.getRequestURI.getPath.stripPrefix("/api/backup")
-      .split("/").filter(_.nonEmpty).toList
-    (backups, ex.getRequestMethod, tail) match {
-      case (Some(svc), "GET", List("download")) => downloadRoute(ex, svc); return
-      case _ => ()
-    }
-    val (status, body) =
-      try (backups, ex.getRequestMethod, tail) match {
-        case (None, _, _) => (404, notFound)
-        case (Some(svc), "POST", List("run")) =>
-          val (name, size) = svc.run()
-          (200, ApiJson.obj(Seq(
-            "success" -> "true",
-            "filename" -> ApiJson.str(name),
-            "message" -> ApiJson.str(s"Backup saved: $name ($size bytes)"))))
-        case (Some(svc), "GET", List("list")) =>
-          (200, ApiJson.obj(Seq("backups" -> svc.list().map(b =>
-            ApiJson.obj(Seq(
-              "filename" -> ApiJson.str(b.filename),
-              "size_bytes" -> b.sizeBytes.toString,
-              "created" -> ApiJson.str(b.created)))).mkString("[", ",", "]"))))
-        case (Some(svc), "POST", List("restore")) =>
-          val b = readBody(ex)
-          requiredString(b, "filename") match {
-            case Left(err) => err
-            case Right(filename) =>
-              svc.restore(filename, optString(b, "confirm")) match {
-                case Left((code, msg)) => (code, detail(msg))
-                case Right(msg) => (200, ApiJson.obj(Seq(
-                  "success" -> "true", "message" -> ApiJson.str(msg))))
-              }
-          }
-        case (Some(svc), "GET", List("schedule")) =>
-          (200, scheduleJson(svc.loadSchedule()))
-        case (Some(svc), "POST", List("schedule")) =>
-          val b = readBody(ex)
-          requiredBool(b, "enabled") match {
-            case Left(err) => err
-            case Right(enabled) =>
-              val retention = b.get("retention_days").collect { case d: Double => d.toInt }
-              (200, scheduleJson(svc.saveSchedule(enabled, optString(b, "cron"), retention)))
-          }
-        case _ => (404, notFound)
-      } catch {
-        case e: ApiJson.ParseError => (422, bodyError(e.getMessage))
-        case e: Exception => (500, serverError(e))
-      }
-    respond(ex, status, body)
+  private def backupRunRoute(svc: BackupService): Reply = {
+    val (name, size) = svc.run()
+    (200, ApiJson.obj(Seq(
+      "success" -> "true",
+      "filename" -> ApiJson.str(name),
+      "message" -> ApiJson.str(s"Backup saved: $name ($size bytes)"))))
   }
+
+  private def backupListRoute(svc: BackupService): Reply =
+    (200, ApiJson.obj(Seq("backups" -> svc.list().map(b =>
+      ApiJson.obj(Seq(
+        "filename" -> ApiJson.str(b.filename),
+        "size_bytes" -> b.sizeBytes.toString,
+        "created" -> ApiJson.str(b.created)))).mkString("[", ",", "]"))))
+
+  private def restoreRoute(svc: BackupService, b: Map[String, Any]): Reply =
+    requiredString(b, "filename") match {
+      case Left(err) => err
+      case Right(filename) =>
+        svc.restore(filename, optString(b, "confirm")) match {
+          case Left((code, msg)) => (code, detail(msg))
+          case Right(msg) => (200, ApiJson.obj(Seq(
+            "success" -> "true", "message" -> ApiJson.str(msg))))
+        }
+    }
+
+  private def saveScheduleRoute(svc: BackupService, b: Map[String, Any]): Reply =
+    requiredBool(b, "enabled") match {
+      case Left(err) => err
+      case Right(enabled) =>
+        val retention = b.get("retention_days").collect { case d: Double => d.toInt }
+        (200, scheduleJson(svc.saveSchedule(enabled, optString(b, "cron"), retention)))
+    }
 
   /** GET /api/backup/download (`backup.py:106-118`): the reference's
     * `StreamingResponse(run_pg_dump_stream(), media_type =
@@ -607,7 +527,7 @@ final class ApiServer(
       s"Internal error: ${Option(e.getMessage).getOrElse(e.getClass.getSimpleName)}")))
 
   /** GET /api/transactions (`api/transactions.py:38-62`). */
-  private def transactions(q: Map[String, String]): (Int, String) =
+  private def transactions(q: Map[String, String]): Reply =
     ApiParams.transactionQuery(q) match {
       case Left(errs) => (422, ApiParams.errorBody(errs))
       case Right(p) =>
@@ -622,7 +542,7 @@ final class ApiServer(
   /** GET /api/transactions/categories/list (`api/transactions.py:91-100`):
     * distinct in-use categories; on ANY read failure fall back to the
     * sorted default catalog so the UI dropdown never breaks. */
-  private def categoriesList(q: Map[String, String]): (Int, String) = {
+  private def categoriesList(): Reply = {
     val names =
       try Serving.distinctCategories(joined())
         .collect().map(_.getString(0)).toSeq
@@ -631,7 +551,7 @@ final class ApiServer(
   }
 
   /** GET /api/validated-transactions (`api/validated_transactions.py:53-75`). */
-  private def validatedTransactions(q: Map[String, String]): (Int, String) =
+  private def validatedTransactions(q: Map[String, String]): Reply =
     ApiParams.validatedQuery(q) match {
       case Left(errs) => (422, ApiParams.errorBody(errs))
       case Right(p) =>
@@ -646,7 +566,7 @@ final class ApiServer(
   /** GET /api/control-center/connections (`api/control_center.py:66-152`):
     * the accountHealth rollup, each row annotated with the pure
     * [[ConnectionHealth]] inference, as the reference's ConnectionInfo. */
-  private def connections(q: Map[String, String]): (Int, String) = {
+  private def connections(q: Map[String, String]): Reply = {
     val rows = Serving.accountHealth(simplefinRaw()).collect()
     val asOf = today()
     def strOpt(v: Any): Option[String] = Option(v).map(_.toString)
@@ -677,4 +597,58 @@ final class ApiServer(
       "connections" -> infos,
       "total_count" -> rows.length.toString)))
   }
+}
+
+private object ApiServer {
+
+  /** The locks a route holds (the class scaladoc's concurrency section). */
+  sealed trait Access
+  case object Read extends Access
+  case object Edit extends Access
+  case object Replace extends Access
+  case object Outside extends Access
+
+  /** A handler's status and JSON body. */
+  type Reply = (Int, String)
+
+  /** The reply of a handler that has written its own response; the
+    * dispatcher tells it apart by reference. */
+  val Streamed: Reply = (200, "")
+
+  /** One declared route. `path`'s `{…}` segments capture by name. */
+  final case class Route(
+      method: String, path: String, access: Access, handle: Call => Reply) {
+    private val template = segments(path)
+
+    /** The captures, when `request` (as split by [[segments]]) fits. */
+    def bind(request: List[String]): Option[Map[String, String]] = {
+      val pairs = template.zip(request)
+      if (request.length != template.length ||
+          pairs.exists { case (t, s) => !t.startsWith("{") && t != s }) None
+      else Some(pairs.collect {
+        case (t, s) if t.startsWith("{") => t.drop(1).dropRight(1) -> s
+      }.toMap)
+    }
+  }
+
+  /** One matched request: the exchange and its path captures. */
+  final class Call(val ex: HttpExchange, captures: Map[String, String]) {
+    /** The `{name}` capture as `getPath` decoded it: a second decode would
+      * turn "A+B" into "A B" and fail on "50%". */
+    def apply(name: String): String = captures(name)
+
+    def query: Map[String, String] =
+      ApiParams.parseQueryString(ex.getRequestURI.getRawQuery)
+
+    /** The JSON object body; anything else is an [[ApiJson.ParseError]]. */
+    lazy val body: Map[String, Any] =
+      ApiJson.parse(new String(ex.getRequestBody.readAllBytes(),
+        StandardCharsets.UTF_8)) match {
+        case m: Map[_, _] => m.asInstanceOf[Map[String, Any]]
+        case _ => throw new ApiJson.ParseError("expected a JSON object body")
+      }
+  }
+
+  /** A request path's segments, empty ones dropped. */
+  def segments(path: String): List[String] = path.split("/").filter(_.nonEmpty).toList
 }

@@ -200,7 +200,7 @@ class ApiServerSpec extends SparkSpec {
   }
 
   test("categories list, validated page, unknown paths, wrong methods") {
-    withServer { port =>
+    withWritableServer() { (port, _) =>
       val (s1, b1) = get(port, "/api/transactions/categories/list")
       assert(s1 == 200 && b1 == "[\"Dining\",\"Travel\"]")
 
@@ -219,6 +219,14 @@ class ApiServerSpec extends SparkSpec {
       conn.getOutputStream.write("{}".getBytes(StandardCharsets.UTF_8))
       assert(conn.getResponseCode == 405)
       conn.disconnect()
+
+      // a path that only other methods declare is a 405; outside every
+      // route, the JSON 404 (FastAPI's router answers both as JSON)
+      val methodNotAllowed = """{"detail":"Method Not Allowed"}"""
+      assert(get(port, "/api/transactions/bulk-validate") == (405, methodNotAllowed))
+      assert(send(port, "POST", "/api/control-center/connections", "{}") ==
+        (405, methodNotAllowed))
+      assert(get(port, "/api/nope") == (404, """{"detail":"Not Found"}"""))
     }
   }
 
@@ -378,6 +386,19 @@ class ApiServerSpec extends SparkSpec {
       val (s4, _) = send(port, "PUT", "/api/categories/NoSuch/active",
         """{"is_active":true}""")
       assert(s4 == 404)
+      // a {name} capture arrives percent-decoded once: A%2BB is "A+B",
+      // 50%25 is "50%"
+      for ((name, encoded) <- Seq("A+B" -> "A%2BB", "50%" -> "50%25")) {
+        val (sAdd, bAdd) = send(port, "POST", "/api/categories", s"""{"name":"$name"}""")
+        assert(sAdd == 200 && bAdd.contains(s""""name":"$name""""), bAdd)
+        val (sOff, bOff) = send(port, "PUT", s"/api/categories/$encoded/active",
+          """{"is_active":false}""")
+        assert(sOff == 200 && bOff.contains(s""""name":"$name"""") &&
+          bOff.contains("\"is_active\":false"), bOff)
+      }
+      val (_, listed) = get(port, "/api/categories")
+      assert(listed.contains("\"name\":\"A+B\"") && !listed.contains("\"name\":\"A B\""),
+        listed)
 
       // model metrics: trained-only history + latest status
       val (s5, b5) = get(port, "/api/model-metrics/metrics/history")
@@ -595,6 +616,40 @@ class ApiServerSpec extends SparkSpec {
       } finally release.countDown()
       editor.join(120000)
       assert(edit.get != null && edit.get._1 == 200 && edit.get._2.contains("Held"))
+    }
+  }
+
+  test("an edit and a GET complete while a trigger is held inside the orchestrator call") {
+    // a hung orchestrator call must hold no table lock: under the shared
+    // lock, the edit's swap would wait for it and every later read (the
+    // lock is fair) for the edit
+    val entered = new CountDownLatch(1)
+    val release = new CountDownLatch(1)
+    val hung: String => String = name => {
+      entered.countDown(); release.await(120, TimeUnit.SECONDS); s"run-for-$name"
+    }
+    def within(r: => (Int, String)): Option[(Int, String)] = {
+      val out = new AtomicReference[(Int, String)]()
+      val t = new Thread(() => out.set(r))
+      t.start(); t.join(60000)
+      Option(out.get)
+    }
+    withWritableServer(trigger = Some(hung)) { (port, _) =>
+      val launched = new AtomicReference[(Int, String)]()
+      val launcher = new Thread(() => launched.set(send(port, "POST",
+        "/api/control-center/trigger-ingest-and-predict", "{}")))
+      launcher.start()
+      try {
+        assert(entered.await(60, TimeUnit.SECONDS), "the trigger never reached the orchestrator")
+        val edit = within(send(port, "POST", "/api/transactions/t2/categorize",
+          """{"master_category":"Groceries"}"""))
+        assert(edit.exists(_._1 == 200), s"the edit waited behind the trigger: $edit")
+        val read = within(get(port, "/api/transactions?limit=2"))
+        assert(read.exists(_._1 == 200), s"the GET waited behind the trigger: $read")
+      } finally release.countDown()
+      launcher.join(60000)
+      assert(launched.get != null && launched.get._1 == 200 &&
+        launched.get._2.contains("run-for-2_ingest_and_predict"))
     }
   }
 
